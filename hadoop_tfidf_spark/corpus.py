@@ -58,6 +58,13 @@ def load_text_dir(spark: SparkSession, path: str) -> DataFrame:
 #: ends up split the way a splittable scan of the same bytes would be.
 REBALANCE_TARGET_BYTES = 128 * 1024 * 1024
 
+#: Upper bound on the size-derived partition count, as a multiple of
+#: ``defaultParallelism``. Only a file scan's size statistic is exact; a
+#: join's is an estimate (a cross join multiplies its inputs' sizes), and
+#: one inflated estimate must not turn the rebalance into a
+#: million-partition exchange.
+REBALANCE_MAX_FACTOR = 4
+
 
 def rebalance_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Spread an under-partitioned scan across the cluster's cores.
@@ -80,7 +87,10 @@ def rebalance_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     regardless of size, so every downstream narrow stage ran with
     cluster-core-count × oversized tasks (and the §2.5 skew profile that
     implies). Size comes from the optimized plan's statistics (exact
-    file-size sum for parquet scans — a driver-side lookup, no job).
+    file-size sum for parquet scans — a driver-side lookup, no job); the
+    count is capped at :data:`REBALANCE_MAX_FACTOR` × ``defaultParallelism``
+    because other plans' statistics are estimates that can be inflated
+    by orders of magnitude.
     """
     parallelism = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= parallelism:
@@ -94,7 +104,8 @@ def rebalance_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
         # partition count from it would be nonsense — fall back to the
         # parallelism floor rather than a billion-partition exchange.
         size = 0
-    target = max(parallelism, min(-(-size // REBALANCE_TARGET_BYTES), 1_000_000))
+    by_size = -(-size // REBALANCE_TARGET_BYTES)
+    target = max(parallelism, min(by_size, REBALANCE_MAX_FACTOR * parallelism))
     return df.repartition(int(target))
 
 

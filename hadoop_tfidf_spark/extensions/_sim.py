@@ -20,6 +20,37 @@ SIM_QUERY_IDS = [0, 1, 2, 3, 4]
 SIM_K = 10
 
 
+def _recall_per_query(exact, approx, queries, method=None):
+    """Per query of ``queries``: how many of the ``exact`` top-k pairs
+    ``approx`` found (``n_hits``) and ``recall`` = n_hits / SIM_K, with
+    zero-hit queries kept; ``method`` prefixes a label column."""
+    hits = (
+        exact.join(approx.select("query_id", "vec_id"),
+                   ["query_id", "vec_id"], "leftsemi")
+        .groupBy("query_id")
+        .agg(F.count("*").cast("bigint").alias("n_hits"))
+    )
+    n = F.coalesce(F.col("n_hits"), F.lit(0))
+    label = [] if method is None else [F.lit(method).alias("method")]
+    return (
+        queries.select(F.col("vec_id").alias("query_id"))
+        .join(hits, "query_id", "left")
+        .select(
+            *label,
+            "query_id",
+            n.cast("bigint").alias("n_hits"),
+            F.round(n / F.lit(float(SIM_K)), 6).alias("recall"),
+        )
+    )
+
+
+def _union_all(dfs):
+    out = dfs[0]
+    for df in dfs[1:]:
+        out = out.unionByName(df)
+    return out
+
+
 def q_sim_topk_brute(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
@@ -117,10 +148,9 @@ def q_sim_topk_ivf(spark, sf_dir):
     stays covered by tests/test_ivf.py)."""
     emb = _emb(spark, sf_dir)
     assigned, cents = S.ivf_build(emb, k=IVF_K, iters=IVF_ITERS, units=IVF_UNITS)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
     return S.ivf_topk(
-        assigned, cents, queries, k=SIM_K, nprobe=IVF_NPROBE, units=IVF_UNITS,
-        probe_select="driver",  # 5 ids, statically tiny — skip auto's count job
+        assigned, cents, SIM_QUERY_IDS, k=SIM_K, nprobe=IVF_NPROBE,
+        units=IVF_UNITS,
     ).select("query_id", "vec_id", "cos_sim", "rn")
 
 
@@ -147,18 +177,17 @@ def q_sim_topk_ivf_sample(spark, sf_dir):
         emb, k=IVF_K, iters=IVF_ITERS, units=IVF_UNITS,
         train=emb.where(F.col("vec_id") % IVF_TRAIN_MOD != IVF_TRAIN_MOD - 1),
     )
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
     return S.ivf_topk(
-        assigned, cents, queries, k=SIM_K, nprobe=IVF_NPROBE, units=IVF_UNITS,
-        probe_select="driver",
+        assigned, cents, SIM_QUERY_IDS, k=SIM_K, nprobe=IVF_NPROBE,
+        units=IVF_UNITS,
     ).select("query_id", "vec_id", "cos_sim", "rn")
 
 
 def q_sim_topk_ivf_bulk(spark, sf_dir):
     """Round 13 — the BULK-query IVF path: every corpus vector is a query
     (kNN-graph construction, the shape a semantic-clustering or re-rank
-    job runs at 100 TB). ``probe_select="executor"`` keeps the per-query
-    nearest-probe computation on executors via the
+    job runs at 100 TB). Passing the corpus as the ``queries=`` relation
+    keeps the per-query nearest-probe computation on executors via the
     ``nearest_centroid_ids`` expression (similarity.py) — ZERO query-side
     collect, unlike the interactive driver-loop path — and the probe
     relation stays distributed (join strategy left to Catalyst/AQE).
@@ -168,13 +197,8 @@ def q_sim_topk_ivf_bulk(spark, sf_dir):
     emb = _emb(spark, sf_dir, rebalance=True)
     assigned, cents = S.ivf_build(emb, k=IVF_K, iters=IVF_ITERS, units=IVF_UNITS)
     return S.ivf_topk(
-        assigned,
-        cents,
-        emb,
-        k=SIM_K,
-        nprobe=IVF_NPROBE,
-        units=IVF_UNITS,
-        probe_select="executor",
+        assigned, cents, None, k=SIM_K, nprobe=IVF_NPROBE, units=IVF_UNITS,
+        queries=emb,
     ).select("query_id", "vec_id", "cos_sim", "rn")
 
 
@@ -418,24 +442,7 @@ def q_sim_rp_recall(spark, sf_dir):
         units=RP_GATE_UNITS,
     ).select("query_id", "vec_id")
     exact = int_l2_topk(emb, queries, k=SIM_K, units=RP_GATE_UNITS)
-    hits = (
-        exact.join(approx, ["query_id", "vec_id"], "leftsemi")
-        .groupBy("query_id")
-        .agg(F.count("*").cast("bigint").alias("n_hits"))
-    )
-    return (
-        queries.select(F.col("vec_id").alias("query_id"))
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint").alias(
-                "n_hits"
-            ),
-            F.round(
-                F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(float(SIM_K)), 6
-            ).alias("recall"),
-        )
-    )
+    return _recall_per_query(exact, approx, queries)
 
 
 #: Candidate budgets the RP-IVFADC recall audit sweeps (stage-1 ADC
@@ -485,61 +492,29 @@ def q_sim_rp_ivfpq_recall(spark, sf_dir):
 
     emb = _emb(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
-    exact = (
-        S.int_l2_topk(emb, queries, k=SIM_K, units=RP_GATE_UNITS)
-        .select("query_id", "vec_id")
-    )
+    exact = S.int_l2_topk(emb, queries, k=SIM_K, units=RP_GATE_UNITS)
     index = S.rp_ivfpq_build(
         emb, out_dim=RP_GATE_OUT_DIM, in_dim=RP_GATE_IN_DIM,
         units=RP_GATE_UNITS, coarse_k=IVF_K, coarse_iters=IVF_ITERS,
         m=PQ_M, pq_k=PQ_K, pq_iters=PQ_ITERS,
     )
-    branches = []
-    for budget in RP_IVFPQ_BUDGETS:
-        branches.append(
-            S.rp_ivfpq_topk(
-                emb, SIM_QUERY_IDS, k=SIM_K, candidates=budget,
-                nprobe=IVF_NPROBE, units=RP_GATE_UNITS, index=index,
-            ).select(
-                F.lit(f"rp_ivfpq_c{budget}").alias("method"),
-                "query_id",
-                "vec_id",
-            )
-        )
+    branches = [
+        _recall_per_query(exact, S.rp_ivfpq_topk(
+            emb, SIM_QUERY_IDS, k=SIM_K, candidates=budget,
+            nprobe=IVF_NPROBE, units=RP_GATE_UNITS, index=index,
+        ), queries, f"rp_ivfpq_c{budget}")
+        for budget in RP_IVFPQ_BUDGETS
+    ]
     fa, fc, fcodes, fbooks = S.ivfpq_build_residual(
         emb, coarse_k=IVF_K, coarse_iters=IVF_ITERS,
         m=PQ_M, k=PQ_K, iters=PQ_ITERS, units=IVF_UNITS, pack=True,
     )
-    branches.append(
-        S.ivfpq_topk(
-            fa, fc, fcodes, fbooks, SIM_QUERY_IDS,
-            k=SIM_K, nprobe=IVF_NPROBE, units=IVF_UNITS,
-            embeddings=emb, residual=True,
-        ).select(F.lit("ivfpq_full").alias("method"), "query_id", "vec_id")
-    )
-    approx = branches[0]
-    for b in branches[1:]:
-        approx = approx.unionByName(b)
-    hits = (
-        exact.join(approx, ["query_id", "vec_id"], "inner")
-        .groupBy("method", "query_id")
-        .agg(F.count("*").cast("bigint").alias("n_hits"))
-    )
-    methods = [f"rp_ivfpq_c{b}" for b in RP_IVFPQ_BUDGETS] + ["ivfpq_full"]
-    # the (method x query) grid is a constant-sized literal relation —
-    # no join against the corpus needed to densify the zero-hit rows
-    grid = emb.sparkSession.createDataFrame(
-        [(m, int(q)) for m in methods for q in SIM_QUERY_IDS],
-        "method STRING, query_id BIGINT",
-    )
-    out = grid.join(hits, ["method", "query_id"], "left").select(
-        "method",
-        "query_id",
-        F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint").alias("n_hits"),
-        F.round(
-            F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(float(SIM_K)), 6
-        ).alias("recall"),
-    )
+    branches.append(_recall_per_query(exact, S.ivfpq_topk(
+        fa, fc, fcodes, fbooks, SIM_QUERY_IDS,
+        k=SIM_K, nprobe=IVF_NPROBE, units=IVF_UNITS,
+        embeddings=emb, residual=True,
+    ), queries, "ivfpq_full"))
+    out = _union_all(branches)
     emb.unpersist()  # all build collects done; the search plan is lazy
     return out
 
@@ -645,11 +620,7 @@ def q_sim_recall_audit(spark, sf_dir):
         .select(F.col("vec_id").alias("query_id"), u.alias("_qu"))
     )
     vu = emb.select("vec_id", u.alias("_vu"))
-    exact_d2 = F.aggregate(
-        F.zip_with("_qu", "_vu", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    exact_d2 = S._d2(F.col("_qu"), F.col("_vu"))
     joined = (
         approx.join(F.broadcast(qu), "query_id")
         .join(vu, "vec_id")
@@ -829,11 +800,8 @@ def q_sim_recall_curve(spark, sf_dir):
             .select("query_id", "vec_id")
             .withColumn("nprobe", F.lit(np_).cast("int"))
         )
-    approx = parts[0]
-    for p in parts[1:]:
-        approx = approx.unionByName(p)
     out = (
-        approx.join(F.broadcast(brute), ["query_id", "vec_id"], "left")
+        _union_all(parts).join(F.broadcast(brute), ["query_id", "vec_id"], "left")
         .groupBy("nprobe", "query_id")
         .agg(
             F.count("*").cast("bigint").alias("n_returned"),
@@ -921,37 +889,13 @@ def q_sim_sq_recall(spark, sf_dir):
     queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
     exact = int_l2_topk(emb, queries, k=SIM_K, units=IVF_UNITS)
     vmax = sq_vmax(emb, units=IVF_UNITS, in_dim=64)
-    branches = []
-    for b in SQ_RECALL_BUDGETS:
-        approx = sq_topk(
+    return _union_all([
+        _recall_per_query(exact, sq_topk(
             emb, queries, k=SIM_K, candidates=b, units=IVF_UNITS, in_dim=64,
             vmax=vmax,
-        ).select("query_id", "vec_id")
-        hits = (
-            exact.join(approx, ["query_id", "vec_id"], "leftsemi")
-            .groupBy("query_id")
-            .agg(F.count("*").cast("bigint").alias("n_hits"))
-        )
-        branches.append(
-            queries.select(F.col("vec_id").alias("query_id"))
-            .join(hits, "query_id", "left")
-            .select(
-                F.lit(f"sq_c{b}").alias("method"),
-                "query_id",
-                F.coalesce(F.col("n_hits"), F.lit(0))
-                .cast("bigint")
-                .alias("n_hits"),
-                F.round(
-                    F.coalesce(F.col("n_hits"), F.lit(0))
-                    / F.lit(float(SIM_K)),
-                    6,
-                ).alias("recall"),
-            )
-        )
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
+        ), queries, f"sq_c{b}")
+        for b in SQ_RECALL_BUDGETS
+    ])
 
 
 def _scaled_emb(spark, sf_dir, rebalance=False):
@@ -1013,35 +957,15 @@ def q_sim_opq_recall(spark, sf_dir):
     )
     pq_res = pq_topk(
         emb, codes, books, SIM_QUERY_IDS, k=SIM_K, units=IVF_UNITS
-    ).select("query_id", "vec_id")
+    )
     opq_res = opq_topk(
         emb, SIM_QUERY_IDS, k=SIM_K, m=PQ_M, pq_k=PQ_K, iters=PQ_ITERS,
         units=IVF_UNITS, in_dim=64, sample_n=OPQ_SAMPLE_N,
-    ).select("query_id", "vec_id")
-    branches = []
-    for method, approx in (("pq", pq_res), ("opq", opq_res)):
-        hits = (
-            exact.join(approx, ["query_id", "vec_id"], "leftsemi")
-            .groupBy("query_id")
-            .agg(F.count("*").cast("bigint").alias("n_hits"))
-        )
-        branches.append(
-            queries.select(F.col("vec_id").alias("query_id"))
-            .join(hits, "query_id", "left")
-            .select(
-                F.lit(method).alias("method"),
-                "query_id",
-                F.coalesce(F.col("n_hits"), F.lit(0))
-                .cast("bigint")
-                .alias("n_hits"),
-                F.round(
-                    F.coalesce(F.col("n_hits"), F.lit(0))
-                    / F.lit(float(SIM_K)),
-                    6,
-                ).alias("recall"),
-            )
-        )
-    return branches[0].unionByName(branches[1])
+    )
+    return _union_all([
+        _recall_per_query(exact, approx, queries, method)
+        for method, approx in (("pq", pq_res), ("opq", opq_res))
+    ])
 
 
 def _opq_permuted_emb(spark, sf_dir, rebalance=False):
@@ -1123,34 +1047,14 @@ def q_sim_opq_ivfpq_recall(spark, sf_dir):
             assigned, cents, codes, books, SIM_QUERY_IDS,
             k=SIM_K, nprobe=IVF_NPROBE, units=IVF_UNITS,
             embeddings=base, residual=True,
-        ).select("query_id", "vec_id")
-        hits = (
-            exact.join(approx, ["query_id", "vec_id"], "leftsemi")
-            .groupBy("query_id")
-            .agg(F.count("*").cast("bigint").alias("n_hits"))
         )
-        branches.append(
-            queries.select(F.col("vec_id").alias("query_id"))
-            .join(hits, "query_id", "left")
-            .select(
-                F.lit(method).alias("method"),
-                "query_id",
-                F.coalesce(F.col("n_hits"), F.lit(0))
-                .cast("bigint")
-                .alias("n_hits"),
-                F.round(
-                    F.coalesce(F.col("n_hits"), F.lit(0))
-                    / F.lit(float(SIM_K)),
-                    6,
-                ).alias("recall"),
-            )
-        )
+        branches.append(_recall_per_query(exact, approx, queries, method))
     # Both fixture relations stay persisted through execution (the
     # stored-index surrogate rule — see q_sim_topk_opq_ivfpq): the
     # recall plan references each side's vectors in the codes join, the
     # probe AND the exact-truth re-rank, and an unpersisted permuted
     # projection re-inlines its 64-getItem array per distance lambda.
-    return branches[0].unionByName(branches[1])
+    return _union_all(branches)
 
 
 def q_sim_topk_ivfsq(spark, sf_dir):
@@ -1187,35 +1091,14 @@ def q_sim_ivfsq_recall(spark, sf_dir):
         units=IVF_UNITS, in_dim=64,
     )
     index = index.persist(StorageLevel.MEMORY_AND_DISK)
-    branches = []
-    for b in SQ_RECALL_BUDGETS:
-        approx = S.ivfsq_topk(
+    out = _union_all([
+        _recall_per_query(exact, S.ivfsq_topk(
             emb, SIM_QUERY_IDS, k=SIM_K, candidates=b, nprobe=IVF_NPROBE,
             units=IVF_UNITS, in_dim=64,
             index=index, centroids=cents, vmax=vmax,
-        ).select("query_id", "vec_id")
-        hits = (
-            exact.join(approx, ["query_id", "vec_id"], "leftsemi")
-            .groupBy("query_id")
-            .agg(F.count("*").cast("bigint").alias("n_hits"))
-        )
-        branches.append(
-            queries.select(F.col("vec_id").alias("query_id"))
-            .join(hits, "query_id", "left")
-            .select(
-                F.lit(f"ivfsq_c{b}").alias("method"),
-                "query_id",
-                F.coalesce(F.col("n_hits"), F.lit(0))
-                .cast("bigint")
-                .alias("n_hits"),
-                F.round(
-                    F.coalesce(F.col("n_hits"), F.lit(0))
-                    / F.lit(float(SIM_K)),
-                    6,
-                ).alias("recall"),
-            )
-        )
-    out = branches[0].unionByName(branches[1])
+        ), queries, f"ivfsq_c{b}")
+        for b in SQ_RECALL_BUDGETS
+    ])
     emb.unpersist()
     return out
 
@@ -1249,34 +1132,13 @@ def q_sim_bq_recall(spark, sf_dir):
     queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
     exact = S.int_l2_topk(emb, queries, k=SIM_K, units=IVF_UNITS)
     index = bq_build(emb, units=IVF_UNITS, in_dim=64)
-    branches = []
-    for b in SQ_RECALL_BUDGETS:
-        approx = bq_topk(
+    return _union_all([
+        _recall_per_query(exact, bq_topk(
             emb, queries, k=SIM_K, candidates=b, units=IVF_UNITS,
             in_dim=64, index=index,
-        ).select("query_id", "vec_id")
-        hits = (
-            exact.join(approx, ["query_id", "vec_id"], "leftsemi")
-            .groupBy("query_id")
-            .agg(F.count("*").cast("bigint").alias("n_hits"))
-        )
-        branches.append(
-            queries.select(F.col("vec_id").alias("query_id"))
-            .join(hits, "query_id", "left")
-            .select(
-                F.lit(f"bq_c{b}").alias("method"),
-                "query_id",
-                F.coalesce(F.col("n_hits"), F.lit(0))
-                .cast("bigint")
-                .alias("n_hits"),
-                F.round(
-                    F.coalesce(F.col("n_hits"), F.lit(0))
-                    / F.lit(float(SIM_K)),
-                    6,
-                ).alias("recall"),
-            )
-        )
-    return branches[0].unionByName(branches[1])
+        ), queries, f"bq_c{b}")
+        for b in SQ_RECALL_BUDGETS
+    ])
 
 
 # --------------------------------------------------------------------------
@@ -1380,9 +1242,6 @@ def q_sim_tier_frontier(spark, sf_dir):
                 F.round(F.col("n_hits") / F.lit(denom), 6).alias("recall"),
             )
         )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
     # Both fixture relations stay persisted through execution — the
     # stored-index surrogate rule (see q_sim_topk_opq_ivfpq).
-    return out
+    return _union_all(rows)

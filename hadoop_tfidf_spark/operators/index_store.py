@@ -394,18 +394,16 @@ def serve_knn(
     build because every artifact round-trips exactly."""
     from hadoop_tfidf_spark.operators import similarity as S
 
-    p = index.params
+    p, arts = index.params, index.artifacts
     units, in_dim = p["units"], p["in_dim"]
     id_col, vec_col = p["id_col"], p["vec_col"]
-    queries = embeddings.where(
-        F.col(id_col).isin([int(x) for x in query_ids])
-    )
+    query_ids = [int(x) for x in query_ids]
+    queries = embeddings.where(F.col(id_col).isin(query_ids))
     if index.kind == "ivf":
         return S.ivf_topk(
-            index.tables["assigned"],
-            [[int(x) for x in c] for c in index.artifacts["centroids"]],
-            queries, k=k, nprobe=nprobe,
-            id_col=id_col, vec_col=vec_col, units=units,
+            index.tables["assigned"], arts["centroids"], query_ids,
+            k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col, units=units,
+            embeddings=embeddings,
         )
     if index.kind == "bq":
         return S.bq_topk(
@@ -417,35 +415,25 @@ def serve_knn(
         return S.sq_topk(
             embeddings, queries, k=k, candidates=candidates, units=units,
             in_dim=in_dim, id_col=id_col, vec_col=vec_col,
-            vmax=int(index.artifacts["vmax"]),
-            index=index.tables["index"],
+            vmax=int(arts["vmax"]), index=index.tables["index"],
         )
     if index.kind == "ivfsq":
         return S.ivfsq_topk(
-            embeddings, [int(x) for x in query_ids], k=k,
+            embeddings, query_ids, k=k,
             candidates=candidates, nprobe=nprobe, units=units,
             in_dim=in_dim, id_col=id_col, vec_col=vec_col,
             index=index.tables["index"],
-            centroids=[[int(x) for x in c] for c in index.artifacts["centroids"]],
-            vmax=int(index.artifacts["vmax"]),
+            centroids=arts["centroids"], vmax=int(arts["vmax"]),
         )
     if index.kind in ("ivfpq_res", "opq_ivfpq"):
         if index.kind == "opq_ivfpq":
             # reorder into the trained space; L2 is permutation-
             # invariant so the served distances are the true ones
-            embeddings = _permuted(
-                embeddings, index.artifacts["perm"], id_col, vec_col
-            )
+            embeddings = _permuted(embeddings, arts["perm"], id_col, vec_col)
         return S.ivfpq_topk(
             embeddings,  # assigned is only the query-vector default here
-            [[int(x) for x in c] for c in index.artifacts["centroids"]],
-            index.tables["codes"],
-            [
-                [[int(x) for x in cent] for cent in sub]
-                for sub in index.artifacts["codebooks"]
-            ],
-            query_ids=[int(x) for x in query_ids],
-            k=k, nprobe=nprobe, units=units,
+            arts["centroids"], index.tables["codes"], arts["codebooks"],
+            query_ids=query_ids, k=k, nprobe=nprobe, units=units,
             id_col=id_col, vec_col=vec_col,
             embeddings=embeddings, residual=True,
         )
@@ -489,11 +477,7 @@ def serve_knn_bulk(
         embeddings = _permuted(
             embeddings, index.artifacts["perm"], p["id_col"], p["vec_col"]
         ).persist(StorageLevel.MEMORY_AND_DISK)
-    cents = [[int(x) for x in c] for c in index.artifacts["centroids"]]
-    books = [
-        [[int(x) for x in cent] for cent in sub]
-        for sub in index.artifacts["codebooks"]
-    ]
+    cents, books = index.artifacts["centroids"], index.artifacts["codebooks"]
     if target_recall is not None:
         if candidates is not None or nprobe is not None:
             raise ValueError(
@@ -549,8 +533,7 @@ def _encode_generation(
         return index
     if kind == "ivfsq":
         return S.ivfsq_encode(
-            new_embeddings,
-            [[int(x) for x in c] for c in artifacts["centroids"]],
+            new_embeddings, artifacts["centroids"],
             int(artifacts["vmax"]), units=units, in_dim=in_dim,
             id_col=id_col, vec_col=vec_col,
         )
@@ -560,7 +543,7 @@ def _encode_generation(
         new_embeddings = _permuted(
             new_embeddings, artifacts["perm"], id_col, vec_col
         )
-    cents = [[int(x) for x in c] for c in artifacts["centroids"]]
+    cents = artifacts["centroids"]
     # frozen-centroid assignment: nearest_centroid_ids' first element is
     # the same first-minimum argmin ivf_build's final Lloyd pass takes
     cluster = F.element_at(
@@ -569,22 +552,15 @@ def _encode_generation(
     if kind == "ivf":
         return new_embeddings.withColumn("cluster", cluster)
     if kind in ("ivfpq_res", "opq_ivfpq"):
-        cent_arr = S._lit_matrix(cents)
         res = new_embeddings.withColumn("cluster", cluster).select(
             id_col,
             "cluster",
-            F.zip_with(
-                S.quantized_units(F.col(vec_col), units),
-                F.element_at(cent_arr, F.col("cluster") + 1),
-                lambda a, b: a - b,
-            ).alias("_u"),
+            S._residual(S.quantized_units(F.col(vec_col), units), cents)
+            .alias("_u"),
         )
-        books = [
-            [[int(x) for x in cent] for cent in sub]
-            for sub in artifacts["codebooks"]
-        ]
         return S._pq_encode_units(
-            res, books, id_col=id_col, pack=packed, extra_cols=["cluster"]
+            res, artifacts["codebooks"], id_col=id_col, pack=packed,
+            extra_cols=["cluster"],
         )
     raise ValueError(f"unknown index kind {kind!r}")
 

@@ -36,30 +36,76 @@ def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def _lit_vec(values, floats: bool = False) -> Column:
-    """A 1-D array literal as ONE ``Literal`` expression node.
+def _lit_array(values, floats: bool = False) -> Column:
+    """A vector, matrix or 3-level codebook literal with one explicit
+    element type: ``double`` for ``floats``, else ``bigint``.
 
-    ``F.array(*[F.lit(x) for x in values])`` builds a ``CreateArray`` of
-    ``len(values)`` child literals — each ``F.lit``/``cast`` is a py4j
-    round-trip, so a 64-dim centroid costs ~130 driver calls and the
-    resulting expression tree inflates analysis/codegen time for every
-    job that re-plans it (the Lloyd builds re-plan per iteration).
-    ``F.lit(list)`` ships the whole vector as a single ArrayType literal:
-    same element values, same types (python ints infer ``bigint``,
-    floats ``double`` — exactly what the per-element ``cast`` produced),
-    one py4j call, one expression node. Measured: an IVF assign job over
-    16×64 centroid literals drops ~2-3× in wall time from this alone.
-    """
-    conv = float if floats else int
-    return F.lit([conv(x) for x in values])
+    ``F.lit(list)`` builds ``array(lit(x), …)`` level by level and types
+    each element from its value, so small python ints come out ``int``
+    (``[[1, 2], [3, 4]]`` would be ``array<array<int>>``) and a sum of
+    two entries near 2^30 overflows under ANSI mode. One cast of the
+    whole integer literal fixes the type; the optimizer folds the cast
+    and the element literals into a single constant. Measured when the
+    nested literals replaced per-element ``F.array`` construction: an
+    IVF assign job over 16×64 centroids dropped ~2-3× in wall time."""
+    def conv(v):
+        if isinstance(v, (list, tuple)):
+            return [conv(x) for x in v]
+        return float(v) if floats else int(v)
+
+    lit = F.lit(conv(values))
+    if floats:
+        return lit
+    depth, probe = 0, values
+    while isinstance(probe, (list, tuple)) and len(probe):
+        depth, probe = depth + 1, probe[0]
+    return lit.cast("array<" * depth + "bigint" + ">" * depth)
 
 
-def _lit_matrix(rows, floats: bool = False) -> Column:
-    """A 2-D (rows×dim) centroid/codebook matrix as ONE nested-array
-    literal node — see :func:`_lit_vec` for why this beats nested
-    ``F.array(*[F.array(*[F.lit(x) ...]) ...])`` construction."""
-    conv = float if floats else int
-    return F.lit([[conv(x) for x in c] for c in rows])
+def _d2(a: Column, b: Column, floats: bool = False) -> Column:
+    """Squared L2 distance between two array columns, folded left to
+    right: exact BIGINT (order-independent) for integer arrays, double
+    for ``floats``."""
+    zero = F.lit(0.0) if floats else F.lit(0).cast("bigint")
+    return F.aggregate(
+        F.zip_with(a, b, lambda p, q: (p - q) * (p - q)),
+        zero,
+        lambda acc, v: acc + v,
+    )
+
+
+def _centroid_d2s(vec: Column, centroids: list[list], floats: bool = False) -> Column:
+    """``array`` of :func:`_d2` from ``vec`` to every centroid literal."""
+    return F.transform(
+        _lit_array(centroids, floats), lambda c: _d2(vec, c, floats)
+    )
+
+
+def _argmin(dists: Column) -> Column:
+    """0-based index of the FIRST minimum — ties go to the lowest id."""
+    return F.array_position(dists, F.array_min(dists)).cast("int") - 1
+
+
+def _residual(u: Column, centroids: list[list[int]]) -> Column:
+    """``u − centroids[cluster]``: the integer residual of a micro-unit
+    vector from its coarse cell's centroid literal."""
+    return F.zip_with(
+        u,
+        F.element_at(_lit_array(centroids), F.col("cluster") + 1),
+        lambda a, b: a - b,
+    )
+
+
+def _topk(scored: DataFrame, k: int, *order, rn_type: str = "int") -> DataFrame:
+    """The per-query top-k every ranking here ends in: ``rn`` = the
+    row number within ``query_id`` ordered by ``order``, kept while
+    ``rn <= k``. Filtering on the rank column itself is what lets Spark
+    push a partial WindowGroupLimit below the exchange. ``rn_type`` keeps
+    each tier's output type (``int`` is row_number's own)."""
+    rn = F.row_number().over(Window.partitionBy("query_id").orderBy(*order))
+    if rn_type != "int":
+        rn = rn.cast(rn_type)
+    return scored.withColumn("rn", rn).where(F.col("rn") <= k)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -121,10 +167,14 @@ def brute_force_topk(
         F.col(vec_col).alias("q_vec"),
         norm(F.col(vec_col)).alias("_qnrm"),
     )
-    joined = emb_n.crossJoin(F.broadcast(q)).where(
-        F.col(id_col) != F.col("query_id")
-    )
-    scored = joined.select(
+    return _cos_topk(emb_n.crossJoin(F.broadcast(q)), k, id_col, vec_col)
+
+
+def _cos_topk(joined: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Rank ``(query_id, q_vec, _qnrm)`` × ``(id, vec, _nrm)`` pairs by
+    cosine rounded to 6 places, id tie-break: the brute, LSH and IVF
+    output ``(query_id, vec_id, cos_sim, rn: bigint)``."""
+    scored = joined.where(F.col(id_col) != F.col("query_id")).select(
         "query_id",
         F.col(id_col).alias("vec_id"),
         F.round(
@@ -134,11 +184,7 @@ def brute_force_topk(
             6,
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rn") <= k)
-    )
+    return _topk(scored, k, F.desc("cos_sim"), F.asc("vec_id"), rn_type="bigint")
 
 
 def lsh_topk(
@@ -165,24 +211,7 @@ def lsh_topk(
         norm(F.col(vec_col)).alias("_qnrm"),
         sign_bucket(F.col(vec_col), n_bits).alias("bucket"),
     )
-    joined = emb_b.join(F.broadcast(q), "bucket").where(
-        F.col(id_col) != F.col("query_id")
-    )
-    scored = joined.select(
-        "query_id",
-        F.col(id_col).alias("vec_id"),
-        F.round(
-            _cos_from_parts(
-                dot(F.col(vec_col), F.col("q_vec")), F.col("_nrm"), F.col("_qnrm")
-            ),
-            6,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rn") <= k)
-    )
+    return _cos_topk(emb_b.join(F.broadcast(q), "bucket"), k, id_col, vec_col)
 
 
 def quantized_units(vec: Column, units: int) -> Column:
@@ -241,7 +270,6 @@ def ivf_build(
             [int(x) for x in r["_u"]]
             for r in tremb.orderBy(id_col).select("_u").limit(k).collect()
         ]
-        zero = F.lit(0).cast("bigint")
     else:
         emb = embeddings
         tremb = emb if train is None else train
@@ -250,7 +278,6 @@ def ivf_build(
             [float(x) for x in r[vec_col]]
             for r in tremb.orderBy(id_col).select(vec_col).limit(k).collect()
         ]
-        zero = F.lit(0.0)
     if not cents:
         raise ValueError("ivf_build: embeddings table is empty")
     # dimension comes free with the seed collect — a separate first()
@@ -259,20 +286,11 @@ def ivf_build(
     dim_count = len(cents[0])
 
     def assign(df: DataFrame, centroids: list[list]) -> DataFrame:
-        cent_arr = _lit_matrix(centroids, floats=units is None)
         vec = F.col(work_col) if units is not None else _as_double(F.col(work_col))
-        # argmin over squared L2 distance to each centroid; array_position
-        # takes the FIRST minimum — lowest cluster id wins ties (the
-        # oracle's row_number tie-break mirrors this)
-        dists = F.transform(
-            cent_arr,
-            lambda c: F.aggregate(
-                F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
-                zero,
-                lambda acc, x: acc + x,
-            ),
-        )
-        cluster = F.array_position(dists, F.array_min(dists)).cast("int") - 1
+        # argmin over squared L2 distance to each centroid — lowest
+        # cluster id wins ties (the oracle's row_number tie-break
+        # mirrors this)
+        cluster = _argmin(_centroid_d2s(vec, centroids, floats=units is None))
         # The argmin is never null on real rows, but Catalyst can't prove
         # it, so every downstream equi-join on `cluster` infers an
         # IsNotNull(cluster) constraint and pushes THE WHOLE ASSIGNMENT
@@ -332,53 +350,73 @@ def nearest_centroid_ids(
     """The ``nprobe`` nearest centroid ids for an array column, as a pure
     DataFrame expression (no driver round-trip): squared-L2 distance to
     every centroid literal, then ``array_sort`` over ``(d2, ci)`` structs
-    — lexicographic struct ordering gives exactly the driver path's
-    ``sorted((d2, ci))[:nprobe]`` semantics, ties → lowest cluster id.
-    With ``units`` the arithmetic is exact BIGINT (bit-identical to the
-    driver loop's python ints); float mode matches up to fold order on
-    near-ties. ``nprobe=1``'s first element is the same argmin
-    :func:`ivf_build`'s ``assign`` computes."""
-    if units is not None:
-        zero = F.lit(0).cast("bigint")
-        v = quantized_units(vec, units)
-    else:
-        zero = F.lit(0.0)
-        v = _as_double(vec)
-    cent_arr = _lit_matrix(centroids, floats=units is None)
-    dists = F.transform(
-        cent_arr,
-        lambda c: F.aggregate(
-            F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
-            zero,
-            lambda acc, x: acc + x,
-        ),
-    )
+    — lexicographic struct ordering gives exactly the driver twin's
+    (:func:`_nearest_centroids`) ``sorted((d2, ci))[:nprobe]`` semantics,
+    ties → lowest cluster id. With ``units`` the arithmetic is exact
+    BIGINT (bit-identical to the twin's python ints); float mode matches
+    up to fold order on near-ties. ``nprobe=1``'s first element is the
+    same argmin :func:`ivf_build`'s ``assign`` computes."""
+    v = quantized_units(vec, units) if units is not None else _as_double(vec)
     pairs = F.transform(
-        dists, lambda d, i: F.struct(d.alias("d2"), i.cast("int").alias("ci"))
+        _centroid_d2s(v, centroids, floats=units is None),
+        lambda d, i: F.struct(d.alias("d2"), i.cast("int").alias("ci")),
     )
     return F.transform(
         F.slice(F.array_sort(pairs), 1, nprobe), lambda s: s["ci"]
     )
 
 
-#: Query-relation size above which ``ivf_topk(probe_select="auto")``
-#: switches from the driver-side probe loop (one tiny collect — right for
-#: interactive use) to the executor-side expression path (zero query-side
-#: collect — right for bulk re-ranking jobs with 10⁶ queries, where a
-#: single-threaded driver loop over n_queries × k × dim would stall).
+def _nearest_centroids(qvec: list, centroids: list[list], nprobe: int) -> list[int]:
+    """Driver-side Python twin of :func:`nearest_centroid_ids` for one
+    collected query vector: the same left-to-right squared-L2 fold and
+    the same ``(d2, ci)`` order, so integer probes are bit-identical."""
+    d2s = sorted(
+        (sum((a - b) * (a - b) for a, b in zip(qvec, c)), ci)
+        for ci, c in enumerate(centroids)
+    )
+    return [ci for _, ci in d2s[:nprobe]]
+
+
+#: Id-list length up to which :func:`ivf_topk` / :func:`ivfpq_topk`
+#: probe on the driver (one tiny collect — right for interactive use).
+#: A longer list or a ``queries=`` relation probes on executors with
+#: :func:`nearest_centroid_ids` (zero query-side collect — right for bulk
+#: jobs with 10⁶ queries, where a single-threaded driver loop over
+#: n_queries × k × dim would stall).
 DRIVER_PROBE_MAX = 256
+
+
+def _probe_source(
+    emb: DataFrame,
+    query_ids: list[int] | None,
+    queries: DataFrame | None,
+    id_col: str,
+) -> tuple[DataFrame, bool]:
+    """The query rows an IVF search probes for, and whether the probe
+    runs on the driver. Exactly one of ``query_ids`` (looked up in
+    ``emb``) and ``queries`` (a relation) is required: silently dropping
+    one would mask a call-site bug."""
+    if (query_ids is None) == (queries is None):
+        raise ValueError(
+            "pass query_ids (an id list) or queries= (a relation), not both"
+        )
+    if queries is not None:
+        return queries, False
+    ids = [int(x) for x in query_ids]
+    return emb.where(F.col(id_col).isin(ids)), len(ids) <= DRIVER_PROBE_MAX
 
 
 def ivf_topk(
     assigned: DataFrame,
     centroids: list[list[float]],
-    queries: DataFrame,
+    query_ids: list[int] | None,
     k: int = 10,
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     units: int | None = None,
-    probe_select: str = "auto",
+    embeddings: DataFrame | None = None,
+    queries: DataFrame | None = None,
 ) -> DataFrame:
     """IVF search: probe the ``nprobe`` nearest clusters per query, exact
     cosine rank within them. Candidates come from an equi-join on the
@@ -386,26 +424,22 @@ def ivf_topk(
 
     ``units`` must match :func:`ivf_build`'s: probing then runs on the
     micro-unit integers (query vectors quantized by the same Spark
-    expression, exact python-int distances, ties → lowest cluster id), so
+    expression, exact integer distances, ties → lowest cluster id), so
     the probed set is bit-reproducible. Final scoring always uses the
     ORIGINAL float vectors — the probe decides candidates, not values.
 
-    ``probe_select`` picks where the per-query nearest-probe computation
-    runs: ``"driver"`` collects the (small-by-contract) query rows and
-    loops — one tiny collect, broadcast probe relation, the interactive
-    path; ``"executor"`` computes the same cells with
-    :func:`nearest_centroid_ids` as a DataFrame expression — zero
-    query-side collect, probe relation stays distributed and the join
-    strategy is left to Catalyst/AQE, the bulk path (a 10⁶-query re-rank
-    never funnels through the driver). ``"auto"`` (default) counts up to
-    :data:`DRIVER_PROBE_MAX` + 1 query rows (a LIMIT-bounded job, never a
-    full scan) and picks. In ``units`` mode both paths produce
-    bit-identical probes (exact integer distances, ``(d2, ci)``
-    tie-break); float mode can differ on near-exact centroid ties only.
+    Queries are ``query_ids`` looked up in ``embeddings`` (default
+    ``assigned``) or a ``queries=`` relation — :func:`ivfpq_topk`'s
+    contract. Up to :data:`DRIVER_PROBE_MAX` ids probe on the driver
+    (one tiny collect, broadcast probe relation); a relation or a longer
+    list probes on executors (:func:`nearest_centroid_ids`, join strategy
+    left to Catalyst/AQE). In ``units`` mode both give bit-identical
+    probes; float mode can differ on near-exact centroid ties only.
     """
-    if probe_select == "auto":
-        n_q = queries.limit(DRIVER_PROBE_MAX + 1).count()
-        probe_select = "driver" if n_q <= DRIVER_PROBE_MAX else "executor"
+    qsrc, on_driver = _probe_source(
+        embeddings if embeddings is not None else assigned,
+        query_ids, queries, id_col,
+    )
     # Each side's norm is computed ONCE per row before the join (the
     # brute_force_topk economy): per candidate pair only the dot remains
     # — at avg cell size s that's a ~3x cut of the per-pair flops, and
@@ -417,8 +451,24 @@ def ivf_topk(
     emb_n = assigned.drop("_nrm", "_qnrm").withColumn(
         "_nrm", norm(F.col(vec_col))
     )
-    if probe_select == "executor":
-        probes = queries.select(
+    if on_driver:
+        qu = [] if units is None else [
+            quantized_units(F.col(vec_col), units).alias("_u")
+        ]
+        probe_rows = []
+        for r in qsrc.select(id_col, vec_col, *qu).collect():
+            q_vec = [float(x) for x in r[vec_col]]
+            for ci in _nearest_centroids(
+                q_vec if units is None else r["_u"], centroids, nprobe
+            ):
+                probe_rows.append((r[id_col], q_vec, ci))
+        probes = F.broadcast(
+            assigned.sparkSession.createDataFrame(
+                probe_rows, "query_id BIGINT, q_vec ARRAY<DOUBLE>, cluster INT"
+            ).withColumn("_qnrm", norm(F.col("q_vec")))
+        )
+    else:
+        probes = qsrc.select(
             F.col(id_col).cast("bigint").alias("query_id"),
             _as_double(F.col(vec_col)).alias("q_vec"),
             norm(F.col(vec_col)).alias("_qnrm"),
@@ -426,61 +476,7 @@ def ivf_topk(
                 nearest_centroid_ids(F.col(vec_col), centroids, nprobe, units)
             ).alias("cluster"),
         )
-        joined = emb_n.join(probes, "cluster").where(
-            F.col(id_col) != F.col("query_id")
-        )
-    else:
-        if units is not None:
-            q_rows = queries.select(
-                id_col, vec_col, quantized_units(F.col(vec_col), units).alias("_u")
-            ).collect()
-            probe_rows = []
-            for r in q_rows:
-                d2s = sorted(
-                    (sum((a - b) ** 2 for a, b in zip(r["_u"], c)), ci)
-                    for ci, c in enumerate(centroids)
-                )
-                for _, c in d2s[:nprobe]:
-                    probe_rows.append(
-                        (r[id_col], list(map(float, r[vec_col])), int(c))
-                    )
-        else:
-            import numpy as np
-
-            q_rows = queries.select(id_col, vec_col).collect()
-            cent = np.array(centroids)
-            probe_rows = []
-            for r in q_rows:
-                v = np.array(r[vec_col], dtype=float)
-                d2 = ((cent - v) ** 2).sum(axis=1)
-                for c in np.argsort(d2)[:nprobe]:
-                    probe_rows.append(
-                        (r[id_col], list(map(float, r[vec_col])), int(c))
-                    )
-        spark = assigned.sparkSession
-        probes = spark.createDataFrame(
-            probe_rows, "query_id BIGINT, q_vec ARRAY<DOUBLE>, cluster INT"
-        ).withColumn("_qnrm", norm(F.col("q_vec")))
-        joined = emb_n.join(F.broadcast(probes), "cluster").where(
-            F.col(id_col) != F.col("query_id")
-        )
-    scored = joined.select(
-        "query_id",
-        F.col(id_col).alias("vec_id"),
-        F.round(
-            _cos_from_parts(
-                dot(F.col(vec_col), F.col("q_vec")),
-                F.col("_nrm"),
-                F.col("_qnrm"),
-            ),
-            6,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rn") <= k)
-    )
+    return _cos_topk(emb_n.join(probes, "cluster"), k, id_col, vec_col)
 
 
 def pandas_cosine_topk(
@@ -556,11 +552,7 @@ def pandas_cosine_topk(
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rn") <= k)
-    )
+    return _topk(scored, k, F.desc("cos_sim"), F.asc("vec_id"), rn_type="bigint")
 
 
 def quantize_int8(
@@ -822,22 +814,12 @@ def nearest_centroid_confusion(
         by_label.setdefault(r["label"], {})[r["d"]] = r["m"]
     labels = sorted(by_label)
     dim = max(max(d) for d in by_label.values()) + 1
-    cent_arr = _lit_matrix(
-        [[by_label[lbl].get(d, 0) for d in range(dim)] for lbl in labels]
-    )
-    u = quantized_units(F.col(vec_col), units)
-    dists = F.transform(
-        cent_arr,
-        lambda c: F.aggregate(
-            F.zip_with(u, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        ),
+    dists = _centroid_d2s(
+        quantized_units(F.col(vec_col), units),
+        [[by_label[lbl].get(d, 0) for d in range(dim)] for lbl in labels],
     )
     label_lits = F.array(*[F.lit(int(x)).cast("int") for x in labels])
-    assigned = F.element_at(
-        label_lits, F.array_position(dists, F.array_min(dists)).cast("int")
-    )
+    assigned = F.element_at(label_lits, _argmin(dists) + 1)
     return (
         embeddings.select(
             F.col(label_col).cast("int").alias("label"), assigned.alias("assigned_label")
@@ -850,17 +832,8 @@ def nearest_centroid_confusion(
 def _argmin_units(vec: Column, cents: list[list[int]]) -> Column:
     """0-based argmin of exact integer L2 distance from ``vec`` (an
     ``array<bigint>`` of micro-units) to each centroid literal; ties go to
-    the first (lowest) index via ``array_position``."""
-    cent_arr = _lit_matrix(cents)
-    dists = F.transform(
-        cent_arr,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    return F.array_position(dists, F.array_min(dists)).cast("int") - 1
+    the lowest index."""
+    return _argmin(_centroid_d2s(vec, cents))
 
 
 def pq_build(
@@ -1061,44 +1034,45 @@ def pq_topk(
     per query by ``(adc_d2, id)``. All-integer ⇒ engine-exact, fully
     DuckDB-replayable.
     """
-    from pyspark.sql import Window
-
     m = len(codebooks)
-    tables = _adc_tables(
-        embeddings, codebooks, query_ids, units, id_col, vec_col
+    q_rows = (
+        embeddings.where(F.col(id_col).isin([int(x) for x in query_ids]))
+        .select(id_col, quantized_units(F.col(vec_col), units).alias("u"))
+        .collect()
     )
     queries_df = F.array(
         *[
             F.struct(
-                F.lit(qid).cast("bigint").alias("query_id"),
-                _lit_matrix(tab).alias("adc"),
+                F.lit(int(r[id_col])).cast("bigint").alias("query_id"),
+                _lit_array(
+                    _adc_table([int(x) for x in r["u"]], codebooks)
+                ).alias("adc"),
             )
-            for qid, tab in tables
+            for r in q_rows
         ]
     )
-    code_cols = _pq_code_cols(codes, m)
     exploded = codes.select(
         F.col(id_col),
-        *[c.alias(f"code_{s}") for s, c in enumerate(code_cols)],
+        *[c.alias(f"code_{s}") for s, c in enumerate(_pq_code_cols(codes, m))],
         F.explode(queries_df).alias("q"),
     )
-    score = None
-    for s in range(m):
-        term = F.element_at(
-            F.element_at(F.col("q.adc"), s + 1), F.col(f"code_{s}") + 1
-        )
-        score = term if score is None else score + term
     scored = exploded.select(
         F.col("q.query_id").alias("query_id"),
         F.col(id_col),
-        score.cast("bigint").alias("adc_d2"),
+        _adc_score(F.col("q.adc"), m).alias("adc_d2"),
     ).where(F.col(id_col) != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy("adc_d2", id_col)
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", id_col, "adc_d2", F.col("rn").cast("int").alias("rn"))
-    )
+    return _topk(scored, k, "adc_d2", id_col)
+
+
+def _adc_score(adc: Column, m: int) -> Column:
+    """The ADC distance of :func:`pq_topk` and :func:`ivfpq_topk`:
+    ``Σ_s adc[s][code_s]`` over the ``code_{s}`` columns — ``m`` table
+    lookups, exact BIGINT."""
+    score = None
+    for s in range(m):
+        term = F.element_at(F.element_at(adc, s + 1), F.col(f"code_{s}") + 1)
+        score = term if score is None else score + term
+    return score.cast("bigint")
 
 
 def _adc_table(qvec: list[int], codebooks: list[list[list[int]]]) -> list[list[int]]:
@@ -1106,7 +1080,6 @@ def _adc_table(qvec: list[int], codebooks: list[list[list[int]]]) -> list[list[i
     distances from the (micro-unit) query vector's subvectors to every
     codebook centroid. Shared by :func:`pq_topk` (raw query vector) and
     :func:`ivfpq_topk` (raw, or per-cell residual, vector)."""
-    m = len(codebooks)
     sub = len(codebooks[0][0])
     return [
         [
@@ -1114,9 +1087,9 @@ def _adc_table(qvec: list[int], codebooks: list[list[list[int]]]) -> list[list[i
                 (a - b) * (a - b)
                 for a, b in zip(qvec[s * sub : (s + 1) * sub], c)
             )
-            for c in codebooks[s]
+            for c in book
         ]
-        for s in range(m)
+        for s, book in enumerate(codebooks)
     ]
 
 
@@ -1127,46 +1100,13 @@ def _adc_expr(src: Column, codebooks: list[list[list[int]]]) -> Column:
     subvectors to every codebook centroid literal. The codebooks are the
     only literals (m × k × sub ints — the same tiny artifact the driver
     path ships), so a 10⁶-query ADC build never leaves executors."""
-    m = len(codebooks)
     sub = len(codebooks[0][0])
-    # one 3-level nested literal node (see _lit_vec for the rationale)
-    cb = F.lit([[[int(x) for x in cent] for cent in codebooks[s]] for s in range(m)])
     return F.transform(
-        cb,
+        _lit_array(codebooks),
         lambda cb_s, s: F.transform(
-            cb_s,
-            lambda cent: F.aggregate(
-                F.zip_with(
-                    F.slice(src, s * sub + 1, sub),
-                    cent,
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ),
+            cb_s, lambda cent: _d2(F.slice(src, s * sub + 1, sub), cent)
         ),
     )
-
-
-def _adc_tables(
-    embeddings: DataFrame,
-    codebooks: list[list[list[int]]],
-    query_ids: list[int],
-    units: int,
-    id_col: str,
-    vec_col: str,
-) -> list[tuple[int, list[list[int]]]]:
-    """Per-query ADC lookup tables via :func:`_adc_table`. Only the
-    (tiny) query rows are collected."""
-    q_rows = (
-        embeddings.where(F.col(id_col).isin([int(x) for x in query_ids]))
-        .select(id_col, quantized_units(F.col(vec_col), units).alias("u"))
-        .collect()
-    )
-    return [
-        (int(r[id_col]), _adc_table([int(x) for x in r["u"]], codebooks))
-        for r in q_rows
-    ]
 
 
 def ivfpq_build_residual(
@@ -1207,16 +1147,10 @@ def ivfpq_build_residual(
         raise ValueError(f"dim {dim} not divisible by m {m}")
     if pack and (m > 8 or k > 256):
         raise ValueError(f"pack=True needs m<=8 and k<=256, got m={m} k={k}")
-    cent_arr = _lit_matrix(cents)
-    u = quantized_units(F.col(vec_col), units)
     res = assigned.select(
         id_col,
         "cluster",
-        F.zip_with(
-            u,
-            F.element_at(cent_arr, F.col("cluster") + 1),
-            lambda a, b: a - b,
-        ).alias("_u"),
+        _residual(quantized_units(F.col(vec_col), units), cents).alias("_u"),
     )
     codebooks = _pq_train_units(
         res, m=m, k=k, iters=iters, id_col=id_col, dim=dim
@@ -1240,7 +1174,6 @@ def ivfpq_topk(
     vec_col: str = "embedding",
     embeddings: DataFrame | None = None,
     residual: bool = False,
-    probe_select: str = "auto",
     queries: DataFrame | None = None,
 ) -> DataFrame:
     """IVFADC (Jégou et al. 2011 §IV): the realistic 100 TB ANN index —
@@ -1260,63 +1193,60 @@ def ivfpq_topk(
     :func:`pq_topk`; all-integer, engine-exact, DuckDB-replayable.
 
     Scale shape: the searched index is ``(cluster, pq_code)`` per vector —
-    a cluster id plus 8 bytes; probing is driver-side over the tiny
-    centroid matrix; candidates come from ONE broadcast equi-join of the
+    a cluster id plus 8 bytes; candidates come from ONE equi-join of the
     (queries × nprobe)-row probe relation on ``cluster`` (scan cost
     ~nprobe/k_coarse of the corpus per query, never a full ADC sweep);
-    the ADC sum is a pure codegen projection (m table lookups into the
-    broadcast per-query literals); one top-k window keyed on query_id.
-    The cell join + the code join on ``id_col`` are the only shuffles —
-    at scale the index is STORED pre-joined (cluster, pq_code), leaving
-    the probe join + window only.
+    the ADC sum is a pure codegen projection (:func:`_adc_score`); one
+    top-k window keyed on query_id. The cell join + the code join on
+    ``id_col`` are the only shuffles — at scale the index is STORED
+    pre-joined (cluster, pq_code), leaving the probe join + window only.
 
-    ``probe_select`` mirrors :func:`ivf_topk`'s: ``"driver"`` collects
-    the (small-by-contract) query rows and builds probe cells + ADC
-    tables in a loop; ``"executor"`` computes the SAME cells
-    (:func:`nearest_centroid_ids`) and the SAME tables (:func:`_adc_expr`
-    — in residual mode from the per-probed-cell residual) as DataFrame
-    expressions, zero query-side collect, join strategy left to
-    Catalyst/AQE. ``"auto"`` picks by ``len(query_ids)`` vs
-    :data:`DRIVER_PROBE_MAX` (no job — the ids are already a list).
-    All-integer either way, so the paths are bit-identical.
-
-    ``queries`` (a relation of ``(id_col, vec_col)`` rows — e.g. the
-    corpus itself for bulk kNN-graph construction) replaces
-    ``query_ids``: the query set never exists as a driver-side list, so
-    it forces the executor path (``probe_select="driver"`` with a
-    relation raises — collecting an unbounded relation to the driver is
-    the exact scale bug the executor path removes).
+    Queries follow :func:`ivf_topk`'s contract: up to
+    :data:`DRIVER_PROBE_MAX` ``query_ids`` collect once and build probe
+    cells + ADC tables in a driver loop (broadcast probe relation); a
+    ``queries`` relation (e.g. the corpus itself for bulk kNN-graph
+    construction) or a longer list computes the SAME cells
+    (:func:`nearest_centroid_ids`) and the SAME tables
+    (:func:`_adc_expr` — in residual mode from the per-probed-cell
+    residual) as DataFrame expressions: zero query-side collect, join
+    strategy left to Catalyst/AQE. All-integer either way, so the two
+    paths are bit-identical.
     """
     m = len(codebooks)
-    emb = embeddings if embeddings is not None else assigned
-    if queries is None and query_ids is None:
-        raise ValueError("pass query_ids (an id list) or queries= (a relation)")
-    if queries is not None and query_ids is not None:
-        # silently ignoring one of them would mask a call-site bug (the
-        # caller probably meant a different query set than we'd pick)
-        raise ValueError(
-            "pass query_ids OR queries=, not both — the relation path "
-            "would silently ignore query_ids"
-        )
-    if queries is not None:
-        if probe_select == "driver":
-            raise ValueError(
-                "queries= is a (possibly corpus-sized) relation; the "
-                "driver probe loop would collect it — use "
-                "probe_select='executor' (or 'auto')"
+    qsrc, on_driver = _probe_source(
+        embeddings if embeddings is not None else assigned,
+        query_ids, queries, id_col,
+    )
+    if on_driver:
+        # ONE collect of the (tiny) query rows feeds both the integer
+        # probe and the ADC tables. In residual mode the ADC table is
+        # PER (query, probed cluster): distances go from the query's
+        # residual wrt THAT cluster's centroid to the residual codebooks
+        # — Jegou §IV's per-cell lookup tables; the probes relation
+        # already has exactly that grain, so only the table contents
+        # change.
+        probe_rows = []
+        for r in qsrc.select(
+            id_col, quantized_units(F.col(vec_col), units).alias("u")
+        ).collect():
+            qu = [int(x) for x in r["u"]]
+            shared = None if residual else _adc_table(qu, codebooks)
+            for ci in _nearest_centroids(qu, centroids, nprobe):
+                tab = (
+                    _adc_table(
+                        [a - b for a, b in zip(qu, centroids[ci])], codebooks
+                    )
+                    if residual
+                    else shared
+                )
+                probe_rows.append((int(r[id_col]), ci, tab))
+        probes = F.broadcast(
+            assigned.sparkSession.createDataFrame(
+                probe_rows,
+                "query_id BIGINT, cluster INT, adc ARRAY<ARRAY<BIGINT>>",
             )
-        probe_select = "executor"
-    elif probe_select == "auto":
-        probe_select = (
-            "driver" if len(query_ids) <= DRIVER_PROBE_MAX else "executor"
         )
-    if probe_select == "executor":
-        cent_arr = _lit_matrix(centroids)
-        qsrc = (
-            queries
-            if queries is not None
-            else emb.where(F.col(id_col).isin([int(x) for x in query_ids]))
-        )
+    else:
         qbase = qsrc.select(
             F.col(id_col).cast("bigint").alias("query_id"),
             quantized_units(F.col(vec_col), units).alias("_qu"),
@@ -1329,15 +1259,12 @@ def ivfpq_topk(
             qdf = qbase.select(
                 "query_id", "_qu", F.explode("_cells").alias("cluster")
             )
-            src = F.zip_with(
-                F.col("_qu"),
-                F.element_at(cent_arr, F.col("cluster") + 1),
-                lambda a, b: a - b,
-            )
             probes = qdf.select(
                 "query_id",
                 F.col("cluster").cast("int").alias("cluster"),
-                _adc_expr(src, codebooks).alias("adc"),
+                _adc_expr(
+                    _residual(F.col("_qu"), centroids), codebooks
+                ).alias("adc"),
             )
         else:
             # the table is per QUERY — build it once before the explode
@@ -1349,81 +1276,21 @@ def ivfpq_topk(
             ).select(
                 "query_id", F.col("cluster").cast("int").alias("cluster"), "adc"
             )
-    else:
-        # ONE collect of the (tiny) query rows feeds both the integer
-        # probe (mirrors ivf_topk's units path: exact python-int
-        # distances, ties -> lowest cluster id) and the ADC tables. In
-        # residual mode the ADC table is PER (query, probed cluster):
-        # distances go from the query's residual wrt THAT cluster's
-        # centroid to the residual codebooks — Jegou §IV's per-cell
-        # lookup tables; the probes relation already has exactly that
-        # grain, so only the table contents change.
-        q_rows = (
-            emb.where(F.col(id_col).isin([int(x) for x in query_ids]))
-            .select(id_col, quantized_units(F.col(vec_col), units).alias("u"))
-            .collect()
-        )
-
-        probe_rows = []
-        for r in q_rows:
-            qu = [int(x) for x in r["u"]]
-            d2s = sorted(
-                (sum((a - b) * (a - b) for a, b in zip(qu, c)), ci)
-                for ci, c in enumerate(centroids)
-            )
-            shared = None if residual else _adc_table(qu, codebooks)
-            for _, ci in d2s[:nprobe]:
-                tab = (
-                    _adc_table(
-                        [a - b for a, b in zip(qu, centroids[ci])], codebooks
-                    )
-                    if residual
-                    else shared
-                )
-                probe_rows.append((int(r[id_col]), int(ci), tab))
-        spark = assigned.sparkSession
-        probes = spark.createDataFrame(
-            probe_rows,
-            "query_id BIGINT, cluster INT, adc ARRAY<ARRAY<BIGINT>>",
-        )
-    code_cols = _pq_code_cols(codes, m)
+    code_cols = [c.alias(f"code_{s}") for s, c in enumerate(_pq_code_cols(codes, m))]
     if "cluster" in codes.columns:
         # residual codes already carry the coarse cell — the index is
         # stored pre-joined, no id join needed
-        index = codes.select(
-            id_col,
-            "cluster",
-            *[c.alias(f"code_{s}") for s, c in enumerate(code_cols)],
-        )
+        index = codes.select(id_col, "cluster", *code_cols)
     else:
         index = assigned.select(id_col, "cluster").join(
-            codes.select(
-                id_col, *[c.alias(f"code_{s}") for s, c in enumerate(code_cols)]
-            ),
-            id_col,
+            codes.select(id_col, *code_cols), id_col
         )
-    # driver path: the collected probe relation is tiny by contract —
-    # broadcast it; executor path: the probe relation is query-sized and
-    # distributed — leave the strategy to Catalyst/AQE
-    probes_side = F.broadcast(probes) if probe_select != "executor" else probes
-    cand = index.join(probes_side, "cluster").where(
-        F.col(id_col) != F.col("query_id")
+    scored = (
+        index.join(probes, "cluster")
+        .where(F.col(id_col) != F.col("query_id"))
+        .select("query_id", F.col(id_col), _adc_score(F.col("adc"), m).alias("adc_d2"))
     )
-    score = None
-    for s in range(m):
-        term = F.element_at(
-            F.element_at(F.col("adc"), s + 1), F.col(f"code_{s}") + 1
-        )
-        score = term if score is None else score + term
-    scored = cand.select(
-        "query_id", F.col(id_col), score.cast("bigint").alias("adc_d2")
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", id_col)
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", id_col, "adc_d2", F.col("rn").cast("int").alias("rn"))
-    )
+    return _topk(scored, k, "adc_d2", id_col)
 
 
 def ivfpq_bulk_topk(
@@ -1478,10 +1345,10 @@ def _exact_rerank(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Stage 2 of every compressed bulk search: exact full-dimension
-    integer L2 over the ``(query_id, id)`` candidate relation only, then
-    one top-k window per query. Id-keyed equi-joins, strategy left to
-    AQE (both sides scale with the candidate cut, not the corpus)."""
+    """Stage 2 of every compressed bulk search: :func:`_two_stage`'s
+    exact re-rank of the ``(query_id, id)`` candidate relation, with the
+    corpus itself as the query side — so the joins are left to AQE (both
+    sides scale with the candidate cut, not a bounded id list)."""
     base = embeddings.select(
         id_col, quantized_units(F.col(vec_col), units).alias("_u")
     )
@@ -1489,20 +1356,7 @@ def _exact_rerank(
         F.col(id_col).cast("bigint").alias("query_id"),
         F.col("_u").alias("_qu"),
     )
-    rerank = (
-        base.join(cand, id_col)
-        .join(qp, "query_id")
-        .select(
-            "query_id",
-            id_col,
-            _int_d2(F.col("_u"), F.col("_qu")).alias("d2_u"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("d2_u", id_col)
-    return (
-        rerank.withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= k)
-    )
+    return _two_stage(base, qp, k, id_col, stage1=cand, small_queries=False)
 
 
 def size_knn_budget(
@@ -1628,13 +1482,13 @@ def _rp_signs(seed: str, out_dim: int, in_dim: int) -> list[list[int]]:
     ]
 
 
-def _int_d2(a: Column, b: Column) -> Column:
-    """Exact squared L2 distance between two ``array<bigint>`` columns —
-    integer products and sums, order-independent."""
+def _int_dot(u: Column, row: list[int]) -> Column:
+    """Exact BIGINT dot product of an ``array<bigint>`` column with an
+    integer literal row (a JL sign row or a PCA component)."""
     return F.aggregate(
-        F.zip_with(a, b, lambda p, q: (p - q) * (p - q)),
+        F.zip_with(u, _lit_array(row), lambda a, b: a * b),
         F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
+        lambda acc, x: acc + x,
     )
 
 
@@ -1695,18 +1549,7 @@ def random_projection(
             F.col(vec_col), units, in_dim, "random_projection"
         ).alias("_u"),
     )
-    comps = [
-        F.aggregate(
-            F.zip_with(
-                F.col("_u"),
-                _lit_vec(signs[j]),
-                lambda a, b: a * b,
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        for j in range(out_dim)
-    ]
+    comps = [_int_dot(F.col("_u"), row) for row in signs]
     return staged.select(id_col, F.array(*comps).alias("rp"))
 
 
@@ -1747,18 +1590,7 @@ def rp_distortion(
             F.col(vec_col), units, in_dim, "rp_distortion"
         ).alias("_u"),
     )
-    comps = [
-        F.aggregate(
-            F.zip_with(
-                F.col("_u"),
-                _lit_vec(signs[j]),
-                lambda a, b: a * b,
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        for j in range(out_dim)
-    ]
+    comps = [_int_dot(F.col("_u"), row) for row in signs]
     proj = base.select(id_col, "_u", F.array(*comps).alias("_y"))
     a = proj.select(
         F.col(id_col).alias("id_a"),
@@ -1774,8 +1606,8 @@ def rp_distortion(
     d2 = pairs.select(
         "id_a",
         "id_b",
-        _int_d2(F.col("_ua"), F.col("_ub")).alias("d2_orig_u"),
-        _int_d2(F.col("_ya"), F.col("_yb")).alias("d2_proj_u"),
+        _d2(F.col("_ua"), F.col("_ub")).alias("d2_orig_u"),
+        _d2(F.col("_ya"), F.col("_yb")).alias("d2_proj_u"),
     )
     return d2.select(
         "id_a",
@@ -1944,18 +1776,7 @@ def pca_project(
     staged = emb.select(
         id_col, quantized_units(F.col(vec_col), units).alias("_u")
     )
-    cols = [
-        F.aggregate(
-            F.zip_with(
-                F.col("_u"),
-                _lit_vec(comp),
-                lambda a, b: a * b,
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        for comp in components
-    ]
+    cols = [_int_dot(F.col("_u"), comp) for comp in components]
     out = staged.select(
         id_col, F.posexplode(F.array(*cols)).alias("component", "score_u")
     ).select(
@@ -1980,55 +1801,64 @@ def pca_project(
     )
 
 
-def _coarse_then_exact(
-    base: DataFrame,
+def _flat_scan(
     index: DataFrame,
     qp: DataFrame,
-    k: int,
-    candidates: int,
     id_col: str,
-    coarse_col: str,
-    qcoarse_col: str,
-    coarse_dist=None,
+    col: str,
+    qcol: str,
+    dist=_d2,
+    out: str = "_d",
 ) -> DataFrame:
-    """The shared two-stage ranking of :func:`rp_topk` / :func:`pca_topk`:
-    stage 1 scans only the compact ``coarse_col`` index for each query's
-    ``candidates`` nearest by ``coarse_dist`` (default: exact integer
-    L2; :func:`bq_topk` passes Hamming); stage 2 re-ranks those
-    ids alone by exact full-dimension L2 over ``base._u`` (both joins
-    broadcast the tiny candidate/query relations). Output
-    ``(query_id, vec_id, d2_u, rn)``."""
-    if coarse_dist is None:
-        coarse_dist = _int_d2
-    stage1 = (
-        index.crossJoin(F.broadcast(qp.select("query_id", qcoarse_col)))
-        .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            coarse_dist(F.col(coarse_col), F.col(qcoarse_col)).alias("_d2c"),
-        )
-    )
-    w1 = Window.partitionBy("query_id").orderBy("_d2c", id_col)
-    cand = (
-        stage1.withColumn("_crn", F.row_number().over(w1))
-        .where(F.col("_crn") <= candidates)
-        .select("query_id", id_col)
-    )
-    rerank = (
-        base.join(F.broadcast(cand), id_col)
-        .join(F.broadcast(qp.select("query_id", "_qu")), "query_id")
-        .select(
-            "query_id",
-            id_col,
-            _int_d2(F.col("_u"), F.col("_qu")).alias("d2_u"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy("d2_u", id_col)
+    """Every ``index`` row against the broadcast query relation (small
+    by contract — a broadcast nested loop; the corpus streams):
+    ``(query_id, id, out)`` with ``out = dist(index.col, qp.qcol)``."""
     return (
-        rerank.withColumn("rn", F.row_number().over(w2).cast("int"))
-        .where(F.col("rn") <= k)
+        index.crossJoin(F.broadcast(qp.select("query_id", qcol)))
+        .where(F.col(id_col) != F.col("query_id"))
+        .select("query_id", id_col, dist(F.col(col), F.col(qcol)).alias(out))
     )
+
+
+def _two_stage(
+    base: DataFrame,
+    qp: DataFrame,
+    k: int,
+    id_col: str,
+    stage1: DataFrame | None = None,
+    candidates: int | None = None,
+    small_queries: bool = True,
+) -> DataFrame:
+    """The ANN skeleton every integer-L2 tier ranks through: a coarse
+    candidate cut, then an exact re-rank (the pivot-filter-then-verify
+    shape of metric similarity joins).
+
+    ``base`` is ``(id, _u)`` and ``qp`` ``(query_id, _qu)``, both in
+    integer micro-units. ``stage1`` is the coarse relation
+    ``(query_id, id[, _d])``: with ``candidates`` it is first cut to each
+    query's best ``candidates`` by ``(_d, id)``; without, its ids are the
+    candidates as they stand (an upstream ADC cut). ``stage1=None``
+    makes every base row a candidate (:func:`int_l2_topk`). Stage 2
+    ranks the candidates by exact full-dimension integer L2 into the
+    top ``k``, id tie-breaks. ``small_queries`` broadcasts the candidate
+    and query relations (an id list or a small query set); ``False``
+    leaves both id-keyed joins to AQE (bulk: both sides scale with the
+    corpus). Every distance is an exact BIGINT sum, so the whole ranking
+    replays in DuckDB. Output ``(query_id, id, d2_u, rn: int)``."""
+    if stage1 is None:
+        scored = _flat_scan(base, qp, id_col, "_u", "_qu", out="d2_u")
+    else:
+        if candidates is not None:
+            stage1 = _topk(stage1, candidates, "_d", id_col)
+        side = F.broadcast if small_queries else (lambda df: df)
+        scored = (
+            base.join(side(stage1.select("query_id", id_col)), id_col)
+            .join(side(qp.select("query_id", "_qu")), "query_id")
+            .select(
+                "query_id", id_col, _d2(F.col("_u"), F.col("_qu")).alias("d2_u")
+            )
+        )
+    return _topk(scored, k, "d2_u", id_col)
 
 
 def pca_topk(
@@ -2091,18 +1921,8 @@ def pca_topk(
     def _proj(ucol: Column) -> Column:
         return F.array(
             *[
-                F.floor(
-                    F.aggregate(
-                        F.zip_with(
-                            ucol,
-                            _lit_vec(comp),
-                            lambda a, b: a * b,
-                        ),
-                        F.lit(0).cast("bigint"),
-                        lambda acc, x: acc + x,
-                    )
-                    / F.lit(float(score_scale))
-                ).cast("bigint")
+                F.floor(_int_dot(ucol, comp) / F.lit(float(score_scale)))
+                .cast("bigint")
                 for comp in comps
             ]
         )
@@ -2115,8 +1935,9 @@ def pca_topk(
         F.col(id_col).alias("query_id"),
         quantized_units(F.col(vec_col), units).alias("_qu"),
     ).select("query_id", "_qu", _proj(F.col("_qu")).alias("_qpc"))
-    return _coarse_then_exact(
-        base, index, qp, k, candidates, id_col, "_pc", "_qpc"
+    return _two_stage(
+        base, qp, k, id_col,
+        _flat_scan(index, qp, id_col, "_pc", "_qpc"), candidates,
     )
 
 
@@ -2152,20 +1973,7 @@ def rp_topk(
     signs = _rp_signs(seed, out_dim, in_dim)
 
     def _proj(ucol: Column) -> Column:
-        return F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(
-                        ucol,
-                        _lit_vec(signs[j]),
-                        lambda a, b: a * b,
-                    ),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x,
-                )
-                for j in range(out_dim)
-            ]
-        )
+        return F.array(*[_int_dot(ucol, row) for row in signs])
 
     base = embeddings.select(
         id_col,
@@ -2180,8 +1988,9 @@ def rp_topk(
             "_qu"
         ),
     ).select("query_id", "_qu", _proj(F.col("_qu")).alias("_qrp"))
-    return _coarse_then_exact(
-        base, index, qp, k, candidates, id_col, "_rp", "_qrp"
+    return _two_stage(
+        base, qp, k, id_col,
+        _flat_scan(index, qp, id_col, "_rp", "_qrp"), candidates,
     )
 
 
@@ -2299,20 +2108,7 @@ def rp_ivfpq_topk(
     qp = base.where(
         F.col(id_col).isin([int(x) for x in query_ids])
     ).select(F.col(id_col).alias("query_id"), F.col("_u").alias("_qu"))
-    rerank = (
-        base.join(F.broadcast(cand), id_col)
-        .join(F.broadcast(qp), "query_id")
-        .select(
-            "query_id",
-            id_col,
-            _int_d2(F.col("_u"), F.col("_qu")).alias("d2_u"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("d2_u", id_col)
-    return (
-        rerank.withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= k)
-    )
+    return _two_stage(base, qp, k, id_col, stage1=cand)
 
 
 def int_l2_topk(
@@ -2337,20 +2133,7 @@ def int_l2_topk(
         F.col(id_col).alias("query_id"),
         quantized_units(F.col(vec_col), units).alias("_qu"),
     )
-    scored = (
-        base.crossJoin(F.broadcast(qp))
-        .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            _int_d2(F.col("_u"), F.col("_qu")).alias("d2_u"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("d2_u", id_col)
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= k)
-    )
+    return _two_stage(base, qp, k, id_col)
 
 
 def sq_vmax(
@@ -2488,8 +2271,9 @@ def sq_topk(
             "_qu"
         ),
     ).select("query_id", "_qu", _sq_codes(F.col("_qu"), vmax).alias("_qsq"))
-    return _coarse_then_exact(
-        base, index, qp, k, candidates, id_col, "_sq", "_qsq"
+    return _two_stage(
+        base, qp, k, id_col,
+        _flat_scan(index, qp, id_col, "_sq", "_qsq"), candidates,
     )
 
 
@@ -2607,9 +2391,10 @@ def bq_topk(
     ).select(
         "query_id", "_qu", _bq_words(F.col("_qu"), in_dim).alias("_qbq")
     )
-    return _coarse_then_exact(
-        base, index, qp, k, candidates, id_col, "_bq", "_qbq",
-        coarse_dist=_hamming,
+    return _two_stage(
+        base, qp, k, id_col,
+        _flat_scan(index, qp, id_col, "_bq", "_qbq", dist=_hamming),
+        candidates,
     )
 
 
@@ -2659,17 +2444,8 @@ def ivfsq_build(
         embeddings, k=coarse_k, iters=coarse_iters,
         id_col=id_col, vec_col=vec_col, units=units,
     )
-    cent_arr = _lit_matrix(cents)
     u = _quantized_dim_checked(F.col(vec_col), units, in_dim, "ivfsq_build")
-    res = assigned.select(
-        id_col,
-        "cluster",
-        F.zip_with(
-            u,
-            F.element_at(cent_arr, F.col("cluster") + 1),
-            lambda a, b: a - b,
-        ).alias("_r"),
-    )
+    res = assigned.select(id_col, "cluster", _residual(u, cents).alias("_r"))
     if vmax is None:
         row = res.agg(
             F.max(
@@ -2703,29 +2479,11 @@ def ivfsq_encode(
     counterpart of the zero-training :func:`bq_build` stream pack.
     Output ``(id, cluster, _sq)`` — row-identical to the build's index
     over the same rows (gate row ``streaming_ivfsq_index`` pins it)."""
-    cent_arr = _lit_matrix(centroids)
     u = _quantized_dim_checked(F.col(vec_col), units, in_dim, "ivfsq_encode")
     step = embeddings.select(id_col, u.alias("_u"))
-    dists = F.transform(
-        cent_arr,
-        lambda c: F.aggregate(
-            F.zip_with(F.col("_u"), c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    assigned = step.withColumn(
-        "cluster", F.array_position(dists, F.array_min(dists)).cast("int") - 1
-    )
-    res = assigned.select(
-        id_col,
-        "cluster",
-        F.zip_with(
-            F.col("_u"),
-            F.element_at(cent_arr, F.col("cluster") + 1),
-            lambda a, b: a - b,
-        ).alias("_r"),
-    )
+    res = step.withColumn(
+        "cluster", _argmin(_centroid_d2s(F.col("_u"), centroids))
+    ).select(id_col, "cluster", _residual(F.col("_u"), centroids).alias("_r"))
     return res.select(
         id_col,
         "cluster",
@@ -2781,60 +2539,33 @@ def ivfsq_topk(
         _quantized_dim_checked(F.col(vec_col), units, in_dim, "ivfsq_topk")
         .alias("_u"),
     )
-    q_rows = (
-        base.where(F.col(id_col).isin([int(x) for x in query_ids]))
-        .collect()
-    )
+    qp = base.where(
+        F.col(id_col).isin([int(x) for x in query_ids])
+    ).select(F.col(id_col).alias("query_id"), F.col("_u").alias("_qu"))
     scale = float(max(1, int(vmax)))
-    probe_rows = []
-    for r in q_rows:
-        qu = [int(x) for x in r["_u"]]
-        d2s = sorted(
-            (sum((a - b) * (a - b) for a, b in zip(qu, c)), ci)
-            for ci, c in enumerate(centroids)
-        )
-        for _, ci in d2s[:nprobe]:
-            qsq = [
+    probe_rows = [
+        (
+            int(r["query_id"]),
+            ci,
+            [
                 int(math.floor((a - b) * 127.0 / scale))
-                for a, b in zip(qu, centroids[ci])
-            ]
-            probe_rows.append((int(r[id_col]), int(ci), qsq))
-    spark = embeddings.sparkSession
-    probes = spark.createDataFrame(
+                for a, b in zip(r["_qu"], centroids[ci])
+            ],
+        )
+        for r in qp.collect()
+        for ci in _nearest_centroids(
+            [int(x) for x in r["_qu"]], centroids, nprobe
+        )
+    ]
+    probes = embeddings.sparkSession.createDataFrame(
         probe_rows, "query_id BIGINT, cluster INT, qsq ARRAY<BIGINT>"
     )
     stage1 = (
         index.join(F.broadcast(probes), "cluster")
         .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            _int_d2(F.col("_sq"), F.col("qsq")).alias("_d2c"),
-        )
+        .select("query_id", id_col, _d2(F.col("_sq"), F.col("qsq")).alias("_d"))
     )
-    w1 = Window.partitionBy("query_id").orderBy("_d2c", id_col)
-    cand = (
-        stage1.withColumn("_crn", F.row_number().over(w1))
-        .where(F.col("_crn") <= candidates)
-        .select("query_id", id_col)
-    )
-    qp = base.where(
-        F.col(id_col).isin([int(x) for x in query_ids])
-    ).select(F.col(id_col).alias("query_id"), F.col("_u").alias("_qu"))
-    rerank = (
-        base.join(F.broadcast(cand), id_col)
-        .join(F.broadcast(qp), "query_id")
-        .select(
-            "query_id",
-            id_col,
-            _int_d2(F.col("_u"), F.col("_qu")).alias("d2_u"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy("d2_u", id_col)
-    return (
-        rerank.withColumn("rn", F.row_number().over(w2).cast("int"))
-        .where(F.col("rn") <= k)
-    )
+    return _two_stage(base, qp, k, id_col, stage1, candidates)
 
 
 def opq_permutation(

@@ -1,7 +1,7 @@
-"""Round-13 pins: executor-side IVF probe selection (the bulk-query
-scale path — zero query-side collect), its bit-equivalence to the
-interactive driver-loop path, and the auto threshold that picks
-between them."""
+"""Round-13 pins: the nearest-centroid probe expression, the adaptive
+quality cut, ledger compaction, broadcast-Bloom decontamination and
+delta signatures. The driver-vs-executor probe tests live in
+tests/test_ivf.py."""
 
 from __future__ import annotations
 
@@ -23,81 +23,6 @@ def ivf_index(spark):
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
-
-
-def test_executor_probes_bit_equal_driver_probes_units(spark, ivf_index):
-    """units mode: the nearest_centroid_ids expression must reproduce the
-    driver loop's python-int distances and (d2, ci) tie-break exactly —
-    same probes, same candidates, same top-k, bit for bit."""
-    emb, assigned, cents = ivf_index
-    queries = emb.where(F.col("vec_id") < 40)
-    a = S.ivf_topk(
-        assigned, cents, queries, k=5, nprobe=3, units=IVF_UNITS,
-        probe_select="driver",
-    )
-    b = S.ivf_topk(
-        assigned, cents, queries, k=5, nprobe=3, units=IVF_UNITS,
-        probe_select="executor",
-    )
-    ra, rb = _rows(a), _rows(b)
-    assert ra == rb
-    assert len(ra) == 40 * 5
-
-
-def test_executor_probes_match_driver_float_path(spark, ivf_index):
-    """float mode: same equivalence on this fixture (the paths can only
-    diverge on near-exact centroid ties, which the fixture has none of)."""
-    emb, assigned, cents = ivf_index
-    queries = emb.where(F.col("vec_id") < 20)
-    a = S.ivf_topk(assigned, cents, queries, k=5, nprobe=2,
-                   probe_select="driver")
-    b = S.ivf_topk(assigned, cents, queries, k=5, nprobe=2,
-                   probe_select="executor")
-    assert _rows(a) == _rows(b)
-
-
-def test_executor_path_has_zero_query_side_collect(spark, ivf_index):
-    """The bulk-path plan census: a driver-selected probe relation
-    materializes as a LocalTableScan (createDataFrame of collected query
-    rows); the executor path must have NONE — every relation in its plan
-    comes from the distributed scan, so a 10⁶-query re-rank never funnels
-    through the driver."""
-    emb, assigned, cents = ivf_index
-    ex = S.ivf_topk(
-        assigned, cents, emb, k=5, nprobe=2, units=IVF_UNITS,
-        probe_select="executor",
-    )
-    plan = ex._jdf.queryExecution().optimizedPlan().toString()
-    # createDataFrame(collected rows) plans as LogicalRDD/LocalRelation;
-    # the executor path must have neither
-    assert "LogicalRDD" not in plan and "LocalRelation" not in plan
-    # contrast pin: the driver path DOES carry the collected probe rows
-    dr = S.ivf_topk(
-        assigned, cents, emb.where(F.col("vec_id") < 5), k=5, nprobe=2,
-        units=IVF_UNITS, probe_select="driver",
-    )
-    dplan = dr._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" in dplan
-
-
-def test_auto_threshold_picks_by_query_count(spark, ivf_index):
-    """probe_select="auto" keeps the interactive collect path for small
-    query sets (<= DRIVER_PROBE_MAX) and switches to the executor
-    expression beyond it — observable from whether the probe relation is
-    a LocalRelation."""
-    emb, assigned, cents = ivf_index
-    small = S.ivf_topk(
-        assigned, cents, emb.where(F.col("vec_id") < 3), k=5, nprobe=2,
-        units=IVF_UNITS, probe_select="auto",
-    )
-    assert "LogicalRDD" in small._jdf.queryExecution().optimizedPlan().toString()
-    big = S.ivf_topk(  # 500 > DRIVER_PROBE_MAX=256
-        assigned, cents, emb, k=5, nprobe=2, units=IVF_UNITS,
-        probe_select="auto",
-    )
-    big_plan = big._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" not in big_plan and "LocalRelation" not in big_plan
-    assert S.DRIVER_PROBE_MAX == 256
 
 
 def test_nearest_centroid_ids_first_element_is_assign_argmin(spark, ivf_index):
@@ -245,39 +170,6 @@ def test_compact_single_generation_is_noop(spark, ledger_sink):
     sink, up, mk = ledger_sink
     assert compact_ledger(spark, sink, ["k"], through=0) == 1
     assert ledger_generations(sink) == [0, 1, 2, 3]
-
-
-# ------------------------------------------------ IVFADC executor probes
-
-
-def test_ivfpq_executor_path_bit_equal_and_collect_free(spark, ivf_index):
-    """ivfpq_topk's executor path: probe cells from nearest_centroid_ids
-    and ADC tables from the _adc_expr expression must reproduce the
-    driver loop bit for bit (all-integer arithmetic both ways), with a
-    LogicalRDD-free plan. Covers plain AND residual mode (per-probed-
-    cell residual tables — the Jégou §IV grain)."""
-    emb, _, _ = ivf_index
-    U = 1_000_000
-    qids = list(range(20))
-    codes, books = S.pq_build(emb, m=4, k=16, iters=1, units=U, pack=True)
-    assigned, cents = S.ivf_build(emb, k=16, iters=1, units=U)
-    a = S.ivfpq_topk(assigned, cents, codes, books, qids, k=5, nprobe=2,
-                     units=U, probe_select="driver")
-    b = S.ivfpq_topk(assigned, cents, codes, books, qids, k=5, nprobe=2,
-                     units=U, probe_select="executor")
-    assert _rows(a) == _rows(b)
-    rassigned, rcents, rcodes, rbooks = S.ivfpq_build_residual(
-        emb, coarse_k=16, coarse_iters=1, m=4, k=16, iters=1, units=U
-    )
-    ra = S.ivfpq_topk(rassigned, rcents, rcodes, rbooks, qids, k=5, nprobe=2,
-                      units=U, residual=True, embeddings=emb,
-                      probe_select="driver")
-    rb = S.ivfpq_topk(rassigned, rcents, rcodes, rbooks, qids, k=5, nprobe=2,
-                      units=U, residual=True, embeddings=emb,
-                      probe_select="executor")
-    assert _rows(ra) == _rows(rb)
-    plan = rb._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" not in plan and "LocalRelation" not in plan
 
 
 # ------------------------------------ broadcast-Bloom decontamination

@@ -390,87 +390,6 @@ def test_delta_sign_plan_never_scans_old_text(spark, tmp_path):
     assert "ReadSchema: struct<doc_id:bigint,text_hash:string>" in plan
 
 
-# ------------------------------ bulk compressed kNN (ivfpq_bulk_topk)
-
-
-def test_ivfpq_bulk_matches_driver_path_per_query(spark):
-    """The bulk query-relation path must produce, for any query subset,
-    exactly what the id-list path produces: same ADC candidate cut,
-    same exact re-rank, same tie-breaks."""
-    from hadoop_tfidf_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_DIR_SMOKE}/embeddings.parquet")
-    assigned, cents, codes, books = S.ivfpq_build_residual(
-        emb, coarse_k=8, coarse_iters=1, m=4, k=8, iters=1,
-        units=1_000_000, pack=True,
-    )
-    bulk = S.ivfpq_bulk_topk(
-        assigned, cents, codes, books, emb, k=5, candidates=15, nprobe=2,
-        units=1_000_000,
-    )
-    got = sorted(
-        map(tuple, bulk.where(F.col("query_id") < 8).collect())
-    )
-    # reference: the driver id-list ADC cut + the same exact re-rank
-    cand = S.ivfpq_topk(
-        assigned, cents, codes, books, list(range(8)), k=15, nprobe=2,
-        units=1_000_000, embeddings=emb, residual=True,
-        probe_select="driver",
-    ).select("query_id", "vec_id")
-    base = emb.select(
-        "vec_id", S.quantized_units(F.col("embedding"), 1_000_000).alias("_u")
-    )
-    qp = base.select(
-        F.col("vec_id").cast("bigint").alias("query_id"),
-        F.col("_u").alias("_qu"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy("d2_u", "vec_id")
-    want = sorted(
-        map(
-            tuple,
-            base.join(cand, "vec_id")
-            .join(qp, "query_id")
-            .select(
-                "query_id",
-                "vec_id",
-                S._int_d2(F.col("_u"), F.col("_qu")).alias("d2_u"),
-            )
-            .withColumn("rn", F.row_number().over(w).cast("int"))
-            .where(F.col("rn") <= 5)
-            .collect(),
-        )
-    )
-    assert got == want and len(got) == 8 * 5
-
-
-def test_ivfpq_bulk_census_zero_query_side_collect(spark):
-    """The bulk plan must contain no driver-materialized relation
-    (LogicalRDD / LocalRelation) — every row flows from the distributed
-    scans; and queries= with probe_select='driver' refuses loudly."""
-    from hadoop_tfidf_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_DIR_SMOKE}/embeddings.parquet")
-    assigned, cents, codes, books = S.ivfpq_build_residual(
-        emb, coarse_k=8, coarse_iters=1, m=4, k=8, iters=1,
-        units=1_000_000, pack=True,
-    )
-    plan = (
-        S.ivfpq_bulk_topk(
-            assigned, cents, codes, books, emb, k=5, candidates=15,
-            nprobe=2, units=1_000_000,
-        )
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "LogicalRDD" not in plan and "LocalRelation" not in plan
-    with pytest.raises(ValueError, match="executor"):
-        S.ivfpq_topk(
-            assigned, cents, codes, books, None, queries=emb,
-            probe_select="driver",
-        )
-
-
 # ------------------------------------------------ sample-trained IVF
 
 

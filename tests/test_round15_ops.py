@@ -336,7 +336,7 @@ def _in_session_twin(spark, emb, kind, qids, k, candidates, nprobe):
     if kind == "ivf":
         assigned, cents = S.ivf_build(emb, k=4, iters=2, units=1000)
         return S.ivf_topk(
-            assigned, cents, queries, k=k, nprobe=nprobe, units=1000
+            assigned, cents, qids, k=k, nprobe=nprobe, units=1000
         )
     if kind == "bq":
         return S.bq_topk(

@@ -151,3 +151,20 @@ def test_pipeline_curate_collapses_replicas_to_base(spark, big_docs):
     }
     big = {tuple(r) for r in curate_corpus(big_docs).collect()}
     assert big == base and base
+
+
+
+def test_rebalance_ignores_inflated_size_estimates(spark):
+    """A cross join's size statistic multiplies its inputs' (≈1.6 PB
+    here, ~10^7 partitions' worth) although the relation is one
+    partition after the coalesce: the rebalance target stays a small
+    multiple of the cluster's parallelism instead of trusting the
+    estimate. Only the plan is inspected — nothing executes."""
+    from hadoop_tfidf_spark.corpus import REBALANCE_MAX_FACTOR
+
+    # large enough that neither side broadcasts: a plain cartesian plan
+    inflated = spark.range(10**7).crossJoin(spark.range(10**7)).coalesce(1)
+    parallelism = spark.sparkContext.defaultParallelism
+    out = rebalance_scan(inflated, spark)
+    n = out._jdf.queryExecution().logical().numPartitions()
+    assert parallelism <= n <= REBALANCE_MAX_FACTOR * parallelism
