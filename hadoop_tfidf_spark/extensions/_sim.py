@@ -978,12 +978,7 @@ def _opq_permuted_emb(spark, sf_dir, rebalance=False):
     perm = S.opq_permutation(
         emb, m=PQ_M, in_dim=64, units=IVF_UNITS, sample_n=OPQ_SAMPLE_N
     )
-    return emb.select(
-        "vec_id",
-        F.array(*[F.col("embedding").getItem(int(p)) for p in perm]).alias(
-            "embedding"
-        ),
-    )
+    return S.opq_apply(emb, perm)
 
 
 def q_sim_topk_opq_ivfpq(spark, sf_dir):

@@ -72,17 +72,6 @@ KIND_TABLE = {
 }
 
 
-def _permuted(df: DataFrame, perm: list[int], id_col: str, vec_col: str) -> DataFrame:
-    """The OPQ coordinate reorder as a projection (free at encode time —
-    no arithmetic). Keeps only (id, vec): every opq-tier consumer works
-    in the permuted space, where L2 distances are identical."""
-    return df.select(
-        id_col,
-        F.array(
-            *[F.col(vec_col).getItem(int(p)) for p in perm]
-        ).alias(vec_col),
-    )
-
 #: Subdirectory holding encode-only generation appends; each committed
 #: generation is ``generations/gen=N/<table>`` parquet plus a
 #: ``_META.json`` commit marker written LAST (a crashed encode leaves a
@@ -356,7 +345,7 @@ def build_knn_index(
             id_col=id_col, vec_col=vec_col,
         )
         extra_artifacts["perm"] = [int(p) for p in perm]
-        embeddings = _permuted(embeddings, perm, id_col, vec_col)
+        embeddings = S.opq_apply(embeddings, perm, id_col, vec_col)
     assigned, cents, codes, codebooks = S.ivfpq_build_residual(
         embeddings, coarse_k=coarse_k, coarse_iters=coarse_iters,
         m=m, k=pq_k, iters=pq_iters, units=units,
@@ -429,7 +418,7 @@ def serve_knn(
         if index.kind == "opq_ivfpq":
             # reorder into the trained space; L2 is permutation-
             # invariant so the served distances are the true ones
-            embeddings = _permuted(embeddings, arts["perm"], id_col, vec_col)
+            embeddings = S.opq_apply(embeddings, arts["perm"], id_col, vec_col)
         return S.ivfpq_topk(
             embeddings,  # assigned is only the query-vector default here
             arts["centroids"], index.tables["codes"], arts["codebooks"],
@@ -474,7 +463,7 @@ def serve_knn_bulk(
         # bulk job: unpersisted, every distance lambda inlines the
         # in_dim-getItem array build and re-evaluates it per element
         # (the measured 10.6s-vs-2.0s rp_ivfpq precedent, SCALE.md)
-        embeddings = _permuted(
+        embeddings = S.opq_apply(
             embeddings, index.artifacts["perm"], p["id_col"], p["vec_col"]
         ).persist(StorageLevel.MEMORY_AND_DISK)
     cents, books = index.artifacts["centroids"], index.artifacts["codebooks"]
@@ -506,17 +495,15 @@ def _encode_generation(
     packed: bool,
 ) -> DataFrame:
     """Encode new vectors against FROZEN artifacts — the append half of
-    crawl-over-crawl index growth. NO training job runs here: no Lloyd
-    round, no calibration scan, no codebook fit — every path below is a
-    pure projection against broadcast centroid/codebook/vmax literals,
-    so extend cost is one scan of the NEW rows (O(delta), the
-    ``dedup.delta_sign`` shape applied to ANN storage). Emits exactly
-    the tier's stored-relation schema so the slice unions cleanly under
-    the base build."""
+    crawl-over-crawl index growth. Each tier dispatches onto the encoder
+    its build ran over the base corpus, so NO training job runs here (no
+    Lloyd round, no calibration scan, no codebook fit), extend cost is
+    one scan of the NEW rows (O(delta), the ``dedup.delta_sign`` shape
+    applied to ANN storage), and the slice has exactly the tier's
+    stored-relation schema, so it unions cleanly under the base build."""
     from hadoop_tfidf_spark.operators import similarity as S
 
-    units = params["units"]
-    in_dim = params["in_dim"]
+    units, in_dim = params["units"], params["in_dim"]
     id_col, vec_col = params["id_col"], params["vec_col"]
     if kind == "bq":
         # BQ is trainless — its build IS the stateless sign-pack encode
@@ -526,41 +513,28 @@ def _encode_generation(
         )
     if kind == "sq":
         # frozen vmax → sq_build skips its calibration scan entirely
-        index, _ = S.sq_build(
+        return S.sq_build(
             new_embeddings, units=units, in_dim=in_dim,
             id_col=id_col, vec_col=vec_col, vmax=int(artifacts["vmax"]),
+        )[0]
+    if kind == "ivf":
+        return S.ivf_encode(
+            new_embeddings, artifacts["centroids"], units, vec_col
         )
-        return index
     if kind == "ivfsq":
         return S.ivfsq_encode(
             new_embeddings, artifacts["centroids"],
             int(artifacts["vmax"]), units=units, in_dim=in_dim,
             id_col=id_col, vec_col=vec_col,
         )
-    if kind == "opq_ivfpq":
-        # frozen permutation first; the rest is the ivfpq_res encode in
-        # the permuted space
-        new_embeddings = _permuted(
-            new_embeddings, artifacts["perm"], id_col, vec_col
-        )
-    cents = artifacts["centroids"]
-    # frozen-centroid assignment: nearest_centroid_ids' first element is
-    # the same first-minimum argmin ivf_build's final Lloyd pass takes
-    cluster = F.element_at(
-        S.nearest_centroid_ids(F.col(vec_col), cents, 1, units), 1
-    )
-    if kind == "ivf":
-        return new_embeddings.withColumn("cluster", cluster)
     if kind in ("ivfpq_res", "opq_ivfpq"):
-        res = new_embeddings.withColumn("cluster", cluster).select(
-            id_col,
-            "cluster",
-            S._residual(S.quantized_units(F.col(vec_col), units), cents)
-            .alias("_u"),
-        )
-        return S._pq_encode_units(
-            res, artifacts["codebooks"], id_col=id_col, pack=packed,
-            extra_cols=["cluster"],
+        if kind == "opq_ivfpq":
+            new_embeddings = S.opq_apply(
+                new_embeddings, artifacts["perm"], id_col, vec_col
+            )
+        return S.ivfpq_encode(
+            new_embeddings, artifacts["centroids"], artifacts["codebooks"],
+            units=units, id_col=id_col, vec_col=vec_col, pack=packed,
         )
     raise ValueError(f"unknown index kind {kind!r}")
 

@@ -1,27 +1,36 @@
-"""Similarity search over an embedding column (``array<float>``): exact
-brute-force cosine top-k as the correctness baseline, and a sign-bit
-LSH-bucketed variant as the scale path. North-star engine surface — the
-reference has nothing vector-shaped (SURVEY.md §2 gap table).
+"""Similarity search over an embedding column (``array<float>``): the
+exact brute-force cosine baseline, sign-bit LSH, and a ladder of trained
+ANN indexes (IVF, PQ, residual IVFADC, OPQ, IVF-SQ) beside the
+training-free flat codes (SQ, BQ, random projection, PCA). North-star
+engine surface — the reference has nothing vector-shaped (SURVEY.md §2
+gap table).
+
+Every trained index has the same three parts:
+
+* **train** — :func:`_lloyd_units` is the one Lloyd loop. It runs over
+  integer micro-units (:func:`quantized_units`), seeds on the first
+  ``k`` well-formed rows by id, and costs one persist, one seed collect
+  and one means job per round. IVF coarse cells are its ``m=1`` case; PQ
+  codebooks train ``m`` subspaces in the same jobs.
+* **encode** — a pure projection against the frozen artifacts:
+  :func:`ivf_encode`, :func:`ivfpq_encode`, :func:`ivfsq_encode`. A build
+  encodes its corpus with the same function that
+  ``index_store.extend_index`` and streaming ingest use, so a vector gets
+  the same cell and codes however it arrives. Every cell assignment is
+  :func:`_assign`: the first-minimum integer L2 argmin, ``-1`` for a
+  malformed vector (null, or with a null element), whose codes are null.
+* **search** — one skeleton: a probe (:func:`_nearest_centroids` on the
+  driver, :func:`nearest_centroid_ids` on executors), a coarse distance
+  (cosine, ADC :func:`_adc_score`, code-space L2 or Hamming), a candidate
+  cut and exact integer-L2 re-rank (:func:`_two_stage`), and one per-query
+  window (:func:`_topk`).
 
 All vector math is built-in higher-order functions (``zip_with`` +
-``aggregate``) evaluated JVM-side in codegen — no Python, no UDF. Elements
-are cast to double before arithmetic so Spark and the DuckDB oracle
-(``list_cosine_similarity`` on ``DOUBLE[]``) agree to well past the 6
-rounded digits the declared queries compare.
-
-Scale design (100 TB of embeddings):
-
-* brute-force top-k is O(n·q) — correct baseline, used when the query set
-  is small (it's a broadcast nested-loop join: the n-side streams, never
-  shuffles, and per-partition TakeOrdered keeps memory flat).
-* the LSH variant buckets vectors by the sign pattern of the first
-  ``n_bits`` dimensions (coordinate hyperplanes — a valid random-projection
-  family for centered data). Candidates come from an equi-join on the
-  bucket id, cutting the scan to ~n/2^bits per query; recall/latency trades
-  by ``n_bits``. An IVF refinement (k-means centroids) drops in by replacing
-  ``sign_bucket`` with a nearest-centroid id — same join shape.
-* dedup by embedding (cosine ≥ t) uses the same bucket as a blocking key on
-  BOTH sides — an equi-join self-join, never the O(n²) cross join.
+``aggregate``) evaluated JVM-side in codegen — no Python, no UDF. Cosine
+paths cast elements to double so Spark and the DuckDB oracle
+(``list_cosine_similarity`` on ``DOUBLE[]``) agree well past the 6 rounded
+digits the declared queries compare; the index paths are exact BIGINT, so
+artifacts, codes and rankings replay bit for bit in DuckDB.
 """
 
 from __future__ import annotations
@@ -36,49 +45,43 @@ def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def _lit_array(values, floats: bool = False) -> Column:
-    """A vector, matrix or 3-level codebook literal with one explicit
-    element type: ``double`` for ``floats``, else ``bigint``.
+def _lit_array(values) -> Column:
+    """A vector, matrix or 3-level codebook literal of ``bigint``.
 
-    ``F.lit(list)`` builds ``array(lit(x), …)`` level by level and types
-    each element from its value, so small python ints come out ``int``
-    (``[[1, 2], [3, 4]]`` would be ``array<array<int>>``) and a sum of
-    two entries near 2^30 overflows under ANSI mode. One cast of the
-    whole integer literal fixes the type; the optimizer folds the cast
-    and the element literals into a single constant. Measured when the
-    nested literals replaced per-element ``F.array`` construction: an
-    IVF assign job over 16×64 centroids dropped ~2-3× in wall time."""
-    def conv(v):
+    ``F.lit(list)`` builds ``array(lit(x), …)`` level by level with one
+    py4j round trip per element (~130 ms for a 16×16 centroid matrix,
+    and a build or search plan holds several), and types each element
+    from its value, so small ints come out ``int`` and a sum of two
+    entries near 2^30 overflows under ANSI mode. Instead the literal is
+    one SQL expression, parsed in a single call (~1 ms) with one cast of
+    the whole array to ``bigint``; the optimizer folds it into a single
+    constant. Measured when the nested literals replaced per-element
+    ``F.array`` construction: an IVF assign job over 16×64 centroids
+    dropped ~2-3× in wall time."""
+    def sql(v):
         if isinstance(v, (list, tuple)):
-            return [conv(x) for x in v]
-        return float(v) if floats else int(v)
+            return "ARRAY(" + ", ".join(sql(x) for x in v) + ")"
+        return str(int(v))
 
-    lit = F.lit(conv(values))
-    if floats:
-        return lit
     depth, probe = 0, values
     while isinstance(probe, (list, tuple)) and len(probe):
         depth, probe = depth + 1, probe[0]
-    return lit.cast("array<" * depth + "bigint" + ">" * depth)
+    return F.expr(f"CAST({sql(values)} AS {'ARRAY<' * depth}BIGINT{'>' * depth})")
 
 
-def _d2(a: Column, b: Column, floats: bool = False) -> Column:
-    """Squared L2 distance between two array columns, folded left to
-    right: exact BIGINT (order-independent) for integer arrays, double
-    for ``floats``."""
-    zero = F.lit(0.0) if floats else F.lit(0).cast("bigint")
+def _d2(a: Column, b: Column) -> Column:
+    """Exact BIGINT squared L2 distance between two integer array
+    columns (order-independent)."""
     return F.aggregate(
         F.zip_with(a, b, lambda p, q: (p - q) * (p - q)),
-        zero,
+        F.lit(0).cast("bigint"),
         lambda acc, v: acc + v,
     )
 
 
-def _centroid_d2s(vec: Column, centroids: list[list], floats: bool = False) -> Column:
+def _centroid_d2s(vec: Column, centroids: list[list[int]]) -> Column:
     """``array`` of :func:`_d2` from ``vec`` to every centroid literal."""
-    return F.transform(
-        _lit_array(centroids, floats), lambda c: _d2(vec, c, floats)
-    )
+    return F.transform(_lit_array(centroids), lambda c: _d2(vec, c))
 
 
 def _argmin(dists: Column) -> Column:
@@ -86,13 +89,27 @@ def _argmin(dists: Column) -> Column:
     return F.array_position(dists, F.array_min(dists)).cast("int") - 1
 
 
+def _assign(vec: Column, centroids: list[list[int]]) -> Column:
+    """The nearest-centroid id of a micro-unit vector — every cell
+    assignment and code in this module: training rounds, build, extend
+    and streaming encode. Ties go to the lowest id (the oracle's
+    ``row_number`` tie-break mirrors this).
+
+    A malformed vector (null, a null element, or the wrong length) has
+    no distance to any centroid and gets ``-1``: a visible unassignable
+    cell that no probe reaches and training skips. The literal fallback
+    also makes the column provably non-nullable. Without it every
+    equi-join on ``cluster`` infers ``IsNotNull(cluster)`` and pushes the
+    whole k×dim distance aggregate below any rebalance exchange to the
+    scan, evaluating it a second time per row."""
+    return F.coalesce(_argmin(_centroid_d2s(vec, centroids)), F.lit(-1))
+
+
 def _residual(u: Column, centroids: list[list[int]]) -> Column:
     """``u − centroids[cluster]``: the integer residual of a micro-unit
-    vector from its coarse cell's centroid literal."""
+    vector from its cell's centroid literal; null in cell ``-1``."""
     return F.zip_with(
-        u,
-        F.element_at(_lit_array(centroids), F.col("cluster") + 1),
-        lambda a, b: a - b,
+        u, F.get(_lit_array(centroids), F.col("cluster")), lambda a, b: a - b
     )
 
 
@@ -231,134 +248,64 @@ def ivf_build(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    units: int | None = None,
+    units: int = 1_000_000,
     train: DataFrame | None = None,
-) -> tuple[DataFrame, list[list[float]]]:
-    """IVF coarse quantizer: k-means centroids (``iters`` Lloyd rounds) and
-    the corpus with a ``cluster`` assignment column.
+) -> tuple[DataFrame, list[list[int]]]:
+    """IVF coarse quantizer: k-means centroids (``iters`` Lloyd rounds of
+    :func:`_lloyd_units` with ``m=1``) and the corpus with a ``cluster``
+    assignment column (:func:`ivf_encode`).
 
-    Deterministic seeding: the first ``k`` vectors by id. Each Lloyd round
-    is one DataFrame aggregation (posexplode dims → per-(cluster, dim)
-    mean) plus a driver-side collect of the k×dim centroid matrix — the
-    centroids are tiny, so the collect is the legitimate kind; the corpus
-    itself never leaves executors. At 100 TB: train on a sample — pass
-    ``train=`` (any subset relation; a deterministic id-predicate keeps
-    the build oracle-replayable) and the seed + every Lloyd round's
-    statistics run over it alone, while the FINAL assignment still
-    covers the full ``embeddings`` once. Lloyd cost then scales with
-    the sample, not the corpus — the train/assign split every
-    production ANN build uses.
+    Inputs quantize once to integer micro-units (:func:`quantized_units`),
+    distances are exact bigint sums and each centroid update is
+    ``round(sum_u / n)`` of exact integers — so assignments are
+    bit-reproducible across engines and partitionings, and the whole
+    build replays in the DuckDB oracle. Quantization error is ~1/units
+    per element, far below any meaningful cluster boundary; centroids
+    are lists of ints (micro-units).
 
-    ``units`` (e.g. ``1_000_000``) switches to INTEGER micro-unit Lloyd:
-    inputs quantize once via :func:`quantized_units`, distances are exact
-    bigint sums (order-independent — float Lloyd depends on partial-agg
-    order), and each centroid update is ``round(sum_u / n)`` of exact
-    integers — so assignments are bit-reproducible across engines and the
-    whole build is replayable by the DuckDB oracle. Quantization error is
-    ~1e-6 per element, far below any meaningful cluster boundary; the
-    returned centroids are then lists of ints (micro-units).
+    At 100 TB train on a sample: pass ``train=`` (any subset relation; a
+    deterministic id-predicate keeps the build oracle-replayable) and the
+    seed and every Lloyd round run over it alone, while the final
+    assignment still covers the full ``embeddings`` once — the
+    train/assign split every production ANN build uses.
     """
-    if units is not None:
-        emb = embeddings.withColumn("_u", quantized_units(F.col(vec_col), units))
-        tremb = (
-            emb
-            if train is None
-            else train.withColumn("_u", quantized_units(F.col(vec_col), units))
-        )
-        work_col = "_u"
-        cents = [
-            [int(x) for x in r["_u"]]
-            for r in tremb.orderBy(id_col).select("_u").limit(k).collect()
-        ]
-    else:
-        emb = embeddings
-        tremb = emb if train is None else train
-        work_col = vec_col
-        cents = [
-            [float(x) for x in r[vec_col]]
-            for r in tremb.orderBy(id_col).select(vec_col).limit(k).collect()
-        ]
-    if not cents:
-        raise ValueError("ivf_build: embeddings table is empty")
-    # dimension comes free with the seed collect — a separate first()
-    # would cost one more Spark job per build (Lloyd cost here is job
-    # count + centroid-literal codegen, not data volume)
-    dim_count = len(cents[0])
+    src = embeddings if train is None else train
+    [cents] = _lloyd_units(
+        src.select(id_col, quantized_units(F.col(vec_col), units).alias("_u")),
+        m=1, k=k, iters=iters, id_col=id_col,
+    )
+    return ivf_encode(embeddings, cents, units, vec_col), cents
 
-    def assign(df: DataFrame, centroids: list[list]) -> DataFrame:
-        vec = F.col(work_col) if units is not None else _as_double(F.col(work_col))
-        # argmin over squared L2 distance to each centroid — lowest
-        # cluster id wins ties (the oracle's row_number tie-break
-        # mirrors this)
-        cluster = _argmin(_centroid_d2s(vec, centroids, floats=units is None))
-        # The argmin is never null on real rows, but Catalyst can't prove
-        # it, so every downstream equi-join on `cluster` infers an
-        # IsNotNull(cluster) constraint and pushes THE WHOLE ASSIGNMENT
-        # EXPRESSION below any rebalance exchange to the scan — a second,
-        # single-task evaluation of the k×dim distance aggregate per row.
-        # coalesce with a literal makes the column provably non-nullable,
-        # so the inferred filter constant-folds away (values unchanged:
-        # the fallback -1 is unreachable for well-formed vectors).
-        # OUTPUT CONTRACT (ADVICE r16): cluster = -1 marks a row whose
-        # vector is null/malformed (the distance aggregate is null) —
-        # such rows previously carried a null cluster and silently fell
-        # out of equi-joins; with -1 they form a visible "unassignable"
-        # cell instead. The driver fixtures contain no such rows.
-        return df.withColumn("cluster", F.coalesce(cluster, F.lit(-1)))
 
-    # Lloyd statistics over the TRAIN relation only; the final
-    # assignment (below) covers the full corpus. With train=None the
-    # two relations coincide and the job sequence is unchanged.
-    # The train relation is persisted across the build's driver jobs
-    # (each means job re-derived the scan + quantize transform
-    # otherwise — §4.5 train-once economics) and RELEASED before the
-    # lazy result plan returns, so the returned assignment always
-    # computes from the source relation and nothing this build cached
-    # leaks into a caller's timed execution.
-    tremb = tremb.persist()
-    try:
-        assigned_train = assign(tremb, cents)
-        for _ in range(iters):
-            per_dim = assigned_train.select(
-                "cluster",
-                F.posexplode(
-                    F.col("_u") if units is not None else _as_double(F.col(vec_col))
-                ).alias("d", "x"),
-            ).groupBy("cluster", "d")
-            if units is not None:
-                # exact integer sum / exact count → one IEEE division →
-                # one round: identical in any engine, any partitioning
-                means = per_dim.agg(
-                    F.round(F.sum("x") / F.count("*"), 0).cast("bigint").alias("m")
-                ).collect()
-            else:
-                means = per_dim.agg(F.avg("x").alias("m")).collect()
-            by_cluster: dict[int, list] = {}
-            for r in means:
-                by_cluster.setdefault(r.cluster, [0] * dim_count)[r.d] = r.m
-            cents = [by_cluster.get(c, cents[c]) for c in range(len(cents))]
-            assigned_train = assign(tremb, cents)
-    finally:
-        tremb.unpersist()
-    assigned = assign(emb, cents)
-    return assigned.drop("_u") if units is not None else assigned, cents
+def ivf_encode(
+    embeddings: DataFrame,
+    centroids: list[list[int]],
+    units: int = 1_000_000,
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Frozen-centroid IVF assignment: ``embeddings`` plus ``cluster`` =
+    :func:`_assign` of its micro-unit vector — :func:`ivf_build`'s final
+    assignment, and the ``ivf`` tier's extend encode."""
+    return (
+        embeddings.withColumn("_u", quantized_units(F.col(vec_col), units))
+        .withColumn("cluster", _assign(F.col("_u"), centroids))
+        .drop("_u")
+    )
 
 
 def nearest_centroid_ids(
-    vec: Column, centroids: list[list], nprobe: int, units: int | None
+    vec: Column, centroids: list[list[int]], nprobe: int, units: int
 ) -> Column:
     """The ``nprobe`` nearest centroid ids for an array column, as a pure
-    DataFrame expression (no driver round-trip): squared-L2 distance to
+    DataFrame expression (no driver round-trip): exact integer L2 to
     every centroid literal, then ``array_sort`` over ``(d2, ci)`` structs
     — lexicographic struct ordering gives exactly the driver twin's
     (:func:`_nearest_centroids`) ``sorted((d2, ci))[:nprobe]`` semantics,
-    ties → lowest cluster id. With ``units`` the arithmetic is exact
-    BIGINT (bit-identical to the twin's python ints); float mode matches
-    up to fold order on near-ties. ``nprobe=1``'s first element is the
-    same argmin :func:`ivf_build`'s ``assign`` computes."""
-    v = quantized_units(vec, units) if units is not None else _as_double(vec)
+    ties → lowest cluster id, bit-identical to the twin's python ints.
+    The executor probe of :func:`ivf_topk` / :func:`ivfpq_topk`; cell
+    assignment is :func:`_assign`."""
     pairs = F.transform(
-        _centroid_d2s(v, centroids, floats=units is None),
+        _centroid_d2s(quantized_units(vec, units), centroids),
         lambda d, i: F.struct(d.alias("d2"), i.cast("int").alias("ci")),
     )
     return F.transform(
@@ -414,7 +361,7 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    units: int | None = None,
+    units: int = 1_000_000,
     embeddings: DataFrame | None = None,
     queries: DataFrame | None = None,
 ) -> DataFrame:
@@ -422,7 +369,7 @@ def ivf_topk(
     cosine rank within them. Candidates come from an equi-join on the
     cluster id — scan cost ~ nprobe/k of the corpus per query.
 
-    ``units`` must match :func:`ivf_build`'s: probing then runs on the
+    ``units`` must match :func:`ivf_build`'s: probing runs on the
     micro-unit integers (query vectors quantized by the same Spark
     expression, exact integer distances, ties → lowest cluster id), so
     the probed set is bit-reproducible. Final scoring always uses the
@@ -433,8 +380,7 @@ def ivf_topk(
     contract. Up to :data:`DRIVER_PROBE_MAX` ids probe on the driver
     (one tiny collect, broadcast probe relation); a relation or a longer
     list probes on executors (:func:`nearest_centroid_ids`, join strategy
-    left to Catalyst/AQE). In ``units`` mode both give bit-identical
-    probes; float mode can differ on near-exact centroid ties only.
+    left to Catalyst/AQE). Both give bit-identical probes.
     """
     qsrc, on_driver = _probe_source(
         embeddings if embeddings is not None else assigned,
@@ -452,15 +398,12 @@ def ivf_topk(
         "_nrm", norm(F.col(vec_col))
     )
     if on_driver:
-        qu = [] if units is None else [
-            quantized_units(F.col(vec_col), units).alias("_u")
-        ]
         probe_rows = []
-        for r in qsrc.select(id_col, vec_col, *qu).collect():
+        for r in qsrc.select(
+            id_col, vec_col, quantized_units(F.col(vec_col), units).alias("_u")
+        ).collect():
             q_vec = [float(x) for x in r[vec_col]]
-            for ci in _nearest_centroids(
-                q_vec if units is None else r["_u"], centroids, nprobe
-            ):
+            for ci in _nearest_centroids(r["_u"], centroids, nprobe):
                 probe_rows.append((r[id_col], q_vec, ci))
         probes = F.broadcast(
             assigned.sparkSession.createDataFrame(
@@ -829,13 +772,6 @@ def nearest_centroid_confusion(
     )
 
 
-def _argmin_units(vec: Column, cents: list[list[int]]) -> Column:
-    """0-based argmin of exact integer L2 distance from ``vec`` (an
-    ``array<bigint>`` of micro-units) to each centroid literal; ties go to
-    the lowest index."""
-    return _argmin(_centroid_d2s(vec, cents))
-
-
 def pq_build(
     embeddings: DataFrame,
     m: int = 4,
@@ -848,9 +784,9 @@ def pq_build(
 ) -> tuple[DataFrame, list[list[list[int]]]]:
     """Product quantization (Jégou et al. 2011, "Product Quantization for
     Nearest Neighbor Search"): split the vector into ``m`` contiguous
-    subspaces, k-means each subspace independently (the same integer
-    micro-unit Lloyd as :func:`ivf_build`, fused across subspaces —
-    exact BIGINT arithmetic, so codebooks and codes are bit-reproducible
+    subspaces, k-means each subspace independently (:func:`_lloyd_units`,
+    the integer Lloyd loop :func:`ivf_build` also runs — all subspaces in
+    the same Spark jobs, exact BIGINT arithmetic, so codebooks and codes are bit-reproducible
     on any engine), and encode every vector as ``m`` one-byte-sized
     codes. Returns ``(codes_df, codebooks)`` where
     ``codes_df`` is ``(id, code_0..code_{m-1})`` and ``codebooks[s][j]``
@@ -873,101 +809,92 @@ def pq_build(
     """
     if pack and (m > 8 or k > 256):
         raise ValueError(f"pack=True needs m<=8 and k<=256, got m={m} k={k}")
-    # dim (and the dim % m validation) come from the seed collect inside
-    # _pq_train_units — a separate first() here would cost one more
-    # Spark job per build (job count, not data, is the build's cost)
-    # FUSED per-subspace Lloyd: all m subspaces train in the SAME Spark
-    # jobs (one seed collect, one means aggregation per round) instead of
-    # m independent ivf_build calls (m× seed jobs + m× means jobs per
-    # round). Identical arithmetic — seeds are the first k vectors by id
-    # sliced per subspace (slice-after-quantize == quantize-after-slice:
-    # round(x·units) is elementwise), assignment is the same
-    # first-minimum integer argmin, the centroid update the same exact
-    # round(sum/count) — so codebooks and the oracle replay are
-    # unchanged; only the job count drops (~3× faster wall on small
-    # build sets where per-job overhead dominates, same passes at scale).
-    u = quantized_units(F.col(vec_col), units)
-    base = embeddings.select(id_col, u.alias("_u"))
-    codebooks = _pq_train_units(base, m=m, k=k, iters=iters, id_col=id_col)
+    base = embeddings.select(
+        id_col, quantized_units(F.col(vec_col), units).alias("_u")
+    )
+    codebooks = _lloyd_units(base, m=m, k=k, iters=iters, id_col=id_col)
     codes = _pq_encode_units(base, codebooks, id_col=id_col, pack=pack)
     return codes, codebooks
 
 
-def _pq_train_units(
+def _lloyd_units(
     base: DataFrame, m: int, k: int, iters: int, id_col: str,
     dim: int | None = None,
 ) -> list[list[list[int]]]:
-    """The fused per-subspace integer Lloyd over a ``(id, _u)`` relation
-    (``_u`` already in micro-units — raw quantized vectors for
-    :func:`pq_build`, coarse-cell residuals for
-    :func:`ivfpq_build_residual`). Seeds = the first ``k`` rows by id
-    sliced per subspace; one means aggregation per round covers all
-    ``m`` subspaces. ``dim`` is derived from the seed collect when the
-    caller doesn't pass it (never a separate probe job), and the
-    ``dim % m`` contract is validated here so both callers fail before
+    """The module's one Lloyd loop: integer k-means over an ``(id, _u)``
+    relation in micro-units, fused across ``m`` contiguous subspaces —
+    ``m=1`` trains IVF coarse centroids (:func:`ivf_build`), ``m>1`` PQ
+    codebooks over raw vectors (:func:`pq_build`) or coarse-cell
+    residuals (:func:`ivfpq_build_residual`). Returns ``books[s][j]``,
+    subspace ``s``'s centroid ``j``.
+
+    Malformed rows (a null vector or element) are filtered out, so they
+    neither seed nor train. Seeds are the first
+    ``k`` remaining rows by id, sliced per subspace. Each round assigns
+    every row with :func:`_assign` and recomputes each centroid as
+    ``round(sum / count)`` of exact BIGINTs — one IEEE division, one
+    round, identical in any engine and any partitioning; a centroid with
+    no members keeps its value. A subvector :func:`_assign` cannot place
+    (cell ``-1``, e.g. a wrong length) never reaches the means, where
+    ``books[s][-1]`` would overwrite the last centroid. ``dim`` is derived
+    from the seed collect when the caller doesn't pass it (never a
+    separate probe job), and the ``dim % m`` contract is validated before
     any training work.
 
-    ``base`` is persisted across the training's driver jobs (seed
-    collect + one fused means job per round — for the residual index
-    the relation embeds the full coarse-assign argmin, which every job
-    re-evaluated over the corpus otherwise) and RELEASED before
-    returning, so the caller's lazy encode plan computes from the
-    source relation (the ivf_build train-once pattern)."""
+    Jobs: one persist of ``base``, one seed collect and one fused means
+    aggregation per round, whatever ``m`` is — job count, not data
+    volume, is a small build's cost. ``base`` is RELEASED before
+    returning, so the caller's lazy encode plan computes from the source
+    relation and nothing cached here leaks into a caller's timed run."""
     base = base.persist()
     try:
-        return _pq_train_units_inner(base, m, k, iters, id_col, dim)
+        # filtered over the cached rows: pushed below the caller's
+        # projection, the predicate would re-evaluate a residual's coarse
+        # assignment per row (measured ~0.6 s per job on 2,000 × 16)
+        train = base.where(F.forall("_u", lambda x: x.isNotNull()))
+        seed_rows = train.orderBy(id_col).limit(k).collect()
+        if not seed_rows:
+            raise ValueError("Lloyd training: embeddings table is empty")
+        if dim is None:
+            dim = len(seed_rows[0]["_u"])
+        if dim % m != 0:
+            raise ValueError(f"dim {dim} not divisible by m {m}")
+        sub = dim // m
+        books = [
+            [[int(x) for x in r["_u"][s * sub : (s + 1) * sub]] for r in seed_rows]
+            for s in range(m)
+        ]
+        for _ in range(iters):
+            per_sub = F.array(
+                *[
+                    F.struct(
+                        F.lit(s).alias("s"),
+                        _assign(
+                            F.slice(F.col("_u"), s * sub + 1, sub), books[s]
+                        ).alias("cluster"),
+                        F.slice(F.col("_u"), s * sub + 1, sub).alias("su"),
+                    )
+                    for s in range(m)
+                ]
+            )
+            means = (
+                train.select(F.explode(per_sub).alias("t"))
+                .where(F.col("t.cluster") >= 0)
+                .select(
+                    F.col("t.s").alias("s"),
+                    F.col("t.cluster").alias("cluster"),
+                    F.posexplode(F.col("t.su")).alias("d", "x"),
+                )
+                .groupBy("s", "cluster", "d")
+                .agg(F.round(F.sum("x") / F.count("*"), 0).cast("bigint").alias("mv"))
+                .collect()
+            )
+            books = [[list(c) for c in book] for book in books]
+            for r in means:
+                books[r["s"]][r["cluster"]][r["d"]] = int(r["mv"])
+        return books
     finally:
         base.unpersist()
-
-
-def _pq_train_units_inner(
-    base: DataFrame, m: int, k: int, iters: int, id_col: str,
-    dim: int | None,
-) -> list[list[list[int]]]:
-    seed_rows = base.orderBy(id_col).limit(k).collect()
-    if not seed_rows:
-        raise ValueError("pq build: embeddings table is empty")
-    if dim is None:
-        dim = len(seed_rows[0]["_u"])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    codebooks: list[list[list[int]]] = [
-        [
-            [int(x) for x in r["_u"][s * sub : (s + 1) * sub]]
-            for r in seed_rows
-        ]
-        for s in range(m)
-    ]
-    for _ in range(iters):
-        per_sub = F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("s"),
-                    _argmin_units(
-                        F.slice(F.col("_u"), s * sub + 1, sub), codebooks[s]
-                    ).alias("cluster"),
-                    F.slice(F.col("_u"), s * sub + 1, sub).alias("su"),
-                )
-                for s in range(m)
-            ]
-        )
-        means = (
-            base.select(F.explode(per_sub).alias("t"))
-            .select(
-                F.col("t.s").alias("s"),
-                F.col("t.cluster").alias("cluster"),
-                F.posexplode(F.col("t.su")).alias("d", "x"),
-            )
-            .groupBy("s", "cluster", "d")
-            .agg(F.round(F.sum("x") / F.count("*"), 0).cast("bigint").alias("mv"))
-            .collect()
-        )
-        new_books = [[list(c) for c in codebooks[s]] for s in range(m)]
-        for r in means:
-            new_books[r["s"]][r["cluster"]][r["d"]] = int(r["mv"])
-        codebooks = new_books
-    return codebooks
 
 
 def _pq_encode_units(
@@ -978,14 +905,16 @@ def _pq_encode_units(
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
     """Encode a ``(id, _u)`` relation against trained codebooks — one
-    scan-stage argmin projection per subspace; ``pack`` emits the single
-    ``pq_code`` BIGINT form. ``extra_cols`` carries columns through
+    scan-stage :func:`_assign` projection per subspace, null where a
+    subvector is malformed; ``pack`` emits the single ``pq_code`` BIGINT
+    form (null if any code is). ``extra_cols`` carries columns through
     (e.g. the coarse ``cluster`` for the residual index)."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
     code_cols = [
-        _argmin_units(
-            F.slice(F.col("_u"), s * sub + 1, sub), codebooks[s]
+        F.nullif(
+            _assign(F.slice(F.col("_u"), s * sub + 1, sub), codebooks[s]),
+            F.lit(-1),
         ).alias(f"code_{s}")
         for s in range(m)
     ]
@@ -1060,7 +989,11 @@ def pq_topk(
         F.col("q.query_id").alias("query_id"),
         F.col(id_col),
         _adc_score(F.col("q.adc"), m).alias("adc_d2"),
-    ).where(F.col(id_col) != F.col("query_id"))
+    ).where(
+        # a null code (malformed vector) has no distance; ascending
+        # order would rank it first
+        (F.col(id_col) != F.col("query_id")) & F.col("adc_d2").isNotNull()
+    )
     return _topk(scored, k, "adc_d2", id_col)
 
 
@@ -1147,18 +1080,55 @@ def ivfpq_build_residual(
         raise ValueError(f"dim {dim} not divisible by m {m}")
     if pack and (m > 8 or k > 256):
         raise ValueError(f"pack=True needs m<=8 and k<=256, got m={m} k={k}")
-    res = assigned.select(
-        id_col,
-        "cluster",
-        _residual(quantized_units(F.col(vec_col), units), cents).alias("_u"),
+    codebooks = _lloyd_units(
+        _cell_residuals(
+            embeddings, cents, quantized_units(F.col(vec_col), units), id_col
+        ),
+        m=m, k=k, iters=iters, id_col=id_col, dim=dim,
     )
-    codebooks = _pq_train_units(
-        res, m=m, k=k, iters=iters, id_col=id_col, dim=dim
-    )
-    codes = _pq_encode_units(
-        res, codebooks, id_col=id_col, pack=pack, extra_cols=["cluster"]
+    codes = ivfpq_encode(
+        embeddings, cents, codebooks, units=units, id_col=id_col,
+        vec_col=vec_col, pack=pack,
     )
     return assigned, cents, codes, codebooks
+
+
+def _cell_residuals(
+    embeddings: DataFrame, centroids: list[list[int]], u: Column, id_col: str
+) -> DataFrame:
+    """``(id, cluster, _u)``: each micro-unit vector ``u``'s
+    :func:`_assign` cell and its :func:`_residual` from that cell's
+    centroid — the encode step both residual tiers (IVFADC, IVF-SQ)
+    share. A malformed vector lands in cell ``-1`` with a null
+    residual."""
+    return (
+        embeddings.select(id_col, u.alias("_u"))
+        .withColumn("cluster", _assign(F.col("_u"), centroids))
+        .select(id_col, "cluster", _residual(F.col("_u"), centroids).alias("_u"))
+    )
+
+
+def ivfpq_encode(
+    embeddings: DataFrame,
+    centroids: list[list[int]],
+    codebooks: list[list[list[int]]],
+    units: int = 1_000_000,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    pack: bool = True,
+) -> DataFrame:
+    """Residual-IVFADC encode against frozen artifacts (coarse centroids
+    + residual codebooks): ``(id, cluster, pq_code)`` — or the
+    ``code_{s}`` columns without ``pack`` — as one zero-shuffle
+    projection. :func:`ivfpq_build_residual` encodes its corpus with it,
+    and ``index_store.extend_index`` encodes new generations with it, so
+    a vector's stored row never depends on which of the two wrote it."""
+    return _pq_encode_units(
+        _cell_residuals(
+            embeddings, centroids, quantized_units(F.col(vec_col), units), id_col
+        ),
+        codebooks, id_col=id_col, pack=pack, extra_cols=["cluster"],
+    )
 
 
 def ivfpq_topk(
@@ -2422,8 +2392,9 @@ def ivfsq_build(
 ) -> tuple[DataFrame, list[list[int]], int]:
     """IVF-SQ8 index build (the FAISS ``IndexIVFScalarQuantizer``
     shape): coarse-quantize with :func:`ivf_build`, then store each
-    vector's RESIDUAL from its coarse centroid as one signed byte per
-    component — ``floor(r·127/vmax)`` on a single corpus-wide residual
+    vector's RESIDUAL from its coarse centroid (:func:`ivfsq_encode`,
+    the same encode extend and streaming ingest run) as one signed byte
+    per component — ``floor(r·127/vmax)`` on a single corpus-wide residual
     scale. Where :func:`ivfpq_build_residual` compresses to m codes
     (8 bytes) with codebook lookups, IVF-SQ keeps every dimension at
     byte resolution (64 bytes here): less compression, no codebooks to
@@ -2440,21 +2411,24 @@ def ivfsq_build(
 
     Scale: the residual projection is zero-shuffle (broadcast centroid
     literals); the vmax aggregation ships one BIGINT."""
-    assigned, cents = ivf_build(
+    _, cents = ivf_build(
         embeddings, k=coarse_k, iters=coarse_iters,
         id_col=id_col, vec_col=vec_col, units=units,
     )
-    u = _quantized_dim_checked(F.col(vec_col), units, in_dim, "ivfsq_build")
-    res = assigned.select(id_col, "cluster", _residual(u, cents).alias("_r"))
     if vmax is None:
-        row = res.agg(
-            F.max(
-                F.array_max(F.transform(F.col("_r"), lambda x: F.abs(x)))
-            ).alias("m")
-        ).first()
-        vmax = int(row["m"] or 0)
-    vmax = max(1, int(vmax))
-    index = res.select(id_col, "cluster", _sq_codes(F.col("_r"), vmax).alias("_sq"))
+        res = _cell_residuals(
+            embeddings, cents,
+            _quantized_dim_checked(F.col(vec_col), units, in_dim, "ivfsq_build"),
+            id_col,
+        )
+        vmax = res.agg(
+            F.max(F.array_max(F.transform("_u", lambda x: F.abs(x))))
+        ).first()[0]
+    vmax = max(1, int(vmax or 0))
+    index = ivfsq_encode(
+        embeddings, cents, vmax, units=units, in_dim=in_dim,
+        id_col=id_col, vec_col=vec_col,
+    )
     return index, cents, vmax
 
 
@@ -2469,9 +2443,9 @@ def ivfsq_encode(
 ) -> DataFrame:
     """Stateless IVF-SQ8 ENCODE against a prebuilt index (centroids +
     vmax — the :func:`ivfsq_build` training artifacts): micro-quantize,
-    argmin-assign to the broadcast centroid literals (first-minimum
-    tie-break, exactly the build's final Lloyd assignment), residual
-    from the assigned centroid, ``floor(r·127/vmax)`` byte codes.
+    :func:`_assign` to the broadcast centroid literals, residual from the
+    assigned centroid, ``floor(r·127/vmax)`` byte codes. The build
+    encodes its own corpus with it.
 
     No aggregation, no training, no shuffle — a pure projection, so it
     applies unchanged to a STREAMING relation: the ingest path of a
@@ -2480,14 +2454,8 @@ def ivfsq_encode(
     Output ``(id, cluster, _sq)`` — row-identical to the build's index
     over the same rows (gate row ``streaming_ivfsq_index`` pins it)."""
     u = _quantized_dim_checked(F.col(vec_col), units, in_dim, "ivfsq_encode")
-    step = embeddings.select(id_col, u.alias("_u"))
-    res = step.withColumn(
-        "cluster", _argmin(_centroid_d2s(F.col("_u"), centroids))
-    ).select(id_col, "cluster", _residual(F.col("_u"), centroids).alias("_r"))
-    return res.select(
-        id_col,
-        "cluster",
-        _sq_codes(F.col("_r"), max(1, int(vmax))).alias("_sq"),
+    return _cell_residuals(embeddings, centroids, u, id_col).select(
+        id_col, "cluster", _sq_codes(F.col("_u"), max(1, int(vmax))).alias("_sq")
     )
 
 
@@ -2634,6 +2602,22 @@ def opq_permutation(
     return [ranked[p * m + s] for s in range(m) for p in range(sub)]
 
 
+def opq_apply(
+    embeddings: DataFrame,
+    perm: list[int],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """``(id, vec)`` with ``vec`` reordered by an :func:`opq_permutation`
+    — a projection, free at encode time (no arithmetic). Every OPQ
+    consumer (build, extend, serve, search) works in this permuted space,
+    where L2 distances are the original ones."""
+    return embeddings.select(
+        id_col,
+        F.array(*[F.col(vec_col).getItem(int(p)) for p in perm]).alias(vec_col),
+    )
+
+
 def opq_topk(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -2666,12 +2650,7 @@ def opq_topk(
             embeddings, m=m, in_dim=in_dim, units=units, sample_n=sample_n,
             id_col=id_col, vec_col=vec_col,
         )
-    permuted = embeddings.select(
-        id_col,
-        F.array(*[F.col(vec_col).getItem(int(p)) for p in perm]).alias(
-            vec_col
-        ),
-    )
+    permuted = opq_apply(embeddings, perm, id_col, vec_col)
     codes, books = pq_build(
         permuted, m=m, k=pq_k, iters=iters, units=units,
         id_col=id_col, vec_col=vec_col, pack=True,

@@ -1,11 +1,14 @@
-"""IVF (coarse-quantized ANN) tests: assignment sanity and recall vs the
-brute-force baseline on the real embeddings table, and the two probe
-paths of ``ivf_topk`` / ``ivfpq_topk`` — an id list of at most
-``DRIVER_PROBE_MAX`` ids probes on the driver, a ``queries=`` relation
-(or a longer list) probes on executors with zero query-side collect —
-which must agree bit for bit."""
+"""IVF / PQ / residual-IVFADC tests: the integer Lloyd trainer
+(determinism, sample training, parameter guards), assignment sanity and
+recall against the brute-force baseline, the malformed-vector rule, and
+the two probe paths of ``ivf_topk`` / ``ivfpq_topk`` — an id list of at
+most ``DRIVER_PROBE_MAX`` ids probes on the driver, a ``queries=``
+relation (or a longer list) probes on executors with zero query-side
+collect — which must agree bit for bit."""
 
 from __future__ import annotations
+
+import random
 
 import pytest
 from pyspark.sql import Window
@@ -30,7 +33,7 @@ def emb(spark):
 
 @pytest.fixture(scope="module")
 def index(emb):
-    return ivf_build(emb, k=8, iters=2)
+    return ivf_build(emb, k=8, iters=2, units=IVF_UNITS)
 
 
 @pytest.fixture(scope="module")
@@ -44,6 +47,101 @@ def _rows(df):
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+# ------------------------------------------------ integer Lloyd training
+
+
+def test_ivf_quantized_build_is_deterministic_and_sane(spark):
+    """Integer micro-unit IVF: two builds give identical assignments
+    (order-independent integer Lloyd), and two planted tight clusters
+    land in different cells with their own members."""
+    rng = random.Random(7)
+    base_a = [1.0] * 8
+    base_b = [-1.0] * 8
+    rows = []
+    for i in range(20):
+        base = base_a if i % 2 == 0 else base_b
+        rows.append((i, [x + rng.uniform(-0.01, 0.01) for x in base]))
+    emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    a1, c1 = ivf_build(emb, k=2, iters=2, units=1_000_000)
+    a2, c2 = ivf_build(emb, k=2, iters=2, units=1_000_000)
+    m1 = {r.vec_id: r.cluster for r in a1.collect()}
+    m2 = {r.vec_id: r.cluster for r in a2.collect()}
+    assert m1 == m2 and c1 == c2
+    assert all(isinstance(x, int) for c in c1 for x in c)
+    evens = {m1[i] for i in range(0, 20, 2)}
+    odds = {m1[i] for i in range(1, 20, 2)}
+    assert len(evens) == 1 and len(odds) == 1 and evens != odds
+
+
+def test_ivf_build_train_subset(emb):
+    """ivf_build(train=…): train=full is bit-identical to the default;
+    a strict subset changes the centroids (non-vacuous) while the FINAL
+    assignment still covers every corpus vector."""
+    a_full, c_full = ivf_build(emb, k=8, iters=1, units=IVF_UNITS)
+    a_same, c_same = ivf_build(emb, k=8, iters=1, units=IVF_UNITS, train=emb)
+    assert c_full == c_same
+    assert _rows(a_full) == _rows(a_same)
+    sub = emb.where(F.col("vec_id") % 3 != 2)
+    a_sub, c_sub = ivf_build(emb, k=8, iters=1, units=IVF_UNITS, train=sub)
+    assert c_sub != c_full  # the sample actually drove the statistics
+    assert a_sub.count() == emb.count()  # assignment is corpus-complete
+    # every vector's cell is the argmin over the sample-trained matrix
+    got = (
+        a_sub.select(
+            "vec_id",
+            F.element_at(
+                S.nearest_centroid_ids(F.col("embedding"), c_sub, 1, IVF_UNITS),
+                1,
+            ).alias("cell"),
+            "cluster",
+        )
+        .where(F.col("cell") != F.col("cluster"))
+        .count()
+    )
+    assert got == 0
+
+
+def test_ivfpq_residual_build_validates_params(spark):
+    """The residual builder enforces the same guards as pq_build: dim
+    must divide by m, and pack requires byte-range codes."""
+    emb = spark.createDataFrame(
+        [(i, [float(i + d) for d in range(8)]) for i in range(20)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    with pytest.raises(ValueError, match="not divisible"):
+        S.ivfpq_build_residual(
+            emb, coarse_k=4, coarse_iters=1, m=3, k=4, units=1000
+        )
+    with pytest.raises(ValueError, match="pack=True"):
+        S.ivfpq_build_residual(
+            emb, coarse_k=4, coarse_iters=1, m=4, k=300, units=1000
+        )
+
+
+def test_malformed_vector_is_unassigned_and_never_ranked(spark, emb):
+    """A malformed vector (here a null element, at the lowest id so it
+    would be the first seed) is skipped by training, lands in cell -1
+    with a null PQ code, and never enters a pq_topk top-k — ascending
+    ADC order would otherwise rank its null distance first."""
+    small = emb.where(F.col("vec_id") < 100)
+    bad = spark.createDataFrame([(-1, [None] + [0.0] * 63, 0)], small.schema)
+    both = small.unionByName(bad)
+    assigned, cents = ivf_build(both, k=4, iters=2, units=IVF_UNITS)
+    assert cents == ivf_build(small, k=4, iters=2, units=IVF_UNITS)[1]
+    assert assigned.where("vec_id = -1").first()["cluster"] == -1
+    codes, books = S.pq_build(
+        both, m=4, k=8, iters=2, units=IVF_UNITS, pack=True
+    )
+    assert books == S.pq_build(small, m=4, k=8, iters=2, units=IVF_UNITS)[1]
+    assert codes.where("vec_id = -1").first()["pq_code"] is None
+    got = S.pq_topk(both, codes, books, [0, 1], k=200, units=IVF_UNITS)
+    assert got.where("vec_id = -1").count() == 0
+    assert got.count() == 2 * 99
+
+
+# ------------------------------------------------ IVF search
 
 
 def test_assignment_covers_corpus(emb, index):
@@ -73,8 +171,8 @@ def test_ivf_recall_vs_brute(spark, emb, index):
 
 
 def test_executor_probes_bit_equal_driver_probes_units(emb, unit_index):
-    """units mode: the nearest_centroid_ids expression (executor path,
-    fed a queries= relation) must reproduce the driver twin's exact
+    """The nearest_centroid_ids expression (executor path, fed a
+    queries= relation) must reproduce the driver twin's exact
     integer distances and (d2, ci) tie-break (id-list path) — same
     probes, same candidates, same top-k, bit for bit."""
     assigned, cents = unit_index
@@ -85,16 +183,6 @@ def test_executor_probes_bit_equal_driver_probes_units(emb, unit_index):
     ra, rb = _rows(a), _rows(b)
     assert ra == rb
     assert len(ra) == 40 * 5
-
-
-def test_executor_probes_match_driver_float_path(emb, index):
-    """float mode: same equivalence on this fixture (the paths can only
-    diverge on near-exact centroid ties, which the fixture has none of)."""
-    assigned, cents = index
-    a = ivf_topk(assigned, cents, list(range(20)), k=5, nprobe=2)
-    b = ivf_topk(assigned, cents, None, k=5, nprobe=2,
-                 queries=emb.where(F.col("vec_id") < 20))
-    assert _rows(a) == _rows(b)
 
 
 def test_executor_path_has_zero_query_side_collect(emb, unit_index):
@@ -230,3 +318,133 @@ def test_ivfpq_bulk_census_zero_query_side_collect(emb, residual_index):
         )
     )
     assert "LogicalRDD" not in plan and "LocalRelation" not in plan
+
+
+# ------------------------------------------------ PQ and IVFADC search
+
+
+def test_pq_pack_roundtrip_same_topk(spark):
+    """Bit-packed codes (one BIGINT) and column codes produce identical
+    ADC top-k — the unpack projection is lossless."""
+    emb = spark.createDataFrame(
+        [(i, [float(((i * 7 + d * 3) % 11) - 5) for d in range(8)]) for i in range(40)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    codes_cols, books = S.pq_build(emb, m=4, k=4, iters=1, units=1000)
+    codes_packed, books2 = S.pq_build(
+        emb, m=4, k=4, iters=1, units=1000, pack=True
+    )
+    assert books == books2
+    assert codes_packed.columns == ["vec_id", "pq_code"]
+    a = _rows(S.pq_topk(emb, codes_cols, books, [0, 1], k=5, units=1000))
+    b = _rows(S.pq_topk(emb, codes_packed, books, [0, 1], k=5, units=1000))
+    assert a == b and len(a) == 10
+
+
+def _four_clusters(spark, seed):
+    """4 well-separated cluster centers in 8 dims, 20 points each (ids
+    ``20c .. 20c+19``)."""
+    rng = random.Random(seed)
+    rows = []
+    for c in range(4):
+        base = [10.0 * (1 if (c >> d) & 1 else -1) for d in range(8)]
+        for i in range(20):
+            rows.append(
+                (c * 20 + i, [base[d] + rng.uniform(-1, 1) for d in range(8)])
+            )
+    return spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+
+
+def test_ivfpq_recall_vs_brute(spark):
+    """IVFADC finds the right NEIGHBORHOOD on clustered data: every
+    result comes from the query's own (well-separated) cluster, like the
+    exact brute-force result set does, and overlaps it (nprobe=2 of 4
+    cells). Exact rank WITHIN a cluster of near-identical vectors is not
+    asserted — there ADC-L2 and cosine legitimately order the noise
+    differently."""
+    emb = _four_clusters(spark, 7)
+    assigned, cents = ivf_build(emb, k=4, iters=2, units=1000)
+    codes, books = S.pq_build(emb, m=4, k=8, iters=1, units=1000, pack=True)
+    got = S.ivfpq_topk(
+        assigned, cents, codes, books, [0, 25], k=5, nprobe=2, units=1000
+    ).collect()
+    queries = emb.where(emb.vec_id.isin([0, 25]))
+    exact = brute_force_topk(emb, queries, k=5).collect()
+    for qid in (0, 25):
+        g = {r.vec_id for r in got if r.query_id == qid}
+        e = {r.vec_id for r in exact if r.query_id == qid}
+        own_cluster = set(range((qid // 20) * 20, (qid // 20) * 20 + 20))
+        assert len(g) == 5
+        assert g <= own_cluster - {qid}  # right neighborhood, never self
+        assert e <= own_cluster - {qid}
+        assert g & e  # and the sets genuinely overlap
+
+
+def test_ivfpq_residual_same_neighborhood_tighter_distances(spark):
+    """Residual IVFADC finds the same cluster neighborhood as the raw
+    form, and its ADC distances to same-cluster points are (on average)
+    smaller — the codebooks only cover within-cell spread, which is the
+    whole point of encoding residuals."""
+    emb = _four_clusters(spark, 11)
+    assigned, cents, rcodes, rbooks = S.ivfpq_build_residual(
+        emb, coarse_k=4, coarse_iters=2, m=4, k=8, iters=1, units=1000
+    )
+    got = S.ivfpq_topk(
+        assigned, cents, rcodes, rbooks, [0, 45], k=5, nprobe=2,
+        units=1000, embeddings=emb, residual=True,
+    ).collect()
+    _, rawcents = ivf_build(emb, k=4, iters=2, units=1000)
+    rawcodes, rawbooks = S.pq_build(
+        emb, m=4, k=8, iters=1, units=1000, pack=True
+    )
+    raw = S.ivfpq_topk(
+        assigned, rawcents, rawcodes, rawbooks, [0, 45], k=5, nprobe=2,
+        units=1000, embeddings=emb,
+    ).collect()
+    for qid in (0, 45):
+        own = set(range((qid // 20) * 20, (qid // 20) * 20 + 20)) - {qid}
+        g = {r.vec_id for r in got if r.query_id == qid}
+        assert len(g) == 5 and g <= own
+    # residual quantization error is smaller on average
+    mean_res = sum(r.adc_d2 for r in got) / len(got)
+    mean_raw = sum(r.adc_d2 for r in raw) / len(raw)
+    assert mean_res < mean_raw
+
+
+def test_ivfpq_topk_requires_some_query_input(emb, unit_index):
+    assigned, cents = unit_index
+    codes, books = S.pq_build(emb, m=4, k=8, iters=1, units=IVF_UNITS,
+                              pack=True)
+    with pytest.raises(ValueError, match="query_ids.*or queries"):
+        S.ivfpq_topk(assigned, cents, codes, books, None)
+
+
+def test_ivfpq_bulk_recall_floor_vs_exact(emb):
+    """Candidate-budget sanity for the bulk two-stage: with half the
+    coarse cells probed and an 8x-k candidate budget, the kNN graph's
+    mean recall@5 vs the exact integer-L2 ranking clears 0.5 (the same
+    floor the interactive recall audits pin; exactness of the re-rank
+    means every recalled id also carries the exact distance). This is
+    the budget-sizing dial the bulk job tunes: at nprobe=4/8 cells and
+    candidates=20 the same fixture measures ~0.44 — probing more cells
+    buys the recall back."""
+    emb = emb.where(F.col("vec_id") < 200)
+    assigned, cents, codes, books = S.ivfpq_build_residual(
+        emb, coarse_k=8, coarse_iters=1, m=4, k=8, iters=1,
+        units=IVF_UNITS, pack=True,
+    )
+    approx = S.ivfpq_bulk_topk(
+        assigned, cents, codes, books, emb, k=5, candidates=40, nprobe=6,
+        units=IVF_UNITS,
+    ).select("query_id", "vec_id")
+    exact = S.int_l2_topk(emb, emb, k=5, units=IVF_UNITS).select(
+        F.col("query_id"), F.col("vec_id").alias("true_id")
+    )
+    hits = approx.join(
+        exact,
+        (approx.query_id == exact.query_id)
+        & (approx.vec_id == exact.true_id),
+    ).count()
+    n_q = 200
+    recall = hits / (n_q * 5)
+    assert recall >= 0.5, recall

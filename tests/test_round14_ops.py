@@ -390,46 +390,6 @@ def test_delta_sign_plan_never_scans_old_text(spark, tmp_path):
     assert "ReadSchema: struct<doc_id:bigint,text_hash:string>" in plan
 
 
-# ------------------------------------------------ sample-trained IVF
-
-
-def test_ivf_build_train_subset(spark):
-    """ivf_build(train=…): train=full is bit-identical to the default;
-    a strict subset changes the centroids (non-vacuous) while the FINAL
-    assignment still covers every corpus vector."""
-    from hadoop_tfidf_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_DIR_SMOKE}/embeddings.parquet")
-    a_full, c_full = S.ivf_build(emb, k=8, iters=1, units=1_000_000)
-    a_same, c_same = S.ivf_build(emb, k=8, iters=1, units=1_000_000,
-                                 train=emb)
-    assert c_full == c_same
-    assert sorted(map(tuple, a_full.collect())) == sorted(
-        map(tuple, a_same.collect())
-    )
-    sub = emb.where(F.col("vec_id") % 3 != 2)
-    a_sub, c_sub = S.ivf_build(emb, k=8, iters=1, units=1_000_000,
-                               train=sub)
-    assert c_sub != c_full  # the sample actually drove the statistics
-    assert a_sub.count() == emb.count()  # assignment is corpus-complete
-    # every vector's cell is the argmin over the sample-trained matrix
-    got = (
-        a_sub.select(
-            "vec_id",
-            F.element_at(
-                S.nearest_centroid_ids(
-                    F.col("embedding"), c_sub, 1, 1_000_000
-                ),
-                1,
-            ).alias("cell"),
-            "cluster",
-        )
-        .where(F.col("cell") != F.col("cluster"))
-        .count()
-    )
-    assert got == 0
-
-
 # --------------------------------- review-pass regressions (round 14b)
 
 
@@ -466,49 +426,3 @@ def test_delta_signatures_membership_matches_from_scratch(spark):
         map(tuple, D.minhash_signatures(D.shingles(docs)).collect())
     )
     assert got == want  # no phantom NULL row for unchanged doc 2
-
-
-def test_ivfpq_topk_requires_some_query_input(spark):
-    from hadoop_tfidf_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_DIR_SMOKE}/embeddings.parquet")
-    assigned, cents = S.ivf_build(emb, k=8, iters=1, units=1_000_000)
-    codes, books = S.pq_build(emb, m=4, k=8, iters=1, units=1_000_000,
-                              pack=True)
-    with pytest.raises(ValueError, match="query_ids.*or queries"):
-        S.ivfpq_topk(assigned, cents, codes, books, None)
-
-
-def test_ivfpq_bulk_recall_floor_vs_exact(spark):
-    """Candidate-budget sanity for the bulk two-stage: with half the
-    coarse cells probed and an 8x-k candidate budget, the kNN graph's
-    mean recall@5 vs the exact integer-L2 ranking clears 0.5 (the same
-    floor the interactive recall audits pin; exactness of the re-rank
-    means every recalled id also carries the exact distance). This is
-    the budget-sizing dial the bulk job tunes: at nprobe=4/8 cells and
-    candidates=20 the same fixture measures ~0.44 — probing more cells
-    buys the recall back."""
-    from hadoop_tfidf_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_DIR_SMOKE}/embeddings.parquet").where(
-        F.col("vec_id") < 200
-    )
-    assigned, cents, codes, books = S.ivfpq_build_residual(
-        emb, coarse_k=8, coarse_iters=1, m=4, k=8, iters=1,
-        units=1_000_000, pack=True,
-    )
-    approx = S.ivfpq_bulk_topk(
-        assigned, cents, codes, books, emb, k=5, candidates=40, nprobe=6,
-        units=1_000_000,
-    ).select("query_id", "vec_id")
-    exact = S.int_l2_topk(emb, emb, k=5, units=1_000_000).select(
-        F.col("query_id"), F.col("vec_id").alias("true_id")
-    )
-    hits = approx.join(
-        exact,
-        (approx.query_id == exact.query_id)
-        & (approx.vec_id == exact.true_id),
-    ).count()
-    n_q = 200
-    recall = hits / (n_q * 5)
-    assert recall >= 0.5, recall

@@ -355,12 +355,7 @@ def _in_session_twin(spark, emb, kind, qids, k, candidates, nprobe):
         # round 16: the OPQ tier joined the store — permute with the
         # same deterministic allocation, then the ivfpq_res twin
         perm = S.opq_permutation(emb, m=2, in_dim=8, units=1000)
-        emb = emb.select(
-            "vec_id",
-            F.array(
-                *[F.col("embedding").getItem(int(p)) for p in perm]
-            ).alias("embedding"),
-        )
+        emb = S.opq_apply(emb, perm)
     assigned, cents, codes, codebooks = S.ivfpq_build_residual(
         emb, coarse_k=4, m=2, k=4, iters=1, units=1000, pack=True
     )
@@ -434,7 +429,7 @@ def test_serve_knn_never_reruns_a_training_job(spark, tmp_path, monkeypatch):
     for trainer in (
         "ivf_build", "pq_build", "ivfpq_build_residual", "ivfsq_build",
         "bq_build", "sq_build", "sq_vmax", "opq_permutation",
-        "_pq_train_units",
+        "_lloyd_units",
     ):
         monkeypatch.setattr(S, trainer, _trap(trainer))
 
@@ -594,7 +589,7 @@ def test_serve_knn_bulk_from_stored_index(spark, tmp_path, monkeypatch):
     # auto-size path: no trainer may run (sizing only measures)
     for trainer in (
         "ivf_build", "pq_build", "ivfpq_build_residual", "ivfsq_build",
-        "bq_build", "sq_build", "sq_vmax", "_pq_train_units",
+        "bq_build", "sq_build", "sq_vmax", "_lloyd_units",
     ):
         monkeypatch.setattr(
             S, trainer,

@@ -48,7 +48,12 @@ def test_extend_index_slice_equals_frozen_encode_all_tiers(spark, tmp_path):
     encode, so appending is lossless and order-free. The reference
     encode never retrains either (frozen vmax/centroids/codebooks),
     which is exactly the property under test: extend changes WHAT is
-    indexed, never HOW."""
+    indexed, never HOW.
+
+    Base and delta each carry one malformed vector (a null element):
+    every centroid tier must build without raising, train around it,
+    and store it in cell -1 with null codes — at build and at extend
+    alike."""
     from hadoop_tfidf_spark.operators import similarity as S
     from hadoop_tfidf_spark.operators.index_store import (
         KIND_TABLE,
@@ -59,15 +64,20 @@ def test_extend_index_slice_equals_frozen_encode_all_tiers(spark, tmp_path):
     )
 
     emb, base, delta = _split(spark)
+    bad = spark.createDataFrame(
+        [(61, [0.5, None] + [0.1] * 6), (65, [None] + [-0.2] * 7)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    emb = emb.unionByName(bad)
+    base = base.unionByName(bad.where(F.col("vec_id") == 61))
+    delta = delta.unionByName(bad.where(F.col("vec_id") == 65))
     for kind in KNN_KINDS:
         d = str(tmp_path / f"idx_{kind}")
         build_knn_index(base, kind, d, **_BUILD_KW)
         gen = extend_index(spark, d, delta)
         assert gen == 1
         idx = load_index(spark, d)
-        stored = sorted(
-            map(tuple, idx.tables[KIND_TABLE[kind]].collect())
-        )
+        table = idx.tables[KIND_TABLE[kind]]
         a = idx.artifacts
         if kind == "bq":
             ref = S.bq_build(emb, units=1000, in_dim=8)
@@ -75,61 +85,28 @@ def test_extend_index_slice_equals_frozen_encode_all_tiers(spark, tmp_path):
             ref, _ = S.sq_build(
                 emb, units=1000, in_dim=8, vmax=int(a["vmax"])
             )
+        elif kind == "ivf":
+            ref = S.ivf_encode(emb, a["centroids"], units=1000)
         elif kind == "ivfsq":
             ref = S.ivfsq_encode(
                 emb, a["centroids"], int(a["vmax"]), units=1000, in_dim=8
             )
-        elif kind == "ivf":
-            ref = emb.withColumn(
-                "cluster",
-                F.element_at(
-                    S.nearest_centroid_ids(
-                        F.col("embedding"), a["centroids"], 1, 1000
-                    ),
-                    1,
-                ),
-            )
         else:  # ivfpq_res / opq_ivfpq (identical encode in its space)
-            src = emb
-            if kind == "opq_ivfpq":
-                src = emb.select(
-                    "vec_id",
-                    F.array(
-                        *[
-                            F.col("embedding").getItem(int(p))
-                            for p in a["perm"]
-                        ]
-                    ).alias("embedding"),
-                )
-            cent_arr = F.array(
-                *[
-                    F.array(*[F.lit(int(x)).cast("bigint") for x in c])
-                    for c in a["centroids"]
-                ]
+            src = emb if kind == "ivfpq_res" else S.opq_apply(emb, a["perm"])
+            ref = S.ivfpq_encode(
+                src, a["centroids"], a["codebooks"], units=1000
             )
-            res = src.withColumn(
-                "cluster",
-                F.element_at(
-                    S.nearest_centroid_ids(
-                        F.col("embedding"), a["centroids"], 1, 1000
-                    ),
-                    1,
-                ),
-            ).select(
-                "vec_id",
-                "cluster",
-                F.zip_with(
-                    S.quantized_units(F.col("embedding"), 1000),
-                    F.element_at(cent_arr, F.col("cluster") + 1),
-                    lambda x, y: x - y,
-                ).alias("_u"),
-            )
-            ref = S._pq_encode_units(
-                res, a["codebooks"], id_col="vec_id", pack=True,
-                extra_cols=["cluster"],
-            )
+        stored = sorted(map(tuple, table.collect()))
         assert stored == sorted(map(tuple, ref.collect())), kind
-        assert len(stored) == 60, kind
+        assert len(stored) == 62, kind
+        if kind in ("bq", "sq"):
+            continue
+        code = {"ivf": None, "ivfsq": "_sq"}.get(kind, "pq_code")
+        bad_rows = table.where(F.col("vec_id").isin(61, 65)).collect()
+        assert len(bad_rows) == 2, kind
+        for r in bad_rows:
+            assert r["cluster"] == -1, (kind, r)
+            assert code is None or r[code] is None, (kind, r)
 
 
 def test_extended_index_serves_mixed_generations(spark, tmp_path):
@@ -160,30 +137,7 @@ def test_extended_index_serves_mixed_generations(spark, tmp_path):
     )
     # rebuilt-encode twin: same artifacts, one-shot encode of ALL rows
     a = idx.artifacts
-    cent_arr = F.array(
-        *[
-            F.array(*[F.lit(int(x)).cast("bigint") for x in c])
-            for c in a["centroids"]
-        ]
-    )
-    res = emb.withColumn(
-        "cluster",
-        F.element_at(
-            S.nearest_centroid_ids(F.col("embedding"), a["centroids"], 1, 1000),
-            1,
-        ),
-    ).select(
-        "vec_id",
-        "cluster",
-        F.zip_with(
-            S.quantized_units(F.col("embedding"), 1000),
-            F.element_at(cent_arr, F.col("cluster") + 1),
-            lambda x, y: x - y,
-        ).alias("_u"),
-    )
-    codes = S._pq_encode_units(
-        res, a["codebooks"], id_col="vec_id", pack=True, extra_cols=["cluster"]
-    )
+    codes = S.ivfpq_encode(emb, a["centroids"], a["codebooks"], units=1000)
     twin = sorted(
         map(
             tuple,
@@ -230,7 +184,7 @@ def test_extend_index_never_runs_a_training_job(spark, tmp_path, monkeypatch):
     # scan, IS trapped — a frozen-vmax sq_build never reaches it)
     for trainer in (
         "ivf_build", "pq_build", "ivfpq_build_residual", "ivfsq_build",
-        "sq_vmax", "opq_permutation", "_pq_train_units",
+        "sq_vmax", "opq_permutation", "_lloyd_units",
     ):
         monkeypatch.setattr(S, trainer, _trap(trainer))
 
@@ -566,7 +520,7 @@ def test_compact_index_folds_generations_losslessly(spark, tmp_path, monkeypatch
     for trainer in (
         "ivf_build", "pq_build", "ivfpq_build_residual", "ivfsq_build",
         "bq_build", "sq_build", "sq_vmax", "opq_permutation",
-        "_pq_train_units",
+        "_lloyd_units",
     ):
         monkeypatch.setattr(S, trainer, _trap(trainer))
 

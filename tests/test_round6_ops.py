@@ -49,33 +49,6 @@ def test_tfidf_storage_level_disk_only(spark):
     spark.catalog.clearCache()
 
 
-def test_ivf_quantized_build_is_deterministic_and_sane(spark):
-    """Integer micro-unit IVF: two builds give identical assignments
-    (order-independent integer Lloyd), and two planted tight clusters
-    land in different cells with their own members."""
-    import random
-
-    from hadoop_tfidf_spark.operators.similarity import ivf_build
-
-    rng = random.Random(7)
-    base_a = [1.0] * 8
-    base_b = [-1.0] * 8
-    rows = []
-    for i in range(20):
-        base = base_a if i % 2 == 0 else base_b
-        rows.append((i, [x + rng.uniform(-0.01, 0.01) for x in base]))
-    emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    a1, c1 = ivf_build(emb, k=2, iters=2, units=1_000_000)
-    a2, c2 = ivf_build(emb, k=2, iters=2, units=1_000_000)
-    m1 = {r.vec_id: r.cluster for r in a1.collect()}
-    m2 = {r.vec_id: r.cluster for r in a2.collect()}
-    assert m1 == m2 and c1 == c2
-    assert all(isinstance(x, int) for c in c1 for x in c)
-    evens = {m1[i] for i in range(0, 20, 2)}
-    odds = {m1[i] for i in range(1, 20, 2)}
-    assert len(evens) == 1 and len(odds) == 1 and evens != odds
-
-
 def test_repetition_score_hand_computed(spark):
     """Planted docs: a loop-generated page scores high on both ratios, a
     diverse doc scores 0, a 2-word doc gets a NULL gram ratio."""

@@ -185,134 +185,6 @@ def test_span_dedup_sliding_rejects_bad_stride(spark):
         span_dedup(docs, span_words=5, stride=0)
 
 
-def test_pq_pack_roundtrip_same_topk(spark):
-    """Bit-packed codes (one BIGINT) and column codes produce identical
-    ADC top-k — the unpack projection is lossless."""
-    from hadoop_tfidf_spark.operators.similarity import pq_build, pq_topk
-
-    emb = spark.createDataFrame(
-        [(i, [float(((i * 7 + d * 3) % 11) - 5) for d in range(8)]) for i in range(40)],
-        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
-    )
-    codes_cols, books = pq_build(emb, m=4, k=4, iters=1, units=1000)
-    codes_packed, books2 = pq_build(emb, m=4, k=4, iters=1, units=1000, pack=True)
-    assert books == books2
-    assert codes_packed.columns == ["vec_id", "pq_code"]
-    a = sorted(
-        map(tuple, pq_topk(emb, codes_cols, books, [0, 1], k=5, units=1000).collect())
-    )
-    b = sorted(
-        map(tuple, pq_topk(emb, codes_packed, books, [0, 1], k=5, units=1000).collect())
-    )
-    assert a == b and len(a) == 10
-
-
-def test_ivfpq_recall_vs_brute(spark):
-    """IVFADC finds the right NEIGHBORHOOD on clustered data: every
-    result comes from the query's own (well-separated) cluster, like the
-    exact brute-force result set does, and overlaps it (nprobe=2 of 4
-    cells). Exact rank WITHIN a cluster of near-identical vectors is not
-    asserted — there ADC-L2 and cosine legitimately order the noise
-    differently."""
-    import random
-
-    from hadoop_tfidf_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_build,
-        ivfpq_topk,
-        pq_build,
-    )
-
-    rng = random.Random(7)
-    rows = []
-    # 4 well-separated cluster centers, 20 points each
-    for c in range(4):
-        base = [10.0 * (1 if (c >> d) & 1 else -1) for d in range(8)]
-        for i in range(20):
-            rows.append(
-                (c * 20 + i, [base[d] + rng.uniform(-1, 1) for d in range(8)])
-            )
-    emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    assigned, cents = ivf_build(emb, k=4, iters=2, units=1000)
-    codes, books = pq_build(emb, m=4, k=8, iters=1, units=1000, pack=True)
-    got = ivfpq_topk(
-        assigned, cents, codes, books, [0, 25], k=5, nprobe=2, units=1000
-    ).collect()
-    queries = emb.where(emb.vec_id.isin([0, 25]))
-    exact = brute_force_topk(emb, queries, k=5).collect()
-    for qid in (0, 25):
-        g = {r.vec_id for r in got if r.query_id == qid}
-        e = {r.vec_id for r in exact if r.query_id == qid}
-        own_cluster = set(range((qid // 20) * 20, (qid // 20) * 20 + 20))
-        assert len(g) == 5
-        assert g <= own_cluster - {qid}  # right neighborhood, never self
-        assert e <= own_cluster - {qid}
-        assert g & e  # and the sets genuinely overlap
-
-
-def test_ivfpq_residual_same_neighborhood_tighter_distances(spark):
-    """Residual IVFADC finds the same cluster neighborhood as the raw
-    form, and its ADC distances to same-cluster points are (on average)
-    smaller — the codebooks only cover within-cell spread, which is the
-    whole point of encoding residuals."""
-    import random
-
-    from hadoop_tfidf_spark.operators.similarity import (
-        ivf_build,
-        ivfpq_build_residual,
-        ivfpq_topk,
-        pq_build,
-    )
-
-    rng = random.Random(11)
-    rows = []
-    for c in range(4):
-        base = [10.0 * (1 if (c >> d) & 1 else -1) for d in range(8)]
-        for i in range(20):
-            rows.append(
-                (c * 20 + i, [base[d] + rng.uniform(-1, 1) for d in range(8)])
-            )
-    emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    assigned, cents, rcodes, rbooks = ivfpq_build_residual(
-        emb, coarse_k=4, coarse_iters=2, m=4, k=8, iters=1, units=1000
-    )
-    got = ivfpq_topk(
-        assigned, cents, rcodes, rbooks, [0, 45], k=5, nprobe=2,
-        units=1000, embeddings=emb, residual=True,
-    ).collect()
-    _, rawcents = ivf_build(emb, k=4, iters=2, units=1000)
-    rawcodes, rawbooks = pq_build(emb, m=4, k=8, iters=1, units=1000, pack=True)
-    raw = ivfpq_topk(
-        assigned, rawcents, rawcodes, rawbooks, [0, 45], k=5, nprobe=2,
-        units=1000, embeddings=emb,
-    ).collect()
-    for qid in (0, 45):
-        own = set(range((qid // 20) * 20, (qid // 20) * 20 + 20)) - {qid}
-        g = {r.vec_id for r in got if r.query_id == qid}
-        assert len(g) == 5 and g <= own
-    # residual quantization error is smaller on average
-    mean_res = sum(r.adc_d2 for r in got) / len(got)
-    mean_raw = sum(r.adc_d2 for r in raw) / len(raw)
-    assert mean_res < mean_raw
-
-
-def test_ivfpq_residual_build_validates_params(spark):
-    """The residual builder enforces the same guards as pq_build: dim
-    must divide by m, and pack requires byte-range codes."""
-    import pytest
-
-    from hadoop_tfidf_spark.operators.similarity import ivfpq_build_residual
-
-    emb = spark.createDataFrame(
-        [(i, [float(i + d) for d in range(8)]) for i in range(20)],
-        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
-    )
-    with pytest.raises(ValueError, match="not divisible"):
-        ivfpq_build_residual(emb, coarse_k=4, coarse_iters=1, m=3, k=4, units=1000)
-    with pytest.raises(ValueError, match="pack=True"):
-        ivfpq_build_residual(emb, coarse_k=4, coarse_iters=1, m=4, k=300, units=1000)
-
-
 def test_cooccurrence_cap_truncates_deterministically(spark):
     """max_doc_vocab keeps the FIRST n distinct tokens in document order:
     pairs involving later-vocabulary tokens vanish, earlier pairs keep

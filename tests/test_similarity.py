@@ -14,13 +14,11 @@ def test_integer_literals_are_bigint(spark):
         S._lit_array([1, 2]).alias("v"),
         S._lit_array([[1, 2], [3, 4]]).alias("m"),
         S._lit_array([[[1, 2]], [[3, 4]]]).alias("c"),
-        S._lit_array([0.5, 1], floats=True).alias("f"),
     )
     assert {f.name: f.dataType.simpleString() for f in df.schema.fields} == {
         "v": "array<bigint>",
         "m": "array<array<bigint>>",
         "c": "array<array<array<bigint>>>",
-        "f": "array<double>",
     }
     two = S._lit_array([2**30, 2**30])
     total = spark.range(1).select(

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -32,7 +33,15 @@ def main() -> None:
     from hadoop_tfidf_spark.session import get_spark
 
     spark = get_spark("check_correctness")
-    con = duckdb.connect()
+    # spill under the system temp dir — DuckDB's default is ``.tmp`` in
+    # the working directory, i.e. inside the checkout
+    con = duckdb.connect(
+        config={
+            "temp_directory": os.path.join(
+                tempfile.gettempdir(), "check_correctness_duckdb"
+            )
+        }
+    )
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
