@@ -217,8 +217,8 @@ def main(argv: list[str] | None = None) -> None:
                         "benchmark corpus at BENCH (text dir or parquet) "
                         "exceeds 0.1, before curation")
     p.add_argument("--decontaminate-bloom", action="store_true",
-                   help="curate: run --decontaminate through the "
-                        "broadcast-Bloom filter (one-sided error: drops "
+                   help="curate: run --decontaminate through a "
+                        "Bloom filter (one-sided error: drops "
                         "a superset; use when the benchmark shingle set "
                         "is too large to broadcast as strings)")
     p.add_argument("--ledger", default=None, metavar="DIR",
@@ -934,13 +934,14 @@ def main(argv: list[str] | None = None) -> None:
         if args.decontaminate is not None:
             if args.decontaminate_bloom:
                 from hadoop_tfidf_spark.functions.text import (
+                    bloom_bitmap,
                     bloom_geometry,
                     decontaminate_bloom,
                 )
                 from hadoop_tfidf_spark.operators.dedup import shingles
 
                 bench = _load(spark, args.decontaminate)
-                geo: dict[str, int] = {}
+                geo: tuple[int, ...] = ()
                 if args.bloom_bits_per_key is not None:
                     # production sizing: one count(distinct) over the
                     # (static, benchmark-sized) shingle set prices the
@@ -958,11 +959,10 @@ def main(argv: list[str] | None = None) -> None:
                             "shorter than 3 words) — nothing to size "
                             "against"
                         )
-                    bits, hashes = bloom_geometry(
+                    geo = bloom_geometry(
                         n, bits_per_key=args.bloom_bits_per_key
                     )
-                    geo = {"bits": bits, "hashes": hashes}
-                docs = decontaminate_bloom(docs, bench, **geo)
+                docs = decontaminate_bloom(docs, bloom_bitmap(bench, 3, *geo))
             else:
                 from hadoop_tfidf_spark.functions.text import decontaminate
 

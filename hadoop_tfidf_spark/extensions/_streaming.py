@@ -359,10 +359,7 @@ def q_streaming_decontaminate(spark, sf_dir):
     staged = stream.where(F.size(words) >= 3).select(
         "doc_id", words.alias("_w")
     )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("_w") - F.lit(2)),
-        lambda i: F.array_join(F.slice(F.col("_w"), i, 3), " "),
-    )
+    grams = D._kgrams(F.col("_w"), 3)
     exploded = staged.select(
         "doc_id", F.array_distinct(grams).alias("_sh")
     ).select(
@@ -656,6 +653,8 @@ def q_streaming_dsir(spark, sf_dir):
     drained = run_to_completion(
         scored, f"dsir_{uuid.uuid4().hex[:8]}", output_mode="complete"
     )
+    # the drained memory table is all the result reads; release the model
+    ratios.unpersist()
     return (
         docs.select("doc_id")
         .join(drained, "doc_id", "left")
@@ -1043,7 +1042,7 @@ def q_streaming_decontaminate_bloom(spark, sf_dir):
         .parquet(base)
     )
     return run_to_completion(
-        contamination_bloom_stateless(stream, bm, k=3, max_overlap=0.1),
+        contamination_bloom_stateless(stream, bm, max_overlap=0.1),
         f"bloomdecon_{uuid.uuid4().hex[:8]}",
         output_mode="append",
     )

@@ -652,6 +652,7 @@ def q_text_decontaminate_bloom(spark, sf_dir):
     the safe direction. The oracle replays the bitmap build and probe
     arithmetic bit for bit."""
     from hadoop_tfidf_spark.functions.text import (
+        bloom_bitmap,
         contamination_bloom,
         contamination_check,
     )
@@ -665,7 +666,7 @@ def q_text_decontaminate_bloom(spark, sf_dir):
         F.col("n_hits").alias("n_hits_exact"),
         (F.col("overlap_ratio") <= 0.1).cast("int").alias("keep_exact"),
     )
-    bloom = contamination_bloom(cand, bench, k=3).select(
+    bloom = contamination_bloom(cand, bloom_bitmap(bench, k=3)).select(
         "doc_id",
         F.col("n_hits").alias("n_hits_bloom"),
         (F.col("overlap_ratio") <= 0.1).cast("int").alias("keep_bloom"),

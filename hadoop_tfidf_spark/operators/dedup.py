@@ -24,7 +24,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_tfidf_spark.functions.hashing import hex_to_long
@@ -53,6 +53,26 @@ MINHASH_B = [
 #: ((mh₀·K + mh₁) mod M31 · K + mh₂) mod M31 — pure integer math, no
 #: md5-of-concat string round-trip.
 BAND_KEY_K = 1000003
+
+
+def _kgrams(words: Column, k: int) -> Column:
+    """Every word ``k``-gram of a STAGED word array, joined by single
+    spaces, in order — THE shingle expression of the engine (MinHash,
+    Bloom, fingerprints, DSIR bigrams). ``words`` must be a column bound
+    by an earlier projection, never an inline ``split``: the lambda
+    re-evaluates its inlined subtree per element (see :func:`shingles`).
+    """
+    return F.transform(
+        F.sequence(F.lit(1), F.size(words) - F.lit(k - 1)),
+        lambda i: F.array_join(F.slice(words, i, k), " "),
+    )
+
+
+def _md5_base(g: Column) -> Column:
+    """A shingle's base hash ``md5(g)[:15 hex] mod M31`` — the one md5
+    per shingle the Carter–Wegman MinHash and Bloom positions derive
+    from."""
+    return hex_to_long(F.md5(g)) % F.lit(M31)
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -92,12 +112,10 @@ def shingles(docs: DataFrame, k: int = 3) -> DataFrame:
     """
     words = F.split(F.col("text"), " ")
     staged = docs.where(F.size(words) >= k).select("doc_id", words.alias("_w"))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("_w") - F.lit(k - 1)),
-        lambda i: F.array_join(F.slice(F.col("_w"), i, k), " "),
-    )
     return (
-        staged.select("doc_id", F.posexplode(grams).alias("pos0", "shingle"))
+        staged.select(
+            "doc_id", F.posexplode(_kgrams(F.col("_w"), k)).alias("pos0", "shingle")
+        )
         .select("doc_id", (F.col("pos0") + 1).alias("pos"), "shingle")
     )
 
@@ -117,7 +135,7 @@ def minhash_signatures(
     shingle stream is dropped; partial aggregation collapses duplicates
     map-side for free.
     """
-    base = hex_to_long(F.md5(F.col("shingle"))) % F.lit(M31)
+    base = _md5_base(F.col("shingle"))
     mins = [
         F.min((F.lit(MINHASH_A[h]) * F.col("_base") + F.lit(MINHASH_B[h])) % F.lit(M31)).alias(
             f"mh_{h}"
@@ -169,11 +187,7 @@ def _rowlocal_bases(k: int):
     (:func:`minhash_signatures_from_docs` and :func:`sign_generation`
     both route through here, so the hash formula cannot drift between
     the LSH path and the stored ledger)."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("_w") - F.lit(k - 1)),
-        lambda i: F.array_join(F.slice(F.col("_w"), i, k), " "),
-    )
-    return F.transform(grams, lambda g: hex_to_long(F.md5(g)) % F.lit(M31))
+    return F.transform(_kgrams(F.col("_w"), k), _md5_base)
 
 
 def _rowlocal_sig_cols(num_hashes: int) -> list:

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_tfidf_spark.functions.hashing import hex_to_long, seeded_md5
+from hadoop_tfidf_spark.operators.dedup import _kgrams
 
 
 def hash_bucket_col(key: Column, buckets: int = 100, seed: int | str = 0) -> Column:
@@ -402,10 +403,7 @@ def dsir_feature_buckets(
     staged = docs.select("doc_id", words.alias("_w")).where(
         F.size("_w") >= 2
     )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("_w") - 1),
-        lambda i: F.array_join(F.slice(F.col("_w"), i, 2), " "),
-    )
+    grams = _kgrams(F.col("_w"), 2)
     return staged.select("doc_id", F.explode(grams).alias("bg")).select(
         "doc_id", hash_bucket_col(F.col("bg"), n_buckets, seed).alias("bucket")
     )
@@ -439,10 +437,7 @@ def dsir_ratios(
     staged = docs.select(
         "doc_id", target.cast("boolean").alias("_t"), words.alias("_w")
     ).where(F.size("_w") >= 2)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("_w") - 1),
-        lambda i: F.array_join(F.slice(F.col("_w"), i, 2), " "),
-    )
+    grams = _kgrams(F.col("_w"), 2)
     feats = staged.select(
         "doc_id",
         "_t",

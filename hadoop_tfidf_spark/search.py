@@ -43,7 +43,9 @@ def query_term_bag(
     ``(query_id, word)`` — duplicates preserved (Search.java:225–231 with
     the ``//break;`` commented out at :230)."""
     if not isinstance(queries, DataFrame):
-        queries = spark.createDataFrame(queries, ["query_id", "query_text"])
+        queries = spark.createDataFrame(
+            queries, "query_id STRING, query_text STRING"
+        )
     return queries.select(
         "query_id",
         F.explode(F.split(F.col("query_text"), pattern)).alias("word"),

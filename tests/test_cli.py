@@ -685,10 +685,14 @@ def test_frontier_emits_six_tier_table(tmp_path):
     assert stored == 6
 
 
-def test_curate_decontaminate_bloom_flag(tmp_path):
-    """--decontaminate --decontaminate-bloom routes the drop through the
-    broadcast-Bloom filter: the verbatim-leaked doc still drops (Bloom
-    has no false negatives), the clean doc still survives."""
+@pytest.mark.parametrize(
+    "sizing", [(), ("--bloom-bits-per-key", "10")], ids=["default", "sized"]
+)
+def test_curate_decontaminate_bloom_flag(tmp_path, sizing):
+    """--decontaminate --decontaminate-bloom routes the drop through a
+    Bloom filter, at the default geometry or sized from the benchmark's
+    shingle count: the verbatim-leaked doc still drops (Bloom has no
+    false negatives), the clean doc still survives."""
     cand = tmp_path / "cand"
     cand.mkdir()
     bench = tmp_path / "bench"
@@ -707,7 +711,7 @@ def test_curate_decontaminate_bloom_flag(tmp_path):
     out = str(tmp_path / "curated")
     _run(
         "curate", str(cand), out,
-        "--decontaminate", str(bench), "--decontaminate-bloom",
+        "--decontaminate", str(bench), "--decontaminate-bloom", *sizing,
     )
     ids = {r[0] for r in duckdb.sql(f"SELECT doc_id FROM '{out}/*.parquet'").fetchall()}
     assert ids == {"clean.txt"}

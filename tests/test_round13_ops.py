@@ -1,7 +1,7 @@
 """Round-13 pins: the nearest-centroid probe expression, the adaptive
-quality cut, ledger compaction, broadcast-Bloom decontamination and
-delta signatures. The driver-vs-executor probe tests live in
-tests/test_ivf.py."""
+quality cut, ledger compaction and delta signatures. The
+driver-vs-executor probe tests live in tests/test_ivf.py, the Bloom
+decontamination tests in tests/test_bloom.py."""
 
 from __future__ import annotations
 
@@ -172,135 +172,6 @@ def test_compact_single_generation_is_noop(spark, ledger_sink):
     assert ledger_generations(sink) == [0, 1, 2, 3]
 
 
-# ------------------------------------ broadcast-Bloom decontamination
-
-
-@pytest.fixture(scope="module")
-def decon_split(spark):
-    docs = spark.read.parquet(f"{SF_DIR_SMOKE}/documents.parquet")
-    return (
-        docs.where(F.col("doc_id") % 10 != 0),
-        docs.where(F.col("doc_id") % 10 == 0),
-    )
-
-
-def test_bloom_one_sided_error(spark, decon_split):
-    """Structural contract: a Bloom probe can false-positive but never
-    false-negative — per doc, exact hits <= bloom hits <= n_shingles,
-    over the same doc set the exact form emits."""
-    from hadoop_tfidf_spark.functions.text import (
-        contamination_bloom,
-        contamination_check,
-    )
-
-    cand, bench = decon_split
-    exact = {
-        r["doc_id"]: r["n_hits"]
-        for r in contamination_check(cand, bench, k=3).collect()
-    }
-    bloom = {
-        r["doc_id"]: (r["n_hits"], r["n_shingles"])
-        for r in contamination_bloom(cand, bench, k=3).collect()
-    }
-    assert set(exact) == set(bloom)
-    for d, (nb, ns) in bloom.items():
-        assert exact[d] <= nb <= ns
-
-
-def test_bloom_fully_contaminated_doc_saturates(spark):
-    """A candidate identical to a benchmark doc hits on EVERY shingle
-    (no-false-negative in its sharpest form)."""
-    from hadoop_tfidf_spark.functions.text import contamination_bloom
-
-    bench = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon")], "doc_id long, text string"
-    )
-    cand = spark.createDataFrame(
-        [(2, "alpha beta gamma delta epsilon")], "doc_id long, text string"
-    )
-    row = contamination_bloom(cand, bench, k=3).collect()[0]
-    assert (row["n_shingles"], row["n_hits"]) == (3, 3)
-    assert row["overlap_ratio"] == 1.0
-
-
-def test_bloom_matches_pure_python_replay(spark):
-    """Engine-independent bit pin: the packed-lane bitmap and the 4-hash
-    probe replayed with hashlib/ints must give the same per-doc hit
-    counts — any drift in lane packing, hash constants, or modulo order
-    fails here before it fails the oracle."""
-    import hashlib
-
-    from hadoop_tfidf_spark.functions.text import (
-        BLOOM_BITS,
-        BLOOM_HASHES,
-        contamination_bloom,
-    )
-    from hadoop_tfidf_spark.operators.dedup import M31, MINHASH_A, MINHASH_B
-
-    bench_texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "pack my box with five dozen liquor jugs",
-    ]
-    cand_texts = {
-        10: "the quick brown fox leaps over a sleepy dog",
-        11: "zeta eta theta iota kappa lambda",
-        12: "pack my box with five dozen liquor jugs",
-    }
-
-    def sh(t, k=3):
-        w = t.split(" ")
-        if len(w) < k:
-            return set()
-        return {" ".join(w[i : i + k]) for i in range(len(w) - k + 1)}
-
-    def positions(s):
-        x = int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % M31
-        return [
-            ((MINHASH_A[h] * x + MINHASH_B[h]) % M31) % BLOOM_BITS
-            for h in range(BLOOM_HASHES)
-        ]
-
-    bits: set[int] = set()
-    for t in bench_texts:
-        for s in sh(t):
-            bits.update(positions(s))
-    expected = {}
-    for d, t in cand_texts.items():
-        grams = sh(t)
-        hits = sum(1 for g in grams if all(p in bits for p in positions(g)))
-        expected[d] = (len(grams), hits)
-
-    bench = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(bench_texts)], "doc_id long, text string"
-    )
-    cand = spark.createDataFrame(
-        list(cand_texts.items()), "doc_id long, text string"
-    )
-    got = {
-        r["doc_id"]: (r["n_shingles"], r["n_hits"])
-        for r in contamination_bloom(cand, bench, k=3).collect()
-    }
-    assert got == expected
-    # the identical doc must saturate; sanity that the fixture exercises both
-    assert expected[12][0] == expected[12][1] > 0
-
-
-def test_bloom_probe_plan_is_join_free(spark, decon_split):
-    """The scale claim as a census: the corpus-side plan has NO join of
-    any kind (the filter rides as a literal; the exact form's semi-join
-    is gone) — membership resolves inside the scan stage."""
-    from hadoop_tfidf_spark.functions.text import contamination_bloom
-
-    cand, bench = decon_split
-    plan = (
-        contamination_bloom(cand, bench, k=3)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "Join" not in plan
-
-
 # ------------------------------------ incremental signature maintenance
 
 
@@ -379,90 +250,6 @@ def test_delta_changed_doc_below_k_words_loses_its_row(spark):
         D.minhash_signatures(D.shingles(old)), D.corpus_diff(old, new), new
     )
     assert out.count() == 0
-
-
-# ------------------------------------ stateless Bloom (streaming form)
-
-
-def test_bloom_stateless_matches_agg_form_and_keeps_short_docs(spark):
-    """Row-local verdicts == the aggregation form on every >=k-word doc;
-    sub-k docs are emitted with (0, 0, keep=1) — the no-evidence rule."""
-    from hadoop_tfidf_spark.functions.text import (
-        bloom_bitmap,
-        contamination_bloom,
-        contamination_bloom_stateless,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR_SMOKE}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    cand = docs.where(F.col("doc_id") % 10 != 0).limit(200)
-    bench = docs.where(F.col("doc_id") % 10 == 0)
-    short = spark.createDataFrame([(999_001, "one two")], "doc_id long, text string")
-    bm = bloom_bitmap(bench, k=3)
-    agg = {
-        r["doc_id"]: (r["n_shingles"], r["n_hits"])
-        for r in contamination_bloom(cand, bitmap=bm, k=3).collect()
-    }
-    stateless = {
-        r["doc_id"]: (r["n_shingles"], r["n_hits"], r["keep"])
-        for r in contamination_bloom_stateless(
-            cand.unionByName(short), bm, k=3
-        ).collect()
-    }
-    assert set(stateless) == set(agg) | {999_001}
-    assert stateless[999_001] == (0, 0, 1)
-    for d, (ns, nh) in agg.items():
-        assert stateless[d][:2] == (ns, nh)
-        assert stateless[d][2] == int(round(nh / ns, 6) <= 0.1)
-
-
-def test_bloom_stateless_plan_is_a_pure_projection(spark, decon_split):
-    """ZERO exchanges, ZERO joins, ZERO aggregates — the structural fact
-    that makes the streaming twin stateless/watermarkless."""
-    from hadoop_tfidf_spark.functions.text import (
-        bloom_bitmap,
-        contamination_bloom_stateless,
-    )
-
-    cand, bench = decon_split
-    bm = bloom_bitmap(bench, k=3)
-    plan = (
-        contamination_bloom_stateless(cand, bm, k=3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-    assert "Join" not in plan
-    assert "Aggregate" not in plan
-
-
-def test_decontaminate_bloom_apply_superset_of_exact_drop(spark, decon_split):
-    """The Bloom APPLY keeps a SUBSET of the exact apply's kept set
-    (one-sided error drops extra, never fewer) and keeps sub-k docs."""
-    from hadoop_tfidf_spark.functions.text import (
-        decontaminate,
-        decontaminate_bloom,
-    )
-
-    cand, bench = decon_split
-    cand = cand.select("doc_id", "text")
-    short = spark.createDataFrame(
-        [(999_002, "just two")], "doc_id long, text string"
-    )
-    kept_exact = {
-        r["doc_id"] for r in decontaminate(cand, bench, k=3).collect()
-    }
-    kept_bloom = {
-        r["doc_id"]
-        for r in decontaminate_bloom(
-            cand.unionByName(short), bench, k=3
-        ).collect()
-    }
-    assert 999_002 in kept_bloom
-    assert kept_bloom - {999_002} <= kept_exact
-    assert kept_bloom  # non-vacuous: something survives
 
 
 # --------------------------------- compaction crash-safety (round 13b)

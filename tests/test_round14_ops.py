@@ -1,6 +1,6 @@
 """Round-14 pins: ledger auto-compaction policy + single-writer/replay
-guards, parameterized Bloom geometry (production sizing + saturation
-accounting), and the delta-signature ledger schema contract."""
+guards and the delta-signature ledger schema contract (the Bloom
+geometry tests live in tests/test_bloom.py)."""
 
 from __future__ import annotations
 
@@ -173,129 +173,6 @@ def test_compacted_marker_travels_and_is_invisible_to_reads(spark, tmp_path):
     assert not glob.glob(f"{sink}/_compact_tmp_through=*")
 
 
-# ------------------------------------------------ Bloom geometry
-
-
-def test_bloom_geometry_sizing():
-    from hadoop_tfidf_spark.functions.text import bloom_geometry
-
-    bits, hashes = bloom_geometry(1000, bits_per_key=10)
-    assert bits >= 10_000 and bits % 32 == 0
-    assert hashes == 7  # round(ln2 * 10)
-    # explicit hashes pass through; family-size cap applies
-    assert bloom_geometry(10, bits_per_key=10, hashes=3)[1] == 3
-    assert bloom_geometry(10, bits_per_key=40)[1] == 12  # capped at family
-    with pytest.raises(ValueError):
-        bloom_geometry(0)
-
-
-def test_bloom_custom_geometry_round_trips(spark, tmp_path):
-    """A filter built at non-default (bits, hashes) probes consistently:
-    every true benchmark shingle hits (no false negatives ever), across
-    both probe forms."""
-    from hadoop_tfidf_spark.functions.text import (
-        bloom_bitmap,
-        bloom_geometry,
-        contamination_bloom,
-        contamination_bloom_stateless,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR_SMOKE}/documents.parquet")
-    bench = docs.where(F.col("doc_id") % 7 == 0)
-    bits, hashes = bloom_geometry(2000, bits_per_key=10)
-    bm = bloom_bitmap(bench, k=3, bits=bits, hashes=hashes)
-    # bits//32 packed words + the trailing -hashes geometry tag
-    assert len(bm) == bits // 32 + 1 and bm[-1] == -hashes
-    # one-sided error: a bench doc probed against its own filter is 100%
-    # hits in BOTH probe forms
-    agg = {
-        r["doc_id"]: r
-        for r in contamination_bloom(bench, bitmap=bm, hashes=hashes).collect()
-    }
-    stateless = {
-        r["doc_id"]: r
-        for r in contamination_bloom_stateless(
-            bench, bm, hashes=hashes
-        ).collect()
-        if r["n_shingles"] > 0
-    }
-    assert agg and set(agg) == set(stateless)
-    for d, row in agg.items():
-        assert row["n_hits"] == row["n_shingles"]
-        assert stateless[d]["n_hits"] == stateless[d]["n_shingles"]
-
-
-def test_bloom_saturation_overdrops_one_sidedly(spark):
-    """The failure mode VERDICT names, made visible: a deliberately
-    undersized filter saturates (FP rate → 1) and decontamination
-    over-drops — but NEVER under-drops (one-sided error, the safe
-    direction). The accounting columns expose it: clean docs' n_hits
-    climbs from ~0 to ~all shingles; production sizing restores a low
-    FP rate."""
-    from hadoop_tfidf_spark.functions.text import (
-        bloom_bitmap,
-        bloom_geometry,
-        contamination_bloom,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR_SMOKE}/documents.parquet")
-    bench = docs.where(F.col("doc_id") % 7 == 0)
-    # clean docs from a vocabulary DISJOINT from the corpus: every Bloom
-    # hit on them is a false positive by construction (real held-out
-    # corpus docs share genuine 3-grams with the benchmark — true
-    # positives that would pollute the FP measurement)
-    clean = spark.range(50).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(99)),
-                lambda i: F.concat(
-                    F.lit("qz"), (F.col("id") * 100 + i).cast("string")
-                ),
-            ),
-        ).alias("text"),
-    )
-
-    def fp_rate(bits, hashes):
-        bm = bloom_bitmap(bench, k=3, bits=bits, hashes=hashes)
-        r = (
-            contamination_bloom(clean, bitmap=bm, hashes=hashes)
-            .agg(
-                F.sum("n_hits").alias("h"), F.sum("n_shingles").alias("s")
-            )
-            .collect()[0]
-        )
-        return r["h"] / r["s"]
-
-    n_bench = (
-        bench.select(
-            F.explode(F.split("text", " ")).alias("w")
-        ).count()
-    )  # upper bound on distinct shingles — cheap ceiling estimate
-    tiny = fp_rate(256, 4)  # 256 bits for thousands of shingles
-    sized = fp_rate(*bloom_geometry(n_bench, bits_per_key=10))
-    assert tiny > 0.9  # saturated: nearly every clean shingle "hits"
-    assert sized < 0.05  # production sizing: ~1% FP
-    # default geometry is UNCHANGED by the parameterization — the gate
-    # row's exact bitmap shape
-    from hadoop_tfidf_spark.functions.text import BLOOM_BITS, BLOOM_HASHES
-
-    assert (BLOOM_BITS, BLOOM_HASHES) == (1 << 16, 4)
-
-
-def test_bloom_mismatched_geometry_rejected(spark):
-    from hadoop_tfidf_spark.functions.text import (
-        contamination_bloom_stateless,
-    )
-
-    docs = spark.createDataFrame([(1, "a b c d")], "doc_id INT, text STRING")
-    with pytest.raises(ValueError, match="bits"):
-        contamination_bloom_stateless(docs, [], k=3)  # empty bitmap
-    with pytest.raises(ValueError, match="hashes"):
-        contamination_bloom_stateless(docs, [0] * 64, k=3, hashes=99)
-
-
 # ------------------------------------ delta-signature schema contract
 
 
@@ -391,21 +268,6 @@ def test_delta_sign_plan_never_scans_old_text(spark, tmp_path):
 
 
 # --------------------------------- review-pass regressions (round 14b)
-
-
-def test_bloom_geometry_rejects_dead_lanes():
-    """Positions are mod M31, so bits beyond it can never be set — the
-    sizing helper and the probe both refuse instead of silently
-    allocating dead lanes with a degraded FP rate."""
-    from hadoop_tfidf_spark.functions.text import bloom_geometry
-    from hadoop_tfidf_spark.operators.dedup import M31
-
-    # 3·10⁹ requested bits > M31: refuse with the sharding pointer
-    with pytest.raises(ValueError, match="shard"):
-        bloom_geometry(300_000_000, bits_per_key=10)
-    # the largest legal geometry still sizes
-    bits, _ = bloom_geometry(100_000_000, bits_per_key=10)
-    assert bits <= M31
 
 
 def test_delta_signatures_membership_matches_from_scratch(spark):

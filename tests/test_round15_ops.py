@@ -1,6 +1,6 @@
 """Round-15 pins: ledger read/guard hardening (local-path assertion,
-race-free generation snapshots), self-describing Bloom bitmaps (hash
-tag), and ivfpq_topk query-source exclusivity."""
+race-free generation snapshots) and ivfpq_topk query-source
+exclusivity (the Bloom tests live in tests/test_bloom.py)."""
 
 from __future__ import annotations
 
@@ -83,87 +83,6 @@ def test_read_ledger_still_blocks_mid_swap(spark, tmp_path):
         read_ledger(spark, sink)
 
 
-# ------------------------------------------------ Bloom hash self-description
-
-
-def _bench(spark):
-    return spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta token{i}") for i in range(30)],
-        "doc_id BIGINT, text STRING",
-    )
-
-
-def test_bloom_bitmap_carries_its_hash_count(spark):
-    """A prebuilt bitmap self-describes BOTH geometry numbers: bits from
-    the word count and hashes from the trailing sentinel. A probe with
-    no hashes= adopts the build's value; an explicit contradicting value
-    raises instead of silently breaking the no-false-negative rule."""
-    from hadoop_tfidf_spark.functions.text import (
-        bloom_bitmap,
-        bloom_geometry,
-        contamination_bloom,
-        contamination_bloom_stateless,
-        decontaminate_bloom,
-    )
-
-    bench = _bench(spark)
-    bits, hashes = bloom_geometry(500, bits_per_key=10)
-    assert hashes != 4  # the default — the tag must do real work here
-    bm = bloom_bitmap(bench, k=3, bits=bits, hashes=hashes)
-    assert bm[-1] == -hashes  # the tag
-
-    # hashes omitted == hashes explicit (the tag supplies it)
-    tagged = sorted(
-        map(tuple, contamination_bloom_stateless(bench, bm, k=3).collect())
-    )
-    explicit = sorted(
-        map(
-            tuple,
-            contamination_bloom_stateless(bench, bm, k=3, hashes=hashes).collect(),
-        )
-    )
-    assert tagged == explicit
-    # every bench doc must self-hit (no false negative possible)
-    assert all(r[2] == r[1] for r in tagged)  # n_hits == n_shingles
-
-    # the aggregate probe form adopts the tag the same way
-    agg = sorted(
-        map(tuple, contamination_bloom(bench, bitmap=bm, k=3).collect())
-    )
-    assert all(r[2] == r[1] for r in agg)
-
-    # a contradicting explicit value is the silent-loss case — loud now
-    for fn in (
-        lambda: contamination_bloom_stateless(bench, bm, k=3, hashes=hashes + 1),
-        lambda: contamination_bloom(bench, bitmap=bm, k=3, hashes=hashes + 1),
-        lambda: decontaminate_bloom(bench, bitmap=bm, k=3, hashes=hashes + 1),
-    ):
-        with pytest.raises(ValueError, match="built with hashes"):
-            fn()
-
-
-def test_bloom_untagged_bitmap_stays_probeable(spark):
-    """Legacy untagged word lists (all lanes >= 0) keep working with the
-    default geometry, so stored filters from before the tag don't brick."""
-    from hadoop_tfidf_spark.functions.text import (
-        BLOOM_HASHES,
-        bloom_bitmap,
-        contamination_bloom_stateless,
-    )
-
-    bench = _bench(spark)
-    tagged = bloom_bitmap(bench, k=3)  # default geometry, tag == -4
-    assert tagged[-1] == -BLOOM_HASHES
-    legacy = tagged[:-1]  # what a pre-tag caller would have stored
-    a = sorted(
-        map(tuple, contamination_bloom_stateless(bench, tagged, k=3).collect())
-    )
-    b = sorted(
-        map(tuple, contamination_bloom_stateless(bench, legacy, k=3).collect())
-    )
-    assert a == b
-
-
 # ------------------------------------------------ registry contract pin
 
 
@@ -191,126 +110,6 @@ def test_registry_order_and_oracle_sql_are_pinned():
         k: hashlib.sha256(v.encode()).hexdigest() for k, v in osql.items()
     }
     assert got == fix["oracle_sha256"]
-
-
-# ------------------------------------------------ sharded Bloom filters
-
-
-def test_sharded_bloom_geometry_past_m31_ceiling():
-    """The sizing wall, now an operator instead of a pointer: a
-    10⁹-shingle release at 10 bits/key wants ~10 Gbit — the single
-    filter refuses (positions are mod M31), the sharded geometry
-    partitions the key set into the fewest shards whose per-shard
-    filter fits and preserves the per-key bit budget."""
-    from hadoop_tfidf_spark.functions.text import (
-        _check_geometry,
-        bloom_geometry,
-        bloom_geometry_sharded,
-    )
-    from hadoop_tfidf_spark.operators.dedup import M31
-
-    with pytest.raises(ValueError, match="sharded"):
-        bloom_geometry(1_000_000_000, bits_per_key=10)
-    bits, hashes, n_shards = bloom_geometry_sharded(
-        1_000_000_000, bits_per_key=10
-    )
-    assert n_shards == 5  # ceil(10e9 bits / ~2^31 ceiling)
-    assert bits <= M31 and bits % 32 == 0
-    _check_geometry(bits, hashes)  # every shard is a legal filter
-    # per-key budget preserved: total capacity >= n_keys * bits_per_key
-    assert bits * n_shards >= 1_000_000_000 * 10
-    # under the ceiling the sharded sizing degrades to the single form
-    sb, sh, ns = bloom_geometry_sharded(1000, bits_per_key=10)
-    assert ns == 1 and (sb, sh) == bloom_geometry(1000, bits_per_key=10)
-
-
-def test_sharded_bloom_probe_and_fp_accounting(spark):
-    """Functional contract at forced n_shards=3: (a) no false negative
-    ever — every benchmark doc self-hits on all shingles; (b) FP
-    accounting on a disjoint-vocabulary clean corpus mirrors the
-    single filter: a starved per-shard geometry saturates (over-drops,
-    the safe direction), the sized geometry stays under ~5%; (c) at
-    n_shards=1 the sharded probe equals the single-filter stateless
-    probe row for row (same words, same positions)."""
-    from hadoop_tfidf_spark.functions.text import (
-        ShardedBloom,
-        bloom_bitmap,
-        bloom_bitmap_sharded,
-        contamination_bloom_sharded,
-        contamination_bloom_stateless,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    bench = docs.where(F.col("doc_id") % 7 == 0)
-    clean = spark.range(50).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(99)),
-                lambda i: F.concat(
-                    F.lit("qz"), (F.col("id") * 100 + i).cast("string")
-                ),
-            ),
-        ).alias("text"),
-    )
-
-    # (a) one-sided error survives sharding: bench self-probe is 100%
-    sized = bloom_bitmap_sharded(
-        bench, k=3, bits_per_shard=1 << 15, hashes=4, n_shards=3
-    )
-    assert len(sized.words) == 3 * (1 << 15) // 32
-    self_rows = contamination_bloom_sharded(bench, sized, k=3).collect()
-    assert self_rows and all(
-        r["n_hits"] == r["n_shingles"] for r in self_rows
-    )
-
-    # (b) FP accounting: starved shards saturate, sized shards don't
-    def fp(sb: ShardedBloom) -> float:
-        r = (
-            contamination_bloom_sharded(clean, sb, k=3)
-            .agg(F.sum("n_hits").alias("h"), F.sum("n_shingles").alias("s"))
-            .collect()[0]
-        )
-        return r["h"] / r["s"]
-
-    starved = bloom_bitmap_sharded(
-        bench, k=3, bits_per_shard=64, hashes=4, n_shards=3
-    )
-    assert fp(starved) > 0.9
-    assert fp(sized) < 0.05
-
-    # (c) n_shards=1 == the single filter, row for row
-    single_words = bloom_bitmap(bench, k=3, bits=1 << 15, hashes=4)[:-1]
-    one = ShardedBloom(single_words, 1 << 15, 1, 4)
-    a = sorted(map(tuple, contamination_bloom_sharded(clean, one, k=3).collect()))
-    b = sorted(
-        map(
-            tuple,
-            contamination_bloom_stateless(
-                clean, single_words, k=3, hashes=4
-            ).collect(),
-        )
-    )
-    assert a == b
-
-    # geometry mismatch between words and declared shape fails loudly
-    with pytest.raises(ValueError, match="geometry"):
-        contamination_bloom_sharded(
-            clean, ShardedBloom([0] * 10, 1 << 15, 3, 4), k=3
-        ).collect()
-
-    # APPLY form: sharded decontamination drops every bench doc (100%
-    # self-overlap) and keeps the whole disjoint-vocabulary clean corpus
-    from hadoop_tfidf_spark.functions.text import decontaminate_bloom_sharded
-
-    mixed = bench.select("doc_id", "text").unionByName(
-        clean.withColumn("doc_id", F.col("doc_id") + 10_000)
-    )
-    kept = decontaminate_bloom_sharded(mixed, sized, k=3).select("doc_id")
-    kept_ids = {r["doc_id"] for r in kept.collect()}
-    assert all(i >= 10_000 for i in kept_ids)
-    assert len(kept_ids) == 50
 
 
 # ------------------------------------------------ trained-index persistence

@@ -307,116 +307,6 @@ def test_recall_drift_reports_per_generation_and_trigger(spark, tmp_path):
     assert strict["retrain_due"] is True
 
 
-# ------------------------------------------------ sharded Bloom round-16
-
-
-def _bench(spark):
-    return spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta token{i}") for i in range(30)],
-        "doc_id BIGINT, text STRING",
-    )
-
-
-def test_sharded_geometry_lane_rounding_boundary():
-    """Advisory fix: at boundary key counts the lane-rounded per-shard
-    size used to exceed the M31 ceiling the shard count was derived
-    from — the sizer now recomputes the shard count from the ROUNDED
-    size, so every geometry it returns passes its own consumer's
-    check. The advisory's exact reproducer plus a sweep around the
-    single-shard boundary."""
-    from hadoop_tfidf_spark.functions.text import (
-        _check_geometry,
-        bloom_geometry,
-        bloom_geometry_sharded,
-    )
-    from hadoop_tfidf_spark.operators.dedup import M31
-
-    bits, hashes, n_shards = bloom_geometry_sharded(429_496_723, bits_per_key=10)
-    assert n_shards == 3  # 2 shards lane-round past the ceiling
-    assert bits <= M31 and bits % 32 == 0
-    _check_geometry(bits, hashes)
-    assert bits * n_shards >= 429_496_723 * 10
-    # sweep: every returned geometry is self-consistent near boundaries
-    ceiling_keys = (M31 - (M31 % 32)) // 10
-    for n_keys in (
-        ceiling_keys - 1, ceiling_keys, ceiling_keys + 1,
-        2 * ceiling_keys, 2 * ceiling_keys + 1, 10 ** 9,
-    ):
-        b, h, s = bloom_geometry_sharded(n_keys, bits_per_key=10)
-        _check_geometry(b, h)
-        assert b * s >= n_keys * 10, n_keys
-    # under the ceiling the sharded sizing still degrades to the single
-    sb, sh, ns = bloom_geometry_sharded(1000, bits_per_key=10)
-    assert ns == 1 and (sb, sh) == bloom_geometry(1000, bits_per_key=10)
-
-
-def test_untag_bitmap_public_helper(spark):
-    """Advisory: external callers who persisted tagged bitmaps get a
-    public untag instead of reaching for the private helper — the
-    returned words never include the sentinel, geometry derives
-    correctly, and a contradicting hash count still refuses."""
-    from hadoop_tfidf_spark.functions.text import (
-        BLOOM_BITS,
-        bloom_bitmap,
-        untag_bitmap,
-    )
-
-    tagged = bloom_bitmap(_bench(spark), k=3)
-    words, hashes = untag_bitmap(tagged)
-    assert len(words) * 32 == BLOOM_BITS  # sentinel excluded
-    assert hashes == 4 and tagged[-1] == -4
-    assert words == tagged[:-1]
-    with pytest.raises(ValueError, match="mismatch"):
-        untag_bitmap(tagged, hashes=7)
-    # legacy untagged list passes through with the explicit count
-    w2, h2 = untag_bitmap(words, hashes=7)
-    assert w2 == words and h2 == 7
-
-
-def test_sharded_bloom_broadcast_probe_row_equal(spark):
-    """The broadcast-handle probe is the same operator as the literal
-    form: at forced n_shards=3 every (doc_id, n_shingles, n_hits,
-    keep) row matches the expression probe exactly on the gate
-    fixture, including empty/sub-k docs, and the APPLY forms keep the
-    same id sets."""
-    from hadoop_tfidf_spark.functions.text import (
-        bloom_bitmap_sharded,
-        contamination_bloom_sharded,
-        contamination_bloom_sharded_bc,
-        decontaminate_bloom_sharded,
-        decontaminate_bloom_sharded_bc,
-    )
-
-    bench = _bench(spark)
-    sb = bloom_bitmap_sharded(bench, k=3, n_shards=3)
-    docs = bench.unionByName(
-        spark.createDataFrame(
-            [(1000, "one two"), (1001, ""), (1002, None),
-             (1003, "fresh words entirely new content here")],
-            "doc_id BIGINT, text STRING",
-        )
-    )
-    lit_rows = sorted(
-        map(tuple, contamination_bloom_sharded(docs, sb, k=3).collect())
-    )
-    bc_rows = sorted(
-        map(tuple, contamination_bloom_sharded_bc(docs, sb, k=3).collect())
-    )
-    assert lit_rows == bc_rows
-    kept_lit = {
-        r["doc_id"]
-        for r in decontaminate_bloom_sharded(docs, sb, k=3)
-        .select("doc_id").collect()
-    }
-    kept_bc = {
-        r["doc_id"]
-        for r in decontaminate_bloom_sharded_bc(docs, sb, k=3)
-        .select("doc_id").collect()
-    }
-    assert kept_lit == kept_bc
-    assert all(i >= 1000 for i in kept_lit)  # bench docs all self-hit
-
-
 # ------------------------------------------------ serving pointer (flip)
 
 
@@ -545,73 +435,6 @@ def test_compact_index_folds_generations_losslessly(spark, tmp_path, monkeypatch
     m_old = _json.load(open(f"{d}/manifest.json"))
     m_new = _json.load(open(f"{out}/manifest.json"))
     assert m_new["tables"] == m_old["tables"]
-
-
-def test_stored_bloom_filter_builds_probes_and_guards(spark, tmp_path):
-    """The stored-filter form (the advisory's largest-geometry shape):
-    per-shard build bounds the driver to one shard, geometry.json is
-    the atomic commit marker, the executor-side stored probe is
-    row-equal to BOTH in-memory probe forms, load_stored_bloom
-    round-trips the exact word array, and the guards hold (overwrite
-    refusal, crashed build unprobeable, shingle-width mismatch
-    refused)."""
-    import shutil
-
-    from hadoop_tfidf_spark.functions.text import (
-        bloom_bitmap_sharded,
-        bloom_store_sharded,
-        contamination_bloom_sharded,
-        contamination_bloom_stored,
-        decontaminate_bloom_stored,
-        load_stored_bloom,
-    )
-
-    bench = _bench(spark)
-    d = str(tmp_path / "filter")
-    bloom_store_sharded(bench, d, k=3, n_shards=3)
-    with pytest.raises(FileExistsError, match="versioned"):
-        bloom_store_sharded(bench, d, k=3, n_shards=3)
-
-    # stored words == the one-job in-memory build, exactly
-    sb_mem = bloom_bitmap_sharded(bench, k=3, n_shards=3)
-    sb_disk = load_stored_bloom(d)
-    assert sb_disk.words == sb_mem.words
-    assert (sb_disk.bits_per_shard, sb_disk.n_shards, sb_disk.hashes) == (
-        sb_mem.bits_per_shard, sb_mem.n_shards, sb_mem.hashes,
-    )
-
-    docs = bench.unionByName(
-        spark.createDataFrame(
-            [(1000, "one two"), (1001, None),
-             (1002, "fresh words entirely new content here")],
-            "doc_id BIGINT, text STRING",
-        )
-    )
-    stored_rows = sorted(
-        map(tuple, contamination_bloom_stored(docs, d).collect())
-    )
-    lit_rows = sorted(
-        map(tuple, contamination_bloom_sharded(docs, sb_mem, k=3).collect())
-    )
-    assert stored_rows == lit_rows
-    kept = {
-        r["doc_id"]
-        for r in decontaminate_bloom_stored(docs, d).select("doc_id").collect()
-    }
-    assert kept == {1000, 1001, 1002}  # bench docs all self-hit
-
-    # probing at a different shingle width than the build refuses
-    with pytest.raises(ValueError, match="width"):
-        contamination_bloom_stored(docs, d, k=4)
-
-    # a crashed build (no geometry marker) can never be probed
-    crashed = str(tmp_path / "crashed")
-    shutil.copytree(d, crashed)
-    os.remove(f"{crashed}/geometry.json")
-    with pytest.raises(FileNotFoundError, match="geometry"):
-        contamination_bloom_stored(docs, crashed)
-    with pytest.raises(FileNotFoundError, match="geometry"):
-        load_stored_bloom(crashed)
 
 
 def test_extend_after_compact_continues_the_lifecycle(spark, tmp_path):

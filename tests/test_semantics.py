@@ -132,6 +132,19 @@ class TestSearchSemantics:
         s_bag = search(t, bag).collect()[0].score
         assert s_bag == pytest.approx(2 * s_set)
 
+    @pytest.mark.parametrize(
+        "queries",
+        [[], [("q", "")], [("q", "zzzmissing qqqabsent")]],
+        ids=["empty_list", "empty_string", "all_oov"],
+    )
+    def test_empty_and_oov_queries_rank_no_rows(self, spark, queries):
+        """No query, an empty query string and an all-out-of-vocabulary
+        query each answer 0 rows through search + rank instead of
+        raising (an empty list used to fail schema inference)."""
+        t = tfidf(_docs(spark, [("d1", "spark data")]), tokenizer_pattern=" ")
+        bag = query_term_bag(spark, queries)
+        assert rank(search(t, bag)).count() == 0
+
     def test_rank_is_permutation_of_search(self, spark):
         docs = _docs(spark, [("d1", "a b"), ("d2", "a"), ("d3", "b c")])
         t = tfidf(docs, tokenizer_pattern=" ")

@@ -181,3 +181,16 @@ def test_streaming_dsir_matches_batch(spark, tmp_path_factory):
     }
     assert got == want
     assert got[99] == (0, None)
+
+
+def test_streaming_dsir_releases_its_ratio_table(spark):
+    """The declared streaming DSIR query persists its trained ratio table
+    only while the stream drains: once it returns, the cache manager is
+    empty again, and the result (which reads the drained sink, not the
+    table) still answers."""
+    from hadoop_tfidf_spark.extensions import q_streaming_dsir
+
+    spark.catalog.clearCache()
+    out = q_streaming_dsir(spark, SF_DIR)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert out.count() > 0

@@ -1,10 +1,9 @@
-"""Measure the literal-vs-broadcast crossover for the sharded Bloom
-probe (VERDICT r15 "Next round" ¶5): the same contamination verdict
-computed with the filter as (a) a flat plan-literal expression
-(whole-stage codegen, zero Python — but the words ride inside every
-serialized plan/task closure) and (b) a ``SparkContext.broadcast``
-handle probed by an Arrow ``mapInPandas`` stage (words ship once per
-executor, the plan stays tiny).
+"""Measure the two Bloom probe forms by filter size: the same
+contamination verdict computed with the filter (a) in memory, probed as
+one parsed plan-literal expression (whole-stage codegen, zero Python —
+but the words ride inside every serialized plan/task closure), and (b)
+stored as parquet, probed by an Arrow ``mapInPandas`` stage that loads
+the words once per Python worker (the plan stays tiny).
 
 Geometries are synthetic (seeded pseudo-random words, 4 shards) so the
 cost curve isolates FILTER SIZE; the corpus is the sf-dir documents
@@ -29,10 +28,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 #: total packed words per measured point (× 8 bytes = filter footprint);
 #: override with SPARK_GRAFT_BLOOM_SIZES=comma,separated,words. The
-#: literal form's cost explodes super-linearly with geometry (that IS
-#: the measurement), so cap the largest literal point via
-#: SPARK_GRAFT_BLOOM_LIT_CAP words — beyond it only the broadcast form
-#: runs and the literal is recorded as null (documented unbounded).
+#: literal form's cost grows with geometry (that IS the measurement),
+#: so cap the largest literal point via SPARK_GRAFT_BLOOM_LIT_CAP words
+#: — beyond it only the stored form runs and the literal is recorded as
+#: null.
 SIZES = [
     int(s)
     for s in os.environ.get(
@@ -53,9 +52,8 @@ def main() -> None:
     import tempfile
 
     from hadoop_tfidf_spark.functions.text import (
-        ShardedBloom,
-        contamination_bloom_sharded,
-        contamination_bloom_sharded_bc,
+        BloomFilter,
+        contamination_bloom_stateless,
         contamination_bloom_stored,
     )
     from hadoop_tfidf_spark.session import get_spark
@@ -71,7 +69,7 @@ def main() -> None:
         wps = total_words // N_SHARDS
         bits = wps * 32
         words = rng.integers(0, 1 << 32, size=total_words, dtype=np.int64)
-        sb = ShardedBloom([int(w) for w in words], bits, N_SHARDS, 4)
+        bloom = BloomFilter([int(w) for w in words], bits, N_SHARDS, 4, 3)
         point = {
             "total_words": total_words,
             "filter_mb": round(total_words * 8 / 2**20, 1),
@@ -96,19 +94,16 @@ def main() -> None:
         run_literal = total_words <= LIT_CAP
         if run_literal:
             t0 = time.monotonic()
-            lit_df = contamination_bloom_sharded(docs, sb, k=3)
+            lit_df = contamination_bloom_stateless(docs, bloom)
             point["literal_plan_build_s"] = round(time.monotonic() - t0, 3)
         else:
             point["literal_plan_build_s"] = None
-        lit_times, bc_times, stored_times = [], [], []
+        lit_times, stored_times = [], []
         for t in range(trials):
             if run_literal:
                 t0 = time.monotonic()
                 lit_df.count()
                 lit_times.append(time.monotonic() - t0)
-            t0 = time.monotonic()
-            contamination_bloom_sharded_bc(docs, sb, k=3).count()
-            bc_times.append(time.monotonic() - t0)
             t0 = time.monotonic()
             contamination_bloom_stored(docs, fdir).count()
             el = time.monotonic() - t0
@@ -116,7 +111,6 @@ def main() -> None:
                 point["stored_cold_s"] = round(el, 3)  # incl. worker load
             stored_times.append(el)
         point["literal_s"] = round(min(lit_times), 3) if lit_times else None
-        point["broadcast_s"] = round(min(bc_times), 3)
         point["stored_s"] = round(min(stored_times), 3)
         shutil.rmtree(fdir, ignore_errors=True)
         out["points"].append(point)
