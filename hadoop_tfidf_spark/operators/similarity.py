@@ -37,36 +37,95 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    LongType,
+    StringType,
+    StructType,
+)
 
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def _lit_array(values) -> Column:
-    """A vector, matrix or 3-level codebook literal of ``bigint``.
+def _sql_literal(v, dtype: ArrayType) -> str:
+    """SQL text of one array of ``dtype``: nested levels as ``ARRAY(…)``,
+    and each innermost vector as ONE string literal that the plan splits
+    and casts. The cast parses integers exactly and doubles with
+    ``Double.parseDouble`` from their shortest round-trip ``repr``, so
+    each value — ``-0.0``, subnormals, ``inf`` and ``nan`` included —
+    comes back bit for bit, and the SQL
+    parser sees one token per vector instead of one per element (on a
+    4-vCPU VM a 48×64 double array took 0.25 s to analyze as ``0.1D``
+    literals, ~0.02 s as strings)."""
+    if v is None:
+        return "NULL"
+    el = dtype.elementType
+    if isinstance(el, ArrayType):
+        return "ARRAY(" + ", ".join(_sql_literal(x, el) for x in v) + ")"
+    if not len(v):
+        return "ARRAY()"
+    if isinstance(el, (DoubleType, FloatType)):
+        nums = ",".join(repr(float(x)) for x in v)
+    else:
+        nums = ",".join(str(int(x)) for x in v)
+    return f"CAST(split('{nums}', ',') AS {dtype.simpleString()})"
+
+
+def _lit_array(values, dtype: ArrayType | None = None) -> Column:
+    """A vector, matrix or 3-level codebook literal, of ``bigint``
+    unless ``dtype`` says otherwise.
 
     ``F.lit(list)`` builds ``array(lit(x), …)`` level by level with one
     py4j round trip per element (~130 ms for a 16×16 centroid matrix,
     and a build or search plan holds several), and types each element
     from its value, so small ints come out ``int`` and a sum of two
     entries near 2^30 overflows under ANSI mode. Instead the literal is
-    one SQL expression, parsed in a single call (~1 ms) with one cast of
-    the whole array to ``bigint``; the optimizer folds it into a single
-    constant. Measured when the nested literals replaced per-element
-    ``F.array`` construction: an IVF assign job over 16×64 centroids
-    dropped ~2-3× in wall time."""
-    def sql(v):
-        if isinstance(v, (list, tuple)):
-            return "ARRAY(" + ", ".join(sql(x) for x in v) + ")"
-        return str(int(v))
+    one SQL expression (:func:`_sql_literal`), built in a single call
+    with one cast to the whole array's type; the optimizer folds it into
+    a single constant. Measured when the nested literals replaced
+    per-element ``F.array`` construction: an IVF assign job over 16×64
+    centroids dropped ~2-3× in wall time."""
+    if dtype is None:
+        dtype, probe = ArrayType(LongType()), values[0] if len(values) else None
+        while isinstance(probe, (list, tuple)) and len(probe):
+            dtype, probe = ArrayType(dtype), probe[0]
+    return F.expr(f"CAST({_sql_literal(values, dtype)} AS {dtype.simpleString()})")
 
-    depth, probe = 0, values
-    while isinstance(probe, (list, tuple)) and len(probe):
-        depth, probe = depth + 1, probe[0]
-    return F.expr(f"CAST({sql(values)} AS {'ARRAY<' * depth}BIGINT{'>' * depth})")
+
+def _local_relation(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A small driver-side relation as a literal inside the plan: the
+    ``schema`` (DDL) rows as ``inline(arrays_zip(…))`` over ``SELECT 1``,
+    which optimizes to ``Generate inline`` over ``OneRowRelation``.
+    Unlike ``createDataFrame(list)``, which parallelizes a pickled RDD
+    and so starts Python workers on every call, nothing leaves the JVM;
+    an empty ``rows`` gives 0 rows.
+
+    The literal is built a column at a time: a string column is an array
+    of ``F.lit`` values (the JVM escapes them), any other column one
+    :func:`_lit_array` literal (exact; a whole array value may be null,
+    a number may not), and one cast of the zipped rows gives the
+    schema's names, types and nullability. A struct per row would cost
+    ~4 py4j round trips a row (on a 4-vCPU VM, 0.56 s to build 192 probe
+    rows against 0.07 s a column at a time). Plan build cost still grows
+    with the literal, so callers bound it (:data:`DRIVER_PROBE_MAX`)."""
+    st = StructType.fromDDL(schema)
+    if any(len(row) != len(st.fields) for row in rows):
+        raise ValueError(f"every row needs the {len(st.fields)} fields of {schema!r}")
+    cols = list(zip(*rows)) if rows else [()] * len(st.fields)
+    arrays = [
+        F.array(*[F.lit(v) for v in col]) if isinstance(f.dataType, StringType)
+        else _lit_array(list(col), ArrayType(f.dataType))
+        for col, f in zip(cols, st.fields)
+    ]
+    return spark.sql("SELECT 1").select(
+        F.inline(F.arrays_zip(*arrays).cast(ArrayType(st)))
+    )
 
 
 def _d2(a: Column, b: Column) -> Column:
@@ -324,13 +383,17 @@ def _nearest_centroids(qvec: list, centroids: list[list], nprobe: int) -> list[i
     return [ci for _, ci in d2s[:nprobe]]
 
 
-#: Id-list length up to which :func:`ivf_topk` / :func:`ivfpq_topk`
-#: probe on the driver (one tiny collect — right for interactive use).
-#: A longer list or a ``queries=`` relation probes on executors with
-#: :func:`nearest_centroid_ids` (zero query-side collect — right for bulk
-#: jobs with 10⁶ queries, where a single-threaded driver loop over
-#: n_queries × k × dim would stall).
-DRIVER_PROBE_MAX = 256
+#: Constant budget of the driver probe path of :func:`ivf_topk`,
+#: :func:`ivfpq_topk` and :func:`ivfsq_topk`: an id list whose probe
+#: relation holds at most this many constants (ids × probed cells ×
+#: probe-row width) collects its query rows once and probes on the
+#: driver into an in-plan literal (:func:`_local_relation`) — right for
+#: interactive use. Plan build cost grows with the literal (SCALE.md has
+#: the sweep this budget comes from), so a larger list, or a
+#: ``queries=`` relation, probes on executors with
+#: :func:`nearest_centroid_ids` (zero query-side collect — right for
+#: bulk jobs with 10⁶ queries). Both paths give bit-identical probes.
+DRIVER_PROBE_MAX = 6144
 
 
 def _probe_source(
@@ -338,11 +401,14 @@ def _probe_source(
     query_ids: list[int] | None,
     queries: DataFrame | None,
     id_col: str,
+    constants_per_id: int,
 ) -> tuple[DataFrame, bool]:
     """The query rows an IVF search probes for, and whether the probe
-    runs on the driver. Exactly one of ``query_ids`` (looked up in
-    ``emb``) and ``queries`` (a relation) is required: silently dropping
-    one would mask a call-site bug."""
+    runs on the driver: an id list whose probe literal,
+    ``constants_per_id`` per id, fits :data:`DRIVER_PROBE_MAX`. Exactly
+    one of ``query_ids`` (looked up in ``emb``) and ``queries`` (a
+    relation) is required: silently dropping one would mask a call-site
+    bug."""
     if (query_ids is None) == (queries is None):
         raise ValueError(
             "pass query_ids (an id list) or queries= (a relation), not both"
@@ -350,7 +416,10 @@ def _probe_source(
     if queries is not None:
         return queries, False
     ids = [int(x) for x in query_ids]
-    return emb.where(F.col(id_col).isin(ids)), len(ids) <= DRIVER_PROBE_MAX
+    return (
+        emb.where(F.col(id_col).isin(ids)),
+        len(ids) * constants_per_id <= DRIVER_PROBE_MAX,
+    )
 
 
 def ivf_topk(
@@ -377,14 +446,17 @@ def ivf_topk(
 
     Queries are ``query_ids`` looked up in ``embeddings`` (default
     ``assigned``) or a ``queries=`` relation — :func:`ivfpq_topk`'s
-    contract. Up to :data:`DRIVER_PROBE_MAX` ids probe on the driver
-    (one tiny collect, broadcast probe relation); a relation or a longer
-    list probes on executors (:func:`nearest_centroid_ids`, join strategy
-    left to Catalyst/AQE). Both give bit-identical probes.
+    contract. An id list whose probe relation fits the
+    :data:`DRIVER_PROBE_MAX` constant budget probes on the driver (one
+    collect of the query rows, the probe relation an in-plan literal);
+    a relation or a longer list probes on executors
+    (:func:`nearest_centroid_ids`, join strategy left to Catalyst/AQE).
+    Both give bit-identical probes and query vectors.
     """
     qsrc, on_driver = _probe_source(
         embeddings if embeddings is not None else assigned,
         query_ids, queries, id_col,
+        min(nprobe, len(centroids)) * (2 + len(centroids[0])),
     )
     # Each side's norm is computed ONCE per row before the join (the
     # brute_force_topk economy): per candidate pair only the dot remains
@@ -406,8 +478,9 @@ def ivf_topk(
             for ci in _nearest_centroids(r["_u"], centroids, nprobe):
                 probe_rows.append((r[id_col], q_vec, ci))
         probes = F.broadcast(
-            assigned.sparkSession.createDataFrame(
-                probe_rows, "query_id BIGINT, q_vec ARRAY<DOUBLE>, cluster INT"
+            _local_relation(
+                assigned.sparkSession, probe_rows,
+                "query_id BIGINT, q_vec ARRAY<DOUBLE>, cluster INT",
             ).withColumn("_qnrm", norm(F.col("q_vec")))
         )
     else:
@@ -1171,11 +1244,12 @@ def ivfpq_topk(
     ``id_col`` are the only shuffles — at scale the index is STORED
     pre-joined (cluster, pq_code), leaving the probe join + window only.
 
-    Queries follow :func:`ivf_topk`'s contract: up to
-    :data:`DRIVER_PROBE_MAX` ``query_ids`` collect once and build probe
-    cells + ADC tables in a driver loop (broadcast probe relation); a
-    ``queries`` relation (e.g. the corpus itself for bulk kNN-graph
-    construction) or a longer list computes the SAME cells
+    Queries follow :func:`ivf_topk`'s contract: ``query_ids`` whose
+    probe relation fits the :data:`DRIVER_PROBE_MAX` constant budget
+    (ids × probed cells × the ``m × k`` ADC table) collect once and
+    build probe cells + ADC tables in a driver loop (an in-plan literal
+    probe relation); a ``queries`` relation (e.g. the corpus itself for
+    bulk kNN-graph construction) or a longer list computes the SAME cells
     (:func:`nearest_centroid_ids`) and the SAME tables
     (:func:`_adc_expr` — in residual mode from the per-probed-cell
     residual) as DataFrame expressions: zero query-side collect, join
@@ -1186,6 +1260,7 @@ def ivfpq_topk(
     qsrc, on_driver = _probe_source(
         embeddings if embeddings is not None else assigned,
         query_ids, queries, id_col,
+        min(nprobe, len(centroids)) * (2 + sum(len(b) for b in codebooks)),
     )
     if on_driver:
         # ONE collect of the (tiny) query rows feeds both the integer
@@ -1211,8 +1286,8 @@ def ivfpq_topk(
                 )
                 probe_rows.append((int(r[id_col]), ci, tab))
         probes = F.broadcast(
-            assigned.sparkSession.createDataFrame(
-                probe_rows,
+            _local_relation(
+                assigned.sparkSession, probe_rows,
                 "query_id BIGINT, cluster INT, adc ARRAY<ARRAY<BIGINT>>",
             )
         )
@@ -1353,7 +1428,7 @@ def size_knn_budget(
     target:
 
     1. sample queries by deterministic id-modulus (``id % sample_mod
-       == 0``, capped at :data:`DRIVER_PROBE_MAX` — a bounded collect);
+       == 0``, capped at 256 ids — a bounded collect);
     2. exact integer-L2 top-``k`` truth for the sample (one broadcast
        scan — sample-sized, never corpus × corpus);
     3. walk budgets cheapest-first (``nprobe`` doubling outer,
@@ -1383,7 +1458,7 @@ def size_knn_budget(
         int(r[id_col])
         for r in embeddings.where(
             (F.col(id_col) % sample_mod) == 0
-        ).select(id_col).orderBy(id_col).limit(DRIVER_PROBE_MAX).collect()
+        ).select(id_col).orderBy(id_col).limit(256).collect()
     ]
     if not qids:
         raise ValueError("size_knn_budget: empty query sample")
@@ -2476,8 +2551,7 @@ def ivfsq_topk(
     vmax: int | None = None,
 ) -> DataFrame:
     """Probe-bounded two-stage search over the IVF-SQ8 index: per query
-    probe the ``nprobe`` integer-nearest coarse cells (driver-side over
-    the tiny centroid matrix, :func:`ivfpq_topk`'s pattern), take the
+    probe the ``nprobe`` integer-nearest coarse cells, take the
     query's residual wrt EACH probed cell coded on the SAME corpus
     vmax, stage-1 rank that cell's members by exact integer L2 in code
     space, cut to ``candidates`` per query, then stage-2 re-rank the
@@ -2494,40 +2568,56 @@ def ivfsq_topk(
 
     Scale: stage 1 is ONE broadcast equi-join of the (queries×nprobe)
     probe relation on ``cluster`` over a byte-per-component scan;
-    stage 2 reads ``candidates`` full-width rows per query; the probe
-    itself is driver-side math on a coarse_k×dim matrix."""
+    stage 2 reads ``candidates`` full-width rows per query. The probe
+    follows :func:`ivf_topk`'s budget rule: ids whose probe relation
+    fits :data:`DRIVER_PROBE_MAX` constants collect once and probe on
+    the driver into an in-plan literal; more ids compute the same cells
+    and codes on executors (:func:`nearest_centroid_ids`,
+    :func:`_residual`, :func:`_sq_codes`), bit for bit."""
     if index is None or centroids is None or vmax is None:
         index, centroids, vmax = ivfsq_build(
             embeddings, coarse_k=coarse_k, coarse_iters=coarse_iters,
             units=units, in_dim=in_dim, id_col=id_col, vec_col=vec_col,
             vmax=vmax,
         )
-    base = embeddings.select(
-        id_col,
-        _quantized_dim_checked(F.col(vec_col), units, in_dim, "ivfsq_topk")
-        .alias("_u"),
+    qu = _quantized_dim_checked(F.col(vec_col), units, in_dim, "ivfsq_topk")
+    base = embeddings.select(id_col, qu.alias("_u"))
+    qsrc, on_driver = _probe_source(
+        embeddings, query_ids, None, id_col,
+        min(nprobe, len(centroids)) * (2 + len(centroids[0])),
     )
-    qp = base.where(
-        F.col(id_col).isin([int(x) for x in query_ids])
-    ).select(F.col(id_col).alias("query_id"), F.col("_u").alias("_qu"))
-    scale = float(max(1, int(vmax)))
-    probe_rows = [
-        (
-            int(r["query_id"]),
-            ci,
-            [
-                int(math.floor((a - b) * 127.0 / scale))
-                for a, b in zip(r["_qu"], centroids[ci])
-            ],
+    qp = qsrc.select(F.col(id_col).alias("query_id"), qu.alias("_qu"))
+    vmax = max(1, int(vmax))
+    if on_driver:
+        probe_rows = [
+            (
+                int(r["query_id"]),
+                ci,
+                [
+                    int(math.floor((a - b) * 127.0 / float(vmax)))
+                    for a, b in zip(r["_qu"], centroids[ci])
+                ],
+            )
+            for r in qp.collect()
+            for ci in _nearest_centroids(
+                [int(x) for x in r["_qu"]], centroids, nprobe
+            )
+        ]
+        probes = _local_relation(
+            embeddings.sparkSession, probe_rows,
+            "query_id BIGINT, cluster INT, qsq ARRAY<BIGINT>",
         )
-        for r in qp.collect()
-        for ci in _nearest_centroids(
-            [int(x) for x in r["_qu"]], centroids, nprobe
+    else:
+        probes = qsrc.select(
+            F.col(id_col).alias("query_id"),
+            qu.alias("_qu"),
+            F.explode(
+                nearest_centroid_ids(F.col(vec_col), centroids, nprobe, units)
+            ).alias("cluster"),
+        ).select(
+            "query_id", "cluster",
+            _sq_codes(_residual(F.col("_qu"), centroids), vmax).alias("qsq"),
         )
-    ]
-    probes = embeddings.sparkSession.createDataFrame(
-        probe_rows, "query_id BIGINT, cluster INT, qsq ARRAY<BIGINT>"
-    )
     stage1 = (
         index.join(F.broadcast(probes), "cluster")
         .where(F.col(id_col) != F.col("query_id"))

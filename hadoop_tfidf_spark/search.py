@@ -23,15 +23,20 @@ Reference semantics being reproduced:
 
 Scale notes: the query bag is tiny (a handful of terms) → ``F.broadcast``
 forces a broadcast hash join, so scoring never shuffles the tf-idf
-relation; the only shuffle is the final per-doc aggregation. Ranking per
-query partitions the window by ``query_id`` — top-k should use
-``.limit(k)`` after ``orderBy`` so Spark plans TakeOrderedAndProject.
+relation; the only shuffle is the final per-doc aggregation. A query list
+becomes the bag as a literal inside the plan (``Generate inline`` over
+``OneRowRelation``), not a relation parallelized from the Python list:
+that is a pickled RDD, which starts Python workers on every query.
+Ranking per query partitions the window by ``query_id`` — top-k should
+use ``.limit(k)`` after ``orderBy`` so Spark plans TakeOrderedAndProject.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from hadoop_tfidf_spark.operators.similarity import _local_relation
 
 
 def query_term_bag(
@@ -41,10 +46,11 @@ def query_term_bag(
 ) -> DataFrame:
     """Explode ``(query_id, query_text)`` into the term **bag**
     ``(query_id, word)`` — duplicates preserved (Search.java:225–231 with
-    the ``//break;`` commented out at :230)."""
+    the ``//break;`` commented out at :230). A list of queries goes into
+    the plan as a literal relation."""
     if not isinstance(queries, DataFrame):
-        queries = spark.createDataFrame(
-            queries, "query_id STRING, query_text STRING"
+        queries = _local_relation(
+            spark, queries, "query_id STRING, query_text STRING"
         )
     return queries.select(
         "query_id",

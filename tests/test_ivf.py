@@ -1,16 +1,21 @@
 """IVF / PQ / residual-IVFADC tests: the integer Lloyd trainer
 (determinism, sample training, parameter guards), assignment sanity and
 recall against the brute-force baseline, the malformed-vector rule, and
-the two probe paths of ``ivf_topk`` / ``ivfpq_topk`` — an id list of at
-most ``DRIVER_PROBE_MAX`` ids probes on the driver, a ``queries=``
-relation (or a longer list) probes on executors with zero query-side
-collect — which must agree bit for bit."""
+the two probe paths of ``ivf_topk`` / ``ivfpq_topk`` — an id list whose
+probe relation fits the ``DRIVER_PROBE_MAX`` constant budget probes on
+the driver into an in-plan literal, a ``queries=`` relation (or a longer
+list) probes on executors with zero query-side collect — which must
+agree bit for bit."""
 
 from __future__ import annotations
 
+import math
 import random
+import re
+import struct
 
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -47,6 +52,23 @@ def _rows(df):
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+#: The driver path's probe relation: an in-plan literal.
+LITERAL = re.compile(r"Generate inline\([^\n]*\n[\s:|]*\+- OneRowRelation")
+
+
+def _literal_probe(plan: str) -> bool:
+    """A literal probe relation, and no Python RDD anywhere."""
+    return LITERAL.search(plan) is not None and "LogicalRDD" not in plan
+
+
+def _no_driver_relation(plan: str) -> bool:
+    """No driver-materialized relation of any kind: every row flows from
+    the distributed scans."""
+    return not any(
+        r in plan for r in ("LogicalRDD", "LocalRelation", "OneRowRelation")
+    )
 
 
 # ------------------------------------------------ integer Lloyd training
@@ -170,16 +192,22 @@ def test_ivf_recall_vs_brute(spark, emb, index):
 # ------------------------------------------ driver vs executor probes
 
 
-def test_executor_probes_bit_equal_driver_probes_units(emb, unit_index):
+def test_executor_probes_bit_equal_driver_probes_units(
+    emb, unit_index, monkeypatch
+):
     """The nearest_centroid_ids expression (executor path, fed a
     queries= relation) must reproduce the driver twin's exact
     integer distances and (d2, ci) tie-break (id-list path) — same
-    probes, same candidates, same top-k, bit for bit."""
+    probes, same candidates, same top-k, bit for bit. The budget is
+    raised to this list's 40 × 3 × 66 constants so the id list keeps
+    the driver path."""
     assigned, cents = unit_index
+    monkeypatch.setattr(S, "DRIVER_PROBE_MAX", 40 * 3 * (2 + len(cents[0])))
     a = ivf_topk(assigned, cents, list(range(40)), k=5, nprobe=3,
                  units=IVF_UNITS)
     b = ivf_topk(assigned, cents, None, k=5, nprobe=3, units=IVF_UNITS,
                  queries=emb.where(F.col("vec_id") < 40))
+    assert _literal_probe(_plan(a)) and _no_driver_relation(_plan(b))
     ra, rb = _rows(a), _rows(b)
     assert ra == rb
     assert len(ra) == 40 * 5
@@ -187,33 +215,151 @@ def test_executor_probes_bit_equal_driver_probes_units(emb, unit_index):
 
 def test_executor_path_has_zero_query_side_collect(emb, unit_index):
     """The bulk-path plan census: an id-list probe relation is built
-    from collected query rows (createDataFrame → LogicalRDD); the
-    relation path must have NONE — every relation in its plan comes from
-    the distributed scan, so a 10⁶-query re-rank never funnels through
-    the driver."""
+    from collected query rows into an in-plan literal; the relation path
+    must have NO driver-materialized relation — every relation in its
+    plan comes from the distributed scan, so a 10⁶-query re-rank never
+    funnels through the driver."""
     assigned, cents = unit_index
     ex = ivf_topk(assigned, cents, None, k=5, nprobe=2, units=IVF_UNITS,
                   queries=emb)
-    plan = _plan(ex)
-    assert "LogicalRDD" not in plan and "LocalRelation" not in plan
+    assert _no_driver_relation(_plan(ex))
     dr = ivf_topk(assigned, cents, list(range(5)), k=5, nprobe=2,
                   units=IVF_UNITS)
-    assert "LogicalRDD" in _plan(dr)
+    assert _literal_probe(_plan(dr))
 
 
-def test_driver_probe_max_picks_path_by_id_count(emb, unit_index):
-    """Up to DRIVER_PROBE_MAX ids keep the interactive driver path; one
-    more switches an id list to the executor expression — observable
-    from whether the probe relation is a LogicalRDD."""
+def test_driver_probe_max_is_a_literal_constant_budget(emb, unit_index):
+    """An id list probes on the driver while its probe literal — ids ×
+    probed cells × probe-row width constants — fits DRIVER_PROBE_MAX;
+    one id more switches it to the executor expression. Both sides of
+    the budget, for ivf_topk (row = id, vector, cell) and ivfpq_topk
+    (row = id, cell, m × k ADC table)."""
     assigned, cents = unit_index
-    assert DRIVER_PROBE_MAX == 256
-    at_max = ivf_topk(assigned, cents, list(range(DRIVER_PROBE_MAX)), k=5,
+    dim = len(cents[0])
+    per_id = 2 * (2 + dim)  # nprobe=2 cells, (query_id, q_vec, cluster)
+    fit = DRIVER_PROBE_MAX // per_id
+    at_max = ivf_topk(assigned, cents, list(range(fit)), k=5,
                       nprobe=2, units=IVF_UNITS)
-    assert "LogicalRDD" in _plan(at_max)
-    over = ivf_topk(assigned, cents, list(range(DRIVER_PROBE_MAX + 1)), k=5,
+    assert _literal_probe(_plan(at_max))
+    over = ivf_topk(assigned, cents, list(range(fit + 1)), k=5,
                     nprobe=2, units=IVF_UNITS)
-    plan = _plan(over)
-    assert "LogicalRDD" not in plan and "LocalRelation" not in plan
+    assert _no_driver_relation(_plan(over))
+    # an nprobe above the cell count probes (and costs) every cell
+    fit = DRIVER_PROBE_MAX // (len(cents) * (2 + dim))
+    every = ivf_topk(assigned, cents, list(range(fit)), k=5,
+                     nprobe=10 * len(cents), units=IVF_UNITS)
+    assert _literal_probe(_plan(every))
+    codes, books = S.pq_build(emb, m=4, k=16, iters=1, units=IVF_UNITS,
+                              pack=True)
+    per_id = 3 * (2 + 4 * 16)  # nprobe=3 cells, (query_id, cluster, adc)
+    fit = DRIVER_PROBE_MAX // per_id
+    at_max = S.ivfpq_topk(assigned, cents, codes, books, list(range(fit)),
+                          k=5, nprobe=3, units=IVF_UNITS)
+    assert _literal_probe(_plan(at_max))
+    over = S.ivfpq_topk(assigned, cents, codes, books,
+                        list(range(fit + 1)), k=5, nprobe=3,
+                        units=IVF_UNITS)
+    assert _no_driver_relation(_plan(over))
+
+
+def test_ivfsq_executor_probes_bit_equal_driver_probes(emb):
+    """ivfsq_topk past the constant budget computes the probe cells and
+    the residual byte codes on executors (nearest_centroid_ids,
+    _residual, _sq_codes). Each query ranks on its own, so the
+    executor answer restricted to a few ids must equal the driver-path
+    answer for those ids, bit for bit."""
+    index, cents, vmax = S.ivfsq_build(
+        emb, coarse_k=8, coarse_iters=1, units=IVF_UNITS, in_dim=64
+    )
+    kw = dict(k=5, candidates=20, nprobe=3, units=IVF_UNITS, in_dim=64,
+              index=index, centroids=cents, vmax=vmax)
+    few = list(range(0, 60, 7))
+    over = max(DRIVER_PROBE_MAX // (3 * (2 + 64)) + 1, 60)
+    many = S.ivfsq_topk(emb, list(range(over)), **kw)
+    assert _no_driver_relation(_plan(many))
+    dr = S.ivfsq_topk(emb, few, **kw)
+    assert _literal_probe(_plan(dr))
+    got = _rows(many.where(F.col("query_id").isin(few)))
+    assert got == _rows(dr) and len(got) == len(few) * 5
+
+
+def _bits(x):
+    return x if x is None else struct.pack(">d", x)
+
+
+EDGE_DOUBLES = [0.1 + 0.2, -0.0, 5e-324, 1.7976931348623157e308]
+
+
+def test_driver_probe_literal_doubles_are_exact(spark):
+    """The driver path carries each query vector into the plan as a
+    double literal. 0.1 + 0.2, -0.0, the smallest subnormal and the
+    largest double must reach the cosine bit for bit, so the driver and
+    executor paths give bit-identical vectors and scores. ``units=0``
+    quantizes every vector to zero, so the probe (every cell ties) cannot
+    overflow on the near-maximum element; the probe itself is pinned by
+    the tests above."""
+    dim = 6
+    rows = [
+        (i, [((i * 7 + d * 5) % 13 - 6) / 4.0 for d in range(dim)])
+        for i in range(30)
+    ]
+    rows += [
+        (100, EDGE_DOUBLES + [1.0, 2.0]),
+        (101, [1.0, -0.0, 5e-324, 0.1 + 0.2, -1.0, 0.5]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    cents = [[0] * dim for _ in range(4)]
+    assigned = emb.withColumn("cluster", F.lit(0))
+    qids = [100, 101]
+    dr = ivf_topk(assigned, cents, qids, k=8, nprobe=2, units=0)
+    ex = ivf_topk(assigned, cents, None, k=8, nprobe=2, units=0,
+                  queries=emb.where(F.col("vec_id").isin(qids)))
+    # (the corpus here is itself a Python RDD)
+    assert LITERAL.search(_plan(dr)) and "OneRowRelation" not in _plan(ex)
+
+    def scored(df):
+        return sorted(
+            (r.query_id, r.vec_id, _bits(r.cos_sim), r.rn) for r in df.collect()
+        )
+
+    assert scored(dr) == scored(ex) and len(scored(dr)) == 2 * 8
+    # the literal the driver path builds holds exactly the scanned doubles
+    lit = S._local_relation(
+        spark, [(i, v, 0) for i, v in rows[-2:]],
+        "query_id BIGINT, q_vec ARRAY<DOUBLE>, cluster INT",
+    )
+    scanned = emb.where(F.col("vec_id").isin(qids)).select(
+        F.col("vec_id").alias("query_id"), S._as_double(F.col("embedding"))
+    )
+    assert sorted((r[0], [_bits(x) for x in r[1]]) for r in lit.collect()) == sorted(
+        (r[0], [_bits(x) for x in r[1]]) for r in scanned.collect()
+    ) == sorted((i, [_bits(x) for x in v]) for i, v in rows[-2:])
+
+
+@pytest.mark.parametrize("bad", [math.inf, -math.inf, math.nan])
+def test_driver_probe_non_finite_matches_executor(spark, bad):
+    """A non-finite query element behaves the same on both paths: the
+    literal carries it exactly, so either both raise the same engine
+    error (ANSI: the micro-unit cast overflows) or both give the same
+    answer — never a SQL parse error on the driver path."""
+    rows = [(i, [float(i % 5), 1.0, -1.0]) for i in range(10)]
+    rows.append((50, [bad, 1.0, 0.5]))
+    emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    assigned = emb.withColumn("cluster", F.lit(0))
+    cents = [[0, 0, 0], [1, 1, 1]]
+
+    def run(**kw):
+        try:
+            out = ivf_topk(assigned, cents, k=5, nprobe=2, units=1, **kw)
+            return "rows", sorted(
+                (r.query_id, r.vec_id, _bits(r.cos_sim)) for r in out.collect()
+            )
+        except PySparkException as e:
+            return "error", type(e).__name__, "PARSE_SYNTAX_ERROR" in str(e)
+
+    dr = run(query_ids=[50])
+    assert dr == run(query_ids=None, queries=emb.where("vec_id = 50"))
+    assert dr[-1] is not True
 
 
 def test_ivf_topk_needs_exactly_one_query_source(emb, unit_index):
@@ -229,8 +375,8 @@ def test_ivf_topk_needs_exactly_one_query_source(emb, unit_index):
 def test_ivfpq_executor_path_bit_equal_and_collect_free(emb, unit_index):
     """ivfpq_topk's executor path: probe cells from nearest_centroid_ids
     and ADC tables from the _adc_expr expression must reproduce the
-    driver loop bit for bit (all-integer arithmetic both ways), with a
-    LogicalRDD-free plan. Covers plain AND residual mode (per-probed-
+    driver loop bit for bit (all-integer arithmetic both ways), with no
+    driver-materialized relation. Covers plain AND residual mode (per-probed-
     cell residual tables — the Jégou §IV grain)."""
     assigned, cents = unit_index
     qids = list(range(20))
@@ -251,9 +397,8 @@ def test_ivfpq_executor_path_bit_equal_and_collect_free(emb, unit_index):
                       units=IVF_UNITS, residual=True, embeddings=emb,
                       queries=queries)
     assert _rows(ra) == _rows(rb)
-    assert "LogicalRDD" in _plan(ra)
-    plan = _plan(rb)
-    assert "LogicalRDD" not in plan and "LocalRelation" not in plan
+    assert _literal_probe(_plan(ra))
+    assert _no_driver_relation(_plan(rb))
 
 
 @pytest.fixture(scope="module")
@@ -279,7 +424,7 @@ def test_ivfpq_bulk_matches_driver_path_per_query(emb, residual_index):
         assigned, cents, codes, books, list(range(8)), k=15, nprobe=2,
         units=IVF_UNITS, embeddings=emb, residual=True,
     ).select("query_id", "vec_id")
-    assert "LogicalRDD" in _plan(cand)
+    assert _literal_probe(_plan(cand))
     base = emb.select(
         "vec_id", S.quantized_units(F.col("embedding"), IVF_UNITS).alias("_u")
     )
@@ -308,8 +453,8 @@ def test_ivfpq_bulk_matches_driver_path_per_query(emb, residual_index):
 
 def test_ivfpq_bulk_census_zero_query_side_collect(emb, residual_index):
     """The bulk plan must contain no driver-materialized relation
-    (LogicalRDD / LocalRelation) — every row flows from the distributed
-    scans."""
+    (LogicalRDD / LocalRelation / a OneRowRelation literal) — every row
+    flows from the distributed scans."""
     assigned, cents, codes, books = residual_index
     plan = _plan(
         S.ivfpq_bulk_topk(
@@ -317,7 +462,7 @@ def test_ivfpq_bulk_census_zero_query_side_collect(emb, residual_index):
             nprobe=2, units=IVF_UNITS,
         )
     )
-    assert "LogicalRDD" not in plan and "LocalRelation" not in plan
+    assert _no_driver_relation(plan)
 
 
 # ------------------------------------------------ PQ and IVFADC search
