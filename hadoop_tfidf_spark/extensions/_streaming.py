@@ -355,7 +355,7 @@ def q_streaming_decontaminate(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(base)
     )
-    words = F.split(F.col("text"), " ")
+    words = D._words(F.col("text"))
     staged = stream.where(F.size(words) >= 3).select(
         "doc_id", words.alias("_w")
     )
@@ -410,7 +410,7 @@ def q_streaming_mixture_weights(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(base)
     )
-    n_tokens = F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
+    n_tokens = F.size(D._nonempty_words(F.col("text")))
     counts = stream.groupBy("source", "lang").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum(n_tokens).cast("bigint").alias("n_tokens"),
@@ -469,7 +469,7 @@ def q_streaming_source_stats(spark, sf_dir):
             .parquet(base)
         )
 
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = D._nonempty_words(F.col("text"))
     tag = uuid.uuid4().hex[:8]
     counts = run_to_completion(
         _stream()
@@ -704,7 +704,7 @@ def q_streaming_source_stats_update(spark, sf_dir):
         lambda p: docs.repartition(4).write.mode("overwrite").parquet(p),
         prefix="spark_graft_srcstream_",
     )
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = D._nonempty_words(F.col("text"))
     counts = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
@@ -772,7 +772,7 @@ def q_streaming_ledger_compact(spark, sf_dir):
         lambda p: docs.repartition(4).write.mode("overwrite").parquet(p),
         prefix="spark_graft_srcstream_",
     )
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = D._nonempty_words(F.col("text"))
     counts = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
@@ -841,7 +841,7 @@ def q_streaming_ledger_policy(spark, sf_dir):
         lambda p: docs.repartition(4).write.mode("overwrite").parquet(p),
         prefix="spark_graft_srcstream_",
     )
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = D._nonempty_words(F.col("text"))
     counts = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)

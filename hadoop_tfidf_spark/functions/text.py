@@ -28,6 +28,8 @@ from hadoop_tfidf_spark.operators.dedup import (
     MINHASH_B,
     _kgrams,
     _md5_base,
+    _nonempty_words,
+    _words,
     shingles,
 )
 from hadoop_tfidf_spark.operators.similarity import _lit_array
@@ -49,10 +51,6 @@ QUALITY_STOPWORDS: list[str] = [
 ]
 
 
-def _words(text: Column) -> Column:
-    return F.split(text, " ")
-
-
 def token_stats(docs: DataFrame) -> DataFrame:
     """Per-document token statistics: whitespace token count, alphabetic
     "wordlike" count (BPE-ish ``[a-zA-Z]+`` pre-tokenizer segments), digit
@@ -72,22 +70,33 @@ def token_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def quality_column(text: Column) -> Column:
-    """The rounded quality score as a COLUMN expression — composable into
-    any projection (e.g. ``pipeline.curate_corpus`` annotates the corpus
-    with it inline, no join)."""
-    words = _words(text)
+def _alpha_chars(text: Column) -> Column:
+    return F.length(F.regexp_replace(text, "[^a-zA-Z]", ""))
+
+
+def _quality_terms(
+    words: Column, alpha_chars: Column, n_chars: Column
+) -> tuple[Column, ...]:
+    """``(n_tokens, n_stop, stop_ratio, alpha_ratio, quality)`` over a
+    word array and the text's letter and character counts — the one
+    quality formula (see :func:`quality_score`). ``words`` may be a
+    staged column (``pipeline.curate_corpus`` splits each text once)."""
     n_tokens = F.size(words)
     n_stop = F.size(F.filter(words, lambda w: w.isin(*QUALITY_STOPWORDS)))
-    alpha_chars = F.length(F.regexp_replace(text, "[^a-zA-Z]", ""))
     stop_ratio = n_stop / n_tokens
-    alpha_ratio = alpha_chars / F.length(text)
+    alpha_ratio = alpha_chars / n_chars
     score = (
         F.lit(0.4) * F.least(n_tokens / F.lit(50.0), F.lit(1.0))
         + F.lit(0.3) * alpha_ratio
         + F.lit(0.3) * F.least(stop_ratio / F.lit(0.1), F.lit(1.0))
     )
-    return F.round(score, 6)
+    return n_tokens, n_stop, stop_ratio, alpha_ratio, F.round(score, 6)
+
+
+def quality_column(text: Column) -> Column:
+    """The rounded quality score as a COLUMN expression — composable into
+    any projection, no join."""
+    return _quality_terms(_words(text), _alpha_chars(text), F.length(text))[-1]
 
 
 def repetition_score(docs: DataFrame, k: int = 3) -> DataFrame:
@@ -152,11 +161,9 @@ def quality_score(
     projection, so downstream per-group consumers compose without a
     corpus-to-corpus join back on ``doc_id`` — one scan, zero joins."""
     text = F.col("text")
-    words = _words(text)
-    n_tokens = F.size(words)
-    n_stop = F.size(F.filter(words, lambda w: w.isin(*QUALITY_STOPWORDS)))
-    stop_ratio = n_stop / n_tokens
-    alpha_ratio = F.length(F.regexp_replace(text, "[^a-zA-Z]", "")) / F.length(text)
+    n_tokens, n_stop, stop_ratio, alpha_ratio, quality = _quality_terms(
+        _words(text), _alpha_chars(text), F.length(text)
+    )
     return docs.select(
         "doc_id",
         *keep_cols,
@@ -164,7 +171,7 @@ def quality_score(
         n_stop.cast("bigint").alias("n_stopwords"),
         F.round(stop_ratio, 6).alias("stop_ratio"),
         F.round(alpha_ratio, 6).alias("alpha_ratio"),
-        quality_column(text).alias("quality"),
+        quality.alias("quality"),
     )
 
 
@@ -193,10 +200,14 @@ def lang_id(docs: DataFrame) -> DataFrame:
 
 def lang_id_columns(text: Column) -> tuple[Column, Column]:
     """``(pred_lang, marker_hits)`` as COLUMN expressions over ``text`` —
-    the composable form :func:`lang_id` and ``pipeline.curate_corpus``
-    share (inline annotation, no join)."""
+    the composable form of :func:`lang_id` (inline annotation, no join)."""
+    return _lang_argmax(_words(text))
+
+
+def _lang_argmax(words: Column) -> tuple[Column, Column]:
+    """``(pred_lang, marker_hits)`` over a word array — the one lang-id
+    formula; ``words`` may be a staged column (see :func:`_quality_terms`)."""
     langs = sorted(LANG_MARKERS)
-    words = _words(text)
 
     def _hit_count(markers: list[str]):
         # factory, not a default-arg lambda: HOF lambdas must take exactly
@@ -259,7 +270,7 @@ def lm_score(docs: DataFrame, k_smooth: float = 0.5) -> DataFrame:
     )
     bg_n = bigrams.groupBy("bg").agg(F.count("*").alias("n_bg"))
     lead_n = (
-        bigrams.select(F.split("bg", " ").getItem(0).alias("w1"))
+        bigrams.select(_words(F.col("bg")).getItem(0).alias("w1"))
         .groupBy("w1")
         .agg(F.count("*").alias("n_w1"))
     )
@@ -273,7 +284,7 @@ def lm_score(docs: DataFrame, k_smooth: float = 0.5) -> DataFrame:
     )
     scored = (
         bigrams.join(bg_n, "bg")
-        .join(lead_n, F.split("bg", " ").getItem(0) == F.col("w1"))
+        .join(lead_n, _words(F.col("bg")).getItem(0) == F.col("w1"))
         .crossJoin(F.broadcast(vocab))
         .select(
             "doc_id",
@@ -387,7 +398,7 @@ def chunk_tokens(
     """
     if stride is None:
         stride = chunk_size
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = _nonempty_words(F.col("text"))
     staged = docs.where(F.size(words) > 0).select("doc_id", words.alias("_w"))
     # start offsets 1, 1+stride, … ≤ n — every window is non-empty
     starts = F.sequence(F.lit(1), F.size("_w"), F.lit(stride))
@@ -495,7 +506,7 @@ def cooccurrence(
     of document length. Default ``None`` (uncapped) preserves exact
     semantics for bounded-vocabulary corpora.
     """
-    vocab = F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
+    vocab = F.array_distinct(_nonempty_words(F.col("text")))
     if max_doc_vocab is not None:
         vocab = F.slice(vocab, 1, int(max_doc_vocab))
     toks = docs.select("doc_id", F.explode(vocab).alias("w"))
@@ -531,7 +542,7 @@ def fingerprint(docs: DataFrame, k: int = 3, window: int = 4) -> DataFrame:
     ``rowsBetween(0, window-1)``. Docs with fewer than ``k`` words produce
     no row.
     """
-    words = F.split(F.col("text"), " ")
+    words = _words(F.col("text"))
     # words staged so the per-shingle lambda doesn't re-split the doc per
     # element (the O(words²) trap — see operators.dedup.shingles)
     staged = docs.where(F.size(words) >= k).select("doc_id", words.alias("_w"))
@@ -586,7 +597,7 @@ def c4_quality_filters(
     slower at sf0.1). At 100 TB this runs at scan speed with no exchange
     at all.
     """
-    words = F.filter(_words(F.col("text")), lambda x: x != "")
+    words = _nonempty_words(F.col("text"))
     staged = docs.select("doc_id", words.alias("_w"))
     nonempty = F.size("_w") > 0
     # ratio divisions guarded: ANSI mode raises DIVIDE_BY_ZERO on the
@@ -669,7 +680,7 @@ def self_dedup_spans(docs: DataFrame, span_words: int = 2) -> DataFrame:
     CollapseProject keeps multi-referenced non-cheap aliases staged.
     Document-local work that scales with executors, never a join.
     """
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = _nonempty_words(F.col("text"))
     staged = docs.select("doc_id", words.alias("_w"))
     spans = F.transform(
         F.sequence(F.lit(1), F.greatest(F.size("_w"), F.lit(1)), F.lit(span_words)),
@@ -1061,7 +1072,7 @@ def contamination_bloom_stateless(
         F.filter("_x", lambda x: _bloom_probe(x, F.col("_bloom"), bloom))
     )
     return (
-        docs.select("doc_id", F.split(F.col("text"), " ").alias("_w"))
+        docs.select("doc_id", _words(F.col("text")).alias("_w"))
         .select("doc_id", grams.alias("_g"))
         .select(
             "doc_id",
@@ -1262,7 +1273,7 @@ def contamination_bloom(docs: DataFrame, bloom: BloomFilter) -> DataFrame:
     # rows. The word array and base hash are staged through their own
     # projections (the O(words²) HOF trap — see dedup.shingles).
     k = bloom.k
-    wcol = F.split(F.col("text"), " ")
+    wcol = _words(F.col("text"))
     return (
         docs.where(F.size(wcol) >= k)
         .select("doc_id", wcol.alias("_w"))
@@ -1311,7 +1322,7 @@ def bpe_pair_counts(docs: DataFrame, top: int = 100) -> DataFrame:
     histogram, never the raw text. The char array is staged through a
     projection so the indexed pair lambda doesn't re-split the word per
     element (the O(len²) HOF trap)."""
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = _nonempty_words(F.col("text"))
     vocab = (
         docs.select(F.explode(words).alias("word"))
         .groupBy("word")
@@ -1356,7 +1367,7 @@ def bpe_train(
     persists each round and the previous generation unpersists, the
     connected-components lineage pattern. Production trainers sample
     the corpus for the histogram — at 100 TB pass ``docs.sample()``."""
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = _nonempty_words(F.col("text"))
     vocab = (
         docs.select(F.explode(words).alias("word"))
         .groupBy("word")
@@ -1437,7 +1448,7 @@ def bpe_token_counts(docs: DataFrame, vocab: DataFrame) -> DataFrame:
     training corpus itself every word has a row, so the fallback path is
     exercised zero times and counts are identical to the old inner-join
     form."""
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = _nonempty_words(F.col("text"))
     tok = docs.select("doc_id", F.explode(words).alias("word"))
     return (
         tok.join(
@@ -1476,7 +1487,7 @@ def source_stats(docs: DataFrame) -> DataFrame:
     docs hash-spread across them, so no skew salting is needed — the
     heavy lifting (per-doc token counts) happens before any shuffle.
     """
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = _nonempty_words(F.col("text"))
     base = docs.select(
         "source", "lang", F.size(words).cast("bigint").alias("_nt")
     )

@@ -55,6 +55,18 @@ MINHASH_B = [
 BAND_KEY_K = 1000003
 
 
+def _words(text: Column) -> Column:
+    """The whitespace word array ``split(text, ' ')`` — THE word split of
+    the engine. Runs of spaces leave empty strings in it; see
+    :func:`_nonempty_words`."""
+    return F.split(text, " ")
+
+
+def _nonempty_words(text: Column) -> Column:
+    """:func:`_words` without its empty strings."""
+    return F.filter(_words(text), lambda x: x != "")
+
+
 def _kgrams(words: Column, k: int) -> Column:
     """Every word ``k``-gram of a STAGED word array, joined by single
     spaces, in order — THE shingle expression of the engine (MinHash,
@@ -110,7 +122,7 @@ def shingles(docs: DataFrame, k: int = 3) -> DataFrame:
     the engine LINEAR in doc length (measured: a 100k-word doc went from
     never-finishing to 0.4 s).
     """
-    words = F.split(F.col("text"), " ")
+    words = _words(F.col("text"))
     staged = docs.where(F.size(words) >= k).select("doc_id", words.alias("_w"))
     return (
         staged.select(
@@ -174,7 +186,7 @@ def minhash_signatures_from_docs(
     so the per-shingle lambda doesn't re-split the doc per element (the
     O(words²) trap — see :func:`shingles`).
     """
-    words = F.split(F.col("text"), " ")
+    words = _words(F.col("text"))
     staged = docs.where(F.size(words) >= k).select("doc_id", words.alias("_w"))
     return staged.select(
         "doc_id", _rowlocal_bases(k).alias("_bases")
@@ -492,7 +504,7 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     DuckDB, so the oracle is exact.
     """
     tokens = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
+        "doc_id", F.explode(_words(F.col("text"))).alias("word")
     ).where(F.col("word") != "")
     dwc = tokens.groupBy("doc_id", "word").agg(F.count("*").alias("n"))
     # Word hash computed INLINE per (doc, word) row — one md5 more per row
@@ -625,7 +637,7 @@ def span_dedup(
         if not 1 <= stride < span_words:
             raise ValueError(f"stride must be in [1, span_words): {stride}")
         return _span_dedup_sliding(docs, span_words, stride)
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = _nonempty_words(F.col("text"))
     # words staged to a column so the per-span lambda doesn't re-split the
     # doc per element (the O(words²) trap — see shingles())
     staged = docs.where(F.size(words) > 0).select("doc_id", words.alias("_w"))
@@ -733,7 +745,7 @@ def _span_dedup_sliding(
     Region construction itself is two linear indexed-lambda passes over
     the start array (O(1) ``get`` lookups, no fold-with-array-copy).
     """
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = _nonempty_words(F.col("text"))
     # words staged to a column so the per-span lambda doesn't re-split the
     # doc per element (the O(words²) trap — see shingles())
     staged = docs.where(F.size(words) > 0).select("doc_id", words.alias("_w"))
@@ -950,7 +962,7 @@ def sign_generation(
     against this column, so the old generation contributes 13 slim
     BIGINT/hex columns — never text (the measured SCALE.md
     "Incremental signature maintenance" requirement (1))."""
-    words = F.split(F.col("text"), " ")
+    words = _words(F.col("text"))
     staged = docs.select(
         "doc_id", F.md5("text").alias("text_hash"), words.alias("_w")
     )

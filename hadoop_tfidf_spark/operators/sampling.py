@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_tfidf_spark.functions.hashing import hex_to_long, seeded_md5
-from hadoop_tfidf_spark.operators.dedup import _kgrams
+from hadoop_tfidf_spark.operators.dedup import _kgrams, _nonempty_words, _words
 
 
 def hash_bucket_col(key: Column, buckets: int = 100, seed: int | str = 0) -> Column:
@@ -123,7 +123,7 @@ def mixture_weights(
     n_tokens = (
         tokens
         if tokens is not None
-        else F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
+        else F.size(_nonempty_words(F.col("text")))
     )
     groups = (
         docs.groupBy(*strata)
@@ -182,7 +182,7 @@ def temperature_rates(
     n_tokens = (
         tokens
         if tokens is not None
-        else F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
+        else F.size(_nonempty_words(F.col("text")))
     )
     groups = docs.groupBy(*strata).agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -265,7 +265,7 @@ def pack_sequences(
     n_tokens = (
         tokens
         if tokens is not None
-        else F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
+        else F.size(_nonempty_words(F.col("text")))
     )
     from pyspark.sql import Window
 
@@ -399,7 +399,7 @@ def dsir_feature_buckets(
     hashed word-bigram feature row per adjacent pair, docs with < 2
     words dropped. Row-local (staged-array shingles + md5 bucket), so
     it applies unchanged to a STREAMING relation (stateless)."""
-    words = F.split(F.col("text"), " ")
+    words = _words(F.col("text"))
     staged = docs.select("doc_id", words.alias("_w")).where(
         F.size("_w") >= 2
     )
@@ -433,7 +433,7 @@ def dsir_ratios(
     The zero-count rows do not move the window totals (they add 0)."""
     from pyspark.sql import Window
 
-    words = F.split(F.col("text"), " ")
+    words = _words(F.col("text"))
     staged = docs.select(
         "doc_id", target.cast("boolean").alias("_t"), words.alias("_w")
     ).where(F.size("_w") >= 2)

@@ -11,17 +11,20 @@ count: SURVEY.md §3 — chain jobs into one dataflow; here Catalyst gets
 the whole graph and schedules it as one job DAG).
 
 Scale shape (100 TB):
-* annotation (quality + lang-id) is a single NARROW projection — both
-  scores are higher-order array expressions over ``text`` fused into the
-  scan's codegen stage (``quality_column`` / ``lang_id_columns``), so the
-  filter prefix costs zero shuffles and zero joins;
-* the stitching joins that remain (exact-dedup left-semi, near-dup
-  left-anti) are keyed on ``doc_id`` and co-partition under the same
-  hash — AQE coalesces and reuses exchanges;
+* annotation (quality + lang-id + the md5 dedup key) is NARROW — one
+  projection splits each text once into a staged word array that both
+  scores read (``_quality_terms`` / ``_lang_argmax``), so the annotate
+  prefix costs zero shuffles and zero joins;
+* filter + exact dedup is ONE aggregation keyed on the md5 (a uniformly
+  distributed hash — no skew): each content group keeps its lowest
+  PASSING id, which is exactly filter-then-dedup (``_exact_dedup``);
 * near-dup candidates come from the banded LSH bucket equi-join (never
-  all-pairs), computed over the ALREADY-filtered corpus — the standard
-  pipeline-order economy: cheap narrow filters first, the quadratic-risk
-  operator last, over the fewest rows;
+  all-pairs) over the raw scan, restricted to kept ids by one
+  ``doc_id`` semi-join, and drop by one ``doc_id`` anti-join — both
+  keyed on the same hash, so AQE coalesces and reuses exchanges;
+* nothing is persisted: the plan is one job DAG, and a 100 TB run
+  checkpoints stage outputs to parquet instead (splits feed trainers,
+  drop lists feed audits);
 * the split label is a pure projection (content-addressed md5 bucket),
   pushed to whatever scan feeds the final write, and ingest-stable (a
   doc's split never changes when more data arrives).
@@ -40,11 +43,35 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_tfidf_spark.functions.text import lang_id_columns, quality_column
-from hadoop_tfidf_spark.operators.dedup import minhash_lsh_dedup
+from hadoop_tfidf_spark.functions.text import (
+    _alpha_chars,
+    _lang_argmax,
+    _quality_terms,
+)
+from hadoop_tfidf_spark.operators.dedup import _words, minhash_lsh_dedup
 from hadoop_tfidf_spark.operators.sampling import hash_split
 
 DEFAULT_SPLITS = {"train": 90, "valid": 5, "test": 5}
+
+
+def _exact_dedup(ann: DataFrame, lang: str, min_quality: float) -> DataFrame:
+    """Filter-then-exact-dedup of an annotated ``(doc_id, _h, quality,
+    pred_lang, …)`` relation as ONE aggregation on the content hash
+    ``_h``: each group keeps the ``min`` of ``(_drop, doc_id, …)``, so a
+    passing copy sorts before every failing one and the lowest passing id
+    survives — exactly ``where(passed)`` followed by the min-id dedup,
+    even when an md5 collision puts a failing lower id in the group. The
+    filter runs after the aggregate, so Catalyst cannot push it beneath
+    the staged word array (a pushed filter re-splits the text per
+    reference). Every column but ``_h`` rides through."""
+    passed = (F.col("pred_lang") == lang) & (F.col("quality") >= min_quality)
+    cols = [c for c in ann.columns if c != "_h"]
+    return (
+        ann.groupBy("_h")
+        .agg(F.min(F.struct((~passed).alias("_drop"), *cols)).alias("_s"))
+        .where(~F.col("_s._drop"))
+        .select(*[F.col(f"_s.{c}").alias(c) for c in cols])
+    )
 
 
 def curate_corpus(
@@ -54,8 +81,6 @@ def curate_corpus(
     splits: dict[str, int] | None = None,
     seed: int | str = 0,
     max_bucket_size: int | None = None,
-    persist_intermediate: bool = False,
-    storage_level=None,
     keep_text: bool = False,
     embeddings: DataFrame | None = None,
     semantic_threshold: float = 0.95,
@@ -65,130 +90,64 @@ def curate_corpus(
 ) -> DataFrame:
     """Curate ``(doc_id, text)`` into ``(doc_id, pred_lang, quality,
     split)`` — language filter, quality filter, exact dedup, near-dup
-    drop, split labels; one lazy plan (see module docstring for the
-    per-stage scale analysis). ``keep_text=True`` retains the ``text``
-    column for downstream stages that consume the curated corpus itself
-    (e.g. sequence packing).
+    drop, split labels; one lazy plan that persists nothing (see module
+    docstring for the per-stage scale analysis). ``keep_text=True``
+    retains the ``text`` column for downstream stages that consume the
+    curated corpus itself (e.g. sequence packing); it is the same plan
+    with ``text`` carried through the dedup aggregation.
 
     Filters compare against the ROUNDED quality score (the hash-gate
     contract of :func:`quality_score`), so the kept set is identical in
     any engine that reproduces the 6-decimal rounding.
-
-    ``persist_intermediate`` (keep_text=True path only since round 17 —
-    the default path persists the text-free metadata relation instead,
-    see the inline note): the deduped-and-filtered corpus is a
-    diamond — it feeds BOTH the MinHash side and the final anti-join, so
-    unpersisted the annotate+filter+dedup prefix is derived twice.
-    Measured at sf0.1 the memory-cache is consistently SLOWER (3.8s vs
-    3.3s warm: cache write IO exceeds the narrow recompute, and
-    ReuseExchange already collapses the expensive signature exchange), so
-    the default is False. At 100 TB neither choice is right: a curation
-    run checkpoints each stage to parquet (every stage boundary is a
-    dataset other jobs consume — splits feed trainers, drop lists feed
-    audits), which truncates the diamond for free; the flag exists for
-    mid-size corpora where one in-memory pass is known to fit —
-    ``storage_level`` then picks the tier (default MEMORY_AND_DISK;
-    ``DISK_ONLY`` when the kept corpus dwarfs executor memory).
     """
-    # Inline annotation: quality and lang are pure functions of `text`, so
-    # they are projected in place — the whole annotate+filter prefix is
-    # NARROW (no join, no shuffle; lives inside the scan's codegen stage).
-    pred_lang, _ = lang_id_columns(F.col("text"))
-    if not keep_text:
-        # Round 17 (guide §1.2 "don't compute things you throw away" /
-        # §2.4): nothing downstream of the filter needs `text` — the
-        # output is (doc_id, pred_lang, quality, split) and the exact-
-        # dedup key is md5(text), computable in the same projection. So
-        # the annotate+filter+md5 pass lands in a TEXT-FREE persisted
-        # metadata relation (4 narrow columns) that every consumer
-        # branch (exact-keep aggregation, both near-dup semi-join
-        # probes, the final output) reads, instead of re-evaluating the
-        # inlined lang-id/quality expression tree over the corpus per
-        # branch — the before-plan scanned documents.parquet 5×, the
-        # after-plan 2× (once into this cache, once for the LSH
-        # shingle pass). The cache is metadata-sized (no text), so the
-        # write cost that made caching the FULL kept relation a wash
-        # (the persist_intermediate note below) does not apply; at
-        # 100 TB the same relation is what a curation run would
-        # checkpoint between stages. Values unchanged: same rows, same
-        # expressions, evaluated once.
-        from pyspark.storagelevel import StorageLevel
-
-        meta = (
-            docs.select(
-                "doc_id",
-                F.md5("text").alias("_h"),
-                quality_column(F.col("text")).alias("quality"),
-                pred_lang.alias("pred_lang"),
-            )
-            .where(
-                (F.col("pred_lang") == lang) & (F.col("quality") >= min_quality)
-            )
-            .persist(storage_level or StorageLevel.MEMORY_AND_DISK)
-        )
-        exact_keep = (
-            meta.groupBy("_h")
-            .agg(F.min("doc_id").alias("doc_id"))
-            .select("doc_id")
-        )
-        kept = meta.join(exact_keep, "doc_id", "left_semi")
-    else:
-        kept = docs.select(
+    text = ["text"] if keep_text else []
+    # annotate once: the word array is bound by its own projection, and
+    # quality and lang-id both read it (CollapseProject keeps a
+    # multi-referenced split staged), so each text is split once
+    staged = docs.select(
+        "doc_id",
+        *text,
+        _words(F.col("text")).alias("_w"),
+        F.md5("text").alias("_h"),
+        F.length("text").alias("_n"),
+        _alpha_chars(F.col("text")).alias("_a"),
+    )
+    quality = _quality_terms(F.col("_w"), F.col("_a"), F.col("_n"))[-1]
+    pred_lang, _ = _lang_argmax(F.col("_w"))
+    kept = _exact_dedup(
+        staged.select(
             "doc_id",
-            "text",
-            quality_column(F.col("text")).alias("quality"),
+            *text,
+            "_h",
+            quality.alias("quality"),
             pred_lang.alias("pred_lang"),
-        ).where((F.col("pred_lang") == lang) & (F.col("quality") >= min_quality))
-        exact_keep = (
-            kept.groupBy(F.md5("text").alias("_h"))
-            .agg(F.min("doc_id").alias("doc_id"))
-            .select("doc_id")
-        )
-        kept = kept.join(exact_keep, "doc_id", "left_semi")
-        if persist_intermediate:
-            from pyspark.storagelevel import StorageLevel
-
-            kept = kept.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+        ),
+        lang,
+        min_quality,
+    )
     if max_bucket_size is None:
         # Physical-strategy identity: a pair is an LSH candidate iff the
         # two docs share a band bucket — a function of each doc's OWN
         # signature only. So candidates-among-kept == candidates-on-the-
         # full-corpus with both endpoints restricted to kept, and the
-        # shingle/signature explode can run off the cheap raw scan
-        # instead of re-deriving the annotate+filter+dedup subtree
-        # (measured ~2.5x faster end-to-end at sf0.1; the oracle keeps
-        # the semantic filtered-corpus formulation and the hash gate
-        # confirms the identity on real data).
-        kept_ids = kept.select("doc_id")
-        pairs = minhash_lsh_dedup(docs.select("doc_id", "text"))
-        near_drop = (
-            pairs.join(
-                kept_ids.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
-            )
-            .join(
-                kept_ids.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi"
-            )
-            .select(F.col("doc_b").alias("doc_id"))
-            .distinct()
+        # shingle/signature explode runs off the raw scan. Only ``doc_a``
+        # needs the kept test here: the anti-join below removes ``doc_b``
+        # from kept, so a ``doc_b`` outside kept drops nothing.
+        pairs = minhash_lsh_dedup(docs.select("doc_id", "text")).join(
+            kept.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
         )
     else:
         # A bucket-size cap breaks the identity (bucket populations differ
         # between the raw and filtered corpora), so the capped variant
-        # pays for LSH over the filtered relation — the semantically
-        # exact formulation. The text-free kept relation re-attaches
-        # text via a doc_id semi-join on the raw scan (same rows).
-        capped_src = (
-            kept.select("doc_id", "text")
-            if "text" in kept.columns
-            else docs.select("doc_id", "text").join(
+        # pays for LSH over the kept corpus, its text re-attached from the
+        # raw scan by a doc_id semi-join.
+        pairs = minhash_lsh_dedup(
+            docs.select("doc_id", "text").join(
                 kept.select("doc_id"), "doc_id", "left_semi"
-            )
+            ),
+            max_bucket_size=max_bucket_size,
         )
-        near_drop = (
-            minhash_lsh_dedup(capped_src, max_bucket_size=max_bucket_size)
-            .select(F.col("doc_b").alias("doc_id"))
-            .distinct()
-        )
+    near_drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     kept = kept.join(near_drop, "doc_id", "left_anti")
     if embeddings is not None:
         # Third dedup modality (SemDeDup): docs whose embedding loses its
@@ -217,7 +176,4 @@ def curate_corpus(
         )
         kept = kept.join(sem_drop, "doc_id", "left_anti")
     labeled = hash_split(kept, "doc_id", splits or dict(DEFAULT_SPLITS), seed)
-    cols = ["doc_id", "pred_lang", "quality", "split"]
-    if keep_text:
-        cols.insert(1, "text")
-    return labeled.select(*cols)
+    return labeled.select("doc_id", *text, "pred_lang", "quality", "split")

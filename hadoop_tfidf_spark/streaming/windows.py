@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from hadoop_tfidf_spark.operators.dedup import _words
+
 #: Schema of the events stream (matches testdata ``events.parquet``).
 EVENTS_SCHEMA = StructType(
     [
@@ -215,7 +217,7 @@ def streaming_term_counts(docs: DataFrame) -> DataFrame:
     corpus; the unbounded-ingest path is ``IncrementalTfidfStats``,
     which keeps seen ids in parquet instead of operator state."""
     tokens = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
+        docs.select("doc_id", F.explode(_words(F.col("text"))).alias("word"))
         .where(F.col("word") != "")
         .dropDuplicates(["doc_id", "word"])
     )

@@ -20,6 +20,12 @@ def spark():
     yield s
 
 
+def cached_rdd_ids(spark) -> frozenset[int]:
+    """Ids of the RDDs the JVM currently holds in storage."""
+    sc = spark.sparkContext
+    return frozenset(i.id() for i in sc._jsc.sc().getRDDStorageInfo())
+
+
 def _slow_tier_keys() -> set[str]:
     path = os.path.join(os.path.dirname(__file__), "slow_tests.txt")
     keys = set()

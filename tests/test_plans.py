@@ -77,17 +77,17 @@ def test_minhash_lsh_no_cartesian(stats_of):
 
 def test_pipeline_curate_narrow_prefix_no_smj(stats_of):
     """The curation pipeline must stay broadcast/equi-join only (no
-    sort-merge, no cartesian) and its annotate+filter prefix is narrow —
-    total shuffles bounded by the dedup aggs + LSH + final anti-join,
-    plus the one metadata-sized exchange the r17 annotate-once cache
-    adds (the cache-fill subtree carries its own exchange; in return the
-    corpus-wide annotate expression evaluates once and the parquet scan
-    count drops to 2)."""
+    sort-merge, no cartesian) and its annotate prefix is narrow. Its
+    shuffles are the exact-dedup aggregation on the content hash, the
+    LSH signature aggregation, the near-drop distinct and the doc_id
+    exchange under the final anti-join (which AQE then broadcasts); the
+    band join and the kept-id semi-join broadcast. Its two parquet
+    scans are the annotate branch and the LSH shingle branch."""
     s = stats_of("pipeline_curate")
     assert s.cartesian_products == 0
     assert s.nested_loop_joins == 0
     assert s.sort_merge_joins == 0
-    assert s.shuffle_exchanges <= 6
+    assert s.shuffle_exchanges <= 4
     assert s.parquet_scans <= 2
 
 

@@ -204,49 +204,6 @@ def test_gate_relations_are_non_vacuous(spark):
     assert qs["rel_customers_without_orders"](spark, sf).count() > 0
 
 
-def test_curate_corpus_planted_fixtures(spark):
-    """Each pipeline stage drops exactly the doc planted for it: the
-    non-English doc, the low-quality doc, the exact duplicate (higher id),
-    and the near-duplicate (higher id); survivors carry deterministic
-    split labels that are a pure function of doc_id."""
-    from hadoop_tfidf_spark.operators.sampling import hash_bucket_col
-    from hadoop_tfidf_spark.pipeline import curate_corpus
-
-    # ~60 tokens, heavy in 'the/a/of/and/is/to' → en, quality >= 0.5
-    good = ("the cat is a friend of the dog and the bird is to the east "
-            "of the barn and the sun is a lamp of the sky and the moon "
-            "is to the west of the hill and the fox is a guest of the "
-            "field and the owl is to the north")
-    near = good + " extra trailing words here"
-    rows = [
-        (1, good),                       # survivor
-        (2, good),                       # exact dup of 1 → dropped
-        (3, near),                       # near-dup of 1 (shares shingles) → dropped
-        (4, "der hund und die katze ist nicht das pferd und der vogel"),  # de
-        (5, "qq ww ee rr tt yy"),        # en-marker-free AND low quality → dropped
-        (6, "the fish is a king of the sea and the crab is to the shore "
-            "and the whale is a giant of the deep and the gull is to the "
-            "wind and the seal is a child of the wave and the tide is to "
-            "the moon and the reef is a home of the coral"),  # survivor
-    ]
-    docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-    out = curate_corpus(docs).collect()
-    got = {r.doc_id: (r.pred_lang, r.split) for r in out}
-    assert set(got) == {1, 6}
-    assert all(lang == "en" for lang, _ in got.values())
-    # split label is the content-addressed bucket — recompute independently
-    buckets = {
-        r.doc_id: r.b
-        for r in docs.select(
-            "doc_id", hash_bucket_col(F.col("doc_id")).alias("b")
-        ).collect()
-    }
-    for doc_id, (_, split) in got.items():
-        b = buckets[doc_id]
-        want = "train" if b < 90 else ("valid" if b < 95 else "test")
-        assert split == want
-
-
 def test_order_gaps_are_dst_proof(spark):
     """Consecutive order dates must be exactly 86400s apart regardless of
     session timezone — a date->timestamp cast computes midnight in the

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, cached_rdd_ids
 
 
 def _cached_levels(spark, ignore_ids=frozenset()):
@@ -24,17 +24,12 @@ def _cached_levels(spark, ignore_ids=frozenset()):
     ]
 
 
-def _cached_ids(spark):
-    sc = spark.sparkContext
-    return frozenset(i.id() for i in sc._jsc.sc().getRDDStorageInfo())
-
-
 def test_tfidf_storage_level_disk_only(spark):
     from hadoop_tfidf_spark.corpus import load_docs
     from hadoop_tfidf_spark.tfidf import tfidf
 
     spark.catalog.clearCache()
-    pre = _cached_ids(spark)
+    pre = cached_rdd_ids(spark)
     docs = load_docs(spark, f"{SF_DIR_SMOKE}/documents.parquet")
     out = tfidf(
         docs,
@@ -129,19 +124,3 @@ def test_search_from_incremental_stats_equals_batch(spark, tmp_path):
         for r in search(batch_rel, bag).collect()
     }
     assert inc == batch and inc
-
-
-def test_curate_storage_level_disk_only(spark):
-    from hadoop_tfidf_spark.corpus import load_docs
-    from hadoop_tfidf_spark.pipeline import curate_corpus
-
-    spark.catalog.clearCache()
-    pre = _cached_ids(spark)
-    docs = load_docs(spark, f"{SF_DIR_SMOKE}/documents.parquet")
-    out = curate_corpus(
-        docs, persist_intermediate=True, storage_level=StorageLevel.DISK_ONLY
-    )
-    assert out.count() > 0
-    levels = _cached_levels(spark, pre)
-    assert levels and all(d and not m for d, m in levels)
-    spark.catalog.clearCache()

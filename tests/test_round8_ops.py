@@ -263,52 +263,6 @@ def test_recall_curve_rises_on_straddling_queries(spark):
     assert recalls[2] > recalls[1]
 
 
-def test_curate_semantic_stage_drops_planted_twin(spark):
-    """curate_corpus(embeddings=...): the SemDeDup stage drops the doc
-    whose embedding is a near-identical copy of a lower-id doc's
-    embedding, leaves semantically distinct docs alone, and composes
-    with the lexical stages (distinct TEXTS here, so only the semantic
-    stage can catch the pair)."""
-    import random
-
-    from hadoop_tfidf_spark.pipeline import curate_corpus
-
-    rng = random.Random(5)
-    docs, vecs = [], []
-    for i in range(12):
-        # English markers carry lang-id; a unique token between every
-        # marker pair makes all 3-gram shingles doc-unique, so the
-        # lexical LSH stage sees no near-dups at all
-        words = []
-        for j in range(6):
-            words += ["the", f"a{i}x{j}", "and", f"b{i}x{j}", "of",
-                      f"c{i}x{j}"]
-        docs.append((i, " ".join(words)))
-        vecs.append((i, [rng.uniform(-1, 1) * 8 for _ in range(8)]))
-    # doc 11's embedding = near-copy of doc 2's (a semantic twin)
-    vecs[11] = (11, [x + rng.uniform(-0.001, 0.001) for x in vecs[2][1]])
-    docs_df = spark.createDataFrame(docs, "doc_id BIGINT, text STRING")
-    emb_df = spark.createDataFrame(
-        vecs, "vec_id BIGINT, embedding ARRAY<DOUBLE>"
-    )
-    plain = {
-        r.doc_id
-        for r in curate_corpus(docs_df, min_quality=0.0).collect()
-    }
-    sem = {
-        r.doc_id
-        for r in curate_corpus(
-            docs_df,
-            min_quality=0.0,
-            embeddings=emb_df,
-            semantic_k=2,
-            semantic_threshold=0.9999,
-        ).collect()
-    }
-    assert plain == set(range(12))  # lexical stages keep all
-    assert sem == plain - {11}      # only the semantic twin drops
-
-
 def test_semantic_dedup_megacell_cap(spark):
     """The megacell valve: one degenerate cell holds most of the corpus
     (every vector near one center, k seeds from it). With the cap

@@ -1,8 +1,7 @@
 """Round-9 pins for the ADVICE findings: compact_parquet path-overlap
 guard, dense DSIR ratio tables (no silent feature drops when scoring
-with a sample-trained table), anti-join semantics for the pipeline's
-semantic-dedup stage (docs without embeddings survive), and the RP
-family's per-row dimension assertion."""
+with a sample-trained table), and the RP family's per-row dimension
+assertion."""
 
 from __future__ import annotations
 
@@ -107,51 +106,6 @@ def test_dsir_sample_trained_scoring_never_drops_features(spark):
     row = dsir_importance(held_out, n_buckets=64, ratios=ratios).collect()[0]
     assert row.n_feats == 4  # five words -> four bigrams, none dropped
     assert row.dsir_logratio is not None
-
-
-# ------------------------------------------------------------- pipeline
-
-
-def test_curate_semantic_stage_keeps_docs_without_embeddings(spark):
-    """The semantic stage is a DEDUP, not a coverage filter: a doc with
-    no row in the embeddings table must survive (anti-join against the
-    drop set), while a genuine within-cell near-duplicate still drops."""
-    from hadoop_tfidf_spark.pipeline import curate_corpus
-
-    text = "the quick brown fox jumps over the lazy dog again and again"
-    other = "she said that the meeting was moved to the other room"
-    third = "it was the best of times and it was the worst of times"
-    docs = spark.createDataFrame(
-        [(1, text), (2, other), (3, third)],
-        "doc_id BIGINT, text STRING",
-    )
-    # identical embeddings for 1 and 2 -> SemDeDup drops the higher id
-    # (2); doc 1 keeps. Doc 3 has NO embedding row at all.
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0, 0.0])],
-        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
-    )
-    base = {
-        r.doc_id
-        for r in curate_corpus(docs, min_quality=0.0).select("doc_id").collect()
-    }
-    got = {
-        r.doc_id
-        for r in curate_corpus(
-            docs,
-            min_quality=0.0,
-            embeddings=emb,
-            semantic_k=1,
-            semantic_iters=1,
-            semantic_threshold=0.99,
-        )
-        .select("doc_id")
-        .collect()
-    }
-    assert 3 in base
-    assert 3 in got, "doc without an embedding row must survive the stage"
-    assert 2 in base and 2 not in got  # the true semantic dup still drops
-    assert 1 in got
 
 
 # ------------------------------------------------------------ rp guards
