@@ -461,6 +461,7 @@ def main(argv: list[str] | None = None) -> None:
         import json
 
         from hadoop_tfidf_spark.extensions import q_sim_tier_frontier
+        from hadoop_tfidf_spark.functions.literals import _local_relation
 
         out = q_sim_tier_frontier(spark, args.input)
         rows = out.collect()
@@ -470,7 +471,12 @@ def main(argv: list[str] | None = None) -> None:
             )
         )
         _write(
-            spark.createDataFrame(rows, out.schema), args.output, args.format
+            _local_relation(
+                spark, rows,
+                "tier STRING, bytes_per_vec BIGINT, n_hits BIGINT, recall DOUBLE",
+            ),
+            args.output,
+            args.format,
         )
         spark.stop()
         return
@@ -802,6 +808,7 @@ def main(argv: list[str] | None = None) -> None:
         return
 
     if args.tool == "bpe-train":
+        from hadoop_tfidf_spark.functions.literals import _local_relation
         from hadoop_tfidf_spark.functions.text import bpe_train
         from hadoop_tfidf_spark.sinks import write_parquet
 
@@ -812,7 +819,8 @@ def main(argv: list[str] | None = None) -> None:
         write_parquet(vocab, args.output)
         if args.save_merges is not None:
             write_parquet(
-                spark.createDataFrame(
+                _local_relation(
+                    spark,
                     [(i, a, b) for i, (a, b) in enumerate(merges)],
                     "idx INT, left STRING, right STRING",
                 ),

@@ -8,6 +8,7 @@ registry contract.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from hadoop_tfidf_spark.functions.literals import _local_relation
 from hadoop_tfidf_spark.operators import similarity as S
 from pyspark.sql import DataFrame, SparkSession, Window
 from hadoop_tfidf_spark.extensions._base import (
@@ -173,7 +174,8 @@ def q_search_hybrid_rrf(spark, sf_dir):
     )
     emb = _emb(spark, sf_dir)
     queries = emb.where(F.col("vec_id").isin(vec_ids))
-    qmap = spark.createDataFrame(
+    qmap = _local_relation(
+        spark,
         [(qid, int(v)) for (qid, _), v in zip(SEARCH_QUERIES, vec_ids)],
         "query_id STRING, qvec_id BIGINT",
     )

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from hadoop_tfidf_spark.functions.literals import _local_relation
 from hadoop_tfidf_spark.operators import similarity as S
 from hadoop_tfidf_spark.extensions._base import (
     _emb,
@@ -335,8 +336,8 @@ def q_sim_pca_components(spark, sf_dir):
         for c, comp in enumerate(comps)
         for d, v in enumerate(comp)
     ]
-    out = spark.createDataFrame(
-        rows, "component INT, d INT, v_u BIGINT, lambda_q DOUBLE"
+    out = _local_relation(
+        spark, rows, "component INT, d INT, v_u BIGINT, lambda_q DOUBLE"
     )
     return out.select(
         "component", "d", "v_u", F.round("lambda_q", 6).alias("lambda_q")
@@ -744,8 +745,8 @@ def _clustered_emb(spark, sf_dir):
             "embedding"
         ),
     )
-    qrows = spark.createDataFrame(
-        _straddle_queries(), "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    qrows = _local_relation(
+        spark, _straddle_queries(), "vec_id BIGINT, embedding ARRAY<DOUBLE>"
     )
     return clustered.unionByName(qrows)
 

@@ -63,14 +63,21 @@ def q_text_stratified_sample(spark, sf_dir):
     """Stratified deterministic sampling: documents sampled per predicted
     language at different rates (majority 'en' downsampled to 10%, rare
     'und' kept at 50%) — content-addressed membership, so the oracle
-    reproduces it exactly."""
-    from hadoop_tfidf_spark.functions.text import lang_id_columns
+    reproduces it exactly. The language is computed inside a lambda over
+    the one-element array of the text's words: the sample filter is
+    pushed beneath this projection and inlines ``pred_lang``, and a
+    lambda-bound word array is split once wherever it is inlined (a
+    staged column would be split again in the pushed filter)."""
+    from hadoop_tfidf_spark.functions.text import _lang_argmax
+    from hadoop_tfidf_spark.operators.dedup import _words
     from hadoop_tfidf_spark.operators.sampling import (
         hash_bucket_col,
         stratified_hash_sample,
     )
 
-    pred, _ = lang_id_columns(F.col("text"))
+    pred = F.transform(
+        F.array(_words(F.col("text"))), lambda w: _lang_argmax(w)[0]
+    )[0]
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", pred.alias("pred_lang")
     )

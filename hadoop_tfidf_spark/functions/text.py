@@ -32,7 +32,7 @@ from hadoop_tfidf_spark.operators.dedup import (
     _words,
     shingles,
 )
-from hadoop_tfidf_spark.operators.similarity import _lit_array
+from hadoop_tfidf_spark.functions.literals import _lit_array
 
 #: Tiny per-language marker lexicons for the n-gram/stopword language-ID
 #: heuristic. Real deployments swap in a trained model (fastText et al.) via
@@ -159,12 +159,21 @@ def quality_score(
 
     ``keep_cols`` passes input columns (e.g. ``source``) through the
     projection, so downstream per-group consumers compose without a
-    corpus-to-corpus join back on ``doc_id`` — one scan, zero joins."""
+    corpus-to-corpus join back on ``doc_id`` — one scan, zero joins.
+    Each text is split once: the word array is staged beneath the
+    projection that reads it."""
     text = F.col("text")
-    n_tokens, n_stop, stop_ratio, alpha_ratio, quality = _quality_terms(
-        _words(text), _alpha_chars(text), F.length(text)
+    staged = docs.select(
+        "doc_id",
+        *keep_cols,
+        _words(text).alias("_w"),
+        _alpha_chars(text).alias("_a"),
+        F.length(text).alias("_n"),
     )
-    return docs.select(
+    n_tokens, n_stop, stop_ratio, alpha_ratio, quality = _quality_terms(
+        F.col("_w"), F.col("_a"), F.col("_n")
+    )
+    return staged.select(
         "doc_id",
         *keep_cols,
         n_tokens.cast("bigint").alias("n_tokens"),
@@ -191,9 +200,11 @@ def lang_id(docs: DataFrame) -> DataFrame:
     doc_id exchange). Counts include multiplicity, exactly like the
     join-and-count formulation it replaces (the DuckDB oracle keeps the
     relational join+group form; the hash gate pins the equivalence).
+    The word array is staged once and read by all five hit counts.
     """
-    pred, hits = lang_id_columns(F.col("text"))
-    return docs.select(
+    staged = docs.select("doc_id", _words(F.col("text")).alias("_w"))
+    pred, hits = _lang_argmax(F.col("_w"))
+    return staged.select(
         "doc_id", pred.alias("pred_lang"), hits.alias("marker_hits")
     )
 
@@ -861,34 +872,27 @@ def _bloom_words(
     hashes: int,
     n_shards: int,
     shard: int | None = None,
-) -> list[int]:
+) -> DataFrame:
     """The one build aggregation: every ``k``-gram shingle's ``hashes``
-    positions in its own shard, OR-packed by one ``bit_or`` keyed on the
-    flat word index, collected into the word list — all shards, or only
-    ``shard``'s words when given. The collect is bounded by the filter
-    geometry, never by data. (No pre-distinct: ``bit_or`` is
-    duplicate-invariant, same reasoning as ``min()`` in
+    positions in its own shard, OR-packed by one ``bit_or`` into
+    ``(w_idx, bits)`` rows, one per NONZERO word. ``w_idx`` indexes the
+    flat shard-major word array, or, given ``shard``, only that shard's
+    keys and words, relative to the shard. (No pre-distinct: ``bit_or``
+    is duplicate-invariant, same reasoning as ``min()`` in
     ``minhash_signatures``.)"""
     xs = shingles(bench_docs, k=k).select(_md5_base(F.col("shingle")).alias("x"))
-    wps = bits_per_shard // _BLOOM_LANE
-    first, n_words = 0, n_shards * wps
     if shard is not None:
         xs = xs.where(F.col("x") % n_shards == shard)
-        first, n_words = shard * wps, wps
     pos = F.array(*_bloom_positions(F.col("x"), bits_per_shard, hashes))
-    packed = (
+    flat_shards = n_shards if shard is None else 1
+    return (
         xs.select("x", F.explode(pos).alias("pos"))
         .groupBy(
-            _bloom_word(F.col("x"), F.col("pos"), bits_per_shard, n_shards)
+            _bloom_word(F.col("x"), F.col("pos"), bits_per_shard, flat_shards)
             .alias("w_idx")
         )
         .agg(F.bit_or(_lane_bit(F.col("pos"))).alias("bits"))
-        .collect()
     )
-    words = [0] * n_words
-    for row in packed:
-        words[row["w_idx"] - first] = row["bits"]
-    return words
 
 
 def bloom_bitmap(
@@ -904,11 +908,16 @@ def bloom_bitmap(
     shards (16 KiB at the default geometry; size production filters with
     :func:`bloom_geometry`). Benchmarks are static: production builds
     this per benchmark release and probes every corpus against it — the
-    build-once / probe-many split of the ivfsq ``index=`` pattern. Past
-    a few thousand words, store it instead (:func:`bloom_store_sharded`):
-    driver memory then peaks at one shard."""
+    build-once / probe-many split of the ivfsq ``index=`` pattern. The
+    nonzero words are collected and scattered onto zeros, so the driver
+    holds the whole filter. Past a few thousand words, store it instead
+    (:func:`bloom_store_sharded`): the driver then holds none of it."""
     _check_geometry(bits_per_shard, hashes, n_shards)
-    words = _bloom_words(bench_docs, k, bits_per_shard, hashes, n_shards)
+    words = [0] * (n_shards * (bits_per_shard // _BLOOM_LANE))
+    for row in _bloom_words(
+        bench_docs, k, bits_per_shard, hashes, n_shards
+    ).collect():
+        words[row["w_idx"]] = row["bits"]
     return BloomFilter(words, bits_per_shard, n_shards, hashes, k)
 
 
@@ -929,14 +938,16 @@ def bloom_store_sharded(
 ) -> str:
     """Build a benchmark Bloom filter INTO STORAGE, one shard at a time
     — the largest-geometry form: the :func:`bloom_bitmap` aggregation
-    runs once per shard, so the driver's peak memory is ONE shard's
-    words (≤ ~256 MB by the M31 ceiling), never the whole filter. Each
-    shard is written as parquet ``words/shard=i``; ``geometry.json``
-    (geometry plus ``k``) lands LAST + atomically (the ``save_index``
-    commit-marker pattern — a crashed build can never be probed). Probe
-    with :func:`contamination_bloom_stored`, which loads the words
-    executor-side from this directory: the filter never rides a plan or
-    the driver again."""
+    runs once per shard and the executors write its ``(w_idx, bits)``
+    rows straight to parquet ``words/shard=i`` (``w_idx`` relative to
+    the shard, one file per shard), so the driver never holds a word.
+    Only nonzero words are stored; the loader scatters them onto zeros,
+    so a dense shard written by an earlier build loads the same way.
+    ``geometry.json`` (geometry plus ``k``) lands LAST + atomically (the
+    ``save_index`` commit-marker pattern — a crashed build can never be
+    probed). Probe with :func:`contamination_bloom_stored`, which loads
+    the words executor-side from this directory: the filter never rides
+    a plan or the driver."""
     _check_geometry(bits_per_shard, hashes, n_shards)
     if os.path.exists(f"{filter_dir}/geometry.json"):
         raise FileExistsError(
@@ -944,17 +955,12 @@ def bloom_store_sharded(
             "is a versioned artifact — build the new benchmark release "
             "into a new directory"
         )
-    spark = bench_docs.sparkSession
     for shard in range(n_shards):
-        words = _bloom_words(
+        _bloom_words(
             bench_docs, k, bits_per_shard, hashes, n_shards, shard
-        )
-        spark.createDataFrame(
-            list(enumerate(words)), "w_idx INT, bits BIGINT"
         ).coalesce(1).write.mode("error").parquet(
             f"{filter_dir}/words/shard={shard}"
         )
-        del words  # driver peak stays one shard
     geom = {
         "format_version": 1,
         "bits_per_shard": bits_per_shard,
@@ -1022,7 +1028,7 @@ def _bloom_probe(x: Column, words: Column, bloom: BloomFilter) -> Column:
     """Membership test for a base-hash column ``x``: all ``hashes``
     positions' lane bits set in ``x``'s shard of ``words``. Callers
     stage ``words`` as a column of the projection beneath — ONE parsed
-    ``CAST(ARRAY(…) AS ARRAY<BIGINT>)`` literal (``similarity._lit_array``;
+    ``CAST(ARRAY(…) AS ARRAY<BIGINT>)`` literal (``literals._lit_array``;
     ``F.lit(list)`` makes one py4j round trip per word, ~1 s at the
     default 2,048 words). Referenced inline, the analyzer would walk the
     whole array once per hash (~4× the plan-build time); the optimizer

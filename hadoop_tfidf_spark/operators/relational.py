@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hadoop_tfidf_spark.functions.literals import _local_relation
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -491,7 +493,8 @@ def range_join(
 def price_band_summary(orders: DataFrame, spark: SparkSession) -> DataFrame:
     """Declared range-join query: order revenue binned into static price
     bands. One broadcast NLJ + one 3-key aggregation."""
-    bands = spark.createDataFrame(
+    bands = _local_relation(
+        spark,
         [("small", 0.0, 100_000.0), ("medium", 100_000.0, 250_000.0),
          ("large", 250_000.0, 600_000.0)],
         "band STRING, lo DOUBLE, hi DOUBLE",

@@ -26,7 +26,9 @@ forces a broadcast hash join, so scoring never shuffles the tf-idf
 relation; the only shuffle is the final per-doc aggregation. A query list
 becomes the bag as a literal inside the plan (``Generate inline`` over
 ``OneRowRelation``), not a relation parallelized from the Python list:
-that is a pickled RDD, which starts Python workers on every query.
+that is a pickled RDD, which starts Python workers on every query. The
+literal is ``functions.literals._local_relation``, the package's one
+route for driver-side rows, so scoring imports no ANN code.
 Ranking per query partitions the window by ``query_id`` — top-k should
 use ``.limit(k)`` after ``orderBy`` so Spark plans TakeOrderedAndProject.
 """
@@ -36,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_tfidf_spark.operators.similarity import _local_relation
+from hadoop_tfidf_spark.functions.literals import _local_relation
 
 
 def query_term_bag(

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_tfidf_spark.functions.literals import _local_relation
+
 _BATCH_PREFIX = "batch="
 _STAGING_PREFIX = "_staging_"
 
@@ -93,7 +95,7 @@ class IncrementalLshIndex:
         has) — ``empty_schema`` only shapes the no-batches-yet relation."""
         batches = self._committed_batches()
         if not batches:
-            return self.spark.createDataFrame([], empty_schema)
+            return _local_relation(self.spark, [], empty_schema)
         paths = [
             f"{self.index_dir}/{_BATCH_PREFIX}{b}/{sub}" for b in batches
         ]

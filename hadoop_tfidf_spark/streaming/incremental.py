@@ -53,6 +53,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_tfidf_spark.functions.literals import _local_relation
+
 _GEN_PREFIX = "gen="
 _STAGING_PREFIX = "_staging_"
 
@@ -137,7 +139,7 @@ class IncrementalTfidfStats:
         if gen is None:
             gen = self._latest()
         if gen is None:
-            return self.spark.createDataFrame([], "word STRING, df BIGINT")
+            return _local_relation(self.spark, [], "word STRING, df BIGINT")
         return self.spark.read.parquet(
             f"{self.stats_dir}/{_GEN_PREFIX}{gen}/df"
         )
@@ -153,7 +155,7 @@ class IncrementalTfidfStats:
                 return self.spark.read.parquet(p)
         if like is not None:
             return like.select("doc_id").limit(0)
-        return self.spark.createDataFrame([], "doc_id BIGINT")
+        return _local_relation(self.spark, [], "doc_id BIGINT")
 
     def _meta(self, gen: int | None = None) -> tuple[int, int]:
         """(num_docs, last_batch_id); (0, -1) on first run."""
@@ -222,8 +224,8 @@ class IncrementalTfidfStats:
             seen.unionByName(new_ids).write.mode("overwrite").parquet(
                 f"{staging}/seen"
             )
-        self.spark.createDataFrame(
-            [(total, batch_id)], "num_docs BIGINT, last_batch_id BIGINT"
+        _local_relation(
+            self.spark, [(total, batch_id)], "num_docs BIGINT, last_batch_id BIGINT"
         ).write.mode("overwrite").parquet(f"{staging}/meta")
         # commit point: one rename makes df+meta visible together
         fs = self._fs()

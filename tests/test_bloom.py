@@ -550,6 +550,64 @@ def test_bloom_stored_filter_builds_probes_and_guards(spark, tmp_path):
         load_stored_bloom(crashed)
 
 
+@pytest.mark.parametrize("n_shards", [1, 4])
+def test_bloom_store_never_collects_and_stores_nonzero_words(
+    spark, tmp_path, monkeypatch, n_shards
+):
+    """The stored build writes each shard's aggregation from the
+    executors: with ``DataFrame.collect`` disabled it still builds, its
+    files hold only the filter's nonzero words, and it loads equal to the
+    in-memory build."""
+    import pyarrow.parquet as pq
+
+    bench = _bench(spark)
+    d = str(tmp_path / "filter")
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("the stored build collected")
+
+    monkeypatch.setattr(type(bench), "collect", refuse)
+    bloom_store_sharded(bench, d, k=3, n_shards=n_shards)
+    monkeypatch.undo()
+    mem = bloom_bitmap(bench, k=3, n_shards=n_shards)
+    stored = [
+        pq.read_table(f"{d}/words/shard={s}").column("bits").to_pylist()
+        for s in range(n_shards)
+    ]
+    assert all(bits != 0 for shard in stored for bits in shard)
+    assert sum(map(len, stored)) == sum(w != 0 for w in mem.words)
+    assert load_stored_bloom(d) == mem
+
+
+def test_bloom_stored_dense_layout_still_loads(spark, tmp_path):
+    """A filter stored with every word of each shard, zeros included (the
+    layout of builds that collected each shard), loads equal to the
+    in-memory build: the loader scatters ``w_idx`` onto zeros."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    mem = bloom_bitmap(_bench(spark), k=3, n_shards=2)
+    wps = mem.bits_per_shard // 32
+    d = tmp_path / "dense"
+    for s in range(2):
+        shard_dir = d / "words" / f"shard={s}"
+        shard_dir.mkdir(parents=True)
+        pq.write_table(
+            pa.table({
+                "w_idx": pa.array(range(wps), pa.int32()),
+                "bits": pa.array(mem.words[s * wps:(s + 1) * wps], pa.int64()),
+            }),
+            shard_dir / "part-00000.parquet",
+        )
+    (d / "geometry.json").write_text(json.dumps({
+        "format_version": 1, "bits_per_shard": mem.bits_per_shard,
+        "n_shards": 2, "hashes": mem.hashes, "k": 3,
+    }))
+    assert load_stored_bloom(str(d)) == mem
+
+
 bloom_corpus_strategy = st.lists(
     st.lists(st.sampled_from(
         ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "token1", "token9"]

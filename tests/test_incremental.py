@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from hadoop_tfidf_spark.corpus import tokenize
 from hadoop_tfidf_spark.streaming.incremental import IncrementalTfidfStats
 from hadoop_tfidf_spark.tfidf import doc_frequency, doc_word_count
+from tests.conftest import SF_DIR_SMOKE
 
 BATCHES = [
     [(1, "a b c"), (2, "a b")],
@@ -161,3 +162,40 @@ def test_transient_read_error_propagates(spark, tmp_path):
     stats = IncrementalTfidfStats(spark, str(stats_dir))
     with pytest.raises(Exception):
         stats.df_table().collect()
+
+
+def test_search_from_incremental_stats_equals_batch(spark, tmp_path):
+    """DQ5 scores computed from incrementally-merged stats must equal the
+    batch search on the same corpus (the streaming_search identity at
+    unit scale, two disjoint merge batches)."""
+    from hadoop_tfidf_spark.corpus import SPACE_TOKEN_PATTERN, tokenize
+    from hadoop_tfidf_spark.declared import SEARCH_QUERIES
+    from hadoop_tfidf_spark.search import query_term_bag, search
+    from hadoop_tfidf_spark.streaming.incremental import IncrementalTfidfStats
+    from hadoop_tfidf_spark.tfidf import doc_word_count, tfidf
+
+    docs = spark.read.parquet(f"{SF_DIR_SMOKE}/documents.parquet").limit(100)
+    b0 = docs.where(F.col("doc_id") % 2 == 0)
+    b1 = docs.where(F.col("doc_id") % 2 == 1)
+    stats = IncrementalTfidfStats(spark, str(tmp_path / "stats"))
+    stats.merge_batch(b0, batch_id=0)
+    stats.merge_batch(b1, batch_id=1)
+
+    dwc = doc_word_count(tokenize(docs, SPACE_TOKEN_PATTERN))
+    tf = dwc.withColumn("tf", F.lit(1.0) + F.log10("n"))
+    inc_rel = tf.join(stats.idf(), "word").select(
+        "word", "doc_id", F.round(F.col("tf") * F.col("idf"), 6).alias("tfidf")
+    )
+    bag = query_term_bag(spark, SEARCH_QUERIES)
+    inc = {
+        (r.query_id, r.doc_id): round(r.score, 6)
+        for r in search(inc_rel, bag).collect()
+    }
+    batch_rel = tfidf(docs, tokens=tokenize(docs, SPACE_TOKEN_PATTERN)).select(
+        "word", "doc_id", F.round("tfidf", 6).alias("tfidf")
+    )
+    batch = {
+        (r.query_id, r.doc_id): round(r.score, 6)
+        for r in search(batch_rel, bag).collect()
+    }
+    assert inc == batch and inc

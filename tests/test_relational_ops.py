@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from hadoop_tfidf_spark.operators.asof import asof_join
 from hadoop_tfidf_spark.operators.relational import approx_distinct_stats
+from tests.conftest import SF_DIR_SMOKE
 
 
 class TestAsofJoin:
@@ -66,3 +67,23 @@ def test_approx_distinct_error_bound(spark):
         rel_err = abs(r.approx_parts - r.exact_parts) / r.exact_parts
         assert rel_err < 0.1, (r.l_returnflag, r.approx_parts, r.exact_parts)
         assert r.price_p50 <= r.price_p95 <= r.price_p99
+
+
+def test_approx_distinct_bounds_flags_hold(spark):
+    """The envelope twin's flags must be 1 on real data (HLL rsd=0.02 vs a
+    10% tolerance; GK accuracy=10000 vs 5%) and its exact columns must
+    equal the plain exact aggregation."""
+    from hadoop_tfidf_spark.operators.relational import approx_distinct_bounds
+
+    li = spark.read.parquet(f"{SF_DIR_SMOKE}/lineitem.parquet")
+    rows = approx_distinct_bounds(li).collect()
+    assert rows
+    for r in rows:
+        assert (r.hll_ok, r.p50_ok, r.p95_ok, r.p99_ok) == (1, 1, 1, 1), r
+    exact = {
+        (r.l_returnflag): r.n
+        for r in li.groupBy("l_returnflag")
+        .agg(F.countDistinct("l_partkey").alias("n"))
+        .collect()
+    }
+    assert {r.l_returnflag: r.exact_parts for r in rows} == exact

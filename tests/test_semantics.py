@@ -8,10 +8,12 @@ import math
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from hadoop_tfidf_spark.corpus import REFERENCE_TOKEN_PATTERN, tokenize
 from hadoop_tfidf_spark.search import query_term_bag, rank, search
 from hadoop_tfidf_spark.tfidf import doc_word_count, term_frequency, tfidf
+from tests.conftest import SF_DIR_SMOKE, cached_rdd_ids
 
 
 def _docs(spark, rows):
@@ -155,3 +157,38 @@ class TestSearchSemantics:
         assert s_rows == r_rows
         rnks = sorted(x.rnk for x in r.collect())
         assert rnks == list(range(1, len(rnks) + 1))
+
+
+def _cached_levels(spark, ignore_ids=frozenset()):
+    """(useDisk, useMemory) per currently-cached RDD. ``ignore_ids``
+    excludes RDDs cached BEFORE the operation under test:
+    getRDDStorageInfo is JVM-global, and clearCache() only drops
+    CacheManager-registered relations — a raw RDD persist leaked by an
+    earlier test in a long full-suite run would otherwise flake the
+    all-disk-only assertion (observed round 14)."""
+    sc = spark.sparkContext
+    return [
+        (i.storageLevel().useDisk(), i.storageLevel().useMemory())
+        for i in sc._jsc.sc().getRDDStorageInfo()
+        if i.id() not in ignore_ids
+    ]
+
+
+def test_tfidf_storage_level_disk_only(spark):
+    from hadoop_tfidf_spark.corpus import load_docs
+    from hadoop_tfidf_spark.tfidf import tfidf
+
+    spark.catalog.clearCache()
+    pre = cached_rdd_ids(spark)
+    docs = load_docs(spark, f"{SF_DIR_SMOKE}/documents.parquet")
+    out = tfidf(
+        docs,
+        persist_intermediate=True,
+        storage_level=StorageLevel.DISK_ONLY,
+    )
+    n = out.count()
+    assert n > 0
+    levels = _cached_levels(spark, pre)
+    assert levels, "persist_intermediate must materialize a cached relation"
+    assert all(use_disk and not use_mem for use_disk, use_mem in levels)
+    spark.catalog.clearCache()

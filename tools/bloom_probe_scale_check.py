@@ -7,9 +7,10 @@ the words once per Python worker (the plan stays tiny).
 
 Geometries are synthetic (seeded pseudo-random words, 4 shards) so the
 cost curve isolates FILTER SIZE; the corpus is the sf-dir documents
-table. Each point times end-to-end count() per form (min over trials),
-plus the literal expression's one-time plan-construction cost, which is
-the part that grows with geometry even before execution.
+table. Each point times one end-to-end ``sum(n_hits)`` per form (min
+over trials; a bare ``count()`` lets the optimizer prune the literal
+probe away), plus the literal expression's one-time plan-construction
+cost, which is the part that grows with geometry even before execution.
 
 Usage: python tools/bloom_probe_scale_check.py [trials]
 Prints ONE JSON line; SCALE.md records the adjudicated results.
@@ -42,10 +43,18 @@ LIT_CAP = int(os.environ.get("SPARK_GRAFT_BLOOM_LIT_CAP", str(2_097_152)))
 N_SHARDS = 4
 
 
+def _probe(verdicts) -> None:
+    from pyspark.sql import functions as F
+
+    verdicts.agg(F.sum("n_hits")).collect()
+
+
 def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     trials = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     import json as _json
     import shutil
@@ -76,16 +85,19 @@ def main() -> None:
         }
         # stored-filter twin of the same geometry: words parquet in the
         # bloom_store_sharded layout + geometry marker, probed from
-        # storage with the per-worker cache COLD on the first trial
+        # storage with the per-worker cache COLD on the first trial.
+        # Written with pyarrow (the loader reads it with pyarrow too):
+        # the random words are dense, one file per shard.
         fdir = tempfile.mkdtemp(prefix="bloom_stored_")
-        shutil.rmtree(fdir)
         for shard in range(N_SHARDS):
-            spark.createDataFrame(
-                [(i, int(w)) for i, w in enumerate(
-                    words[shard * wps : (shard + 1) * wps]
-                )],
-                "w_idx INT, bits BIGINT",
-            ).coalesce(1).write.parquet(f"{fdir}/words/shard={shard}")
+            os.makedirs(f"{fdir}/words/shard={shard}")
+            pq.write_table(
+                pa.table({
+                    "w_idx": pa.array(np.arange(wps, dtype=np.int32)),
+                    "bits": pa.array(words[shard * wps : (shard + 1) * wps]),
+                }),
+                f"{fdir}/words/shard={shard}/part-00000.parquet",
+            )
         with open(f"{fdir}/geometry.json", "w") as fh:
             _json.dump(
                 {"format_version": 1, "bits_per_shard": bits,
@@ -102,10 +114,10 @@ def main() -> None:
         for t in range(trials):
             if run_literal:
                 t0 = time.monotonic()
-                lit_df.count()
+                _probe(lit_df)
                 lit_times.append(time.monotonic() - t0)
             t0 = time.monotonic()
-            contamination_bloom_stored(docs, fdir).count()
+            _probe(contamination_bloom_stored(docs, fdir))
             el = time.monotonic() - t0
             if t == 0:
                 point["stored_cold_s"] = round(el, 3)  # incl. worker load
