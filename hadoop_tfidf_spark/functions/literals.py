@@ -14,10 +14,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    DataType,
     DoubleType,
     FloatType,
     LongType,
     StringType,
+    StructField,
     StructType,
 )
 
@@ -79,7 +81,10 @@ def _local_relation(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     of ``F.lit`` values (the JVM escapes them), any other column one
     :func:`_lit_array` literal (exact; a whole array value may be null,
     a number may not), and one cast of the zipped rows gives the
-    schema's names, types and nullability. A struct per row would cost
+    schema's names and types. Every field comes out nullable, nested
+    ones included: the zipped columns are nullable, and Spark refuses a
+    cast from nullable to ``NOT NULL``, which ``DataFrame.schema.toDDL()``
+    writes for aggregated and literal columns. A struct per row would cost
     ~4 py4j round trips a row (on a 4-vCPU VM, 0.56 s to build 192 probe
     rows against 0.07 s a column at a time). Plan build cost still grows
     with the literal, so every caller bounds it:
@@ -104,5 +109,17 @@ def _local_relation(spark: SparkSession, rows: list, schema: str) -> DataFrame:
         for col, f in zip(cols, st.fields)
     ]
     return spark.sql("SELECT 1").select(
-        F.inline(F.arrays_zip(*arrays).cast(ArrayType(st)))
+        F.inline(F.arrays_zip(*arrays).cast(ArrayType(_nullable(st))))
     )
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every struct field and array element nullable, at
+    every depth."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    return t

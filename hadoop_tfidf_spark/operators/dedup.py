@@ -29,8 +29,10 @@ from pyspark.sql import functions as F
 
 from hadoop_tfidf_spark.functions.hashing import hex_to_long
 
-#: Default MinHash configuration: 12 hash functions in 4 bands × 3 rows —
-#: the LSH s-curve crosses ~ (1/4)^(1/3) ≈ 0.63 Jaccard.
+#: The MinHash geometry, fixed: 12 hash functions (one per entry of
+#: ``MINHASH_A`` / ``MINHASH_B``) in 4 bands × 3 rows — the LSH s-curve
+#: crosses ~ (1/4)^(1/3) ≈ 0.63 Jaccard. The DuckDB oracles build their SQL
+#: from these two names.
 DEFAULT_NUM_HASHES = 12
 DEFAULT_ROWS_PER_BAND = 3
 
@@ -132,17 +134,15 @@ def shingles(docs: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    shingle_df: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES
-) -> DataFrame:
+def minhash_signatures(shingle_df: DataFrame) -> DataFrame:
     """MinHash signatures in columnar form: one row per doc,
-    ``(doc_id, mh_0 … mh_{num_hashes-1} BIGINT)``.
+    ``(doc_id, mh_0 … mh_11 BIGINT)``.
 
-    One aggregation keyed on doc_id with ``num_hashes`` independent
-    ``min((a·x + b) mod M31)`` columns over the shingle's base hash
-    ``x = md5(shingle)[:15 hex] mod M31`` — ONE md5 per shingle total, the
-    rest is integer arithmetic. No seed explode (shuffle moves |docs| rows
-    of ``num_hashes`` BIGINTs) and **no pre-distinct**: min() is invariant
+    One aggregation keyed on doc_id with ``DEFAULT_NUM_HASHES``
+    independent ``min((a·x + b) mod M31)`` columns over the shingle's base
+    hash ``x = md5(shingle)[:15 hex] mod M31`` — ONE md5 per shingle total,
+    the rest is integer arithmetic. No seed explode (shuffle moves |docs|
+    rows of 12 BIGINTs) and **no pre-distinct**: min() is invariant
     under duplicate shingles, so the distinct's full extra shuffle of the
     shingle stream is dropped; partial aggregation collapses duplicates
     map-side for free.
@@ -152,7 +152,7 @@ def minhash_signatures(
         F.min((F.lit(MINHASH_A[h]) * F.col("_base") + F.lit(MINHASH_B[h])) % F.lit(M31)).alias(
             f"mh_{h}"
         )
-        for h in range(num_hashes)
+        for h in range(DEFAULT_NUM_HASHES)
     ]
     return (
         shingle_df.select("doc_id", base.alias("_base"))
@@ -161,9 +161,7 @@ def minhash_signatures(
     )
 
 
-def minhash_signatures_from_docs(
-    docs: DataFrame, k: int = 3, num_hashes: int = DEFAULT_NUM_HASHES
-) -> DataFrame:
+def minhash_signatures_from_docs(docs: DataFrame, k: int = 3) -> DataFrame:
     """MinHash signatures computed row-locally — ZERO shuffle.
 
     Same output as ``shingles → minhash_signatures`` (min() over the
@@ -182,66 +180,66 @@ def minhash_signatures_from_docs(
     whole-stage codegen), and a forked downstream plan (e.g. the LSH
     self-join) re-scans the corpus because there is no Exchange for
     ReuseExchange to collapse — persist, or add an explicit repartition,
-    before forking. The word array is staged through its own projection
-    so the per-shingle lambda doesn't re-split the doc per element (the
-    O(words²) trap — see :func:`shingles`).
+    before forking.
     """
     words = _words(F.col("text"))
     staged = docs.where(F.size(words) >= k).select("doc_id", words.alias("_w"))
-    return staged.select(
-        "doc_id", _rowlocal_bases(k).alias("_bases")
-    ).select("doc_id", *_rowlocal_sig_cols(num_hashes))
+    return _sign_words(staged, k)
 
 
-def _rowlocal_bases(k: int):
-    """Shingle base hashes from a staged ``_w`` word array — THE single
-    definition of the row-local gram→md5-base chain
-    (:func:`minhash_signatures_from_docs` and :func:`sign_generation`
-    both route through here, so the hash formula cannot drift between
-    the LSH path and the stored ledger)."""
-    return F.transform(_kgrams(F.col("_w"), k), _md5_base)
+def _sign_words(rel: DataFrame, k: int = 3) -> DataFrame:
+    """Sign each row of a relation that holds a staged ``_w`` word array:
+    ``_w`` is replaced by ``mh_0 … mh_11``, every other column rides
+    through. THE row-local signing chain — k-gram → md5 base → per-seed
+    ``array_min`` — that :func:`minhash_signatures_from_docs`,
+    :func:`sign_generation` and ``pipeline.curate_corpus`` share, so the
+    hash formula cannot drift between the LSH paths and the stored
+    ledger. Rows under ``k`` words get NULL signatures (a NULL, not
+    empty, base array propagates into every ``mh_*``).
 
-
-def _rowlocal_sig_cols(num_hashes: int) -> list:
-    """Per-seed ``array_min`` signature columns from a staged ``_bases``
-    array (NULL bases ⇒ NULL signatures — the sub-k-doc rule callers
-    choose by how they stage ``_bases``)."""
-    return [
+    Two projections: the base array is bound by the first, so the 12
+    per-seed lambdas read it instead of re-hashing the grams, and the
+    k-gram lambda reads the staged ``_w`` instead of re-splitting the
+    text per element (the O(words²) trap — see :func:`shingles`)."""
+    cols = [c for c in rel.columns if c != "_w"]
+    bases = F.when(
+        F.size("_w") >= k, F.transform(_kgrams(F.col("_w"), k), _md5_base)
+    )
+    sigs = [
         F.array_min(
             F.transform(
                 F.col("_bases"),
                 lambda b: (F.lit(MINHASH_A[h]) * b + F.lit(MINHASH_B[h])) % F.lit(M31),
             )
         ).alias(f"mh_{h}")
-        for h in range(num_hashes)
+        for h in range(DEFAULT_NUM_HASHES)
     ]
+    return rel.select(*cols, bases.alias("_bases")).select(*cols, *sigs)
 
 
-def lsh_bands(
-    signatures: DataFrame, rows_per_band: int = DEFAULT_ROWS_PER_BAND
-) -> DataFrame:
+def lsh_bands(signatures: DataFrame) -> DataFrame:
     """LSH band keys ``(doc_id, band, band_key BIGINT)`` from columnar
-    signatures.
+    signatures ``mh_0 … mh_11``.
 
     band_key = polynomial combine of the band's minhashes
     (``((mh₀·K + mh₁) mod M31 · K + mh₂) mod M31``) — integer math that
     joins on 8-byte keys instead of md5 hex strings. A narrow projection +
-    explode of ``num_bands`` structs per doc — no extra aggregation or
-    sort.
+    explode of 4 band structs per doc — no extra aggregation or sort. A
+    NULL signature (a doc under k words) gives NULL band keys, which no
+    equi-join matches.
     """
-    mh_cols = [c for c in signatures.columns if c.startswith("mh_")]
-    n_bands = len(mh_cols) // rows_per_band
+    r = DEFAULT_ROWS_PER_BAND
 
     def _key(b: int):
-        expr = F.col(f"mh_{b * rows_per_band}")
-        for i in range(1, rows_per_band):
-            expr = (expr * F.lit(BAND_KEY_K) + F.col(f"mh_{b * rows_per_band + i}")) % F.lit(M31)
+        expr = F.col(f"mh_{b * r}")
+        for i in range(1, r):
+            expr = (expr * F.lit(BAND_KEY_K) + F.col(f"mh_{b * r + i}")) % F.lit(M31)
         return expr
 
     bands = F.array(
         *[
             F.struct(F.lit(b).alias("band"), _key(b).alias("band_key"))
-            for b in range(n_bands)
+            for b in range(DEFAULT_NUM_HASHES // r)
         ]
     )
     return signatures.select(
@@ -284,8 +282,6 @@ def lsh_candidate_pairs(
 def minhash_lsh_dedup(
     docs: DataFrame,
     k: int = 3,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    rows_per_band: int = DEFAULT_ROWS_PER_BAND,
     shingle_df: DataFrame | None = None,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -301,7 +297,7 @@ def minhash_lsh_dedup(
     """
     sh = shingle_df if shingle_df is not None else shingles(docs, k=k)
     return lsh_candidate_pairs(
-        lsh_bands(minhash_signatures(sh, num_hashes), rows_per_band),
+        lsh_bands(minhash_signatures(sh)),
         max_bucket_size=max_bucket_size,
     )
 
@@ -882,7 +878,6 @@ def delta_signatures(
     diff: DataFrame,
     new_docs: DataFrame,
     k: int = 3,
-    num_hashes: int = DEFAULT_NUM_HASHES,
 ) -> DataFrame:
     """Incrementally maintain the MinHash signature index across corpus
     generations: re-shingle ONLY the docs :func:`corpus_diff` marks
@@ -921,8 +916,7 @@ def delta_signatures(
     )
     carried = old_sigs.join(unchanged, "doc_id", "left_semi")
     fresh = minhash_signatures(
-        shingles(new_docs.join(dirty, "doc_id", "left_semi"), k=k),
-        num_hashes=num_hashes,
+        shingles(new_docs.join(dirty, "doc_id", "left_semi"), k=k)
     )
     # Schema contract: the output is exactly fresh's (doc_id, mh_*)
     # columns — and exactly its ROW MEMBERSHIP: a sign_generation-style
@@ -945,15 +939,14 @@ def delta_signatures(
 # --------------------------------------------------------------------------
 
 
-def sign_generation(
-    docs: DataFrame, k: int = 3, num_hashes: int = DEFAULT_NUM_HASHES
-) -> DataFrame:
+def sign_generation(docs: DataFrame, k: int = 3) -> DataFrame:
     """The stored signature-ledger row set for ONE crawl generation:
-    ``(doc_id, text_hash, mh_0 … mh_{n-1})``, one row per document.
+    ``(doc_id, text_hash, mh_0 … mh_11)``, one row per document.
     ``text_hash = md5(text)`` always; signatures are computed
-    row-locally (the :func:`minhash_signatures_from_docs` zero-shuffle
-    form — split → k-gram transform → md5 base → ``array_min`` per
-    seed, all inside the scan stage) and are NULL for docs shorter than
+    row-locally (:func:`_sign_words`, the zero-shuffle chain of
+    :func:`minhash_signatures_from_docs` — split → k-gram transform → md5
+    base → ``array_min`` per seed, all inside the scan stage) and are
+    NULL for docs shorter than
     ``k`` words, which carry no shingle evidence but must still be
     diffable next crawl.
 
@@ -962,19 +955,10 @@ def sign_generation(
     against this column, so the old generation contributes 13 slim
     BIGINT/hex columns — never text (the measured SCALE.md
     "Incremental signature maintenance" requirement (1))."""
-    words = _words(F.col("text"))
     staged = docs.select(
-        "doc_id", F.md5("text").alias("text_hash"), words.alias("_w")
+        "doc_id", F.md5("text").alias("text_hash"), _words(F.col("text")).alias("_w")
     )
-    # NULL (not empty) base array for short docs: array_min/transform
-    # propagate the NULL into every mh_* column. Shares the gram/base/
-    # signature expressions with minhash_signatures_from_docs
-    # (_rowlocal_bases/_rowlocal_sig_cols) — one definition of the hash
-    # chain across the LSH path and the stored ledger.
-    bases = F.when(F.size("_w") >= k, _rowlocal_bases(k))
-    return staged.select(
-        "doc_id", "text_hash", bases.alias("_bases")
-    ).select("doc_id", "text_hash", *_rowlocal_sig_cols(num_hashes))
+    return _sign_words(staged, k)
 
 
 def diff_from_ledger(old_sigs: DataFrame, new_docs: DataFrame) -> DataFrame:
@@ -994,7 +978,6 @@ def delta_sign(
     old_sigs: DataFrame,
     new_docs: DataFrame,
     k: int = 3,
-    num_hashes: int = DEFAULT_NUM_HASHES,
     diff: DataFrame | None = None,
 ) -> DataFrame:
     """One-call generation advance for the signature ledger: diff the
@@ -1024,10 +1007,7 @@ def delta_sign(
     dirty = diff.where(F.col("status").isin("added", "changed")).select(
         "doc_id"
     )
-    fresh = sign_generation(
-        new_docs.join(dirty, "doc_id", "left_semi"), k=k,
-        num_hashes=num_hashes,
-    )
+    fresh = sign_generation(new_docs.join(dirty, "doc_id", "left_semi"), k=k)
     carried = old_sigs.join(unchanged, "doc_id", "left_semi")
     return carried.select(*fresh.columns).unionByName(fresh)
 

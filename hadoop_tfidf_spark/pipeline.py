@@ -11,17 +11,21 @@ count: SURVEY.md §3 — chain jobs into one dataflow; here Catalyst gets
 the whole graph and schedules it as one job DAG).
 
 Scale shape (100 TB):
-* annotation (quality + lang-id + the md5 dedup key) is NARROW — one
-  projection splits each text once into a staged word array that both
-  scores read (``_quality_terms`` / ``_lang_argmax``), so the annotate
-  prefix costs zero shuffles and zero joins;
+* annotation (quality + lang-id + the MinHash signature + the md5 dedup
+  key) is NARROW — one projection splits each text once into a staged
+  word array that both scores and the row-local signature read
+  (``_quality_terms`` / ``_lang_argmax`` / ``dedup._sign_words``), so
+  the annotate prefix costs zero shuffles and zero joins, and the
+  corpus is scanned once;
 * filter + exact dedup is ONE aggregation keyed on the md5 (a uniformly
   distributed hash — no skew): each content group keeps its lowest
   PASSING id, which is exactly filter-then-dedup (``_exact_dedup``);
+  the 12 BIGINT signature columns ride through it with the scores;
 * near-dup candidates come from the banded LSH bucket equi-join (never
-  all-pairs) over the raw scan, restricted to kept ids by one
-  ``doc_id`` semi-join, and drop by one ``doc_id`` anti-join — both
-  keyed on the same hash, so AQE coalesces and reuses exchanges;
+  all-pairs) over the kept rows' signatures, with or without a
+  bucket-size cap, and drop by one ``doc_id`` anti-join; the band
+  self-join and the anti-join read the same dedup aggregation, so its
+  exchange is reused rather than recomputed;
 * nothing is persisted: the plan is one job DAG, and a 100 TB run
   checkpoints stage outputs to parquet instead (splits feed trainers,
   drop lists feed audits);
@@ -48,7 +52,12 @@ from hadoop_tfidf_spark.functions.text import (
     _lang_argmax,
     _quality_terms,
 )
-from hadoop_tfidf_spark.operators.dedup import _words, minhash_lsh_dedup
+from hadoop_tfidf_spark.operators.dedup import (
+    _sign_words,
+    _words,
+    lsh_bands,
+    lsh_candidate_pairs,
+)
 from hadoop_tfidf_spark.operators.sampling import hash_split
 
 DEFAULT_SPLITS = {"train": 90, "valid": 5, "test": 5}
@@ -102,8 +111,9 @@ def curate_corpus(
     """
     text = ["text"] if keep_text else []
     # annotate once: the word array is bound by its own projection, and
-    # quality and lang-id both read it (CollapseProject keeps a
-    # multi-referenced split staged), so each text is split once
+    # quality, lang-id and the MinHash signature all read it
+    # (CollapseProject keeps a multi-referenced split staged), so each
+    # text is split once
     staged = docs.select(
         "doc_id",
         *text,
@@ -114,39 +124,26 @@ def curate_corpus(
     )
     quality = _quality_terms(F.col("_w"), F.col("_a"), F.col("_n"))[-1]
     pred_lang, _ = _lang_argmax(F.col("_w"))
+    # the signature rides through the dedup aggregation with the scores,
+    # so LSH reads the kept rows and the corpus is scanned once. A pair
+    # is a candidate iff the two docs share a band bucket (a function of
+    # their own signatures), so this is the full corpus's pairs with both
+    # ends kept, and a bucket-size cap counts kept rows only.
     kept = _exact_dedup(
-        staged.select(
-            "doc_id",
-            *text,
-            "_h",
-            quality.alias("quality"),
-            pred_lang.alias("pred_lang"),
+        _sign_words(
+            staged.select(
+                "doc_id",
+                *text,
+                "_h",
+                quality.alias("quality"),
+                pred_lang.alias("pred_lang"),
+                "_w",
+            )
         ),
         lang,
         min_quality,
     )
-    if max_bucket_size is None:
-        # Physical-strategy identity: a pair is an LSH candidate iff the
-        # two docs share a band bucket — a function of each doc's OWN
-        # signature only. So candidates-among-kept == candidates-on-the-
-        # full-corpus with both endpoints restricted to kept, and the
-        # shingle/signature explode runs off the raw scan. Only ``doc_a``
-        # needs the kept test here: the anti-join below removes ``doc_b``
-        # from kept, so a ``doc_b`` outside kept drops nothing.
-        pairs = minhash_lsh_dedup(docs.select("doc_id", "text")).join(
-            kept.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
-        )
-    else:
-        # A bucket-size cap breaks the identity (bucket populations differ
-        # between the raw and filtered corpora), so the capped variant
-        # pays for LSH over the kept corpus, its text re-attached from the
-        # raw scan by a doc_id semi-join.
-        pairs = minhash_lsh_dedup(
-            docs.select("doc_id", "text").join(
-                kept.select("doc_id"), "doc_id", "left_semi"
-            ),
-            max_bucket_size=max_bucket_size,
-        )
+    pairs = lsh_candidate_pairs(lsh_bands(kept), max_bucket_size=max_bucket_size)
     near_drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     kept = kept.join(near_drop, "doc_id", "left_anti")
     if embeddings is not None:

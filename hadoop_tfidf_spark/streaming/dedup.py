@@ -8,7 +8,8 @@ Each micro-batch:
 1. computes the batch's signatures ROW-LOCALLY
    (:func:`hadoop_tfidf_spark.operators.dedup.minhash_signatures_from_docs`
    — zero shuffle; a micro-batch never forks, so the aggregate path's
-   exchange-reuse argument doesn't apply) and explodes them to band keys;
+   exchange-reuse argument doesn't apply) and explodes them to band keys
+   in the fixed 4 × 3 geometry of ``operators.dedup``;
 2. joins the new band keys against the ACCUMULATED index (new-vs-old
    candidates) and against themselves (new-vs-new) — both equi-joins on
    ``(band, band_key)``, the same bucket-join shape as the batch operator,
@@ -46,26 +47,20 @@ _STAGING_PREFIX = "_staging_"
 
 class IncrementalLshIndex:
     """Maintains ``{index_dir}/batch=<bid>/{bands,pairs}`` under a stream
-    of ``(doc_id, text)`` documents."""
+    of ``(doc_id, text)`` documents. Only the shingle width ``k`` is
+    settable: the signature and band geometry is the batch operator's
+    fixed one (12 hashes in 4 bands × 3 rows), so stored bands from every
+    batch, and the batch pairs of the equivalence guarantee, share it."""
 
     def __init__(
         self,
         spark: SparkSession,
         index_dir: str,
         k: int = 3,
-        num_hashes: int | None = None,
-        rows_per_band: int | None = None,
     ) -> None:
-        from hadoop_tfidf_spark.operators.dedup import (
-            DEFAULT_NUM_HASHES,
-            DEFAULT_ROWS_PER_BAND,
-        )
-
         self.spark = spark
         self.index_dir = index_dir.rstrip("/")
         self.k = k
-        self.num_hashes = num_hashes or DEFAULT_NUM_HASHES
-        self.rows_per_band = rows_per_band or DEFAULT_ROWS_PER_BAND
 
     # -- Hadoop FS plumbing (file:, hdfs://, s3a://, ...) ------------------
     def _jpath(self, p: str):
@@ -143,10 +138,7 @@ class IncrementalLshIndex:
                         pass
 
         new_bands = lsh_bands(
-            minhash_signatures_from_docs(
-                docs_batch, k=self.k, num_hashes=self.num_hashes
-            ),
-            self.rows_per_band,
+            minhash_signatures_from_docs(docs_batch, k=self.k)
         ).localCheckpoint()  # computed once: feeds 3 joins + the write
 
         old_bands = self.bands_table()

@@ -228,3 +228,76 @@ class TestPandasCosine:
         for key, (cos, rn) in expr_out.items():
             assert abs(pd_out[key][0] - cos) <= 1e-6
             assert pd_out[key][1] == rn
+
+
+def test_fuzzy_pairs_threshold_matches_unbounded_filter(spark):
+    """3-arg thresholded levenshtein keeps exactly the pairs the unbounded
+    distance + filter keeps, with the same distances — including a LONG
+    near-dup pair (the case the banded early-exit kernel exists for) and a
+    pair beyond the threshold (dropped, was -1 internally)."""
+    from hadoop_tfidf_spark.operators.dedup import fuzzy_pairs
+
+    long_a = ("lorem ipsum dolor sit amet " * 400).strip()  # ~10.8k chars
+    long_b = long_a[:-4] + "amex"  # distance 1 (amet -> amex)
+    docs = spark.createDataFrame(
+        [(1, long_a), (2, long_b), (3, "completely different text"), (4, "completely different texts")],
+        "doc_id BIGINT, text STRING",
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3), (3, 4)], "doc_a BIGINT, doc_b BIGINT"
+    )
+    unbounded = {
+        (r.doc_a, r.doc_b): r.edit_dist
+        for r in fuzzy_pairs(docs, pairs).collect()
+        if r.edit_dist <= 5
+    }
+    thresholded = {
+        (r.doc_a, r.doc_b): r.edit_dist
+        for r in fuzzy_pairs(docs, pairs, max_dist=5).collect()
+    }
+    assert thresholded == unbounded
+    assert thresholded[(1, 2)] == 1 and thresholded[(3, 4)] == 1
+    assert (1, 3) not in thresholded  # beyond max_dist → dropped, not -1
+
+
+def test_span_dedup_sliding_catches_offset_duplicates(spark):
+    """A duplicated passage that starts MID-span of the fixed tiling is
+    caught by the sliding form (stride 1 = every boundary) and missed by
+    the fixed one — the point of the stride parameter; covered words
+    drop, others survive. (stride s only aligns starts ≡ 1 mod s: the
+    recall-vs-cost dial.)"""
+    from hadoop_tfidf_spark.operators.dedup import span_dedup
+
+    shared = "alpha beta gamma delta epsilon"  # 5-word duplicated passage
+    docs = spark.createDataFrame(
+        [
+            # passage starts at word 2 (mid-tile) in doc 1, word 3 in doc 2
+            (1, f"x {shared} y z w v u t"),
+            (2, f"p q {shared} r s t u v"),
+            (3, "nothing shared with anyone here at all"),
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    fixed = {r.doc_id: r for r in span_dedup(docs, span_words=5).collect()}
+    assert fixed[1].n_dup_spans == 0  # tiling misses the offset passage
+    sliding = {
+        r.doc_id: r
+        for r in span_dedup(docs, span_words=5, stride=1).collect()
+    }
+    assert sliding[1].n_dup_spans >= 1
+    for w in shared.split():
+        assert w not in sliding[1].clean_text.split()
+        assert w not in sliding[2].clean_text.split()
+    assert "x" in sliding[1].clean_text.split()  # uncovered word survives
+    assert sliding[3].n_dup_spans == 0
+    assert sliding[3].clean_text == "nothing shared with anyone here at all"
+
+
+def test_span_dedup_sliding_rejects_bad_stride(spark):
+    import pytest
+
+    from hadoop_tfidf_spark.operators.dedup import span_dedup
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id BIGINT, text STRING")
+    with pytest.raises(ValueError):
+        span_dedup(docs, span_words=5, stride=0)

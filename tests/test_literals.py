@@ -97,3 +97,20 @@ def test_micro_batch_commit_builds_no_python_rdd(spark, tmp_path, monkeypatch):
         docs.select("doc_id").distinct().count(),
         1,
     )
+
+
+def test_local_relation_accepts_not_null_ddl(spark):
+    """A DDL that marks fields NOT NULL, written by hand or by
+    ``DataFrame.schema.toDDL()`` for literal and aggregated columns,
+    gives the rows back with every field nullable."""
+    from pyspark.sql import functions as F
+
+    from hadoop_tfidf_spark.functions.literals import _local_relation
+
+    hand = _local_relation(spark, [(1, "a"), (2, None)], "x BIGINT NOT NULL, s STRING")
+    assert sorted(hand.collect()) == [(1, "a"), (2, None)]
+    assert all(f.nullable for f in hand.schema.fields)
+    ddl = spark.range(2).select("id", F.lit("s").alias("s")).schema.toDDL()
+    assert "NOT NULL" in ddl
+    rows = [(7, "p"), (8, "q")]
+    assert sorted(_local_relation(spark, rows, ddl).collect()) == rows

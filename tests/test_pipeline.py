@@ -177,17 +177,41 @@ def test_curate_keep_text_is_the_same_plan(spark):
 
 
 def test_curate_splits_each_text_once_per_branch(spark):
-    """The optimized plan holds 6 ``split(`` calls: the annotate
-    projection on each of the two kept-relation references (the near-dup
-    semi-join and the final anti-join) and the shingle projection plus
-    its length filter on each side of the LSH self-join. Quality and
-    lang-id read the staged word array instead of re-splitting."""
+    """The optimized plan holds 3 ``split(`` calls: the annotate
+    projection under each of the kept relation's three references (the
+    final anti-join and both sides of the LSH band self-join, which read
+    the kept rows' signatures instead of re-shingling the corpus).
+    Quality, lang-id and the MinHash signature all read the staged word
+    array instead of re-splitting."""
     from hadoop_tfidf_spark.corpus import load_docs
     from hadoop_tfidf_spark.pipeline import curate_corpus
 
     docs = load_docs(spark, f"{SF_DIR_SMOKE}/documents.parquet")
     plan = curate_corpus(docs)._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("split(") == 6
+    assert plan.count("split(") == 3
+
+
+@pytest.mark.parametrize("cap", [8, 2])
+def test_curate_capped_rows_equal_lsh_over_kept_corpus(spark, cap):
+    """With a bucket-size cap, curation keeps exactly the rows of a
+    reference built from public operators: filter on lang-id and
+    quality, exact dedup, ``minhash_lsh_dedup`` over that kept corpus
+    with the same cap, then dropping the higher id of each pair."""
+    from hadoop_tfidf_spark.corpus import load_docs
+    from hadoop_tfidf_spark.functions.text import lang_id_columns, quality_column
+    from hadoop_tfidf_spark.operators.dedup import exact_dedup_apply, minhash_lsh_dedup
+    from hadoop_tfidf_spark.pipeline import curate_corpus
+
+    docs = load_docs(spark, f"{SF_DIR_SMOKE}/documents.parquet")
+    text = F.col("text")
+    kept = exact_dedup_apply(
+        docs.where((lang_id_columns(text)[0] == "en") & (quality_column(text) >= 0.5))
+    )
+    kept_ids = {r.doc_id for r in kept.select("doc_id").collect()}
+    near = {r.doc_b for r in minhash_lsh_dedup(kept, max_bucket_size=cap).collect()}
+    got = {r.doc_id for r in curate_corpus(docs, max_bucket_size=cap).collect()}
+    assert got == kept_ids - near
+    assert near & kept_ids and got
 
 
 def test_exact_dedup_keeps_lowest_passing_copy(spark):

@@ -77,18 +77,19 @@ def test_minhash_lsh_no_cartesian(stats_of):
 
 def test_pipeline_curate_narrow_prefix_no_smj(stats_of):
     """The curation pipeline must stay broadcast/equi-join only (no
-    sort-merge, no cartesian) and its annotate prefix is narrow. Its
-    shuffles are the exact-dedup aggregation on the content hash, the
-    LSH signature aggregation, the near-drop distinct and the doc_id
-    exchange under the final anti-join (which AQE then broadcasts); the
-    band join and the kept-id semi-join broadcast. Its two parquet
-    scans are the annotate branch and the LSH shingle branch."""
+    sort-merge, no cartesian) and its annotate prefix is narrow. It
+    scans the corpus once: the annotate projection signs each document,
+    and the LSH band self-join reads the kept rows' signatures. Its
+    shuffles are the exact-dedup aggregation on the content hash (reused
+    by the band self-join and the final anti-join), the near-drop
+    distinct, and at most one doc_id exchange under the anti-join; the
+    band join broadcasts."""
     s = stats_of("pipeline_curate")
     assert s.cartesian_products == 0
     assert s.nested_loop_joins == 0
     assert s.sort_merge_joins == 0
-    assert s.shuffle_exchanges <= 4
-    assert s.parquet_scans <= 2
+    assert s.shuffle_exchanges <= 3
+    assert s.parquet_scans == 1
 
 
 def test_minhash_capped_is_agg_plus_equi_joins(stats_of):

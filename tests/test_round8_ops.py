@@ -136,7 +136,7 @@ def test_sim_recall_audit_contract(spark):
     gate; this pins the shape and internal consistency. (On the random
     synthetic embeddings recall at nprobe=2/16 is legitimately low —
     that's the telemetry working, not a bug; the clustered-data recall
-    semantics are pinned in test_round7_ops.test_ivfpq_recall_vs_brute.)"""
+    semantics are pinned in test_ivf.test_ivfpq_recall_vs_brute.)"""
     from hadoop_tfidf_spark.extensions import SIM_K, SIM_QUERY_IDS, q_sim_recall_audit
 
     rows = q_sim_recall_audit(spark, "/root/testdata/sf0.001").collect()

@@ -194,3 +194,24 @@ def test_streaming_dsir_releases_its_ratio_table(spark):
     out = q_streaming_dsir(spark, SF_DIR)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert out.count() > 0
+
+
+def test_streaming_staging_dirs_registered_for_cleanup():
+    """staging_dir() creates real dirs and registers them for atexit
+    removal; manual cleanup empties the registry."""
+    import os
+
+    from hadoop_tfidf_spark.streaming.windows import (
+        _STAGING_DIRS,
+        _cleanup_staging_dirs,
+        staging_dir,
+    )
+
+    before = list(_STAGING_DIRS)
+    d = staging_dir("spark_graft_test_")
+    assert os.path.isdir(d) and d in _STAGING_DIRS
+    _cleanup_staging_dirs()
+    assert not os.path.isdir(d) and not _STAGING_DIRS
+    # earlier dirs from this session were removed too (best-effort)
+    for p in before:
+        assert not os.path.isdir(p)

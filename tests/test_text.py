@@ -1,8 +1,12 @@
-"""functions.text annotation operators: repetition statistics on
-planted docs, and how often each text is split in the optimized plans
-of the lang-id, quality and stratified-sample queries."""
+"""functions.text annotation operators: repetition statistics,
+self-dedup spans, the C4 filters, co-occurrence and the LM-score
+histogram on planted docs, and how often each text is split in the
+optimized plans of the lang-id, quality and stratified-sample
+queries."""
 
 from __future__ import annotations
+
+import time
 
 from tests.conftest import SF_DIR_SMOKE
 
@@ -63,3 +67,111 @@ def test_stratified_sample_splits_each_text_once_per_use(spark):
     from hadoop_tfidf_spark.extensions import q_text_stratified_sample
 
     assert _splits(q_text_stratified_sample(spark, SF_DIR_SMOKE)) == 3
+
+
+def test_self_dedup_first_occurrence_semantics(spark):
+    """array_distinct keeps the FIRST occurrence of each span in order —
+    identical semantics to the old quadratic filter, pinned by hand."""
+    from hadoop_tfidf_spark.functions.text import self_dedup_spans
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c d a b e f c d"),  # spans: "a b","c d","a b","e f","c d"
+            (2, "x y"),
+            (3, ""),
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    got = {r.doc_id: r for r in self_dedup_spans(docs, span_words=2).collect()}
+    assert got[1].n_spans == 5 and got[1].n_repeated == 2
+    assert got[1].clean_text == "a b c d e f"
+    assert got[2].n_spans == 1 and got[2].n_repeated == 0
+    assert got[3].n_spans == 0 and got[3].clean_text == ""
+
+
+def test_self_dedup_giant_doc_is_linear(spark):
+    """The planted outlier: one 100k-word doc made of a repeated 4-word
+    loop — 50k spans. The old ``filter(array_position == i+1)`` pass was
+    O(spans²) ≈ 2.5e9 comparisons on ONE task row; the array_distinct
+    form is a single linear hash-set pass and must finish in seconds."""
+    from hadoop_tfidf_spark.functions.text import self_dedup_spans
+
+    giant = "one two three four " * 25_000  # 100k words, 50k 2-word spans
+    docs = spark.createDataFrame(
+        [(1, giant.strip()), (2, "tiny doc here now")],
+        "doc_id BIGINT, text STRING",
+    )
+    t0 = time.time()
+    got = {r.doc_id: r for r in self_dedup_spans(docs, span_words=2).collect()}
+    assert time.time() - t0 < 60  # old quadratic form: hours
+    # spans alternate "one two" / "three four"; only the first of each kept
+    assert got[1].n_spans == 50_000
+    assert got[1].n_repeated == 49_998
+    assert got[1].clean_text == "one two three four"
+    assert got[2].n_repeated == 0
+
+
+def test_c4_filters_zero_word_doc_gets_keep_false_row(spark):
+    """A zero-word doc now emits an explicit keep=false verdict row (NULL
+    ratios, all flags false) instead of silently vanishing."""
+    from hadoop_tfidf_spark.functions.text import c4_quality_filters
+
+    docs = spark.createDataFrame(
+        [(1, ""), (2, "   "), (3, "some real words here in the doc")],
+        "doc_id BIGINT, text STRING",
+    )
+    got = {r.doc_id: r for r in c4_quality_filters(docs).collect()}
+    assert set(got) == {1, 2, 3}  # empty docs present
+    for d in (1, 2):
+        assert got[d].n_words == 0
+        assert got[d].mean_word_len is None
+        assert not got[d].keep
+        assert not (got[d].pass_word_len or got[d].pass_dup or got[d].pass_stop)
+    assert got[3].n_words == 7
+
+
+def test_cooccurrence_cap_truncates_deterministically(spark):
+    """max_doc_vocab keeps the FIRST n distinct tokens in document order:
+    pairs involving later-vocabulary tokens vanish, earlier pairs keep
+    their counts."""
+    from hadoop_tfidf_spark.functions.text import cooccurrence
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b x y")], "doc_id BIGINT, text STRING"
+    )
+    full = {(r.w1, r.w2): r.n for r in cooccurrence(docs, top=100).collect()}
+    capped = {
+        (r.w1, r.w2): r.n
+        for r in cooccurrence(docs, top=100, max_doc_vocab=2).collect()
+    }
+    assert capped == {("a", "b"): 2}  # only the first-2 vocab pair survives
+    assert full[("a", "b")] == 2 and ("c", "d") in full
+
+
+def test_lm_histogram_buckets_and_shares(spark):
+    """Histogram buckets are floor(score/width), shares sum to 1 over
+    scored docs, and docs without bigrams (NULL score) are excluded."""
+    from hadoop_tfidf_spark.functions.text import lm_score, lm_score_histogram
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a b a b a b"),
+            (2, "a b c d e f"),
+            (3, "z z z z"),
+            (4, "solo"),  # < 2 words -> NULL score, excluded
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    hist = lm_score_histogram(docs, bucket_width=0.25).collect()
+    scored = {
+        r.doc_id: r.lm_score
+        for r in lm_score(docs).collect()
+        if r.lm_score is not None
+    }
+    assert len(scored) == 3
+    import math
+
+    expected_buckets = {math.floor(v / 0.25) for v in scored.values()}
+    assert {r.bucket for r in hist} == expected_buckets
+    assert sum(r.n_docs for r in hist) == 3
+    assert abs(sum(r.doc_share for r in hist) - 1.0) < 1e-6
