@@ -207,8 +207,9 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--lang", default="en", help="curate: language to keep")
     p.add_argument("--min-quality", type=float, default=0.5)
     p.add_argument("--max-bucket-size", type=int, default=None, metavar="N",
-                   help="curate: drop LSH bands whose bucket exceeds N docs "
-                        "(the boilerplate-megabucket safety valve)")
+                   help="curate: ignore LSH buckets holding more than N docs "
+                        "(a boilerplate megabucket then drops nothing: a "
+                        "recall trade)")
     p.add_argument("--splits", default=None, metavar="NAME=PCT,...",
                    help="curate: split percentages, e.g. train=90,valid=5,"
                         "test=5 (must sum to 100; default 90/5/5)")

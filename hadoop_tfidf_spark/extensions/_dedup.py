@@ -66,8 +66,8 @@ def q_dedup_minhash_lsh(spark, sf_dir):
 #: caps in the hundreds-to-thousands (drop only boilerplate megabuckets);
 #: the synthetic corpus has no megabuckets (max bucket = 4 docs), so 2 is
 #: the only value that *engages* the valve here — it drops the size-3/4
-#: buckets (25→22 pairs at sf0.01) and thereby gives the cap's sizes-agg +
-#: filter-join dataflow both a correctness row and a bench timing signal.
+#: buckets (25→22 pairs at sf0.01) and thereby gives the cap's bucket-size
+#: window + filter dataflow both a correctness row and a bench timing signal.
 GATE_LSH_BUCKET_CAP = 2
 
 

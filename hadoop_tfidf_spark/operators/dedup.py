@@ -16,7 +16,9 @@ Scale design (100 TB):
   map-side explode + per-(doc, hash-seed) min aggregation; candidate
   generation is an equi-join on (band, band_key), i.e. a *bucket* join whose
   fan-out is bounded by real near-duplicate cluster sizes, never the O(n²)
-  cross join. Skewed buckets (boilerplate docs) are AQE-split.
+  cross join. Skewed buckets (boilerplate docs) are AQE-split. Where only
+  the drop set is needed (curation), one window per bucket replaces the
+  pairs (``lsh_bucket_drops``): linear in bucket size.
 * SimHash — 64→32-bit signature; candidate pairs via the pigeonhole band
   trick (hamming ≤ 3 ⇒ some 8-bit band equal), again an equi-join.
 * Jaccard verify — exact intersection counts only over LSH candidates.
@@ -247,6 +249,19 @@ def lsh_bands(signatures: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
 
 
+def _bucketed(bands: DataFrame) -> DataFrame:
+    """Bands rows with their bucket's size ``_bs`` and lowest id ``_min``:
+    one window over ``(band, band_key)`` (Catalyst prunes whichever of the
+    two a caller never reads). A NULL key (a doc under k words) is no
+    bucket, so those rows go before the window would group them."""
+    w = Window.partitionBy("band", "band_key")
+    return bands.where(F.col("band_key").isNotNull()).select(
+        *bands.columns,
+        F.count("*").over(w).alias("_bs"),
+        F.min("doc_id").over(w).alias("_min"),
+    )
+
+
 def lsh_candidate_pairs(
     bands: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
@@ -259,16 +274,12 @@ def lsh_candidate_pairs(
     self-join squares it. Capping drops buckets above the threshold (their
     members still pair through their OTHER bands unless equally megahot —
     the standard recall-for-survival trade; log what was dropped and
-    handle megaclusters with exact dedup first). Cap detection is one
-    aggregation on the bucket key, not a window.
+    handle megaclusters with exact dedup first). Cap detection is the
+    bucket-size window of :func:`_bucketed`, whose exchange on the bucket
+    key both sides of the self-join read, so the input is scanned once.
     """
     if max_bucket_size is not None:
-        sizes = bands.groupBy("band", "band_key").agg(F.count("*").alias("_bs"))
-        bands = (
-            bands.join(
-                sizes.where(F.col("_bs") <= max_bucket_size), ["band", "band_key"]
-            ).drop("_bs")
-        )
+        bands = _bucketed(bands).where(F.col("_bs") <= max_bucket_size)
     a = bands.select("band", "band_key", F.col("doc_id").alias("doc_a"))
     b = bands.select("band", "band_key", F.col("doc_id").alias("doc_b"))
     return (
@@ -277,6 +288,24 @@ def lsh_candidate_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
+
+
+def lsh_bucket_drops(
+    bands: DataFrame, max_bucket_size: int | None = None
+) -> DataFrame:
+    """``doc_id`` of every doc that shares some (band, band_key) bucket
+    holding ``≤ max_bucket_size`` rows (any size when uncapped) with a
+    lower ``doc_id``: the ``doc_b`` set of :func:`lsh_candidate_pairs`
+    with the same cap, i.e. the 1-hop min-id drop rule, from one window
+    (:func:`_bucketed`) and no pair relation. A megabucket is one window
+    partition, sorted in linear, spillable work, where the pair self-join
+    emits the square of its size. An id repeats once per bucket it drops
+    in; anti-join against it rather than ``distinct`` it.
+    """
+    drop = F.col("_min") < F.col("doc_id")
+    if max_bucket_size is not None:
+        drop = drop & (F.col("_bs") <= max_bucket_size)
+    return _bucketed(bands).where(drop).select("doc_id")
 
 
 def minhash_lsh_dedup(

@@ -21,11 +21,14 @@ Scale shape (100 TB):
   distributed hash — no skew): each content group keeps its lowest
   PASSING id, which is exactly filter-then-dedup (``_exact_dedup``);
   the 12 BIGINT signature columns ride through it with the scores;
-* near-dup candidates come from the banded LSH bucket equi-join (never
-  all-pairs) over the kept rows' signatures, with or without a
-  bucket-size cap, and drop by one ``doc_id`` anti-join; the band
-  self-join and the anti-join read the same dedup aggregation, so its
-  exchange is reused rather than recomputed;
+* the near-dup drop set is a bucket minimum over the kept rows' LSH
+  band keys (``dedup.lsh_bucket_drops``): one window over
+  ``(band, band_key)`` — one exchange on the bucket key, no pair
+  relation, no self-join — and it leaves by one ``doc_id`` anti-join.
+  A boilerplate megabucket is one window partition, sorted in linear,
+  spillable work, where a pair self-join would emit the square of its
+  size. The window and the anti-join are the kept relation's only two
+  references and reuse the dedup aggregation's exchange;
 * nothing is persisted: the plan is one job DAG, and a 100 TB run
   checkpoints stage outputs to parquet instead (splits feed trainers,
   drop lists feed audits);
@@ -35,9 +38,12 @@ Scale shape (100 TB):
 
 Near-dup policy: a doc is dropped when it appears as the HIGHER id
 (``doc_b``) of any LSH candidate pair — the 1-hop min-id canonical rule.
-Chains (a,b),(b,c) therefore keep only ``a`` (conservative: both
-non-minimal members drop). The fixpoint variant that keeps one survivor
-per connected component exists as
+It is computed as a bucket minimum, without building the pairs: a doc
+drops exactly when some non-NULL ``(band, band_key)`` bucket it sits in
+holds a lower ``doc_id`` (and, with ``max_bucket_size``, holds at most
+that many rows). Chains (a,b),(b,c) therefore keep only ``a``
+(conservative: both non-minimal members drop). The fixpoint variant
+that keeps one survivor per connected component exists as
 :func:`hadoop_tfidf_spark.operators.dedup.near_dup_components`; the 1-hop
 rule is the SQL-expressible one, so it is what the oracle gate checks.
 """
@@ -56,7 +62,7 @@ from hadoop_tfidf_spark.operators.dedup import (
     _sign_words,
     _words,
     lsh_bands,
-    lsh_candidate_pairs,
+    lsh_bucket_drops,
 )
 from hadoop_tfidf_spark.operators.sampling import hash_split
 
@@ -125,10 +131,10 @@ def curate_corpus(
     quality = _quality_terms(F.col("_w"), F.col("_a"), F.col("_n"))[-1]
     pred_lang, _ = _lang_argmax(F.col("_w"))
     # the signature rides through the dedup aggregation with the scores,
-    # so LSH reads the kept rows and the corpus is scanned once. A pair
-    # is a candidate iff the two docs share a band bucket (a function of
-    # their own signatures), so this is the full corpus's pairs with both
-    # ends kept, and a bucket-size cap counts kept rows only.
+    # so LSH bands the kept rows and the corpus is scanned once. A bucket
+    # is a function of its members' own signatures, so each kept doc
+    # drops iff a lower kept id shares one of its buckets, and a
+    # bucket-size cap counts kept rows only.
     kept = _exact_dedup(
         _sign_words(
             staged.select(
@@ -143,8 +149,7 @@ def curate_corpus(
         lang,
         min_quality,
     )
-    pairs = lsh_candidate_pairs(lsh_bands(kept), max_bucket_size=max_bucket_size)
-    near_drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    near_drop = lsh_bucket_drops(lsh_bands(kept), max_bucket_size=max_bucket_size)
     kept = kept.join(near_drop, "doc_id", "left_anti")
     if embeddings is not None:
         # Third dedup modality (SemDeDup): docs whose embedding loses its

@@ -12,6 +12,8 @@ from hadoop_tfidf_spark.session import get_spark
 SF_DIR_SMOKE = "/root/testdata/sf0.001"
 SF_DIR_CORRECTNESS = "/root/testdata/sf0.01"
 
+TZ_KEY = "spark.sql.session.timeZone"
+
 
 @pytest.fixture(scope="session")
 def spark():

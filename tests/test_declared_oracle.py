@@ -1,5 +1,6 @@
 """t2-style oracle-diff tests: every declared query (the __spark_entry__
-contract) hash-matches the DuckDB oracle at sf0.01 (SURVEY.md §5.1)."""
+contract) hash-matches the DuckDB oracle at sf0.01 (SURVEY.md §5.1), and
+gate relations that could match vacuously are non-empty."""
 
 from __future__ import annotations
 
@@ -32,3 +33,14 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns == ["query_id", "doc_id", "score", "rnk"]
+
+
+def test_gate_relations_are_non_vacuous(spark):
+    """Two gate relations that could match vacuously (empty == empty)
+    check real data at the gate SF."""
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    sf = SF_DIR_CORRECTNESS
+    assert qs["dedup_embedding"](spark, sf).count() > 0
+    assert qs["rel_customers_without_orders"](spark, sf).count() > 0

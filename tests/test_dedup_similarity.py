@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from hadoop_tfidf_spark.operators import dedup as D
 from hadoop_tfidf_spark.operators import similarity as S
+from tests.conftest import SF_DIR_SMOKE
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -301,3 +302,77 @@ def test_span_dedup_sliding_rejects_bad_stride(spark):
     docs = spark.createDataFrame([(1, "a b c")], "doc_id BIGINT, text STRING")
     with pytest.raises(ValueError):
         span_dedup(docs, span_words=5, stride=0)
+
+
+@pytest.mark.parametrize("cap", [None, 8, 2])
+def test_lsh_bucket_drops_equal_candidate_pair_doc_b(spark, cap):
+    """The bucket-minimum drop set is exactly the ``doc_b`` set of the
+    candidate pairs over the same bands and cap (the 1-hop min-id rule)."""
+    docs = spark.read.parquet(f"{SF_DIR_SMOKE}/documents.parquet")
+    bands = D.lsh_bands(D.minhash_signatures_from_docs(docs))
+    got = {r.doc_id for r in D.lsh_bucket_drops(bands, cap).collect()}
+    want = {
+        r.doc_b
+        for r in D.lsh_candidate_pairs(bands, cap).select("doc_b").distinct().collect()
+    }
+    assert want and got == want
+
+
+def test_lsh_bucket_drops_null_keys_and_chains(spark):
+    """NULL band keys are no bucket, so two NULL-key rows drop nothing;
+    a chain (1,2) in band 0 and (2,3) in band 1 drops both 2 and 3 —
+    1-hop, not a fixpoint — and never the chain's minimum."""
+    bands = spark.createDataFrame(
+        [
+            (7, 0, None), (8, 0, None),
+            (1, 0, 10), (2, 0, 10),
+            (2, 1, 20), (3, 1, 20),
+            (3, 2, 30),
+        ],
+        "doc_id BIGINT, band INT, band_key BIGINT",
+    )
+    got = sorted(r.doc_id for r in D.lsh_bucket_drops(bands).collect())
+    assert got == [2, 3]
+    # a cap of 1 rules out every two-row bucket, so nothing drops
+    assert D.lsh_bucket_drops(bands, max_bucket_size=1).count() == 0
+
+
+def test_curate_megabucket_keeps_only_lowest_id(spark):
+    """~200 docs share one template and differ in one trailing word, so
+    they land together in one bucket per band (a megabucket): curation
+    keeps only the lowest id, with no pair relation built."""
+    from hadoop_tfidf_spark.pipeline import curate_corpus
+
+    template = (
+        "the cat is a friend of the dog and the bird is to the east "
+        "of the barn and the sun is a lamp of the sky and the moon "
+        "is to the west of the hill and the fox is a guest of the "
+        "field and the owl is to the north of the"
+    )
+    docs = spark.createDataFrame(
+        [(i, f"{template} w{i}") for i in range(100, 300)],
+        "doc_id BIGINT, text STRING",
+    )
+    assert [r.doc_id for r in curate_corpus(docs).collect()] == [100]
+
+
+def test_fuzzy_pairs_exact_distances(spark):
+    """Levenshtein verification over supplied candidate pairs: exact
+    distances, threshold filter, and no all-pairs work (only listed
+    candidates are scored)."""
+    from hadoop_tfidf_spark.operators.dedup import fuzzy_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "kitten"), (2, "sitting"), (3, "kitten"), (4, "zzzz")],
+        "doc_id BIGINT, text STRING",
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3)], "doc_a BIGINT, doc_b BIGINT"
+    )
+    got = {
+        (r.doc_a, r.doc_b): r.edit_dist
+        for r in fuzzy_pairs(docs, pairs).collect()
+    }
+    assert got == {(1, 2): 3, (1, 3): 0}  # classic kitten->sitting = 3
+    kept = fuzzy_pairs(docs, pairs, max_dist=1).collect()
+    assert [(r.doc_a, r.doc_b) for r in kept] == [(1, 3)]

@@ -177,18 +177,18 @@ def test_curate_keep_text_is_the_same_plan(spark):
 
 
 def test_curate_splits_each_text_once_per_branch(spark):
-    """The optimized plan holds 3 ``split(`` calls: the annotate
-    projection under each of the kept relation's three references (the
-    final anti-join and both sides of the LSH band self-join, which read
-    the kept rows' signatures instead of re-shingling the corpus).
-    Quality, lang-id and the MinHash signature all read the staged word
-    array instead of re-splitting."""
+    """The optimized plan holds 2 ``split(`` calls: the annotate
+    projection under each of the kept relation's two references (the
+    final anti-join and the bucket window, which reads the kept rows'
+    signatures instead of re-shingling the corpus). Quality, lang-id and
+    the MinHash signature all read the staged word array instead of
+    re-splitting."""
     from hadoop_tfidf_spark.corpus import load_docs
     from hadoop_tfidf_spark.pipeline import curate_corpus
 
     docs = load_docs(spark, f"{SF_DIR_SMOKE}/documents.parquet")
     plan = curate_corpus(docs)._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("split(") == 3
+    assert plan.count("split(") == 2
 
 
 @pytest.mark.parametrize("cap", [8, 2])

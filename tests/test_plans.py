@@ -79,26 +79,51 @@ def test_pipeline_curate_narrow_prefix_no_smj(stats_of):
     """The curation pipeline must stay broadcast/equi-join only (no
     sort-merge, no cartesian) and its annotate prefix is narrow. It
     scans the corpus once: the annotate projection signs each document,
-    and the LSH band self-join reads the kept rows' signatures. Its
+    and the near-dup drop reads the kept rows' band keys. Its two
     shuffles are the exact-dedup aggregation on the content hash (reused
-    by the band self-join and the final anti-join), the near-drop
-    distinct, and at most one doc_id exchange under the anti-join; the
-    band join broadcasts."""
+    by the final anti-join) and the bucket window's exchange on
+    ``(band, band_key)``; the anti-join broadcasts the drop set."""
     s = stats_of("pipeline_curate")
     assert s.cartesian_products == 0
     assert s.nested_loop_joins == 0
     assert s.sort_merge_joins == 0
-    assert s.shuffle_exchanges <= 3
+    assert s.shuffle_exchanges <= 2
     assert s.parquet_scans == 1
 
 
-def test_minhash_capped_is_agg_plus_equi_joins(stats_of):
-    """The megabucket cap adds one sizes aggregation + an equi-join filter
-    — still no cartesian, no nested-loop (the 100 TB safety-valve dataflow
-    must not itself become a scale hazard)."""
+def test_pipeline_curate_capped_no_smj(spark):
+    """A bucket-size cap is a filter on the bucket window's count, so the
+    capped curation plans the same shape as the default one: no
+    sort-merge join, at most two shuffles, one scan."""
+    from hadoop_tfidf_spark.corpus import load_docs
+    from hadoop_tfidf_spark.pipeline import curate_corpus
+
+    docs = load_docs(spark, f"{SF_DIR_SMOKE}/documents.parquet", rebalance=True)
+    s = plan_stats(curate_corpus(docs, max_bucket_size=8))
+    assert s.sort_merge_joins == 0
+    assert s.shuffle_exchanges <= 2
+    assert s.parquet_scans == 1
+
+
+def test_pipeline_curate_joins_nothing_on_band_key(spark):
+    """The near-dup drop is a bucket minimum, not a pair self-join: no
+    join in the curation plan has ``band_key`` among its keys."""
+    from hadoop_tfidf_spark.plans.inspect import executed_plan
+
+    plan = executed_plan(QS["pipeline_curate"](spark, SF_DIR_SMOKE))
+    joins = [ln for ln in plan.splitlines() if "Join " in ln]
+    assert joins and not [ln for ln in joins if "band_key" in ln]
+
+
+def test_minhash_capped_is_window_plus_equi_join(stats_of):
+    """The megabucket cap is a count over the bucket window, whose
+    exchange both sides of the band self-join read: one scan, no
+    cartesian, no nested loop (the 100 TB safety-valve dataflow must not
+    itself become a scale hazard)."""
     s = stats_of("dedup_minhash_capped")
     assert s.cartesian_products == 0
     assert s.nested_loop_joins == 0
+    assert s.parquet_scans == 1
 
 
 def test_multimodal_no_shuffle(stats_of):

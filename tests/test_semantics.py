@@ -1,6 +1,7 @@
 """Semantics unit tests pinned to reference quirks (SURVEY.md §5.2):
 tokenizer behavior, duplicate-query double-counting, integer-division IDF
-boundaries, tf of a hapax, empty-token drop."""
+boundaries, tf of a hapax, empty-token drop; plus hand-computed BM25 and
+document-similarity values."""
 
 from __future__ import annotations
 
@@ -192,3 +193,74 @@ def test_tfidf_storage_level_disk_only(spark):
     assert levels, "persist_intermediate must materialize a cached relation"
     assert all(use_disk and not use_mem for use_disk, use_mem in levels)
     spark.catalog.clearCache()
+
+
+def test_doc_similarity_identical_docs_score_one(spark):
+    from hadoop_tfidf_spark.search import doc_similarity
+    from hadoop_tfidf_spark.tfidf import tfidf
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "delta epsilon")],
+        "doc_id BIGINT, text STRING",
+    )
+    out = {(r.doc_a, r.doc_b): r.cos_sim
+           for r in doc_similarity(tfidf(docs), k=10).collect()}
+    # identical docs → cosine 1; disjoint vocab docs never pair
+    assert out[(1, 2)] == 1.0
+    assert (1, 3) not in out and (2, 3) not in out
+
+
+def test_reference_tokenizer_equals_space_split_on_wordchar_text(spark):
+    """On the gate precondition (word-char tokens, single spaces) the Java
+    `\\s*\\b\\s*` split and the space split emit the same rows; text that
+    violates the precondition is excluded by the gate filter."""
+    from hadoop_tfidf_spark.corpus import SPACE_TOKEN_PATTERN, tokenize
+    from hadoop_tfidf_spark.declared import _WORDCHAR_TEXT
+
+    docs = spark.createDataFrame(
+        [
+            ("d1", "hello world_2 x9"),
+            ("d2", "single"),
+            ("d3", "don't punct,uate"),  # violates the precondition
+        ],
+        "doc_id STRING, text STRING",
+    )
+    guarded = docs.where(F.col("text").rlike(_WORDCHAR_TEXT))
+    ref = {(r.doc_id, r.word) for r in tokenize(guarded).collect()}
+    space = {
+        (r.doc_id, r.word)
+        for r in tokenize(guarded, SPACE_TOKEN_PATTERN).collect()
+    }
+    assert ref == space
+    assert {d for d, _ in ref} == {"d1", "d2"}
+    # and on the violating doc the two tokenizers genuinely differ —
+    # the guard is load-bearing, not decorative
+    bad = docs.where(F.col("doc_id") == "d3")
+    ref_bad = [r.word for r in tokenize(bad).collect()]
+    space_bad = [r.word for r in tokenize(bad, SPACE_TOKEN_PATTERN).collect()]
+    assert ref_bad != space_bad
+
+
+def test_bm25_hand_computed_values(spark):
+    """BM25 (k1=1.2, b=0.75) against hand-computed scores on a 2-doc
+    corpus: idf(a)=ln(1.2), idf(b)=ln(2); tf_c from dl/avgdl; distinct
+    query terms (a duplicated term must NOT double-count)."""
+    from hadoop_tfidf_spark.search import bm25, query_term_bag
+    from hadoop_tfidf_spark.tfidf import doc_word_count
+    from hadoop_tfidf_spark.corpus import tokenize
+
+    docs = spark.createDataFrame(
+        [("d1", "a b"), ("d2", "a")], "doc_id STRING, text STRING"
+    )
+    dwc = doc_word_count(tokenize(docs, " "))
+    bag = query_term_bag(spark, [("q", "a b a")])  # 'a' duplicated
+    got = {
+        r.doc_id: r.score
+        for r in bm25(dwc, bag).collect()
+    }
+    import math
+    idf_a, idf_b = math.log(1.2), math.log(2.0)
+    want_d1 = round(idf_a * 0.88, 6) + round(idf_b * 0.88, 6)
+    want_d2 = round(idf_a * (2.2 / 1.9), 6)
+    assert got["d1"] == pytest.approx(want_d1, abs=1e-9)
+    assert got["d2"] == pytest.approx(want_d2, abs=1e-9)

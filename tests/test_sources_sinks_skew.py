@@ -1,7 +1,10 @@
-"""Tests for source loaders (csv/jsonl/text-dir), reference-parity sink
-encodings, LSH bucket-size capping, and the skew helpers."""
+"""Tests for source loaders (csv/jsonl/text-dir, the schema-adaptive
+events loader), reference-parity sink encodings, LSH bucket-size
+capping, and the skew helpers."""
 
 from __future__ import annotations
+
+import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +16,9 @@ from hadoop_tfidf_spark.sinks import (
     reference_doc_word_count_lines,
     reference_tfidf_lines,
 )
+from hadoop_tfidf_spark.sources.events import load_events
 from hadoop_tfidf_spark.tfidf import doc_word_count, tfidf
+from tests.conftest import SF_DIR_SMOKE, TZ_KEY
 
 
 def test_load_csv(spark, tmp_path):
@@ -170,3 +175,62 @@ def test_write_range_sorted_disjoint_file_ranges(spark, tmp_path):
     ranges.sort()
     for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
         assert hi < lo  # pairwise disjoint -> file-level pruning works
+
+
+def test_load_events_normalizes_timestamp_schema(spark):
+    ev = load_events(spark, SF_DIR_SMOKE)
+    types = dict(ev.dtypes)
+    assert types["ts_ns"] == "bigint"
+    assert types["ts"] == "timestamp"
+    row = ev.select(
+        (F.col("ts_ns") - F.unix_micros("ts") * 1000).alias("d")
+    ).agg(F.max(F.abs("d"))).collect()[0][0]
+    assert row == 0
+
+
+def test_load_events_does_not_mutate_session_timezone(spark):
+    """The loader must not write session-global conf (beyond the read-path
+    nanosAsLong flag): a caller's timezone survives, and the integer ts_ns
+    column is identical under any session zone."""
+    sec_sum = F.sum(F.expr("ts_ns div 1000000000")).alias("s")
+    baseline = (
+        load_events(spark, SF_DIR_SMOKE)
+        .agg(sec_sum, F.count("*").alias("n"))
+        .collect()[0]
+    )
+    prev = spark.conf.get(TZ_KEY)
+    spark.conf.set(TZ_KEY, "America/New_York")
+    try:
+        ev = load_events(spark, SF_DIR_SMOKE)
+        assert spark.conf.get(TZ_KEY) == "America/New_York"
+        got = ev.agg(sec_sum, F.count("*").alias("n")).collect()[0]
+        assert (got.s, got.n) == (baseline.s, baseline.n)
+    finally:
+        spark.conf.set(TZ_KEY, prev)
+
+
+def test_load_events_ntz_interpreted_as_utc_any_session_zone(spark):
+    """A TIMESTAMP_NTZ file must resolve to UTC-wallclock epochs (the
+    DuckDB naive-timestamp contract) even under a non-UTC session zone —
+    the exact failure mode of a plain cast(ntz as timestamp)."""
+    import tempfile
+
+    base = tempfile.mkdtemp(prefix="spark_graft_ntz_")
+    wall = datetime.datetime(2001, 2, 3, 4, 5, 6, 123456)
+    df = spark.createDataFrame(
+        [(1, wall, 7, "click", 1.0, "{}")],
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
+        "event_type STRING, value DOUBLE, props STRING",
+    )
+    df.write.mode("overwrite").parquet(f"{base}/events.parquet")
+    want_ns = int(
+        wall.replace(tzinfo=datetime.timezone.utc).timestamp() * 1_000_000
+    ) * 1_000
+    prev = spark.conf.get(TZ_KEY)
+    for zone in ("UTC", "America/New_York", "Asia/Tokyo"):
+        spark.conf.set(TZ_KEY, zone)
+        try:
+            got = load_events(spark, base).select("ts_ns").collect()[0].ts_ns
+            assert got == want_ns, zone
+        finally:
+            spark.conf.set(TZ_KEY, prev)

@@ -4,6 +4,8 @@ batch twins (the DuckDB-oracle-verified formulations)."""
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,8 +18,9 @@ from hadoop_tfidf_spark.streaming.windows import (
     streaming_term_counts,
     windowed_event_counts,
 )
+from tests.conftest import SF_DIR_SMOKE
 
-SF_DIR = "/root/testdata/sf0.001"
+SF_DIR = SF_DIR_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -215,3 +218,117 @@ def test_streaming_staging_dirs_registered_for_cleanup():
     # earlier dirs from this session were removed too (best-effort)
     for p in before:
         assert not os.path.isdir(p)
+
+
+def test_interval_join_streaming_matches_batch(spark):
+    """The stream-stream interval join must produce exactly the batch
+    twin's pair set (same horizon), drained with availableNow."""
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    batch = {
+        (r.click_id, r.purchase_id)
+        for r in qs["events_interval_join"](spark, SF_DIR_SMOKE).collect()
+    }
+    stream = {
+        (r.click_id, r.purchase_id)
+        for r in qs["streaming_interval_join"](spark, SF_DIR_SMOKE).collect()
+    }
+    assert stream == batch and len(batch) > 0
+
+
+def test_streaming_tumbling_complete_mode_equals_batch_exactly(spark):
+    """Complete-mode drain + integer micro-unit sums == the batch twin's
+    group-by bit-for-bit (no watermark withholding, no float-order ulp)."""
+    import tempfile
+
+    from hadoop_tfidf_spark.streaming.windows import (
+        read_event_stream,
+        run_to_completion,
+        windowed_event_counts,
+    )
+
+    path = tempfile.mkdtemp(prefix="spark_graft_tumble_exact_")
+    ev = load_events(spark, SF_DIR_SMOKE)
+    ev.drop("ts_ns").write.mode("overwrite").parquet(path)
+    stream = read_event_stream(spark, path, max_files_per_trigger=2)
+    sink = run_to_completion(
+        windowed_event_counts(stream, exact_sums=True),
+        "t_tumbling_exact",
+        output_mode="complete",
+    )
+    got = {
+        (int(r.window_start.timestamp()) // 3600, r.event_type): (
+            r.n_events,
+            r.total_value_us,
+        )
+        for r in sink.collect()
+    }
+    batch = ev.groupBy(
+        F.expr("ts_ns div 3600000000000").alias("h"), "event_type"
+    ).agg(
+        F.count("*").alias("n"),
+        F.sum(F.round(F.col("value") * 1_000_000).cast("bigint")).alias("v"),
+    )
+    want = {(r.h, r.event_type): (r.n, r.v) for r in batch.collect()}
+    assert got == want and len(want) > 0
+
+
+def test_stream_interval_join_whole_second_boundaries(spark):
+    """Boundary semantics the batch twin defines: a purchase sub-second
+    BEFORE its click in the same second pairs, and a lag of exactly the
+    horizon (after truncation) pairs. Raw-microsecond comparison fails
+    both; the whole-second truncation makes them pair by construction."""
+    import tempfile
+
+    from hadoop_tfidf_spark.streaming.joins import click_purchase_stream_join
+    from hadoop_tfidf_spark.streaming.windows import (
+        read_event_stream,
+        run_to_completion,
+    )
+
+    t0 = datetime.datetime(2020, 1, 1, 10, 0, 0, tzinfo=datetime.timezone.utc)
+
+    def at(sec, micro):
+        return (t0 + datetime.timedelta(seconds=sec, microseconds=micro)).replace(
+            tzinfo=None
+        )
+
+    rows = [
+        # purchase .1s BEFORE the click, same wall second
+        (1, at(0, 900_000), 1, "click", 0.0, "{}"),
+        (2, at(0, 100_000), 1, "purchase", 5.0, "{}"),
+        # lag straddling the horizon: raw 1800.05s, truncated exactly 1800s
+        (3, at(0, 900_000), 2, "click", 0.0, "{}"),
+        (4, at(1800, 950_000), 2, "purchase", 7.0, "{}"),
+        # genuinely out of horizon even truncated (1801s)
+        (5, at(0, 900_000), 3, "click", 0.0, "{}"),
+        (6, at(1801, 950_000), 3, "purchase", 9.0, "{}"),
+    ]
+    events = spark.createDataFrame(
+        [(i, ts, u, et, v, p) for (i, ts, u, et, v, p) in rows],
+        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
+        "event_type STRING, value DOUBLE, props STRING",
+    )
+    path = tempfile.mkdtemp(prefix="spark_graft_ivj_boundaries_")
+    events.write.mode("overwrite").parquet(path)
+    stream = read_event_stream(spark, path)
+    sink = run_to_completion(
+        click_purchase_stream_join(stream), "t_interval_boundaries", output_mode="append"
+    )
+    got = {(r.click_id, r.purchase_id): r.lag_s for r in sink.collect()}
+    assert got == {(1, 2): 0, (3, 4): 1800}
+
+    # and the batch twin agrees on the same fixture
+    from hadoop_tfidf_spark.operators.relational import (
+        click_purchase_interval_join,
+    )
+
+    batch_ev = events.withColumn(
+        "ts_ns", F.unix_micros("ts") * F.lit(1000)
+    )
+    want = {
+        (r.click_id, r.purchase_id): r.lag_s
+        for r in click_purchase_interval_join(batch_ev).collect()
+    }
+    assert got == want

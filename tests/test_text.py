@@ -1,6 +1,6 @@
 """functions.text annotation operators: repetition statistics,
-self-dedup spans, the C4 filters, co-occurrence and the LM-score
-histogram on planted docs, and how often each text is split in the
+self-dedup spans, the C4 filters, co-occurrence, benchmark
+contamination, the LM score and its histogram on planted docs, and how often each text is split in the
 optimized plans of the lang-id, quality and stratified-sample
 queries."""
 
@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import time
 
+from pyspark.sql import functions as F
+
+from hadoop_tfidf_spark.functions.text import cooccurrence
 from tests.conftest import SF_DIR_SMOKE
 
 
@@ -175,3 +178,74 @@ def test_lm_histogram_buckets_and_shares(spark):
     assert {r.bucket for r in hist} == expected_buckets
     assert sum(r.n_docs for r in hist) == 3
     assert abs(sum(r.doc_share for r in hist) - 1.0) < 1e-6
+
+
+def test_cooccurrence_counts_pairs_once_per_doc(spark):
+    docs = spark.createDataFrame(
+        [("d1", "a b a"), ("d2", "b a"), ("d3", "c")], "doc_id STRING, text STRING"
+    )
+    rows = cooccurrence(docs, top=10).collect()
+    assert [(r.w1, r.w2, r.n) for r in rows] == [("a", "b", 2)]
+
+
+def test_cooccurrence_max_doc_vocab_caps_giant_doc(spark):
+    """A planted giant-vocabulary doc must not explode quadratically: with
+    the cap, only its first ``max_doc_vocab`` distinct tokens (document
+    order) pair up; normal docs are untouched."""
+    giant = " ".join(f"w{i:04d}" for i in range(1000))
+    docs = spark.createDataFrame(
+        [("g", giant), ("d1", "a b"), ("d2", "a b")],
+        "doc_id STRING, text STRING",
+    )
+    capped = cooccurrence(docs, top=10_000, max_doc_vocab=3).collect()
+    got = {(r.w1, r.w2): r.n for r in capped}
+    # giant doc contributes exactly C(3,2)=3 pairs from its first 3 tokens
+    assert got[("a", "b")] == 2
+    assert got[("w0000", "w0001")] == 1
+    assert got[("w0000", "w0002")] == 1
+    assert got[("w0001", "w0002")] == 1
+    assert len(got) == 4
+    # uncapped default is unchanged semantics: the giant doc alone yields
+    # C(1000,2) pairs — checked by count, not materialized comparison
+    n_uncapped = (
+        cooccurrence(docs.where(F.col("doc_id") == "g"), top=1).collect()[0].n
+    )
+    assert n_uncapped == 1
+
+
+def test_contamination_bounds_and_self_overlap(spark):
+    from hadoop_tfidf_spark.functions.text import contamination_check
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c"), (3, "x y z w")],
+        "doc_id BIGINT, text STRING",
+    )
+    bench = spark.createDataFrame([(9, "a b c")], "doc_id BIGINT, text STRING")
+    out = {r.doc_id: r for r in contamination_check(docs, bench, k=3).collect()}
+    # doc 1: shingles {a b c, b c d} → 1 hit of 2; doc 2 fully contained;
+    # doc 3 disjoint
+    assert out[1].n_shingles == 2 and out[1].n_hits == 1
+    assert abs(out[1].overlap_ratio - 0.5) < 1e-9
+    assert out[2].overlap_ratio == 1.0
+    assert out[3].n_hits == 0 and out[3].overlap_ratio == 0.0
+
+
+def test_lm_score_hand_computed(spark):
+    """Bigram-LM scores against hand-computed add-0.5-smoothed values:
+    p(a b)=2.5/3, p(b a)=1.5/2 on the 3-bigram corpus; a 1-word doc gets
+    0 bigrams and NULL score."""
+    import math
+
+    from hadoop_tfidf_spark.functions.text import lm_score
+
+    docs = spark.createDataFrame(
+        [("d1", "a b a"), ("d2", "a b"), ("d3", "a")],
+        "doc_id STRING, text STRING",
+    )
+    got = {r.doc_id: (r.n_bigrams, r.lm_score) for r in lm_score(docs).collect()}
+    # integer micro-log quantization, exactly as the operator computes
+    lpu_ab = round(math.log10(2.5 / 3.0) * 1e6)
+    lpu_ba = round(math.log10(1.5 / 2.0) * 1e6)
+    assert got["d1"] == (2, round(((lpu_ab + lpu_ba) / 2) / 1e6, 6))
+    assert got["d2"] == (1, round((lpu_ab / 1) / 1e6, 6))
+    assert got["d3"] == (0, None)
