@@ -197,8 +197,8 @@ def main() -> None:
             best = elapsed if best is None else min(best, elapsed)
             c = t0 - tc0
             best_c = c if best_c is None else min(best_c, c)
-            # queries may persist shared intermediates (tfidf dwc, shingle
-            # sets); drop them so memory stays flat across the whole set,
+            # queries may persist shared intermediates (shingle sets,
+            # embeddings); drop them so memory stays flat across the set,
             # no query is timed against another's cache, and trial 2
             # rebuilds from scratch (min-of-N damps host-contention noise)
             spark.catalog.clearCache()

@@ -909,7 +909,6 @@ def main(argv: list[str] | None = None) -> None:
             docs,
             num_docs=args.num_docs,
             exact_idf=args.exact_idf,
-            persist_intermediate=True,
         ).select("word", "doc_id", "tfidf")
     elif args.tool in ("search", "rank"):
         # query tokenized with the SAME boundary pattern as the corpus
@@ -924,7 +923,6 @@ def main(argv: list[str] | None = None) -> None:
             docs,
             num_docs=args.num_docs,
             exact_idf=args.exact_idf,
-            persist_intermediate=True,
         )
         scored = search(t, bag, dedupe_query=args.dedupe_query).select(
             "doc_id", "score"
@@ -1026,7 +1024,6 @@ def main(argv: list[str] | None = None) -> None:
             docs,
             num_docs=args.num_docs,
             exact_idf=args.exact_idf,
-            persist_intermediate=True,
         ).select("word", "doc_id", "tfidf")
         out = tfidf_rank(t, limit=args.limit)
 

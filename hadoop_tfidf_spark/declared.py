@@ -90,11 +90,7 @@ def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _tfidf_rounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, doc_id, tf, df, tfidf) with floats rounded per the contract."""
-    out = tfidf(
-        _docs(spark, sf_dir),
-        tokens=_tokens(spark, sf_dir),
-        persist_intermediate=True,
-    )
+    out = tfidf(_docs(spark, sf_dir), tokens=_tokens(spark, sf_dir))
     return out.select(
         "word",
         "doc_id",

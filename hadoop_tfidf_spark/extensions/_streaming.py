@@ -67,7 +67,7 @@ def q_streaming_search(spark, sf_dir):
     from hadoop_tfidf_spark.search import query_term_bag, search
     from hadoop_tfidf_spark.streaming.incremental import IncrementalTfidfStats
     from hadoop_tfidf_spark.streaming.windows import staging_dir
-    from hadoop_tfidf_spark.tfidf import doc_word_count
+    from hadoop_tfidf_spark.tfidf import doc_word_count, term_frequency
 
     base = staging_dir("spark_graft_incsearch_")
     docs = load_docs(spark, f"{sf_dir}/documents.parquet")
@@ -84,8 +84,7 @@ def q_streaming_search(spark, sf_dir):
     # arithmetic (log-tf × integer-division idf), so the rounded product
     # is bit-identical to _tfidf_rounded's
     dwc = doc_word_count(tokenize(docs, SPACE_TOKEN_PATTERN))
-    tf = dwc.withColumn("tf", F.lit(1.0) + F.log10("n"))
-    tfidf_rel = tf.join(stats.idf(), "word").select(
+    tfidf_rel = term_frequency(dwc).join(stats.idf(), "word").select(
         "word", "doc_id", F.round(F.col("tf") * F.col("idf"), 6).alias("tfidf")
     )
     bag = query_term_bag(spark, SEARCH_QUERIES)

@@ -393,7 +393,7 @@ def ngram_jaccard(
     ``shingle_df`` lets the caller share one (ideally persisted) distinct
     shingle relation across the LSH and verify stages — it feeds four plan
     branches (sizes, both join sides, and MinHash upstream), and Spark
-    recomputes diamonds (see ``tfidf.tfidf`` docstring).
+    recomputes a subtree shared by several branches.
     """
     sh = (
         shingle_df

@@ -1994,8 +1994,7 @@ def rp_ivfpq_build(
     re-evaluate it PER ELEMENT (the HOF-inlining trap — see
     ``shingles()``): measured 27s vs 2.4s for the full-dim index on
     the same 2,000-row bench table. Callers holding the tuple own the
-    ``proj.unpersist()`` once the search plans are done executing
-    (same contract as ``tfidf(persist_intermediate=True)``).
+    ``proj.unpersist()`` once the search plans are done executing.
     """
     from pyspark.storagelevel import StorageLevel
 

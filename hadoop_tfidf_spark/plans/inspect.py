@@ -55,6 +55,10 @@ class PlanStats:
     partial_window_group_limits: int = 0
     #: All WindowGroupLimit nodes (Partial + Final).
     window_group_limits: int = 0
+    #: The ``ReadSchema`` of each counted parquet scan, in plan order — which
+    #: columns each scan reads (a scan of ``text`` re-tokenizes the corpus;
+    #: a column-less ``struct<>`` scan is a row count).
+    read_schemas: tuple[str, ...] = ()
 
 
 def streaming_executed_plan(query) -> str:
@@ -115,9 +119,9 @@ def plan_stats_from_string(plan: str) -> PlanStats:
             seen_imr = True
         lines.append(line)
 
-    def n(pattern: str) -> int:
+    def matching(pattern: str) -> list[str]:
         ids: set[str] = set()
-        count = 0
+        out = []
         for line in lines:
             if not re.search(pattern, line):
                 continue
@@ -125,8 +129,13 @@ def plan_stats_from_string(plan: str) -> PlanStats:
             key = m.group(1) if m else line.strip()
             if key not in ids:
                 ids.add(key)
-                count += 1
-        return count
+                out.append(line)
+        return out
+
+    def n(pattern: str) -> int:
+        return len(matching(pattern))
+
+    scan_pattern = r"Scan parquet|FileScan parquet"
 
     return PlanStats(
         # "Exchange hashpartitioning/rangepartitioning/..." = a logical
@@ -140,7 +149,7 @@ def plan_stats_from_string(plan: str) -> PlanStats:
         rebalance_exchanges=n(r"(?<!Broadcast)(?<!Reused)Exchange RoundRobin"),
         broadcast_exchanges=n(r"BroadcastExchange"),
         reused_exchanges=n(r"ReusedExchange"),
-        parquet_scans=n(r"Scan parquet|FileScan parquet"),
+        parquet_scans=n(scan_pattern),
         broadcast_hash_joins=n(r"BroadcastHashJoin"),
         sort_merge_joins=n(r"SortMergeJoin"),
         nested_loop_joins=n(r"BroadcastNestedLoopJoin"),
@@ -155,4 +164,12 @@ def plan_stats_from_string(plan: str) -> PlanStats:
         ),
         partial_window_group_limits=n(r"WindowGroupLimit .*, Partial"),
         window_group_limits=n(r"WindowGroupLimit "),
+        read_schemas=tuple(
+            m.group(1)
+            for m in (
+                re.search(r"ReadSchema: (\S+)", ln)
+                for ln in matching(scan_pattern)
+            )
+            if m
+        ),
     )

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_tfidf_spark.functions.literals import _local_relation
+from hadoop_tfidf_spark.tfidf import doc_frequency
 
 
 def query_term_bag(
@@ -96,30 +97,29 @@ def bm25(
     double-count, which :func:`search` pins separately), so the query side
     is deduplicated here.
 
-    Plan shape: reuses the ``(word, doc_id, n)`` relation — doc lengths
-    are one more aggregation over it (NOT a corpus re-scan), avgdl and N
-    are 1-row aggregates cross-joined in-plan (the O19 scalar-broadcast
-    pattern), df joins by broadcast-sized word relation, query terms
-    broadcast. One shuffle beyond doc_word_count's.
+    Plan shape: every branch reads the ``(word, doc_id, n)`` relation —
+    doc lengths are one more aggregation over it (NOT a corpus re-scan),
+    avgdl and N are 1-row aggregates cross-joined in-plan (the O19
+    scalar-broadcast pattern), df is ``doc_frequency`` joined as a
+    broadcast-sized word relation, and query terms broadcast.
 
     Returns ``(query_id, doc_id, score DOUBLE)`` (unrounded; callers
     round per the determinism contract).
 
-    ``dwc`` fans out to THREE consumers (doc lengths, document frequency,
-    the scored join); unlike the tfidf dwc diamond (tfidf.py), no manual
-    persist is needed here — the three subtrees share the identical dwc
-    aggregation exchange and ReuseExchange collapses them (measured: an
-    explicit persist is ~10% SLOWER at sf0.1).
+    ``dwc`` is read four times (the scored join, df, the doc lengths and
+    the avgdl/N stats over them), and the text is counted twice: the
+    ``dl`` join infers an ``isnotnull(doc_id)`` filter beneath the count
+    on the scored and doc-length side, so those two share one
+    ``(word, doc_id)`` exchange and df and the stats share the other.
     """
     qt = query_terms.dropDuplicates(["query_id", "word"])
     dl = dwc.groupBy("doc_id").agg(F.sum("n").alias("dl"))
     stats = dl.agg(
         F.avg("dl").alias("avgdl"), F.count("*").cast("double").alias("n_docs")
     )
-    dfreq = dwc.groupBy("word").agg(F.count("*").alias("df"))
     scored = (
         dwc.join(F.broadcast(qt), "word")
-        .join(dfreq, "word")
+        .join(doc_frequency(dwc), "word")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
     )

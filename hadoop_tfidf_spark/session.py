@@ -41,10 +41,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let AQE re-partition ABOVE cached plans: persisted intermediates
-        # (tfidf dwc, jaccard shingles) otherwise pin every downstream
-        # stage to the static shuffle-partition count — with this on, AQE
-        # coalesces those stages like any other (measured ~30-45% off the
-        # rank/minhash bench queries; output partitioning is not part of
+        # (jaccard shingles, projected embeddings) otherwise pin every
+        # downstream stage to the static shuffle-partition count — with this
+        # on, AQE coalesces those stages like any other (measured ~30-45%
+        # off the minhash bench queries; output partitioning is not part of
         # any declared query's contract)
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")

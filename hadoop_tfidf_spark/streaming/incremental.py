@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_tfidf_spark.functions.literals import _local_relation
+from hadoop_tfidf_spark.tfidf import _idf
 
 _GEN_PREFIX = "gen="
 _STAGING_PREFIX = "_staging_"
@@ -263,7 +264,4 @@ class IncrementalTfidfStats:
         makes reading them atomic too)."""
         gen = self._latest()
         n = self._meta(gen)[0]
-        return self.df_table(gen).select(
-            "word",
-            F.log10(F.lit(1.0) + F.floor(F.lit(n) / F.col("df"))).alias("idf"),
-        )
+        return self.df_table(gen).select("word", _idf(F.lit(n)).alias("idf"))

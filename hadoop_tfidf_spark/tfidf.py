@@ -5,10 +5,11 @@ The reference computes these as 2 chained MapReduce jobs with full HDFS
 text materialization and string re-parsing between them (TFIDF.java:36–78,
 the reverse-split re-parse at TFIDF.java:115–136). Here each relation is a
 pure function of the previous DataFrame; Catalyst pipelines the whole thing
-into one plan with exactly two shuffles (hash by (word, doc_id) for the
-count, hash by word for the document frequency) and automatic map-side
-partial aggregation — the combiner the reference never configured
-(DocWordCount.java:37–38).
+into one plan that reads the text once. It has two logical regroupings (hash
+by (word, doc_id) for the count, hash by word for the document frequency),
+the df branch reads the count's exchange through a ``ReusedExchange``, and
+every aggregate gets automatic map-side partial aggregation — the combiner
+the reference never configured (DocWordCount.java:37–38).
 
 Semantics pinned to the reference:
 
@@ -32,7 +33,7 @@ reshuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -58,10 +59,23 @@ def doc_frequency(dwc: DataFrame) -> DataFrame:
     """Document frequency df(t) (reference O8, TFIDF.java:147–158).
 
     The reference collects a per-word HashMap {doc → tf} and takes its size;
-    since (word, doc_id) is already unique post-count, ``COUNT(*)`` per word
-    equals ``COUNT(DISTINCT doc_id)``. Returns ``(word, df BIGINT)``.
+    since (word, doc_id) is already unique post-count and every ``n >= 1``,
+    ``SUM(LEAST(n, 1))`` per word equals ``COUNT(DISTINCT doc_id)``.
+    Returns ``(word, df BIGINT)``.
     """
-    return dwc.groupBy("word").agg(F.count("*").alias("df"))
+    # Reading ``n`` keeps the lower aggregate's ``count(1) AS n``, so this
+    # subtree is canonically equal to the tf branch's and Spark plans one
+    # ReusedExchange over the (word, doc_id) exchange. Neither
+    # ``count("*")`` (column pruning drops ``n``) nor ``count("n")``
+    # (folded to ``count(1)``, then pruned) gets that reuse.
+    return dwc.groupBy("word").agg(F.sum(F.least("n", F.lit(1))).alias("df"))
+
+
+def _idf(num_docs: Column, exact: bool = False) -> Column:
+    """``log10(1 + numDocs / df)`` over a ``df`` column, with the
+    reference's integer (floor) division unless ``exact`` (TFIDF.java:163)."""
+    ratio = num_docs / F.col("df")
+    return F.log10(F.lit(1.0) + (ratio if exact else F.floor(ratio)))
 
 
 def _num_docs_df(docs: DataFrame) -> DataFrame:
@@ -81,7 +95,6 @@ def tfidf(
     exact_idf: bool = False,
     tokenizer_pattern: str | None = None,
     persist_intermediate: bool = False,
-    storage_level=None,
 ) -> DataFrame:
     """TF-IDF scores ``(word, doc_id, tf, df, tfidf)`` (reference O9–O10,
     TFIDF.java:163–170).
@@ -91,35 +104,20 @@ def tfidf(
     division. ``num_docs`` overrides the corpus count exactly like the
     reference's CLI arg.
 
-    The (word, doc) count feeds both the tf and df branches — a diamond.
-    Spark's exchange-reuse can't dedupe it (column pruning rewrites the df
-    branch's aggregate, so the subtrees aren't canonically equal; verified
-    empirically), and the window-over-word alternative is skew-fatal at
-    scale (every row of a stopword lands on one task with no partial
-    aggregation). The two options that survive 100 TB:
+    The (word, doc) count feeds both the tf and the df branch, and the df
+    branch reads the count's exchange again (see :func:`doc_frequency`):
+    the text is tokenized once and nothing is persisted.
 
-    * ``persist_intermediate=False`` (default): recompute the branch — two
-      corpus scans, both linear, shuffle volume unchanged; zero memory
-      footprint, works for streaming-ish one-shot plans.
-    * ``persist_intermediate=True``: persist the counted relation — one
-      corpus scan; the right call whenever the plan is executed to
-      completion (bench/driver queries use this). ``storage_level`` picks
-      the tier (a ``pyspark.StorageLevel``; default MEMORY_AND_DISK). At
-      cluster scale pass ``StorageLevel.DISK_ONLY``: the counted relation
-      is corpus-sized, and evicting executor memory to cache it competes
-      with the shuffle working set — spinning disk is the cheaper home
-      for a relation read exactly twice.
+    ``persist_intermediate`` is accepted and ignored. It exists only
+    because the benchmark's four index-build call sites
+    (``perfbench/workloads.py``) still pass it.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from hadoop_tfidf_spark.corpus import REFERENCE_TOKEN_PATTERN, tokenize
 
     if tokens is None:
         tokens = tokenize(docs, tokenizer_pattern or REFERENCE_TOKEN_PATTERN)
 
     dwc = doc_word_count(tokens)
-    if persist_intermediate:
-        dwc = dwc.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
     tf = term_frequency(dwc)
     df = doc_frequency(dwc)
 
@@ -132,16 +130,13 @@ def tfidf(
         joined = tf.join(df, "word").crossJoin(F.broadcast(_num_docs_df(docs)))
         n_col = F.col("num_docs")
 
-    ratio = n_col / F.col("df")
-    idf = F.log10(F.lit(1.0) + (ratio if exact_idf else F.floor(ratio)))
-    out = joined.select(
+    return joined.select(
         "word",
         "doc_id",
         "tf",
         "df",
-        (F.col("tf") * idf).alias("tfidf"),
+        (F.col("tf") * _idf(n_col, exact_idf)).alias("tfidf"),
     )
-    return out
 
 
 def tfidf_pipeline(docs: DataFrame, **kwargs) -> DataFrame:

@@ -376,3 +376,64 @@ def test_fuzzy_pairs_exact_distances(spark):
     assert got == {(1, 2): 3, (1, 3): 0}  # classic kitten->sitting = 3
     kept = fuzzy_pairs(docs, pairs, max_dist=1).collect()
     assert [(r.doc_a, r.doc_b) for r in kept] == [(1, 3)]
+
+
+def test_span_dedup_removes_cross_doc_spans(spark):
+    """A 5-word span shared verbatim by two docs is removed from both;
+    unique spans survive; a doc whose every span is duplicated reassembles
+    to the empty string."""
+    from hadoop_tfidf_spark.operators.dedup import span_dedup
+
+    boiler = "all rights reserved by corp"
+    docs = spark.createDataFrame(
+        [
+            (1, f"{boiler} alpha beta gamma delta epsilon"),
+            (2, f"{boiler} zeta eta theta iota kappa"),
+            (3, "totally unique words in here"),
+            (4, boiler),  # all spans duplicated → empty clean_text
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    got = {r.doc_id: r for r in span_dedup(docs, span_words=5).collect()}
+    assert got[1].n_spans == 2 and got[1].n_dup_spans == 1
+    assert got[1].clean_text == "alpha beta gamma delta epsilon"
+    assert got[2].clean_text == "zeta eta theta iota kappa"
+    assert got[3].n_dup_spans == 0
+    assert got[3].clean_text == "totally unique words in here"
+    assert got[4].n_spans == 1 and got[4].n_dup_spans == 1
+    assert got[4].clean_text == ""
+
+
+def test_span_dedup_partial_tail_span_and_order(spark):
+    """The final short span is a first-class span (dedupable), and
+    surviving spans re-join in original order."""
+    from hadoop_tfidf_spark.operators.dedup import span_dedup
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c d e tail bit"),  # spans: "a b c d e", "tail bit"
+            (2, "x y z w v tail bit"),
+            (3, "p q r s t u v w x y"),  # two full spans, both unique
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    got = {r.doc_id: r for r in span_dedup(docs, span_words=5).collect()}
+    assert got[1].n_dup_spans == 1 and got[1].clean_text == "a b c d e"
+    assert got[2].clean_text == "x y z w v"
+    assert got[3].clean_text == "p q r s t u v w x y"
+
+
+def test_corpus_diff_all_statuses(spark):
+    """One doc per status class, classified by content hash."""
+    from hadoop_tfidf_spark.operators.dedup import corpus_diff
+
+    old = spark.createDataFrame(
+        [(1, "same text"), (2, "will change"), (3, "will vanish")],
+        "doc_id BIGINT, text STRING",
+    )
+    new = spark.createDataFrame(
+        [(1, "same text"), (2, "changed text"), (4, "brand new")],
+        "doc_id BIGINT, text STRING",
+    )
+    got = {r.doc_id: r.status for r in corpus_diff(old, new).collect()}
+    assert got == {1: "unchanged", 2: "changed", 3: "removed", 4: "added"}

@@ -1,8 +1,11 @@
 """Multimodal tests: binary payload typing, REAL PPM decode (byte-level
 parser vs an independent pure-Python reimplementation), nearest-neighbor
-resize, 1:N frame fan-out, Arrow batch flow, partitioning."""
+resize, 1:N frame fan-out, Arrow batch flow, partitioning, audio frame
+energy."""
 
 from __future__ import annotations
+
+import struct
 
 from pyspark.sql.types import BinaryType
 
@@ -134,3 +137,104 @@ def test_sample_frames_real_pixel_fanout(spark):
         for idx, cs in got[doc_id]:
             data = frames[idx][2]
             assert cs == sum((i + 1) * b for i, b in enumerate(data))
+
+
+def _wav(sr: int, samples: list[int]) -> bytes:
+    import numpy as np
+
+    data = np.array(samples, dtype="<i2").tobytes()
+    return (
+        b"RIFF"
+        + struct.pack("<I", 36 + len(data))
+        + b"WAVE"
+        + b"fmt "
+        + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
+        + b"data"
+        + struct.pack("<I", len(data))
+        + data
+    )
+
+
+def test_audio_energy_hand_computed(spark):
+    """Three constructed clips: all-loud, all-quiet, and a quiet-loud-
+    quiet clip whose trim boundaries must isolate the middle frame."""
+    from hadoop_tfidf_spark.operators.multimodal import audio_energy
+
+    loud = [20000] * 8  # one 4-sample frame pair, both active
+    quiet = [10] * 8
+    mixed = [0] * 4 + [30000] * 4 + [0] * 4  # frames 0,2 silent; 1 active
+    rows = [
+        (1, bytearray(_wav(8000, loud)), "audio/x-wav"),
+        (2, bytearray(_wav(8000, quiet)), "audio/x-wav"),
+        (3, bytearray(_wav(4000, mixed)), "audio/x-wav"),
+    ]
+    media = spark.createDataFrame(
+        rows, "doc_id BIGINT, payload BINARY, media_type STRING"
+    )
+    out = {
+        r["doc_id"]: r
+        for r in audio_energy(media, frame=4, threshold_amp=8192).collect()
+    }
+    assert out[1]["n_frames"] == 2 and out[1]["n_active"] == 2
+    assert out[1]["first_active"] == 0 and out[1]["last_active"] == 1
+    assert out[1]["energy"] == 8 * 20000 * 20000
+    assert out[2]["n_active"] == 0
+    assert out[2]["first_active"] is None and out[2]["last_active"] is None
+    assert out[3]["n_frames"] == 3 and out[3]["n_active"] == 1
+    assert out[3]["first_active"] == 1 and out[3]["last_active"] == 1
+    assert out[3]["energy"] == 4 * 30000 * 30000
+
+
+def test_audio_energy_partial_tail_frame(spark):
+    """A 6-sample clip at frame=4 has a 2-sample tail frame; the active
+    rule scales with the ACTUAL frame length (mean-square compare), so
+    a loud tail of 2 samples still activates."""
+    from hadoop_tfidf_spark.operators.multimodal import audio_energy
+
+    clip = [0, 0, 0, 0, 20000, 20000]
+    media = spark.createDataFrame(
+        [(7, bytearray(_wav(8000, clip)), "audio/x-wav")],
+        "doc_id BIGINT, payload BINARY, media_type STRING",
+    )
+    r = audio_energy(media, frame=4, threshold_amp=8192).first()
+    assert r["n_frames"] == 2
+    assert r["n_active"] == 1
+    assert r["first_active"] == 1 and r["last_active"] == 1
+    assert r["energy"] == 2 * 20000 * 20000
+
+
+def test_audio_energy_matches_python_on_generated_corpus(spark):
+    """Cross-check the whole stage against an independent pure-Python
+    computation over the synthetic WAV generator's formula."""
+    from hadoop_tfidf_spark.operators.multimodal import (
+        audio_energy,
+        with_audio_payload,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, "x" * (i % 7 + 1)) for i in range(40)],
+        "doc_id BIGINT, text STRING",
+    )
+    got = {
+        r["doc_id"]: r
+        for r in audio_energy(with_audio_payload(docs)).collect()
+    }
+    for i in range(40):
+        n = 64 + i % 101
+        base = (i % 256) * 131
+        s = [(base + 17 * j) % 65536 - 32768 for j in range(n)]
+        frames = [s[f : f + 16] for f in range(0, n, 16)]
+        act = [
+            1 if sum(v * v for v in fr) >= len(fr) * 8192 * 8192 else 0
+            for fr in frames
+        ]
+        r = got[i]
+        assert r["n_frames"] == len(frames)
+        assert r["n_active"] == sum(act)
+        assert r["energy"] == sum(v * v for v in s)
+        if sum(act):
+            first = act.index(1)
+            last = len(act) - 1 - act[::-1].index(1)
+            assert (r["first_active"], r["last_active"]) == (first, last)
+        else:
+            assert r["first_active"] is None

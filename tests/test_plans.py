@@ -9,6 +9,8 @@ duplicated beyond design.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -35,15 +37,34 @@ def test_search_uses_broadcast_join_no_cartesian(stats_of):
     assert s.sort_merge_joins == 0
 
 
+def _text_scans(s):
+    """Parquet scans that read the ``text`` column (each re-tokenizes)."""
+    return [r for r in s.read_schemas if re.search(r"[<,]text:", r)]
+
+
 def test_tfidf_shuffle_budget(stats_of):
     """TF-IDF = two logical regroupings (by (word,doc), by word) — the
-    reference's two MR jobs. Persisted-intermediate plan: ≤ 3 shuffle
-    exchanges (count, df agg, + at most one AQE artifact), df-side joined
-    by broadcast."""
+    reference's two MR jobs — in one plan: ≤ 3 shuffle exchanges (count,
+    df agg, the 1-row corpus count), df-side joined by broadcast. The df
+    branch reads the count's exchange as a ReusedExchange, so the text
+    is scanned once; the only other scan is the column-less corpus
+    count."""
     s = stats_of("tfidf")
     assert s.shuffle_exchanges <= 3
+    assert s.reused_exchanges == 1
+    assert len(_text_scans(s)) == 1
     assert s.broadcast_hash_joins >= 1
     assert s.cartesian_products == 0
+
+
+def test_bm25_counts_text_at_most_twice(spark):
+    """BM25's df branch is ``doc_frequency``, so it reads an existing
+    ``(word, doc_id)`` exchange instead of counting the text again: at
+    most two text-reading scans. The cache is cleared first so that a
+    cached count cannot stand in for a scan."""
+    spark.catalog.clearCache()
+    s = plan_stats(QS["search_bm25"](spark, SF_DIR_SMOKE))
+    assert len(_text_scans(s)) <= 2
 
 
 def test_rel_star_join_all_broadcast(stats_of):

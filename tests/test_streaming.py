@@ -332,3 +332,19 @@ def test_stream_interval_join_whole_second_boundaries(spark):
         for r in click_purchase_interval_join(batch_ev).collect()
     }
     assert got == want
+
+
+def test_streaming_c4_equals_batch(spark):
+    """The stateless streaming C4 gate emits exactly the batch filter's
+    rows — same verdicts whether the corpus arrives at rest or as a
+    stream (4 micro-batches, append drain)."""
+    from hadoop_tfidf_spark.extensions import q_streaming_c4_filter, q_text_c4_filters
+    from tests.conftest import SF_DIR_SMOKE
+
+    got = {
+        r.doc_id: r for r in q_streaming_c4_filter(spark, SF_DIR_SMOKE).collect()
+    }
+    want = {r.doc_id: r for r in q_text_c4_filters(spark, SF_DIR_SMOKE).collect()}
+    assert set(got) == set(want) and got
+    for k in want:
+        assert got[k] == want[k]

@@ -1,6 +1,7 @@
 """functions.text annotation operators: repetition statistics,
 self-dedup spans, the C4 filters, co-occurrence, benchmark
-contamination, the LM score and its histogram on planted docs, and how often each text is split in the
+contamination, per-source stats, n-gram novelty, the LM score and its
+histogram on planted docs, and how often each text is split in the
 optimized plans of the lang-id, quality and stratified-sample
 queries."""
 
@@ -249,3 +250,140 @@ def test_lm_score_hand_computed(spark):
     assert got["d1"] == (2, round(((lpu_ab + lpu_ba) / 2) / 1e6, 6))
     assert got["d2"] == (1, round((lpu_ab / 1) / 1e6, 6))
     assert got["d3"] == (0, None)
+
+
+def test_c4_filters_each_rule(spark):
+    """One planted doc per rule violation; a clean doc keeps."""
+    from hadoop_tfidf_spark.functions.text import c4_quality_filters
+
+    good = (
+        "the quick brown fox jumps over a lazy dog and then sprints "
+        "across nine wide fields chasing three very fast rabbits home "
+        "before dusk settles"
+    )
+    docs = spark.createDataFrame(
+        [
+            (1, good),                               # keep
+            (2, "too short a doc"),                  # fails min_words
+            (3, ("word " * 30 + "the a ").strip()),  # dup ratio ~1 → fails
+            (4, ("x1 y2 z3 q4 " * 8 + "the a").strip()),  # mean len < 3
+            (5, ("alpha beta gamma delta epsilon zeta eta theta iota "
+                 "kappa lambdaa mu nu xi omicron pi rho sigma tau "
+                 "upsilon phi chi psi omega one two") ),  # no stopwords
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    got = {r.doc_id: r for r in c4_quality_filters(docs).collect()}
+    assert got[1].keep
+    assert not got[2].pass_len and not got[2].keep
+    assert not got[3].pass_dup and not got[3].keep
+    assert not got[4].pass_word_len and not got[4].keep
+    assert not got[5].pass_stop and not got[5].keep
+
+
+def test_self_dedup_spans_first_occurrence_wins(spark):
+    """Within-doc repeats trim to their first occurrence, in order;
+    unique docs pass through; empty docs yield empty output."""
+    from hadoop_tfidf_spark.functions.text import self_dedup_spans
+
+    docs = spark.createDataFrame(
+        [(1, "a b a b c d a b"), (2, "x y z"), (3, "")],
+        "doc_id BIGINT, text STRING",
+    )
+    got = {r.doc_id: r for r in self_dedup_spans(docs, span_words=2).collect()}
+    assert (got[1].n_spans, got[1].n_repeated) == (4, 2)
+    assert got[1].clean_text == "a b c d"
+    assert got[2].n_repeated == 0 and got[2].clean_text == "x y z"
+    assert (got[3].n_spans, got[3].clean_text) == (0, "")
+
+
+def test_decontaminate_drops_overlapping_docs(spark):
+    """A doc sharing most shingles with the benchmark is dropped; a
+    clean doc and a too-short doc (no shingle evidence) are kept."""
+    from hadoop_tfidf_spark.functions.text import decontaminate
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),  # = bench
+            (2, "completely unrelated training text goes here"),
+            (3, "hi there"),  # < k words: no evidence, kept
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    bench = spark.createDataFrame(
+        [(100, "the quick brown fox jumps over anything")],
+        "doc_id BIGINT, text STRING",
+    )
+    kept = sorted(r.doc_id for r in decontaminate(docs, bench, k=3, max_overlap=0.3).collect())
+    assert kept == [2, 3]
+
+
+def test_source_stats_hand_computed(spark):
+    from hadoop_tfidf_spark.functions.text import source_stats
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c", "en", "s1"),
+            (2, "a a", "de", "s1"),
+            (3, "x", "en", "s2"),
+        ],
+        "doc_id BIGINT, text STRING, lang STRING, source STRING",
+    )
+    out = {r["source"]: r for r in source_stats(docs).collect()}
+    s1 = out["s1"]
+    assert s1["n_docs"] == 2 and s1["n_tokens"] == 5
+    assert s1["vocab"] == 3  # {a, b, c}
+    assert s1["n_langs"] == 2
+    assert abs(s1["avg_tokens"] - 2.5) < 1e-9
+    s2 = out["s2"]
+    assert s2["n_docs"] == 1 and s2["vocab"] == 1 and s2["n_langs"] == 1
+
+
+def test_source_stats_empty_text_counts_doc_not_tokens(spark):
+    from hadoop_tfidf_spark.functions.text import source_stats
+
+    docs = spark.createDataFrame(
+        [(1, "", "en", "s"), (2, "w", "en", "s")],
+        "doc_id BIGINT, text STRING, lang STRING, source STRING",
+    )
+    r = source_stats(docs).first()
+    assert r["n_docs"] == 2 and r["n_tokens"] == 1 and r["vocab"] == 1
+
+
+def test_ngram_novelty_hand_computed(spark):
+    """doc1/doc2 share exactly one trigram ('b c d'); doc3 is fully
+    novel; doc4 is too short to have any trigram and emits no row."""
+    from hadoop_tfidf_spark.functions.text import ngram_novelty
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c d"),  # grams: 'a b c', 'b c d'
+            (2, "b c d e"),  # grams: 'b c d', 'c d e'
+            (3, "p q r"),  # gram: 'p q r'
+            (4, "x y"),  # no trigram
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    out = {r["doc_id"]: r for r in ngram_novelty(docs, n=3).collect()}
+    assert set(out) == {1, 2, 3}
+    assert out[1]["n_grams"] == 2 and out[1]["n_shared"] == 1
+    assert abs(out[1]["novelty"] - 0.5) < 1e-9
+    assert out[2]["n_shared"] == 1
+    assert out[3]["n_grams"] == 1 and out[3]["n_shared"] == 0
+    assert abs(out[3]["novelty"] - 1.0) < 1e-9
+
+
+def test_ngram_novelty_repeated_gram_in_one_doc_is_not_shared(spark):
+    """A gram repeated WITHIN one doc only (distinct per doc) keeps
+    df=1 — novelty is about cross-document sharing."""
+    from hadoop_tfidf_spark.functions.text import ngram_novelty
+
+    docs = spark.createDataFrame(
+        [(1, "a b c a b c"), (2, "z z z z")],
+        "doc_id BIGINT, text STRING",
+    )
+    out = {r["doc_id"]: r for r in ngram_novelty(docs, n=3).collect()}
+    # doc1 grams: 'a b c','b c a','c a b','a b c' -> 3 distinct, df=1 each
+    assert out[1]["n_grams"] == 3 and out[1]["n_shared"] == 0
+    # doc2: 'z z z' x2 -> 1 distinct
+    assert out[2]["n_grams"] == 1 and out[2]["n_shared"] == 0
