@@ -29,7 +29,6 @@ from hadoop_tfidf_spark.tfidf import (
     doc_word_count,
     term_frequency,
     tfidf,
-    tfidf_pipeline,
 )
 from hadoop_tfidf_spark.search import query_term_bag, rank, search, tfidf_rank
 
@@ -44,7 +43,6 @@ __all__ = [
     "term_frequency",
     "doc_frequency",
     "tfidf",
-    "tfidf_pipeline",
     "query_term_bag",
     "search",
     "rank",

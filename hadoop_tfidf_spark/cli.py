@@ -652,7 +652,7 @@ def main(argv: list[str] | None = None) -> None:
             return
         tier = args.knn_index or "brute"
         in_dim = len(emb.select("embedding").first()["embedding"])
-        queries = emb.where(F.col("vec_id").isin(knn_ids))
+        queries = emb.where(S._id_in("vec_id", knn_ids))
         if tier == "brute":
             out = S.int_l2_topk(emb, queries, k=args.k, units=args.units)
         elif tier == "bq":

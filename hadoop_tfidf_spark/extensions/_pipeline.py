@@ -173,7 +173,7 @@ def q_search_hybrid_rrf(spark, sf_dir):
         .select("query_id", "doc_id", F.col("rnk").cast("bigint").alias("r_lex"))
     )
     emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id").isin(vec_ids))
+    queries = emb.where(S._id_in("vec_id", vec_ids))
     qmap = _local_relation(
         spark,
         [(qid, int(v)) for (qid, _), v in zip(SEARCH_QUERIES, vec_ids)],

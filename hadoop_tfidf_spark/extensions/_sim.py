@@ -54,7 +54,7 @@ def _union_all(dfs):
 
 def q_sim_topk_brute(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     return S.brute_force_topk(emb, queries, k=SIM_K).select(
         "query_id", "vec_id", "cos_sim", "rn"
     )
@@ -62,7 +62,7 @@ def q_sim_topk_brute(spark, sf_dir):
 
 def q_sim_topk_lsh(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     return S.lsh_topk(emb, queries, k=SIM_K).select(
         "query_id", "vec_id", "cos_sim", "rn"
     )
@@ -74,7 +74,7 @@ def q_sim_topk_pandas(spark, sf_dir):
     rounding boundaries; tests assert equivalence to the hash-gated
     expression path (sim_topk_brute) instead."""
     emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     return S.pandas_cosine_topk(emb, queries, k=SIM_K).select(
         "query_id", "vec_id", "cos_sim", "rn"
     )
@@ -109,7 +109,7 @@ def q_sim_topk_pandas_bounds(spark, sf_dir):
     ``blas_ok`` — and the oracle (the proven brute-force SQL + literal 1)
     hash-checks all of it."""
     emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     b = S.brute_force_topk(emb, queries, k=SIM_K).select(
         "query_id", "vec_id", "cos_sim", "rn"
     )
@@ -381,7 +381,7 @@ def q_sim_pca_topk(spark, sf_dir):
     from hadoop_tfidf_spark.operators.similarity import pca_topk
 
     emb = _emb(spark, sf_dir, rebalance=True)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     return pca_topk(
         emb,
         queries,
@@ -403,7 +403,7 @@ def q_sim_rp_topk(spark, sf_dir):
     from hadoop_tfidf_spark.operators.similarity import rp_topk
 
     emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     return rp_topk(
         emb,
         queries,
@@ -432,7 +432,7 @@ def q_sim_rp_recall(spark, sf_dir):
     from hadoop_tfidf_spark.operators.similarity import int_l2_topk, rp_topk
 
     emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     approx = rp_topk(
         emb,
         queries,
@@ -492,7 +492,7 @@ def q_sim_rp_ivfpq_recall(spark, sf_dir):
     from pyspark.storagelevel import StorageLevel
 
     emb = _emb(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     exact = S.int_l2_topk(emb, queries, k=SIM_K, units=RP_GATE_UNITS)
     index = S.rp_ivfpq_build(
         emb, out_dim=RP_GATE_OUT_DIM, in_dim=RP_GATE_IN_DIM,
@@ -611,13 +611,13 @@ def q_sim_recall_audit(spark, sf_dir):
         k=SIM_K, nprobe=IVF_NPROBE, units=IVF_UNITS,
         embeddings=emb, residual=True,
     )
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     brute = S.brute_force_topk(emb, queries, k=SIM_K).select(
         "query_id", "vec_id", F.lit(1).alias("hit")
     )
     u = S.quantized_units(F.col("embedding"), IVF_UNITS)
     qu = (
-        emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+        emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
         .select(F.col("vec_id").alias("query_id"), u.alias("_qu"))
     )
     vu = emb.select("vec_id", u.alias("_vu"))
@@ -786,7 +786,7 @@ def q_sim_recall_curve(spark, sf_dir):
         emb, coarse_k=IVF_K, coarse_iters=IVF_ITERS,
         m=PQ_M, k=PQ_K, iters=PQ_ITERS, units=IVF_UNITS, pack=True,
     )
-    queries = emb.where(F.col("vec_id").isin(list(RECALL_STRADDLE_IDS)))
+    queries = emb.where(S._id_in("vec_id", RECALL_STRADDLE_IDS))
     brute = S.brute_force_topk(emb, queries, k=SIM_K).select(
         "query_id", "vec_id", F.lit(1).alias("hit")
     )
@@ -861,7 +861,7 @@ def q_sim_topk_sq(spark, sf_dir):
     from hadoop_tfidf_spark.operators.similarity import sq_topk
 
     emb = _emb(spark, sf_dir, rebalance=True)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     return sq_topk(
         emb, queries, k=SIM_K, candidates=RP_TOPK_CANDIDATES,
         units=IVF_UNITS, in_dim=64,
@@ -887,7 +887,7 @@ def q_sim_sq_recall(spark, sf_dir):
     )
 
     emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     exact = int_l2_topk(emb, queries, k=SIM_K, units=IVF_UNITS)
     vmax = sq_vmax(emb, units=IVF_UNITS, in_dim=64)
     return _union_all([
@@ -951,7 +951,7 @@ def q_sim_opq_recall(spark, sf_dir):
     )
 
     emb = _scaled_emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     exact = int_l2_topk(emb, queries, k=SIM_K, units=IVF_UNITS)
     codes, books = pq_build(
         emb, m=PQ_M, k=PQ_K, iters=PQ_ITERS, units=IVF_UNITS, pack=True
@@ -1031,7 +1031,7 @@ def q_sim_opq_ivfpq_recall(spark, sf_dir):
     permuted = _opq_permuted_emb(spark, sf_dir).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    queries = scaled.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = scaled.where(S._id_in("vec_id", SIM_QUERY_IDS))
     exact = S.int_l2_topk(scaled, queries, k=SIM_K, units=IVF_UNITS)
     branches = []
     for method, base in (("ivfpq_res", scaled), ("opq_ivfpq", permuted)):
@@ -1080,7 +1080,7 @@ def q_sim_ivfsq_recall(spark, sf_dir):
     from pyspark.storagelevel import StorageLevel
 
     emb = _emb(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     exact = S.int_l2_topk(emb, queries, k=SIM_K, units=IVF_UNITS)
     index, cents, vmax = S.ivfsq_build(
         emb, coarse_k=IVF_K, coarse_iters=IVF_ITERS,
@@ -1108,7 +1108,7 @@ def q_sim_topk_bq(spark, sf_dir):
     from hadoop_tfidf_spark.operators.similarity import bq_topk
 
     emb = _emb(spark, sf_dir, rebalance=True)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     return bq_topk(
         emb, queries, k=SIM_K, candidates=RP_TOPK_CANDIDATES,
         units=IVF_UNITS, in_dim=64,
@@ -1125,7 +1125,7 @@ def q_sim_bq_recall(spark, sf_dir):
     from hadoop_tfidf_spark.operators.similarity import bq_build, bq_topk
 
     emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     exact = S.int_l2_topk(emb, queries, k=SIM_K, units=IVF_UNITS)
     index = bq_build(emb, units=IVF_UNITS, in_dim=64)
     return _union_all([
@@ -1185,7 +1185,7 @@ def q_sim_tier_frontier(spark, sf_dir):
     permuted = _opq_permuted_emb(spark, sf_dir).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    queries = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    queries = emb.where(S._id_in("vec_id", SIM_QUERY_IDS))
     exact = S.int_l2_topk(emb, queries, k=SIM_K, units=IVF_UNITS).select(
         "query_id", "vec_id"
     )

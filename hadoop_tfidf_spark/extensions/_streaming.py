@@ -956,7 +956,7 @@ def q_streaming_knn_bq(spark, sf_dir):
     serving loop."""
     import uuid
 
-    from hadoop_tfidf_spark.operators.similarity import bq_build, bq_topk
+    from hadoop_tfidf_spark.operators.similarity import _id_in, bq_build, bq_topk
     from hadoop_tfidf_spark.streaming.ledger import ledger_upsert, read_ledger
     from hadoop_tfidf_spark.streaming.windows import (
         staged_source,
@@ -965,7 +965,7 @@ def q_streaming_knn_bq(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     index = bq_build(emb, units=IVF_UNITS, in_dim=64)
-    qdf = emb.where(F.col("vec_id").isin(SIM_QUERY_IDS))
+    qdf = emb.where(_id_in("vec_id", SIM_QUERY_IDS))
     base = staged_source(
         ("embeddings", sf_dir, "queries2"),
         lambda p: qdf.repartition(2).write.mode("overwrite").parquet(p),

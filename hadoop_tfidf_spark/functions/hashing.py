@@ -23,11 +23,6 @@ from pyspark.sql import functions as F
 HEX_DIGITS_FOR_LONG = 15
 
 
-def md5_hex(col: Column | str) -> Column:
-    """Lowercase hex md5 — identical output in Spark and DuckDB."""
-    return F.md5(F.col(col) if isinstance(col, str) else col)
-
-
 def seeded_md5(seed: int | str, col: Column | str) -> Column:
     """md5 of ``"{seed}:{value}"`` — an independent hash family per seed."""
     c = F.col(col) if isinstance(col, str) else col
@@ -41,8 +36,3 @@ def hex_to_long(col: Column | str, digits: int = HEX_DIGITS_FOR_LONG) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(c, 1, digits), 16, 10).cast("long")
-
-
-def hash_bucket(col: Column | str, n_buckets: int, seed: int | str = 0) -> Column:
-    """Stable bucket id in ``[0, n_buckets)`` from a string column."""
-    return hex_to_long(seeded_md5(seed, col)) % F.lit(n_buckets)

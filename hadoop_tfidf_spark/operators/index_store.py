@@ -88,7 +88,13 @@ class AnnIndex:
     base build unioned with every committed generation slice — so the
     serve paths need no generation awareness. ``generations`` keeps the
     per-slice handles (generation 0 = the base build) for telemetry
-    such as :func:`recall_drift`."""
+    such as :func:`recall_drift`.
+
+    For the ``ivfpq_res`` / ``opq_ivfpq`` tiers ``_parts`` holds the
+    query-independent parts of the kNN plan (``similarity._ivfpq_parts``:
+    the codes projection, the query's micro-unit column, the ADC score
+    and the top-k window), built once here so that :func:`serve_knn`
+    rebuilds none of them per query; they go away with the index."""
 
     kind: str
     params: dict
@@ -96,6 +102,7 @@ class AnnIndex:
     tables: dict[str, DataFrame]
     path: str
     generations: list = dataclasses.field(default_factory=list)
+    _parts: object = dataclasses.field(default=None, repr=False, compare=False)
 
 
 def save_index(
@@ -217,6 +224,15 @@ def load_index(spark: SparkSession, index_dir: str) -> AnnIndex:
             generations.append(
                 {"generation": gen_n, "n_rows": gmeta.get("n_rows"), "df": gdf}
             )
+    parts = None
+    if kind in ("ivfpq_res", "opq_ivfpq"):
+        from hadoop_tfidf_spark.operators import similarity as S
+
+        p, arts = manifest["params"], manifest["artifacts"]
+        parts = S._ivfpq_parts(
+            tables["codes"], len(arts["codebooks"]), p["units"],
+            p["id_col"], p["vec_col"], perm=arts.get("perm"),
+        )
     return AnnIndex(
         kind=kind,
         params=manifest["params"],
@@ -224,6 +240,7 @@ def load_index(spark: SparkSession, index_dir: str) -> AnnIndex:
         tables=tables,
         path=index_dir,
         generations=generations,
+        _parts=parts,
     )
 
 
@@ -380,14 +397,24 @@ def serve_knn(
     byte-code tiers) the full-resolution rows the exact stage-2 re-rank
     reads. Output is the family shape ``(query_id, vec_id, d2_u, rn)``
     (``adc_d2`` for ivfpq_res), bit-equal to searching the in-session
-    build because every artifact round-trips exactly."""
+    build because every artifact round-trips exactly.
+
+    Query rows are looked up with ``similarity._id_in``: the ids are an
+    array literal that generated code reads by reference, beside an id
+    range aligned to 2^16-id blocks that parquet skips row groups on, so
+    a warm query for a new id in a block already served compiles no
+    code. The ``ivfpq_res`` / ``opq_ivfpq`` tiers search with the parts
+    :func:`load_index` prebuilt (``AnnIndex._parts``; the OPQ
+    permutation is inside the query's unit column), so a query adds only
+    its lookup and its probe literal to the plan."""
     from hadoop_tfidf_spark.operators import similarity as S
 
     p, arts = index.params, index.artifacts
     units, in_dim = p["units"], p["in_dim"]
     id_col, vec_col = p["id_col"], p["vec_col"]
     query_ids = [int(x) for x in query_ids]
-    queries = embeddings.where(F.col(id_col).isin(query_ids))
+    if index.kind in ("bq", "sq"):
+        queries = embeddings.where(S._id_in(id_col, query_ids))
     if index.kind == "ivf":
         return S.ivf_topk(
             index.tables["assigned"], arts["centroids"], query_ids,
@@ -415,16 +442,13 @@ def serve_knn(
             centroids=arts["centroids"], vmax=int(arts["vmax"]),
         )
     if index.kind in ("ivfpq_res", "opq_ivfpq"):
-        if index.kind == "opq_ivfpq":
-            # reorder into the trained space; L2 is permutation-
-            # invariant so the served distances are the true ones
-            embeddings = S.opq_apply(embeddings, arts["perm"], id_col, vec_col)
-        return S.ivfpq_topk(
-            embeddings,  # assigned is only the query-vector default here
-            arts["centroids"], index.tables["codes"], arts["codebooks"],
-            query_ids=query_ids, k=k, nprobe=nprobe, units=units,
-            id_col=id_col, vec_col=vec_col,
-            embeddings=embeddings, residual=True,
+        # an OPQ index's parts reorder the query into the trained space;
+        # L2 is permutation-invariant so the served distances are the
+        # true ones
+        return S._ivfpq_search(
+            index._parts, arts["centroids"], arts["codebooks"], embeddings,
+            query_ids, None, k=k, nprobe=nprobe, id_col=id_col,
+            residual=True,
         )
     raise ValueError(f"unknown index kind {index.kind!r}")
 
@@ -686,7 +710,7 @@ def recall_drift(
             "recall_drift: query sample is empty — lower sample_mod"
         )
     qids = sorted(qid_gen)
-    sample_q = embeddings.where(F.col(id_col).isin(qids))
+    sample_q = embeddings.where(S._id_in(id_col, qids))
     truth = {
         (int(r["query_id"]), int(r[id_col]))
         for r in S.int_l2_topk(

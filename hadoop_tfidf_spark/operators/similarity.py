@@ -35,12 +35,18 @@ artifacts, codes and rankings replay bit for bit in DuckDB.
 
 from __future__ import annotations
 
+import dataclasses
 import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType
 
-from hadoop_tfidf_spark.functions.literals import _lit_array, _local_relation
+from hadoop_tfidf_spark.functions.literals import (
+    _lit_array,
+    _local_relation,
+    _sql_literal,
+)
 
 
 def _as_double(vec: Column) -> Column:
@@ -91,16 +97,20 @@ def _residual(u: Column, centroids: list[list[int]]) -> Column:
     )
 
 
-def _topk(scored: DataFrame, k: int, *order, rn_type: str = "int") -> DataFrame:
-    """The per-query top-k every ranking here ends in: ``rn`` = the
-    row number within ``query_id`` ordered by ``order``, kept while
-    ``rn <= k``. Filtering on the rank column itself is what lets Spark
-    push a partial WindowGroupLimit below the exchange. ``rn_type`` keeps
-    each tier's output type (``int`` is row_number's own)."""
+def _rank(*order, rn_type: str = "int") -> Column:
+    """The row number within ``query_id`` ordered by ``order`` — the
+    ``rn`` of every ranking here. ``rn_type`` keeps each tier's output
+    type (``int`` is row_number's own)."""
     rn = F.row_number().over(Window.partitionBy("query_id").orderBy(*order))
-    if rn_type != "int":
-        rn = rn.cast(rn_type)
-    return scored.withColumn("rn", rn).where(F.col("rn") <= k)
+    return rn if rn_type == "int" else rn.cast(rn_type)
+
+
+def _topk(scored: DataFrame, k: int, rn: Column) -> DataFrame:
+    """The per-query top-k every ranking here ends in: ``scored`` with
+    its :func:`_rank` column ``rn``, kept while ``rn <= k``. Filtering on
+    the rank column itself is what lets Spark push a partial
+    WindowGroupLimit below the exchange."""
+    return scored.withColumn("rn", rn).where(f"rn <= {int(k)}")
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -179,7 +189,9 @@ def _cos_topk(joined: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame
             6,
         ).alias("cos_sim"),
     )
-    return _topk(scored, k, F.desc("cos_sim"), F.asc("vec_id"), rn_type="bigint")
+    return _topk(
+        scored, k, _rank(F.desc("cos_sim"), F.asc("vec_id"), rn_type="bigint")
+    )
 
 
 def lsh_topk(
@@ -280,10 +292,16 @@ def nearest_centroid_ids(
     — lexicographic struct ordering gives exactly the driver twin's
     (:func:`_nearest_centroids`) ``sorted((d2, ci))[:nprobe]`` semantics,
     ties → lowest cluster id, bit-identical to the twin's python ints.
-    The executor probe of :func:`ivf_topk` / :func:`ivfpq_topk`; cell
-    assignment is :func:`_assign`."""
+    The executor probe of :func:`ivf_topk` / :func:`ivfsq_topk`
+    (:func:`ivfpq_topk` probes from its query's micro-unit column with
+    :func:`_nearest_cells`); cell assignment is :func:`_assign`."""
+    return _nearest_cells(quantized_units(vec, units), centroids, nprobe)
+
+
+def _nearest_cells(u: Column, centroids: list[list[int]], nprobe: int) -> Column:
+    """:func:`nearest_centroid_ids` of a vector already in micro-units."""
     pairs = F.transform(
-        _centroid_d2s(quantized_units(vec, units), centroids),
+        _centroid_d2s(u, centroids),
         lambda d, i: F.struct(d.alias("d2"), i.cast("int").alias("ci")),
     )
     return F.transform(
@@ -315,6 +333,40 @@ def _nearest_centroids(qvec: list, centroids: list[list], nprobe: int) -> list[i
 DRIVER_PROBE_MAX = 6144
 
 
+#: log2 of the id block :func:`_id_in`'s pushed range is aligned to.
+_ID_BLOCK_BITS = 16
+_BIGINT_MIN, _BIGINT_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def _id_in(id_col: str, ids) -> Column:
+    """``id_col`` is one of ``ids`` — the predicate of every vector-id
+    lookup, written so that a new id compiles no code.
+
+    ``isin`` inlines each id into the generated Java, so every new id
+    cost ~2 Janino compiles. Here the ids are one array literal, which
+    generated code reads by reference, and a range on the id widened to
+    whole 2^16-id blocks pushes down to parquet for row-group skipping
+    (``PushedFilters: [GreaterThanOrEqual(id, lo), LessThanOrEqual(id,
+    hi)]``). Its bounds are inlined but change only from one block to
+    the next, so a warm plan over the same block compiles nothing. An
+    empty list matches no row."""
+    ids = sorted({int(x) for x in ids})
+    if not ids:
+        return F.expr("false")
+    lo = max(ids[0] >> _ID_BLOCK_BITS << _ID_BLOCK_BITS, _BIGINT_MIN)
+    hi = min(
+        (ids[-1] >> _ID_BLOCK_BITS << _ID_BLOCK_BITS) + (1 << _ID_BLOCK_BITS) - 1,
+        _BIGINT_MAX,
+    )
+    # one SQL expression: 3 py4j round trips, where building it with the
+    # Column API took ~70
+    col = f"`{id_col}`"
+    ids_sql = _sql_literal(ids, ArrayType(LongType()))
+    return F.expr(
+        f"array_contains({ids_sql}, {col}) AND {col} >= {lo}L AND {col} <= {hi}L"
+    )
+
+
 def _probe_source(
     emb: DataFrame,
     query_ids: list[int] | None,
@@ -325,19 +377,20 @@ def _probe_source(
     """The query rows an IVF search probes for, and whether the probe
     runs on the driver: an id list whose probe literal,
     ``constants_per_id`` per id, fits :data:`DRIVER_PROBE_MAX`. Exactly
-    one of ``query_ids`` (looked up in ``emb``) and ``queries`` (a
-    relation) is required: silently dropping one would mask a call-site
-    bug."""
+    one of ``query_ids`` (looked up in ``emb`` by :func:`_id_in`, which
+    compiles nothing per id and keeps a pushed block range on the id)
+    and ``queries`` (a relation) is required: silently dropping one
+    would mask a call-site bug."""
     if (query_ids is None) == (queries is None):
         raise ValueError(
             "pass query_ids (an id list) or queries= (a relation), not both"
         )
     if queries is not None:
         return queries, False
-    ids = [int(x) for x in query_ids]
+    query_ids = list(query_ids)
     return (
-        emb.where(F.col(id_col).isin(ids)),
-        len(ids) * constants_per_id <= DRIVER_PROBE_MAX,
+        emb.where(_id_in(id_col, query_ids)),
+        len(query_ids) * constants_per_id <= DRIVER_PROBE_MAX,
     )
 
 
@@ -487,7 +540,9 @@ def pandas_cosine_topk(
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"))
     )
-    return _topk(scored, k, F.desc("cos_sim"), F.asc("vec_id"), rn_type="bigint")
+    return _topk(
+        scored, k, _rank(F.desc("cos_sim"), F.asc("vec_id"), rn_type="bigint")
+    )
 
 
 def quantize_int8(
@@ -957,7 +1012,7 @@ def pq_topk(
     """
     m = len(codebooks)
     q_rows = (
-        embeddings.where(F.col(id_col).isin([int(x) for x in query_ids]))
+        embeddings.where(_id_in(id_col, query_ids))
         .select(id_col, quantized_units(F.col(vec_col), units).alias("u"))
         .collect()
     )
@@ -986,7 +1041,7 @@ def pq_topk(
         # order would rank it first
         (F.col(id_col) != F.col("query_id")) & F.col("adc_d2").isNotNull()
     )
-    return _topk(scored, k, "adc_d2", id_col)
+    return _topk(scored, k, _rank("adc_d2", id_col))
 
 
 def _adc_score(adc: Column, m: int) -> Column:
@@ -1174,11 +1229,93 @@ def ivfpq_topk(
     residual) as DataFrame expressions: zero query-side collect, join
     strategy left to Catalyst/AQE. All-integer either way, so the two
     paths are bit-identical.
+
+    The query-independent parts of the plan — the codes projection, the
+    query's micro-unit column, the ADC score and the top-k window — come
+    from :func:`_ivfpq_parts`; ``index_store.load_index`` builds them once
+    per loaded index and ``serve_knn`` runs this same search body
+    (:func:`_ivfpq_search`) on them, so a served query adds only its id
+    lookup and its probe literal.
     """
-    m = len(codebooks)
-    qsrc, on_driver = _probe_source(
+    return _ivfpq_search(
+        _ivfpq_parts(codes, len(codebooks), units, id_col, vec_col, assigned),
+        centroids, codebooks,
         embeddings if embeddings is not None else assigned,
-        query_ids, queries, id_col,
+        query_ids, queries, k=k, nprobe=nprobe, id_col=id_col,
+        residual=residual,
+    )
+
+
+# eq=False: == on two Columns builds an expression; it does not compare
+@dataclasses.dataclass(frozen=True, eq=False)
+class _IvfpqParts:
+    """The query-independent parts of an :func:`ivfpq_topk` plan over one
+    index: ``index`` is ``(id, cluster, code_0 … code_{m-1})``, ``qu``
+    a query row's micro-unit vector ``_qu`` (in the OPQ space when the
+    index has a permutation), ``not_self`` drops the query's own row
+    from ``index`` joined with the probes, ``scored`` projects that join
+    to ``(query_id, id, adc_d2)`` (the ADC score over the probes' ``adc``
+    tables), and ``rn`` ranks it per query by ``(adc_d2, id)``. Each
+    Column API call costs several py4j round trips, which is why a
+    served index keeps these instead of rebuilding them per query."""
+
+    index: DataFrame
+    qu: Column
+    not_self: Column
+    scored: tuple[Column, ...]
+    rn: Column
+
+
+def _ivfpq_parts(
+    codes: DataFrame,
+    m: int,
+    units: int,
+    id_col: str,
+    vec_col: str,
+    assigned: DataFrame | None = None,
+    perm: list[int] | None = None,
+) -> _IvfpqParts:
+    """Build :class:`_IvfpqParts` for ``codes`` in either storage form.
+    Codes without a ``cluster`` column take it from ``assigned`` by an id
+    join; residual codes carry the coarse cell already (the index stored
+    pre-joined). ``perm`` (an OPQ index) reorders the query vector."""
+    code_cols = [c.alias(f"code_{s}") for s, c in enumerate(_pq_code_cols(codes, m))]
+    if "cluster" in codes.columns:
+        index = codes.select(id_col, "cluster", *code_cols)
+    else:
+        index = assigned.select(id_col, "cluster").join(
+            codes.select(id_col, *code_cols), id_col
+        )
+    vec = F.col(vec_col) if perm is None else _permuted(F.col(vec_col), perm)
+    return _IvfpqParts(
+        index=index,
+        qu=quantized_units(vec, units).alias("_qu"),
+        not_self=F.col(id_col) != F.col("query_id"),
+        scored=(
+            F.col("query_id"), F.col(id_col),
+            _adc_score(F.col("adc"), m).alias("adc_d2"),
+        ),
+        rn=_rank("adc_d2", id_col),
+    )
+
+
+def _ivfpq_search(
+    parts: _IvfpqParts,
+    centroids: list[list[int]],
+    codebooks: list[list[list[int]]],
+    emb: DataFrame,
+    query_ids: list[int] | None,
+    queries: DataFrame | None,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    residual: bool,
+) -> DataFrame:
+    """The one :func:`ivfpq_topk` search body: probe relation, cell join,
+    ADC score and top-k window over prebuilt ``parts``; ``query_ids`` are
+    looked up in ``emb``."""
+    qsrc, on_driver = _probe_source(
+        emb, query_ids, queries, id_col,
         min(nprobe, len(centroids)) * (2 + sum(len(b) for b in codebooks)),
     )
     if on_driver:
@@ -1190,10 +1327,8 @@ def ivfpq_topk(
         # already has exactly that grain, so only the table contents
         # change.
         probe_rows = []
-        for r in qsrc.select(
-            id_col, quantized_units(F.col(vec_col), units).alias("u")
-        ).collect():
-            qu = [int(x) for x in r["u"]]
+        for r in qsrc.select(id_col, parts.qu).collect():
+            qu = [int(x) for x in r["_qu"]]
             shared = None if residual else _adc_table(qu, codebooks)
             for ci in _nearest_centroids(qu, centroids, nprobe):
                 tab = (
@@ -1206,17 +1341,14 @@ def ivfpq_topk(
                 probe_rows.append((int(r[id_col]), ci, tab))
         probes = F.broadcast(
             _local_relation(
-                assigned.sparkSession, probe_rows,
+                emb.sparkSession, probe_rows,
                 "query_id BIGINT, cluster INT, adc ARRAY<ARRAY<BIGINT>>",
             )
         )
     else:
         qbase = qsrc.select(
-            F.col(id_col).cast("bigint").alias("query_id"),
-            quantized_units(F.col(vec_col), units).alias("_qu"),
-            nearest_centroid_ids(F.col(vec_col), centroids, nprobe, units)
-            .alias("_cells"),
-        )
+            F.col(id_col).cast("bigint").alias("query_id"), parts.qu
+        ).withColumn("_cells", _nearest_cells(F.col("_qu"), centroids, nprobe))
         if residual:
             # the table is per (query, probed cell) — it MUST build
             # after the explode, from that cell's residual
@@ -1240,21 +1372,12 @@ def ivfpq_topk(
             ).select(
                 "query_id", F.col("cluster").cast("int").alias("cluster"), "adc"
             )
-    code_cols = [c.alias(f"code_{s}") for s, c in enumerate(_pq_code_cols(codes, m))]
-    if "cluster" in codes.columns:
-        # residual codes already carry the coarse cell — the index is
-        # stored pre-joined, no id join needed
-        index = codes.select(id_col, "cluster", *code_cols)
-    else:
-        index = assigned.select(id_col, "cluster").join(
-            codes.select(id_col, *code_cols), id_col
-        )
     scored = (
-        index.join(probes, "cluster")
-        .where(F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col), _adc_score(F.col("adc"), m).alias("adc_d2"))
+        parts.index.join(probes, "cluster")
+        .where(parts.not_self)
+        .select(*parts.scored)
     )
-    return _topk(scored, k, "adc_d2", id_col)
+    return _topk(scored, k, parts.rn)
 
 
 def ivfpq_bulk_topk(
@@ -1381,7 +1504,7 @@ def size_knn_budget(
     ]
     if not qids:
         raise ValueError("size_knn_budget: empty query sample")
-    sample_q = embeddings.where(F.col(id_col).isin(qids))
+    sample_q = embeddings.where(_id_in(id_col, qids))
     truth = {
         (int(r["query_id"]), int(r[id_col]))
         for r in int_l2_topk(
@@ -1813,7 +1936,7 @@ def _two_stage(
         scored = _flat_scan(base, qp, id_col, "_u", "_qu", out="d2_u")
     else:
         if candidates is not None:
-            stage1 = _topk(stage1, candidates, "_d", id_col)
+            stage1 = _topk(stage1, candidates, _rank("_d", id_col))
         side = F.broadcast if small_queries else (lambda df: df)
         scored = (
             base.join(side(stage1.select("query_id", id_col)), id_col)
@@ -1822,7 +1945,7 @@ def _two_stage(
                 "query_id", id_col, _d2(F.col("_u"), F.col("_qu")).alias("d2_u")
             )
         )
-    return _topk(scored, k, "d2_u", id_col)
+    return _topk(scored, k, _rank("d2_u", id_col))
 
 
 def pca_topk(
@@ -2068,9 +2191,9 @@ def rp_ivfpq_topk(
     base = embeddings.select(
         id_col, quantized_units(F.col(vec_col), units).alias("_u")
     )
-    qp = base.where(
-        F.col(id_col).isin([int(x) for x in query_ids])
-    ).select(F.col(id_col).alias("query_id"), F.col("_u").alias("_qu"))
+    qp = base.where(_id_in(id_col, query_ids)).select(
+        F.col(id_col).alias("query_id"), F.col("_u").alias("_qu")
+    )
     return _two_stage(base, qp, k, id_col, stage1=cand)
 
 
@@ -2621,9 +2744,14 @@ def opq_apply(
     consumer (build, extend, serve, search) works in this permuted space,
     where L2 distances are the original ones."""
     return embeddings.select(
-        id_col,
-        F.array(*[F.col(vec_col).getItem(int(p)) for p in perm]).alias(vec_col),
+        id_col, _permuted(F.col(vec_col), perm).alias(vec_col)
     )
+
+
+def _permuted(vec: Column, perm: list[int]) -> Column:
+    """``vec`` reordered by ``perm``: the array of ``vec[p]`` for each
+    ``p``."""
+    return F.array(*[vec.getItem(int(p)) for p in perm])
 
 
 def opq_topk(

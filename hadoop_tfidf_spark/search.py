@@ -71,10 +71,21 @@ def search(
     Broadcast inner join on ``word`` (bag semantics — duplicate query terms
     double-count, matching Search.java:230), then sum per (query, doc).
     Returns ``(query_id, doc_id, score DOUBLE)``.
+
+    The join output is hash-partitioned by ``query_id`` before the sum,
+    so the plan's one exchange, ``hashpartitioning(query_id)``, serves
+    both the ``(query_id, doc_id)`` aggregate and :func:`rank`'s
+    per-query window: ``search`` → ``rank`` shuffles once, where a
+    ``(query_id, doc_id)`` exchange under the sum needed a second one
+    under the window. The sum then runs after the exchange, so an
+    unrounded score may differ from a map-side partial sum in the last
+    ulp; callers compare scores rounded to 6 places.
     """
     if dedupe_query:
         query_terms = query_terms.dropDuplicates(["query_id", "word"])
-    scored = tfidf_df.join(F.broadcast(query_terms), "word", "inner")
+    scored = tfidf_df.join(F.broadcast(query_terms), "word", "inner").repartition(
+        "query_id"
+    )
     return scored.groupBy("query_id", "doc_id").agg(F.sum("tfidf").alias("score"))
 
 
@@ -107,22 +118,26 @@ def bm25(
     round per the determinism contract).
 
     ``dwc`` is read four times (the scored join, df, the doc lengths and
-    the avgdl/N stats over them), and the text is counted twice: the
-    ``dl`` join infers an ``isnotnull(doc_id)`` filter beneath the count
-    on the scored and doc-length side, so those two share one
-    ``(word, doc_id)`` exchange and df and the stats share the other.
+    the avgdl/N stats over them), and the text is counted once: all four
+    read one ``(word, doc_id)`` exchange. That needs every branch to read
+    the count unfiltered. A NULL ``doc_id`` counts toward df, N and avgdl
+    (as in the DuckDB oracle, whose ``GROUP BY`` keeps it) but is never
+    scored. An inner join on ``doc_id`` would drop it by inferring an
+    ``isnotnull(doc_id)`` filter, and that filter lands beneath the count
+    on the scored and doc-length branches, which then count the text a
+    second time. So ``dl`` joins null-safe, and a NULL document's score
+    is nulled and dropped after the sum, where no filter can sink.
     """
     qt = query_terms.dropDuplicates(["query_id", "word"])
     dl = dwc.groupBy("doc_id").agg(F.sum("n").alias("dl"))
     stats = dl.agg(
         F.avg("dl").alias("avgdl"), F.count("*").cast("double").alias("n_docs")
     )
-    scored = (
-        dwc.join(F.broadcast(qt), "word")
-        .join(doc_frequency(dwc), "word")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-    )
+    hits = dwc.join(F.broadcast(qt), "word").join(doc_frequency(dwc), "word")
+    scored = hits.join(
+        dl.withColumnRenamed("doc_id", "_dl_doc"),
+        hits["doc_id"].eqNullSafe(F.col("_dl_doc")),
+    ).crossJoin(F.broadcast(stats))
     idf = F.log(
         (F.col("n_docs") - F.col("df") + F.lit(0.5))
         / (F.col("df") + F.lit(0.5))
@@ -135,12 +150,12 @@ def bm25(
     # per-term contributions are rounded BEFORE the sum (same determinism
     # contract as `search`: fixed 6-decimal inputs keep float summation
     # order from ever flipping an oracle hash)
+    s = F.when(F.col("doc_id").isNotNull(), F.round(idf * tf_c, 6))
     return (
-        scored.select(
-            "query_id", "doc_id", F.round(idf * tf_c, 6).alias("s")
-        )
+        scored.select("query_id", "doc_id", s.alias("s"))
         .groupBy("query_id", "doc_id")
         .agg(F.sum("s").alias("score"))
+        .where(F.col("score").isNotNull())
     )
 
 

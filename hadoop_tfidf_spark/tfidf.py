@@ -137,9 +137,3 @@ def tfidf(
         "df",
         (F.col("tf") * _idf(n_col, exact_idf)).alias("tfidf"),
     )
-
-
-def tfidf_pipeline(docs: DataFrame, **kwargs) -> DataFrame:
-    """Full docs → tfidf pipeline (reference TFIDF.main, 2 MR jobs →
-    one lazy Spark plan). Returns ``(word, doc_id, tfidf)``."""
-    return tfidf(docs, **kwargs).select("word", "doc_id", "tfidf")

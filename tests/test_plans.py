@@ -57,14 +57,15 @@ def test_tfidf_shuffle_budget(stats_of):
     assert s.cartesian_products == 0
 
 
-def test_bm25_counts_text_at_most_twice(spark):
-    """BM25's df branch is ``doc_frequency``, so it reads an existing
-    ``(word, doc_id)`` exchange instead of counting the text again: at
-    most two text-reading scans. The cache is cleared first so that a
-    cached count cannot stand in for a scan."""
+def test_bm25_counts_text_once(spark):
+    """BM25's four branches (the scored join, df, the doc lengths and the
+    avgdl/N stats) read one ``(word, doc_id)`` exchange: the doc-length
+    join is null-safe, so no inferred ``isnotnull(doc_id)`` filter splits
+    the count in two. One text-reading scan. The cache is cleared first
+    so that a cached count cannot stand in for a scan."""
     spark.catalog.clearCache()
     s = plan_stats(QS["search_bm25"](spark, SF_DIR_SMOKE))
-    assert len(_text_scans(s)) <= 2
+    assert len(_text_scans(s)) == 1
 
 
 def test_rel_star_join_all_broadcast(stats_of):

@@ -248,3 +248,39 @@ def test_bm25_hand_computed_values(spark):
     want_d2 = round(idf_a * (2.2 / 1.9), 6)
     assert got["d1"] == pytest.approx(want_d1, abs=1e-9)
     assert got["d2"] == pytest.approx(want_d2, abs=1e-9)
+
+
+def test_bm25_null_doc_id_matches_oracle(spark):
+    """A document with a NULL ``doc_id`` counts toward df, N and avgdl,
+    as the DuckDB ``search_bm25`` oracle counts it, and is never scored:
+    the rows equal the oracle's on a corpus with one such document."""
+    import duckdb
+    import pandas as pd
+
+    from hadoop_tfidf_spark.declared import SEARCH_QUERIES
+    from hadoop_tfidf_spark.extensions._oracle import EXTENSION_ORACLE_SQL
+    from hadoop_tfidf_spark.search import bm25
+
+    rows = [
+        (1, "spark data value"),
+        (2, "data table join"),
+        (None, "value value spark data data data"),
+        (3, "merge fast value"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+    dwc = doc_word_count(tokenize(docs, " "))
+    out = bm25(dwc, query_term_bag(spark, SEARCH_QUERIES))
+    got = sorted(
+        tuple(r)
+        for r in out.select(
+            "query_id", "doc_id", F.round("score", 6).alias("score")
+        ).collect()
+    )
+    with duckdb.connect() as con:
+        con.register(
+            "documents",
+            pd.DataFrame(rows, columns=["doc_id", "text"]).astype({"doc_id": "Int64"}),
+        )
+        want = sorted(con.execute(EXTENSION_ORACLE_SQL["search_bm25"]).fetchall())
+    assert got == want
+    assert len(got) == 6

@@ -4,7 +4,11 @@ on the ``ivf``, ``ivfsq`` and ``ivfpq_res`` tiers build their query bag
 and probe relation as literals in the plan, so no Python RDD (and no
 Python worker) is planned, and each answers exactly what the
 ``createDataFrame``-built relations answered. The literal bag is checked
-against that ``createDataFrame`` bag for any query list."""
+against that ``createDataFrame`` bag for any query list.
+
+A query also pays nothing that does not depend on it: the lexical plan
+shuffles once, and a warm ``ivfpq_res`` kNN query compiles no class for
+a new id and makes few py4j round trips."""
 
 from __future__ import annotations
 
@@ -18,6 +22,7 @@ from pyspark.sql import functions as F
 
 from hadoop_tfidf_spark.corpus import REFERENCE_TOKEN_PATTERN, load_docs
 from hadoop_tfidf_spark.operators import index_store
+from hadoop_tfidf_spark.plans.inspect import plan_stats
 from hadoop_tfidf_spark.search import query_term_bag, rank, search
 from hadoop_tfidf_spark.tfidf import tfidf
 from tests.conftest import SF_DIR_SMOKE as SF_DIR
@@ -29,6 +34,11 @@ LEX_QUERIES = [
 ]
 KNN_KINDS = ("ivf", "ivfsq", "ivfpq_res")
 KNN_ID, K, NPROBE = 7, 10, 3
+#: An id no other test serves, in KNN_ID's 2^16-id block.
+NEW_ID = 431
+#: py4j round trips of a warm ivfpq_res serve_knn call: 93 measured,
+#: with room for small PySpark-version drift.
+PY4J_CALLS_MAX = 120
 #: sha256 of each case's sorted answer rows as the createDataFrame-built
 #: query bag and probe relations answered them on this fixture.
 ANSWERS = {
@@ -77,6 +87,62 @@ def test_serve_path_plans_no_python_rdd(spark, served, case):
     assert "LogicalRDD" not in plan
     assert "OneRowRelation" in plan  # the in-plan literal relation
     assert digest(df) == ANSWERS[case]
+
+
+def test_lexical_search_rank_plans_one_exchange(spark, served):
+    """``search`` hash-partitions its join output by ``query_id``, so the
+    one exchange serves both the ``(query_id, doc_id)`` sum and
+    ``rank``'s per-query window."""
+    assert plan_stats(answer(spark, served, "lexical")).shuffle_exchanges == 1
+
+
+def _compiles(spark) -> int:
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_knn_query_compiles_nothing_for_a_new_id(spark, served):
+    """The query id reaches generated code only as an array literal read
+    by reference and a range aligned to 2^16-id blocks, so a new id in a
+    block already served compiles no class (``isin`` inlined the id:
+    ~2 Janino compiles per new id)."""
+    _, emb, indexes = served
+    for _ in range(2):
+        index_store.serve_knn(
+            emb, indexes["ivfpq_res"], [KNN_ID], k=K, nprobe=NPROBE
+        ).collect()
+    before = _compiles(spark)
+    rows = index_store.serve_knn(
+        emb, indexes["ivfpq_res"], [NEW_ID], k=K, nprobe=NPROBE
+    ).collect()
+    assert _compiles(spark) - before == 0
+    assert {r["query_id"] for r in rows} == {NEW_ID}
+
+
+def test_warm_knn_query_makes_few_py4j_calls(spark, served):
+    """A warm ``ivfpq_res`` ``serve_knn`` call (the plan build plus the
+    query-row lookup collect) reuses the expressions ``load_index``
+    built once: 93 py4j round trips measured, where rebuilding them on
+    every query made 798."""
+    _, emb, indexes = served
+    index_store.serve_knn(
+        emb, indexes["ivfpq_res"], [KNN_ID], k=K, nprobe=NPROBE
+    ).collect()
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        index_store.serve_knn(
+            emb, indexes["ivfpq_res"], [NEW_ID + 1], k=K, nprobe=NPROBE
+        )
+    finally:
+        client.send_command = send
+    assert len(calls) <= PY4J_CALLS_MAX
 
 
 TERMS = [
